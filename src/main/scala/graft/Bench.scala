@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Bench main: runs every catalog query on SPARK_GRAFT_SF_DIR, printing one
-  * JSON line {"metric":…,"value":…,"queries":{…}}.
+  * JSON line {"metric":…,"value":…,"queries":{…},"failed":[…]}. The
+  * total sums the queries that succeeded; any failed query is named in
+  * "failed" and makes the process exit 1.
   *
   * Queries are fully materialized via the noop writer — a bare count() lets
   * Catalyst prune projections (string-heavy queries would bench their scan,
@@ -150,7 +152,11 @@ object Bench {
       "\"" + k + "\":{\"min\":" + fmt(mn) + ",\"med\":" + fmt(md) +
         ",\"max\":" + fmt(mx) + ",\"reps\":" + reps + "}"
     }.mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    // a failed query (-1) is reported by name and fails the run; it never
+    // enters the total, where it would read as a faster suite
+    val failed = results.collect { case (name, v) if v < 0 => name }
+    val total = results.map(_._2).filter(_ >= 0).sum
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // The driver captures only the last ~2000 chars of stdout (round-2 bench
     // recorded parsed:null because the full 100-query line was 3.2k chars and
     // its '{"metric"' start fell outside the window). stdout gets a compact
@@ -170,12 +176,16 @@ object Bench {
     val byName = results.toMap
     val qsHead = headline.flatMap(n => byName.get(n).map(v => "\"" + n + "\":" + fmt(v)))
       .mkString("{", ",", "}")
-    val jsonCompact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qsHead,"n_queries":${results.size},"n_adjudicated":${adjudicated.size},"detail":"BENCH.json","sf":"$sfDir"}"""
-    val jsonFull = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qsFull,"stats":$statsFull,"adjudicated":$adjJson,"sf":"$sfDir"}"""
+    val jsonCompact = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qsHead,"n_queries":${results.size},"failed":$failedJson,"n_adjudicated":${adjudicated.size},"detail":"BENCH.json","sf":"$sfDir"}"""
+    val jsonFull = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qsFull,"stats":$statsFull,"adjudicated":$adjJson,"failed":$failedJson,"sf":"$sfDir"}"""
     println(jsonCompact)
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (jsonFull + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} queries failed: ${failed.mkString(", ")}")
+      sys.exit(1)
+    }
   }
 }

@@ -120,6 +120,8 @@ object GraftFunctions {
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "array_dot", exprs => ArrayDotExpr(exprs(0), exprs(1)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
+      "ivf_probe_cells", exprs => IvfProbeCellsExpr(exprs(0), exprs(1), exprs(2)), "built-in")
+    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "minhash_mins", exprs => MinHashMinsExpr(exprs(0), exprs(1)), "built-in")
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "simhash_bits", exprs => SimHashBitsExpr(exprs(0), exprs(1)), "built-in")
@@ -181,6 +183,10 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
       new org.apache.spark.sql.catalyst.FunctionIdentifier("array_dot"),
       ArrayDot.info,
       (exprs: Seq[Expression]) => ArrayDotExpr(exprs(0), exprs(1))))
+    ext.injectFunction((
+      new org.apache.spark.sql.catalyst.FunctionIdentifier("ivf_probe_cells"),
+      IvfProbeCells.info,
+      (exprs: Seq[Expression]) => IvfProbeCellsExpr(exprs(0), exprs(1), exprs(2))))
     ext.injectFunction((
       new org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_mins"),
       MinHashMins.info,

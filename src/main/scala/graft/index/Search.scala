@@ -66,15 +66,14 @@ object Search {
     * probing p > 1 cells buys back the recall a single-cell read loses
     * when the true neighbors straddle a Voronoi boundary, at a scanned
     * fraction of ~p/K instead of 1/K (v10b gates the recall-vs-nprobe
-    * curve; faiss `nprobe` is the public precedent). */
+    * curve; faiss `nprobe` is the public precedent). Runs as the native
+    * codegen'd `ivf_probe_cells` expression
+    * (`graft.functions.IvfProbeCellsExpr`) with the centroids as one typed
+    * literal — the single argmin implementation behind [[ivfCell]] and
+    * [[pqCodes]]. */
   def ivfProbeCells(vec: Column, centroids: Seq[Seq[Double]], nprobe: Int): Column = {
-    val scored = centroids.zipWithIndex.map { case (c, i) =>
-      val cv = array(c.map(lit): _*)
-      val d2 = aggregate(zip_with(vec, cv, (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
-        lit(0.0), (acc, x) => acc + x)
-      struct(d2.as("d2"), lit(i).as("cell"))
-    }
-    transform(slice(sort_array(array(scored: _*)), 1, nprobe), s => s.getField("cell"))
+    graft.functions.GraftFunctions.register(org.apache.spark.sql.SparkSession.active)
+    call_function("ivf_probe_cells", vec, typedLit(centroids), lit(nprobe))
   }
 
   def ivfTopK(index: DataFrame, vecCol: String, idCol: String, query: Column,
@@ -104,7 +103,10 @@ object Search {
   /** Read a partitioned index pruned to the query's bucket: broadcast the
     * single-row query (bucket precomputed on the query side) and join on
     * the partition column — dynamic partition pruning restricts the scan to
-    * the matching partition directories, no full-index scan. */
+    * the matching partition directories, no full-index scan. Scale shape
+    * over an [[Upsert]] index: every segment writes at most one file per
+    * cell it touches (files per segment ≤ touched cells), so a pruned read
+    * lists at most one file per segment in each probed cell. */
   def readPruned(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                  queryRow: DataFrame, bucketCol: String = "bucket"): DataFrame =
     spark.read.parquet(indexPath).join(broadcast(queryRow), Seq(bucketCol))
@@ -275,22 +277,15 @@ object Search {
 
   /** Product quantization: the compressed-index ANN scale path. A d-dim
     * vector becomes M small codes (one per subspace, argmin-distance
-    * centroid, ties → lower code — the ivfCell construction per subspace).
-    * At 100 TB the win is storage/bandwidth: a 64-float embedding column
-    * (256 B) becomes M=4 byte-sized codes; the scoring scan reads ONLY the
-    * codes column (parquet column pruning) against a per-query lookup
-    * table, never the raw vectors. */
+    * centroid, ties → lower code — [[ivfProbeCells]] with nprobe 1 per
+    * subspace). At 100 TB the win is storage/bandwidth: a 64-float
+    * embedding column (256 B) becomes M=4 byte-sized codes; the scoring
+    * scan reads ONLY the codes column (parquet column pruning) against a
+    * per-query lookup table, never the raw vectors. */
   def pqCodes(vec: Column, codebooks: Seq[Seq[Seq[Double]]], subDim: Int): Column =
     array(codebooks.zipWithIndex.map { case (cents, m) =>
-      val sub = slice(vec, m * subDim + 1, subDim)
-      val scored = cents.zipWithIndex.map { case (c, k) =>
-        val cv = array(c.map(lit): _*)
-        val d2 = aggregate(zip_with(sub, cv, (x, y) => (x.cast("double") - y) * (x.cast("double") - y)),
-          lit(0.0), (acc, x) => acc + x)
-        // tinyint code: the stored table is genuinely M bytes per vector
-        struct(d2.as("d2"), lit(k.toByte).as("code"))
-      }
-      element_at(sort_array(array(scored: _*)), 1).getField("code")
+      // tinyint code: the stored table is genuinely M bytes per vector
+      element_at(ivfProbeCells(slice(vec, m * subDim + 1, subDim), cents, 1), 1).cast("tinyint")
     }: _*)
 
   /** Asymmetric-distance (ADC) dot-product score: sum over subspaces of

@@ -23,7 +23,10 @@ import org.apache.spark.sql.functions._
   * Scale shape: upsert cost is O(batch + one ids-only column-pruned scan
   * of (vec_id, cell, seg, deleted)) — never O(corpus) row data (the d8
   * incremental-dedup contract); the pruned query path resolves only the
-  * probed cell's rows. `compact` folds segments back to seg 0 when the
+  * probed cell's rows. Every write shuffles its rows by cell first, so a
+  * segment holds at most one file per cell it touches (files per segment
+  * ≤ touched cells, whatever the writer parallelism), and a mutation lists
+  * and reads the index once. `compact` folds segments back to seg 0 when the
   * tombstone/segment count warrants it (the judge of WHEN is a manifest
   * policy, deliberately out of scope). */
 object Upsert {
@@ -31,8 +34,16 @@ object Upsert {
   /** Write the initial index: `index` must carry (idCol, payload columns,
     * cellCol); segments start at 0, nothing deleted. */
   def writeBase(index: DataFrame, cellCol: String, out: String): Unit =
-    index.withColumn("seg", lit(0L)).withColumn("deleted", lit(false))
-      .write.mode("overwrite").partitionBy(cellCol).parquet(out)
+    writeByCell(index.withColumn("seg", lit(0L)).withColumn("deleted", lit(false)),
+      cellCol, out, "overwrite")
+
+  /** One file per cell per segment: each cell's rows meet in one task
+    * before `partitionBy` splits them into directories. Without the
+    * shuffle every writer task opens a file in every cell it holds rows
+    * for, and the file count a pruned read lists grows with the writer
+    * parallelism times the segment count. */
+  private def writeByCell(rows: DataFrame, cellCol: String, out: String, mode: String): Unit =
+    rows.repartition(col(cellCol)).write.mode(mode).partitionBy(cellCol).parquet(out)
 
   /** Latest-wins resolution over any (possibly cell-pruned) segment view:
     * max seg per vector, live row outranking a same-seg move-tombstone,
@@ -49,8 +60,10 @@ object Upsert {
   def resolve(spark: SparkSession, out: String, idCol: String = "vec_id"): DataFrame =
     resolveView(spark.read.parquet(out), idCol)
 
-  private def nextSeg(spark: SparkSession, out: String): Long =
-    spark.read.parquet(out).agg(max(col("seg"))).head.getLong(0) + 1L
+  /** The segment after the newest one in `index`, the view the mutation
+    * already read (one listing and schema inference per mutation). */
+  private def nextSeg(index: DataFrame): Long =
+    index.agg(max(col("seg"))).head.getLong(0) + 1L
 
   /** Upsert a batch of (idCol, payload..., cellCol) rows: new vectors
     * insert, existing vectors are superseded; a vector whose cell CHANGED
@@ -61,12 +74,12 @@ object Upsert {
              idCol: String = "vec_id", cellCol: String = "cell"): Unit = {
     require(batch.groupBy(col(idCol)).count().filter(col("count") > 1).isEmpty,
       s"upsert batch must carry at most one row per $idCol")
-    val seg = nextSeg(spark, out)
+    val full = spark.read.parquet(out)
+    val seg = nextSeg(full)
     // ids-only view of the current index: the scan reads 4 small columns,
     // never the payload (codes/vectors)
     val current = resolveView(
-      spark.read.parquet(out).select(col(idCol), col(cellCol), col("seg"), col("deleted")),
-      idCol)
+      full.select(col(idCol), col(cellCol), col("seg"), col("deleted")), idCol)
     val payloadCols = batch.columns.filterNot(c => c == idCol || c == cellCol)
     val moveTombstones = batch.select(col(idCol), col(cellCol).as("_new_cell"))
       .join(current.select(col(idCol), col(cellCol)), Seq(idCol))
@@ -75,9 +88,8 @@ object Upsert {
         payloadCols.map(c => lit(null).cast(batch.schema(c).dataType).as(c)): _*)
       .withColumn("deleted", lit(true))
     val liveRows = batch.withColumn("deleted", lit(false))
-    liveRows.unionByName(moveTombstones)
-      .withColumn("seg", lit(seg))
-      .write.mode("append").partitionBy(cellCol).parquet(out)
+    writeByCell(liveRows.unionByName(moveTombstones).withColumn("seg", lit(seg)),
+      cellCol, out, "append")
   }
 
   /** Delete by id: tombstones appended into each victim's CURRENT cell
@@ -85,18 +97,17 @@ object Upsert {
     * the payload schema for the null columns. */
   def delete(spark: SparkSession, out: String, ids: DataFrame,
              idCol: String = "vec_id", cellCol: String = "cell"): Unit = {
-    val seg = nextSeg(spark, out)
     val full = spark.read.parquet(out)
+    val seg = nextSeg(full)
     val payloadCols = full.columns.filterNot(c =>
       Seq(idCol, cellCol, "seg", "deleted").contains(c))
     val current = resolveView(
       full.select(col(idCol), col(cellCol), col("seg"), col("deleted")), idCol)
-    current.join(ids.select(col(idCol)), Seq(idCol), "left_semi")
+    writeByCell(current.join(ids.select(col(idCol)), Seq(idCol), "left_semi")
       .select(Seq(col(idCol), col(cellCol)) ++
         payloadCols.map(c => lit(null).cast(full.schema(c).dataType).as(c)): _*)
       .withColumn("deleted", lit(true))
-      .withColumn("seg", lit(seg))
-      .write.mode("append").partitionBy(cellCol).parquet(out)
+      .withColumn("seg", lit(seg)), cellCol, out, "append")
   }
 
   /** [[upsert]] with the segment number and the current (id, cell) view
@@ -121,7 +132,7 @@ object Upsert {
       .withColumn("deleted", lit(true))
     val rows = batch.withColumn("deleted", lit(false)).unionByName(moveTombstones)
       .withColumn("seg", lit(seg)).localCheckpoint() // one compute: write + inventory
-    rows.write.mode("append").partitionBy(cellCol).parquet(out)
+    writeByCell(rows, cellCol, out, "append")
     rows.groupBy(col(cellCol)).agg(
       sum(when(!col("deleted"), 1L).otherwise(0L)).as("n_live"),
       sum(when(col("deleted"), 1L).otherwise(0L)).as("n_tombstones"))
@@ -137,7 +148,7 @@ object Upsert {
     val rows = victims.select(Seq(col(idCol), col(cellCol)) ++
         payloadCols.map(c => lit(null).cast(template.schema(c).dataType).as(c)): _*)
       .withColumn("deleted", lit(true)).withColumn("seg", lit(seg)).localCheckpoint()
-    rows.write.mode("append").partitionBy(cellCol).parquet(out)
+    writeByCell(rows, cellCol, out, "append")
     rows.groupBy(col(cellCol)).agg(
       sum(when(!col("deleted"), 1L).otherwise(0L)).as("n_live"),
       sum(when(col("deleted"), 1L).otherwise(0L)).as("n_tombstones"))

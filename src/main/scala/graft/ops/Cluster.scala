@@ -51,9 +51,6 @@ object Cluster {
     * element-wise mean. Returns the new centroid table (cell, centroid),
     * k rows. */
   def lloydOnce(emb: DataFrame, vecCol: String, init: Seq[Seq[Double]]): DataFrame =
-    // cell materialized BEFORE the generator select: a generator in the
-    // same projection re-resolves the other expressions and strips the
-    // field aliases inside ivfCell's argmin struct
     decimalMeans(emb.withColumn("cell", Search.ivfCell(col(vecCol), init)), vecCol)
 
   /** Full Lloyd loop: iteration 1 assigns against the seeded literals,

@@ -1723,11 +1723,10 @@ object DeltaLog {
     dvRebaseActions(t, acts, newVersion)
   }
 
-  /** The rebase transaction rows over an already-translated mask frame —
-    * shared by [[dvRowLevelRebase]] (loud: homeless rows raise in the
-    * caller-built `t`) and [[dvRowLevelAttempt]] (probe-gated: homeless
-    * rows pre-filtered, the candidate adopted only when the probe proved
-    * there are none). */
+  /** The rebase transaction rows over an already-translated mask frame,
+    * for [[dvRowLevelRebase]] (loud: homeless rows raise in the
+    * caller-built `t`, so only a clean [[dvRowLevelProbe]] should lead
+    * here). */
   private def dvRebaseActions(t: DataFrame, acts: DataFrame, newVersion: Int): DataFrame = {
     val touched = t.select(col("new_path").as("path")).distinct()
     val headDv = deletionVectors(acts).join(broadcast(touched), Seq("path"), "left_semi")

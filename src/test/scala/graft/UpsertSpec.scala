@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.index.Upsert
+import scala.jdk.CollectionConverters._
 
 /** Round-7: incremental vector-index maintenance — segment/tombstone
   * semantics, move correctness under cell-pruned reads, compaction
@@ -54,6 +55,33 @@ class UpsertSpec extends SparkSpec {
     assert(resolved(out).isEmpty)
     Upsert.upsert(spark, out, mkIndex(Seq((1L, 11, 1))))
     assert(resolved(out) == Map(1L -> ((11, 1))))
+  }
+
+  test("each segment holds at most one parquet file per touched cell") {
+    val out = "/tmp/graft_upsert_spec_files"
+    def files: Set[String] = {
+      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
+      try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      finally s.close()
+    }
+    // new files per cell directory written by one operation
+    def segmentFiles(op: => Unit): Map[String, Int] = {
+      val before = if (new java.io.File(out).exists) files else Set.empty[String]
+      op
+      (files -- before).toSeq.groupBy(_.split('/').find(_.startsWith("cell=")).get)
+        .map { case (cell, fs) => cell -> fs.size }
+    }
+    // several writer tasks per batch, each holding rows of every cell
+    def spread(rows: Seq[(Long, Int, Int)]) = mkIndex(rows).repartition(4)
+    val base = segmentFiles(Upsert.writeBase(
+      spread((0L until 40L).map(i => (i, i.toInt, (i % 3).toInt))), "cell", out))
+    val up = segmentFiles(Upsert.upsert(spark, out,
+      spread((30L until 50L).map(i => (i, i.toInt + 100, ((i + 1) % 3).toInt)))))
+    val del = segmentFiles(Upsert.delete(spark, out,
+      spread((0L until 10L).map(i => (i, 0, 0))).select("vec_id")))
+    for ((name, seg) <- Seq("writeBase" -> base, "upsert" -> up, "delete" -> del))
+      assert(seg.size == 3 && seg.values.forall(_ == 1),
+        s"$name must write one file in each of the 3 touched cells, got $seg")
   }
 
   test("upsert rejects a batch with duplicate ids") {
