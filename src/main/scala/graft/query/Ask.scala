@@ -1,7 +1,6 @@
 package graft.query
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 import graft.index.{Embed, Rerank}
@@ -11,9 +10,17 @@ import graft.index.{Embed, Rerank}
   *
   * search (similarity top-k with metadata filters) → keyword rerank →
   * sigmoid-normalized score → relevance threshold filter → Q&A direct-match
-  * fallback → SHOW_TABLE tag resolution → sources projection. One
-  * QueryExecution; the only exchange is the top-k (TakeOrderedAndProject,
-  * no full sort).
+  * fallback → SHOW_TABLE tag resolution → sources projection.
+  *
+  * The plan of `ask` → `resolveShowTableTags` → `sources` scans the corpus
+  * once. The scan, the score and the fetch top-k (TakeOrderedAndProject,
+  * no full sort) form one codegen'd stage; the keyword overlap, the
+  * relevance gate and the final top-k run on the fetched rows only. Tag
+  * resolution cross-joins the dimension, folded into one broadcast row,
+  * onto the answers: the dimension's global aggregate is the only
+  * exchange, and there is no window and no hash exchange. Over parquet
+  * inputs, collecting it runs three Spark jobs: the aggregate's map
+  * stage, the broadcast, the result.
   *
   * The similarity stage scores with the keyword expression by default; pass
   * `scoreFn` to score differently — e.g. `Embed.dot(col("embedding"),
@@ -46,9 +53,11 @@ object Ask {
     val fetched = corpus
       .filter(metadataFilter)                       // P8: pushed-down metadata filters
       .withColumn("score", score)
-      .withColumn("overlap", overlap)
       .orderBy(col("score").desc, col(idCol))       // T1: TakeOrderedAndProject
       .limit(cfg.topK * cfg.overFetch)
+      // only the relevance gate reads the overlap: tokenize the fetched
+      // rows, not the corpus
+      .withColumn("overlap", overlap)
     fetched
       .filter(Rerank.relevanceFilter(col("score"), col("overlap"), cfg.minScore, cfg.semanticOnly))
       .orderBy(col("score").desc, col(idCol))
@@ -74,33 +83,50 @@ object Ask {
 
   /** §3.2 step 9 — resolve `[SHOW_TABLE:CAT=x]` tags in answer strings
     * against a table-source dimension (ref `backend/main.py:128-163`,
-    * `rag.py:745-779`): extract tags with `regexp_extract_all`, first-match
-    * join (J5 shape) each distinct category against the broadcast dim, and
-    * substitute the wrapped HTML back into the answer with a fold over the
-    * per-answer substitution list. Unresolved tags are removed (main.py
-    * semantics). Answers without tags pass through untouched. */
+    * `rag.py:745-779`), in one pass over `answers`:
+    *
+    *  - the dimension folds into ONE row: its `(trim(cat), cat, html)`
+    *    entries, sorted, keeping per raw category only the first (lowest
+    *    html, nulls first). That row is broadcast and cross-joined onto
+    *    the answers, so the answers never shuffle and keep their order.
+    *  - each answer's distinct tags (`regexp_extract_all`) look up every
+    *    category equal to the tag after `trim` on both sides; a tag
+    *    without a match maps to `""`, which removes it (main.py
+    *    semantics).
+    *  - the wrapped HTML is substituted with a fold over the answer's
+    *    `(tag, replacement)` list in sorted order: if a replacement ever
+    *    contained a tag literal itself, fold order would change the
+    *    output, and sorting pins it.
+    *
+    * Answers with a null id, a null answer or no tags pass through
+    * untouched; each answer resolves its own tags, duplicate ids
+    * included. The id column comes first in the output. The whole
+    * dimension must fit in one broadcast row, and each tag searches it
+    * linearly: it is the handful of table categories of a document set,
+    * not a data-sized relation. */
   def resolveShowTableTags(answers: DataFrame, idCol: String, answerCol: String,
                            tables: DataFrame, catCol: String, htmlCol: String): DataFrame = {
     val tagPat = "\\[SHOW_TABLE:CAT=([^\\]]*)\\]"
-    // first-match per category: deterministic lowest-html row wins
-    val rn = row_number().over(Window.partitionBy(col(catCol)).orderBy(col(htmlCol)))
-    val dim = tables.withColumn("_rn", rn).filter(col("_rn") === 1)
-      .select(trim(col(catCol)).as("_cat"),
-        concat(lit("<br><div class='table-responsive'>"), col(htmlCol), lit("</div><br>")).as("_repl"))
-    // sort_array: collect_list order is nondeterministic, and if a
-    // replacement HTML ever contained a tag literal itself, fold order
-    // would change the output — sorting pins it
-    val tags = answers.select(col(idCol),
-        explode(array_distinct(regexp_extract_all(col(answerCol), lit(tagPat), lit(1)))).as("_tag"))
-      .join(broadcast(dim), trim(col("_tag")) === col("_cat"), "left")
-      .groupBy(idCol)
-      .agg(sort_array(collect_list(struct(col("_tag"), coalesce(col("_repl"), lit("")).as("_repl")))).as("_subs"))
-    answers.join(tags, Seq(idCol), "left")
-      .withColumn(answerCol,
-        when(col("_subs").isNull, col(answerCol))
-          .otherwise(aggregate(col("_subs"), col(answerCol), (acc, t) =>
-            replace(acc, concat(lit("[SHOW_TABLE:CAT="), t.getField("_tag"), lit("]")), t.getField("_repl")))))
-      .drop("_subs")
+    val sorted = tables.agg(sort_array(collect_list(
+      struct(trim(col(catCol)).as("k"), col(catCol).as("c"), col(htmlCol).as("h")))).as("_dim"))
+    // the first entry of each raw category is the lowest html, nulls first;
+    // null-safe, as a null category sorts first (and never matches a tag)
+    val firsts = filter(col("_dim"), (e, i) => !(get(col("_dim"), i - 1).getField("c") <=> e.getField("c")))
+    val dim = sorted.select(transform(firsts, e => struct(e.getField("k").as("k"),
+      coalesce(concat(lit("<br><div class='table-responsive'>"), e.getField("h"), lit("</div><br>")),
+        lit("")).as("r"))).as("_dim"))
+    val subs = sort_array(flatten(transform(
+      array_distinct(regexp_extract_all(col(answerCol), lit(tagPat), lit(1))), tag => {
+        val repls = transform(filter(col("_dim"), e => e.getField("k") === trim(tag)), _.getField("r"))
+        transform(when(size(repls) === 0, array(lit(""))).otherwise(repls), r =>
+          struct(tag.as("_tag"), r.as("_repl")))
+      })))
+    val resolved = when(col(idCol).isNull, col(answerCol))
+      .otherwise(aggregate(subs, col(answerCol), (acc, t) =>
+        replace(acc, concat(lit("[SHOW_TABLE:CAT="), t.getField("_tag"), lit("]")), t.getField("_repl"))))
+    answers.crossJoin(broadcast(dim))
+      .select(col(idCol) +: answers.columns.toSeq.filter(_ != idCol).map(c =>
+        if (c == answerCol) resolved.as(answerCol) else col(c)): _*)
   }
 
   /** Sources projection (ref `rag.py:781-790`): ranked hits → presentation

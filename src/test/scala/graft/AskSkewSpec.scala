@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.index.Rerank
 import graft.query.Ask
 import graft.ops.Skew
 
@@ -44,20 +47,99 @@ class AskSkewSpec extends SparkSpec {
     assert(math.abs(hits.head.getAs[Double]("score") - 1.0) < 1e-9)
   }
 
+  test("ask tokenizes after the fetch cut and returns what the all-rows chain did") {
+    // the chain as it was when the overlap was computed on every row
+    def allRowsAsk(corpus: DataFrame, query: String, cfg: Ask.AskConfig): DataFrame = {
+      val terms = query.toLowerCase.split("\\s+").filterNot(cfg.stopwords.contains).toSeq
+      corpus
+        .withColumn("score", Rerank.sigmoid(Rerank.keywordScore(col("text"), terms, query)))
+        .withColumn("overlap", Rerank.keywordOverlap(col("text"), lit(query), cfg.stopwords))
+        .orderBy(col("score").desc, col("doc_id"))
+        .limit(cfg.topK * cfg.overFetch)
+        .filter(Rerank.relevanceFilter(col("score"), col("overlap"), cfg.minScore, cfg.semanticOnly))
+        .orderBy(col("score").desc, col("doc_id"))
+        .limit(cfg.topK)
+    }
+    val corpus = graft.tables.TestTables.documents(spark, sf)
+    for ((query, cfg) <- Seq(
+        "spark join stream" -> Ask.AskConfig(),
+        "the hash of sort" -> Ask.AskConfig(topK = 7),
+        "vector join" -> Ask.AskConfig(topK = 4, minScore = 0.5, semanticOnly = 0.9))) {
+      val got = Ask.ask(corpus, "doc_id", "text", query, cfg)
+      val want = allRowsAsk(corpus, query, cfg)
+      assert(got.columns.toSeq == want.columns.toSeq, query)
+      val rows = got.collect().toSeq
+      assert(rows.nonEmpty, query)
+      assert(rows == want.collect().toSeq, query)
+    }
+  }
+
   test("resolveShowTableTags substitutes, repeats, and strips unresolved") {
-    val answers = Seq(
-      (1L, "a [SHOW_TABLE:CAT=x] b [SHOW_TABLE:CAT=x] c"), // same tag twice
-      (2L, "see [SHOW_TABLE:CAT=y] and [SHOW_TABLE:CAT=missing]"),
-      (3L, "no tags here")).toDF("id", "answer")
-    val tables = Seq(("x", "<table>X</table>"), ("y", "<table>Y</table>"),
-      ("y", "<table>ZZZ-later</table>")).toDF("cat", "html")
+    // the self-join resolution it replaces, kept as the oracle: first match
+    // per raw category by a row_number window, tags exploded and joined to
+    // the dimension, regrouped per id and joined back onto the answers
+    def selfJoinResolve(answers: DataFrame, idCol: String, answerCol: String,
+                        tables: DataFrame, catCol: String, htmlCol: String): DataFrame = {
+      val tagPat = "\\[SHOW_TABLE:CAT=([^\\]]*)\\]"
+      val rn = row_number().over(Window.partitionBy(col(catCol)).orderBy(col(htmlCol)))
+      val dim = tables.withColumn("_rn", rn).filter(col("_rn") === 1)
+        .select(trim(col(catCol)).as("_cat"),
+          concat(lit("<br><div class='table-responsive'>"), col(htmlCol), lit("</div><br>")).as("_repl"))
+      val tags = answers.select(col(idCol),
+          explode(array_distinct(regexp_extract_all(col(answerCol), lit(tagPat), lit(1)))).as("_tag"))
+        .join(broadcast(dim), trim(col("_tag")) === col("_cat"), "left")
+        .groupBy(idCol)
+        .agg(sort_array(collect_list(struct(col("_tag"), coalesce(col("_repl"), lit("")).as("_repl")))).as("_subs"))
+      answers.join(tags, Seq(idCol), "left")
+        .withColumn(answerCol,
+          when(col("_subs").isNull, col(answerCol))
+            .otherwise(aggregate(col("_subs"), col(answerCol), (acc, t) =>
+              replace(acc, concat(lit("[SHOW_TABLE:CAT="), t.getField("_tag"), lit("]")), t.getField("_repl")))))
+        .drop("_subs")
+    }
+    def tag(c: String) = s"[SHOW_TABLE:CAT=$c]"
+    // id is not the first column: both versions must move it first
+    val answers = Seq[(Int, Option[Long], Option[String])](
+      (0, Some(1L), Some(s"a ${tag("x")} b ${tag("x")} c")),        // same tag twice
+      (1, Some(2L), Some(s"see ${tag("y")} and ${tag("missing")}")), // several tags, one unresolved
+      (2, Some(3L), Some("no tags here")),
+      (3, Some(4L), Some(s"dup ${tag("d")}")),                       // duplicate category
+      (4, Some(5L), Some(s"pad ${tag("w")} and ${tag(" w ")}")),     // padded categories and tag
+      (5, Some(6L), Some(s"null html ${tag("n")}")),
+      (6, Some(7L), Some(s"empty ${tag("")} tag")),
+      (7, Some(8L), None),                                           // null answer
+      (8, None, Some(s"null id ${tag("x")}")),
+      (9, Some(10L), Some(s"first ${tag("x")}")),                    // duplicate ids
+      (10, Some(10L), Some(s"second ${tag("y")} ${tag("d")}")),
+      (11, Some(12L), Some(s"${tag("e")} then ${tag("y")}")),        // html holding a later tag
+      (12, Some(13L), Some(s"${tag("x")} then ${tag("z")}"))         // html holding an earlier tag
+    ).toDF("rank", "id", "answer")
+    val tables = Seq[(Option[String], Option[String])](
+      Some("x") -> Some("<table>X</table>"), Some("y") -> Some("<table>Y</table>"),
+      Some("y") -> Some("<table>ZZZ-later</table>"),
+      Some("d") -> Some("<b>2</b>"), Some("d") -> Some("<b>1</b>"), Some("d") -> Some("<b>3</b>"),
+      Some(" w") -> Some("<w>lead</w>"), Some("w ") -> Some("<w>trail</w>"), Some("w") -> Some("<w>bare</w>"),
+      Some("n") -> Some("<n/>"), Some("n") -> None, Some(" ") -> Some("<blank/>"),
+      None -> Some("<nullcat/>"), Some("e") -> Some(tag("y")), Some("z") -> Some(tag("x"))
+    ).toDF("cat", "html")
     val out = Ask.resolveShowTableTags(answers, "id", "answer", tables, "cat", "html")
-      .orderBy("id").collect().map(_.getAs[String]("answer"))
-    val wrapX = "<br><div class='table-responsive'><table>X</table></div><br>"
-    val wrapY = "<br><div class='table-responsive'><table>Y</table></div><br>"
-    assert(out(0) == s"a $wrapX b $wrapX c")
-    assert(out(1) == s"see $wrapY and ") // first-match on y; unresolved removed
-    assert(out(2) == "no tags here")
+    assert(out.columns.toSeq == Seq("id", "rank", "answer"))
+    val byRank = out.collect().map(r => r.getAs[Int]("rank") -> r.getAs[String]("answer")).toMap
+    def wrap(h: String) = s"<br><div class='table-responsive'>$h</div><br>"
+    assert(byRank(0) == s"a ${wrap("<table>X</table>")} b ${wrap("<table>X</table>")} c")
+    assert(byRank(1) == s"see ${wrap("<table>Y</table>")} and ") // first-match on y; unresolved removed
+    assert(byRank(2) == "no tags here")
+    assert(byRank(3) == s"dup ${wrap("<b>1</b>")}")
+    assert(byRank(5) == "null html ")
+    assert(byRank(7) == null && byRank(8) == s"null id ${tag("x")}")
+    def same(got: DataFrame, want: DataFrame): Unit = {
+      assert(got.columns.toSeq == want.columns.toSeq)
+      assert(got.collect().map(_.toString).sorted.toSeq == want.collect().map(_.toString).sorted.toSeq)
+    }
+    same(out, selfJoinResolve(answers, "id", "answer", tables, "cat", "html"))
+    val noTables = tables.filter(lit(false))
+    same(Ask.resolveShowTableTags(answers, "id", "answer", noTables, "cat", "html"),
+      selfJoinResolve(answers, "id", "answer", noTables, "cat", "html"))
   }
 
   test("qnaFallback accepts only close question matches") {
