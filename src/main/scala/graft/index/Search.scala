@@ -100,16 +100,25 @@ object Search {
                             bucketCol: String = "bucket"): Unit =
     index.withColumn(bucketCol, bucket).write.mode("overwrite").partitionBy(bucketCol).parquet(out)
 
-  /** Read a partitioned index pruned to the query's bucket: broadcast the
-    * single-row query (bucket precomputed on the query side) and join on
-    * the partition column — dynamic partition pruning restricts the scan to
-    * the matching partition directories, no full-index scan. Scale shape
-    * over an [[Upsert]] index: every segment writes at most one file per
-    * cell it touches (files per segment ≤ touched cells), so a pruned read
-    * lists at most one file per segment in each probed cell. */
+  /** Read a partitioned index pruned to the query's buckets: the query
+    * rows' bucket values (precomputed on the query side) are collected on
+    * the driver and filter the partition column statically, so the scan
+    * lists only the matching partition directories; the query rows then
+    * join the pruned rows as a broadcast. The static filter is what
+    * prunes: dynamic partition pruning only fires when the probe side
+    * holds a selective `Filter`, which a local probe (`Seq(q).toDF`) does
+    * not. Collecting a local probe runs no Spark job; a table-derived
+    * probe pays one small collect job. `queryRow` is evaluated twice, for
+    * the collect and for the join, so it must be deterministic. Scale
+    * shape over an [[Upsert]] index: every segment writes at most one file
+    * per cell it touches (files per segment ≤ touched cells), so a pruned
+    * read lists at most one file per segment in each probed cell. */
   def readPruned(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                 queryRow: DataFrame, bucketCol: String = "bucket"): DataFrame =
-    spark.read.parquet(indexPath).join(broadcast(queryRow), Seq(bucketCol))
+                 queryRow: DataFrame, bucketCol: String = "bucket"): DataFrame = {
+    val buckets = queryRow.select(bucketCol).collect().map(_.get(0)).distinct
+    spark.read.parquet(indexPath).filter(col(bucketCol).isin(buckets.toSeq: _*))
+      .join(broadcast(queryRow), Seq(bucketCol))
+  }
 
   /** Multi-probe pruned read: fan the query row out to every bucket within
     * `maxHamming` bit flips of its own (the XOR masks are enumerated on
@@ -123,15 +132,15 @@ object Search {
     val masks = (0 until (1 << bits)).filter(m => Integer.bitCount(m) <= maxHamming)
     val probes = queryRow.withColumn(bucketCol,
       explode(array(masks.map(m => col(bucketCol).bitwiseXOR(lit(m))): _*)))
-    spark.read.parquet(indexPath).join(broadcast(probes), Seq(bucketCol))
+    readPruned(spark, indexPath, probes, bucketCol)
   }
 
   /** Multi-probe pruned read for LIST-valued probes — the IVF twin of
     * [[readPrunedMultiProbe]]: the query row carries an array of cells to
-    * probe (e.g. [[ivfProbeCells]] with nprobe > 1); the broadcast side is
-    * exploded into one row per probed cell, then joined on the partition
-    * column, so the scan's dynamic partition filter lists exactly the
-    * probed partition directories (AnnPruneSpec pins the file counts). */
+    * probe (e.g. [[ivfProbeCells]] with nprobe > 1); it is exploded into
+    * one row per probed cell before [[readPruned]], so the scan's partition
+    * filter lists exactly the probed partition directories (AnnPruneSpec
+    * pins the file counts). */
   def readPrunedProbes(spark: org.apache.spark.sql.SparkSession, indexPath: String,
                        queryRow: DataFrame, probesCol: String = "probes",
                        bucketCol: String = "bucket"): DataFrame =

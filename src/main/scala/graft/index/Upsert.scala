@@ -166,6 +166,5 @@ object Upsert {
     * latest-wins over just those rows. */
   def readPrunedResolved(spark: SparkSession, out: String, queryRow: DataFrame,
                          idCol: String = "vec_id", cellCol: String = "cell"): DataFrame =
-    resolveView(
-      spark.read.parquet(out).join(broadcast(queryRow), Seq(cellCol)), idCol)
+    resolveView(Search.readPruned(spark, out, queryRow, cellCol), idCol)
 }

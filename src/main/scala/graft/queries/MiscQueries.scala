@@ -2723,8 +2723,9 @@ object MiscQueries extends QuerySet {
     * the bottleneck; the sketch's accuracy parameter (10000 ⇒ rank error
     * ≤ N/10000) makes the cut drift bounded and testable. Rows-only by
     * necessity (DuckDB's approx quantile is a different t-digest sketch —
-    * the a12 HLL precedent); the error bound against the exact cuts is
-    * pinned by Round6Spec. */
+    * the a12 HLL precedent); NoOracleSpec pins every cut within
+    * N/10000 + 1 ranks of the exact percentile's, and Round6Spec the
+    * per-doc decile drift against x14. */
   val x14bApproxBuckets: Q = Q("x14b_quality_buckets_approx", None,
     (s, d) => {
       val scored = documents(s, d).select(col("doc_id"),

@@ -167,7 +167,9 @@ object TextQueries extends QuerySet {
   /** F9 exact-parity variant: difflib SequenceMatcher.ratio as a native
     * codegen'd Catalyst expression (graft.functions.DifflibRatioExpr).
     * No DuckDB oracle exists for difflib semantics → rows-only check;
-    * exact parity with CPython is asserted in DifflibSpec. */
+    * exact parity with CPython is asserted in DifflibSpec, and
+    * NoOracleSpec checks every pair against `DifflibRatio.ratio` on the
+    * driver. */
   val f9Difflib = Q("f9b_difflib_ratio", None,
     (s, d) => {
       graft.functions.GraftFunctions.register(s)
@@ -834,7 +836,8 @@ object TextQueries extends QuerySet {
     * the repetitive band is non-empty and the flag non-vacuous.
     * Rows-only by necessity (no Deflate in DuckDB SQL — the a12/f9b
     * precedent); ratio ordering, determinism, and null edges are pinned
-    * by Round6Spec. */
+    * by Round6Spec, and NoOracleSpec checks ratio = compressed_len /
+    * raw_len (6 places) on every row and the flag on every planted doc. */
   val x25Compression = Q("x25_compression_ratio", None,
     (s, d) => {
       val planted = documents(s, d).select(col("doc_id"),

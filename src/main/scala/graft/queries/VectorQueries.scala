@@ -1422,7 +1422,7 @@ object VectorQueries extends QuerySet {
   /** The multi-probe STORED read — v4b's production layout (index written
     * `partitionBy(cell)`) read back at nprobe = 2: the query row carries
     * its 2 nearest cells as an array, the broadcast side explodes to one
-    * probe row per cell, and the join's dynamic partition filter lists
+    * probe row per cell, and the pruned read's partition filter lists
     * exactly 2 of the 8 cell directories (AnnPruneSpec pins the file
     * counts). This is the recall-repair path for the v10 finding applied
     * to the layout a 100 TB index actually uses. */
@@ -1451,7 +1451,7 @@ object VectorQueries extends QuerySet {
 
   /** V2 scale path, end-to-end: the SRP index is WRITTEN `partitionBy
     * (bucket)` and read back pruned — the bucket predicate arrives as a
-    * dynamic partition filter at the file listing, so the scan touches one
+    * partition filter at the file listing, so the scan touches one
     * bucket directory instead of the whole index (AnnPruneSpec asserts the
     * file-level pruning). Oracle: identical semantics to v3 (same seed-42
     * hyperplanes baked as literals). */
@@ -1583,8 +1583,9 @@ object VectorQueries extends QuerySet {
 
   /** 100 TB distinct-count path: HLL sketch (approx_count_distinct).
     * Engine sketches differ, so no cross-engine oracle — the driver's
-    * rows-only check applies; exactness is asserted in ScalaTest against
-    * the exact count within HLL error bounds. */
+    * rows-only check applies; NoOracleSpec holds each per-language count
+    * within 3 rsd of the exact distinct count (rsd 0.05 for sources, 0.02
+    * for doc ids). */
   val a12Approx = Q("a12_approx_distinct", None,
     (s, d) => documents(s, d)
       .groupBy("lang")
@@ -4399,7 +4400,7 @@ object VectorQueries extends QuerySet {
     * top-k under a metadata predicate (attr = 1, i.e. P8's isin filter
     * composed INTO the probe path). Two plans over the SAME stored
     * partitioned index (cell dirs, attr column inside):
-    * PRE-FILTER — the predicate rides the DPP-pruned cell read (parquet
+    * PRE-FILTER — the predicate rides the cell-pruned read (parquet
     * PushedFilters under the pruned directories), exact rank of the
     * survivors; POST-FILTER — rank 3k unfiltered, filter, keep k (the
     * overfetch gamble every post-filter engine makes). The gate pins the
@@ -4483,9 +4484,9 @@ object VectorQueries extends QuerySet {
         val q = fix.filter(col("vec_id") < 20)
           .select(col("vec_id").as("qid"), col("e").as("qv"),
             Search.ivfProbeCells(col("e"), spineCents, 2).as("probes"))
-        // ONE pruned read feeds both plans: the probe join's dynamic
-        // partition filter lists the probed cell dirs; pre-filter adds
-        // attr = 1 as a pushed parquet filter on that same scan
+        // ONE pruned read feeds both plans: its partition filter lists
+        // the probed cell dirs; pre-filter adds attr = 1 as a pushed
+        // parquet filter on that same scan
         val cand = Search.readPrunedProbes(s, out, q, "probes", "cell")
           .filter(col("vec_id") =!= col("qid"))
           .select(col("qid"), col("vec_id"), col("attr"),

@@ -16,11 +16,10 @@ import graft.index.{Embed, Rerank}
   * once. The scan, the score and the fetch top-k (TakeOrderedAndProject,
   * no full sort) form one codegen'd stage; the keyword overlap, the
   * relevance gate and the final top-k run on the fetched rows only. Tag
-  * resolution cross-joins the dimension, folded into one broadcast row,
-  * onto the answers: the dimension's global aggregate is the only
-  * exchange, and there is no window and no hash exchange. Over parquet
-  * inputs, collecting it runs three Spark jobs: the aggregate's map
-  * stage, the broadcast, the result.
+  * resolution folds the dimension into one row inside the answers' own
+  * task and cross-joins it onto them as a `CartesianProduct`: no
+  * `Exchange`, no `BroadcastExchange`, no window. Over parquet inputs,
+  * collecting it runs one Spark job with one task.
   *
   * The similarity stage scores with the keyword expression by default; pass
   * `scoreFn` to score differently — e.g. `Embed.dot(col("embedding"),
@@ -87,8 +86,11 @@ object Ask {
     *
     *  - the dimension folds into ONE row: its `(trim(cat), cat, html)`
     *    entries, sorted, keeping per raw category only the first (lowest
-    *    html, nulls first). That row is broadcast and cross-joined onto
-    *    the answers, so the answers never shuffle and keep their order.
+    *    html, nulls first). The fold reads the dimension as one partition,
+    *    so its global aggregate plans no exchange, and the row joins the
+    *    answers as a `CartesianProduct` (the `shuffle_replicate_nl` hint,
+    *    which shuffles nothing here): the answers never shuffle, keep
+    *    their order, and no broadcast job runs before them.
     *  - each answer's distinct tags (`regexp_extract_all`) look up every
     *    category equal to the tag after `trim` on both sides; a tag
     *    without a match maps to `""`, which removes it (main.py
@@ -101,13 +103,16 @@ object Ask {
     * Answers with a null id, a null answer or no tags pass through
     * untouched; each answer resolves its own tags, duplicate ids
     * included. The id column comes first in the output. The whole
-    * dimension must fit in one broadcast row, and each tag searches it
-    * linearly: it is the handful of table categories of a document set,
-    * not a data-sized relation. */
+    * dimension must fit in one row, and each tag searches it linearly: it
+    * is the handful of table categories of a document set, not a
+    * data-sized relation. The cartesian plan evaluates the dimension's
+    * plan once per answers partition, so it must also be cheap to
+    * compute: a top-k of answers is one partition and folds it once,
+    * data-sized answers (`ask2_show_table`) re-read it per partition. */
   def resolveShowTableTags(answers: DataFrame, idCol: String, answerCol: String,
                            tables: DataFrame, catCol: String, htmlCol: String): DataFrame = {
     val tagPat = "\\[SHOW_TABLE:CAT=([^\\]]*)\\]"
-    val sorted = tables.agg(sort_array(collect_list(
+    val sorted = tables.coalesce(1).agg(sort_array(collect_list(
       struct(trim(col(catCol)).as("k"), col(catCol).as("c"), col(htmlCol).as("h")))).as("_dim"))
     // the first entry of each raw category is the lowest html, nulls first;
     // null-safe, as a null category sorts first (and never matches a tag)
@@ -124,7 +129,7 @@ object Ask {
     val resolved = when(col(idCol).isNull, col(answerCol))
       .otherwise(aggregate(subs, col(answerCol), (acc, t) =>
         replace(acc, concat(lit("[SHOW_TABLE:CAT="), t.getField("_tag"), lit("]")), t.getField("_repl"))))
-    answers.crossJoin(broadcast(dim))
+    answers.crossJoin(dim.hint("shuffle_replicate_nl"))
       .select(col(idCol) +: answers.columns.toSeq.filter(_ != idCol).map(c =>
         if (c == answerCol) resolved.as(answerCol) else col(c)): _*)
   }

@@ -29,6 +29,13 @@ class AnnPruneSpec extends SparkSpec {
     scans.head
   }
 
+  private def filesUnder(p: String): Long = {
+    import java.nio.file._
+    val s = Files.walk(Paths.get(p))
+    try s.filter(f => f.toString.endsWith(".parquet")).count()
+    finally s.close()
+  }
+
   test("SRP index written partitionBy(bucket) is read with partition filters") {
     val emb = graft.tables.TestTables.embeddings(spark, sf)
     val out = s"${System.getProperty("java.io.tmpdir")}/graft_prune_spec_srp"
@@ -47,14 +54,9 @@ class AnnPruneSpec extends SparkSpec {
     assert(scan.partitionFilters.nonEmpty,
       s"bucket predicate must reach the scan as a partition filter, got: ${scan.partitionFilters}")
     // file-level proof: the pruned scan read fewer partition directories
-    // than the index has (dynamic filter resolves to exactly one bucket)
+    // than the index has (the probe's bucket is one partition)
     val filesRead = scan.metrics("numFiles").value
-    val totalFiles = {
-      import java.nio.file._
-      val s = Files.walk(Paths.get(out))
-      try s.filter(p => p.toString.endsWith(".parquet")).count()
-      finally s.close()
-    }
+    val totalFiles = filesUnder(out)
     assert(filesRead < totalFiles,
       s"pruned read touched $filesRead of $totalFiles files - no pruning happened")
   }
@@ -96,12 +98,7 @@ class AnnPruneSpec extends SparkSpec {
     assert(scan.partitionFilters.nonEmpty)
     // probes = bucket + `bits` single-flip neighbors; must stay under the full index
     val filesRead = scan.metrics("numFiles").value
-    val totalFiles = {
-      import java.nio.file._
-      val s = Files.walk(Paths.get(out))
-      try s.filter(p => p.toString.endsWith(".parquet")).count()
-      finally s.close()
-    }
+    val totalFiles = filesUnder(out)
     assert(filesRead <= bits + 1 && filesRead < totalFiles,
       s"multi-probe read $filesRead of $totalFiles files")
     val reference = Search.lshTopK(
@@ -152,12 +149,6 @@ class AnnPruneSpec extends SparkSpec {
     // two probed cell directories, nothing else
     val probeCells = q.select(explode(col("probes")).as("c")).collect().map(_.getInt(0)).toSet
     assert(probeCells.size == nprobe)
-    def filesUnder(p: String): Long = {
-      import java.nio.file._
-      val s = Files.walk(Paths.get(p))
-      try s.filter(f => f.toString.endsWith(".parquet")).count()
-      finally s.close()
-    }
     val probedFiles = probeCells.toSeq.map(c => filesUnder(s"$out/cell=$c")).sum
     val totalFiles = filesUnder(out)
     val filesRead = scan.metrics("numFiles").value
@@ -171,6 +162,30 @@ class AnnPruneSpec extends SparkSpec {
       .select(col("vec_id"), round(col("score"), 6).as("score")).collect()
     assert(pruned.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ==
       reference.map(r => (r.getLong(0), r.getDouble(1))).toSeq)
+  }
+
+  test("a local probe row (Seq(...).toDF) reads only its cell's files") {
+    // a local relation holds no selective Filter, so dynamic partition
+    // pruning never fires for it: the pruning must come from the probe's
+    // cells, collected on the driver
+    import spark.implicits._
+    val emb = graft.tables.TestTables.embeddings(spark, sf)
+    val centroids = graft.queries.VectorQueries.ivfCentroids8
+    val out = s"${System.getProperty("java.io.tmpdir")}/graft_prune_spec_local_probe"
+    graft.index.Upsert.writeBase(emb.select(col("vec_id"), col("embedding"),
+      Search.ivfCell(col("embedding"), centroids).as("cell")), "cell", out)
+    val qv = emb.filter(col("vec_id") === 0).select("embedding").as[Seq[Double]].head()
+    val probe = Seq(qv).toDF("q").select(Search.ivfCell(col("q"), centroids).as("cell"))
+    val cell = probe.as[Int].head()
+    val cellFiles = filesUnder(s"$out/cell=$cell")
+    assert(cellFiles < filesUnder(out), "test needs an index with files outside the probed cell")
+    for ((name, read) <- Seq(
+        "readPruned" -> Search.readPruned(spark, out, probe, bucketCol = "cell"),
+        "readPrunedResolved" -> graft.index.Upsert.readPrunedResolved(spark, out, probe))) {
+      val scan = indexScan(read.select("vec_id"))
+      val filesRead = scan.metrics("numFiles").value
+      assert(filesRead == cellFiles, s"$name read $filesRead files; the probed cell holds $cellFiles")
+    }
   }
 
   test("ivfProbeCells: nearest-first prefix, head equals ivfCell, full width is all cells") {

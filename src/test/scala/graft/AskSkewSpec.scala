@@ -140,6 +140,16 @@ class AskSkewSpec extends SparkSpec {
     val noTables = tables.filter(lit(false))
     same(Ask.resolveShowTableTags(answers, "id", "answer", noTables, "cat", "html"),
       selfJoinResolve(answers, "id", "answer", noTables, "cat", "html"))
+    // the cartesian plan folds the dimension once per answers partition:
+    // answers over several partitions, a dimension read from several files
+    val spread = answers.repartition(3, col("rank"))
+    assert(spread.rdd.mapPartitions(rows => Iterator(rows.size)).collect().count(_ > 0) == 3)
+    val dimPath = s"${System.getProperty("java.io.tmpdir")}/graft_ask_skew_spec_dim"
+    tables.repartition(2).write.mode("overwrite").parquet(dimPath)
+    val stored = spark.read.parquet(dimPath)
+    assert(stored.inputFiles.length >= 2)
+    same(Ask.resolveShowTableTags(spread, "id", "answer", stored, "cat", "html"),
+      selfJoinResolve(spread, "id", "answer", stored, "cat", "html"))
   }
 
   test("qnaFallback accepts only close question matches") {

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.{ExplainMode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 
 /** Physical-plan shape assertions — the 100 TB claims in PERF.md, codified
   * so a regression in pushdown, broadcast choice, partial aggregation, or
@@ -15,7 +16,7 @@ class PlanSpec extends SparkSpec {
     df.queryExecution.explainString(ExplainMode.fromString("formatted"))
 
   test("v17's pre-filter predicate reaches the stored index scan as a pushed filter") {
-    // the filtered-ANN claim: the metadata predicate rides the DPP-pruned
+    // the filtered-ANN claim: the metadata predicate rides the cell-pruned
     // cell read as a parquet PushedFilter — a post-scan Filter would read
     // (and decode) every row of the probed cells. The gate's own output
     // plan hides the scan behind localCheckpoints, so the probe read is
@@ -397,39 +398,64 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** Every node of an executed plan, through adaptive query stages. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => planNodes(s.plan)
+    case other => other.children.flatMap(planNodes)
+  })
+
+  /** One question: ask → resolveShowTableTags → sources over the documents,
+    * each answer tagged with its language's table in `dim`. */
+  private def question(dim: DataFrame): DataFrame = {
+    import graft.query.Ask
+    val hits = Ask.ask(graft.tables.TestTables.documents(spark, sf), "doc_id", "text", "spark join stream")
+    val answers = hits.select(col("doc_id"), col("text"), col("score"),
+      concat(lit("see [SHOW_TABLE:CAT="), col("lang"), lit("]")).as("answer"))
+    Ask.sources(Ask.resolveShowTableTags(answers, "doc_id", "answer", dim, "cat", "html"),
+      "doc_id", "answer")
+  }
+
   test("a question scans the corpus once, with no window and no tokenizing below the fetch") {
     // ask → resolveShowTableTags → sources: the answers subtree must not
     // appear twice (a second retrieval), the dimension's first match must
     // not need a window shuffle, and the keyword overlap (array_intersect)
     // must run on the fetched rows, not on every corpus row
     import org.apache.spark.sql.catalyst.expressions.ArrayIntersect
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan, TakeOrderedAndProjectExec}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, TakeOrderedAndProjectExec}
     import org.apache.spark.sql.execution.window.WindowExec
-    import graft.query.Ask
     import spark.implicits._
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => nodes(s.plan)
-      case other => other.children.flatMap(nodes)
-    })
-    val hits = Ask.ask(graft.tables.TestTables.documents(spark, sf), "doc_id", "text", "spark join stream")
-    val answers = hits.select(col("doc_id"), col("text"), col("score"),
-      concat(lit("see [SHOW_TABLE:CAT="), col("lang"), lit("]")).as("answer"))
-    val dim = Seq(("en", "<table>en</table>"), ("de", "<table>de</table>")).toDF("cat", "html")
-    val out = Ask.sources(Ask.resolveShowTableTags(answers, "doc_id", "answer", dim, "cat", "html"),
-      "doc_id", "answer")
+    val out = question(Seq(("en", "<table>en</table>"), ("de", "<table>de</table>")).toDF("cat", "html"))
     assert(out.collect().nonEmpty)
-    val plan = nodes(out.queryExecution.executedPlan)
+    val plan = planNodes(out.queryExecution.executedPlan)
     val scans = plan.count(_.isInstanceOf[FileSourceScanExec])
     assert(scans == 1, s"the corpus must be scanned once per question, found $scans scans")
     assert(!plan.exists(_.isInstanceOf[WindowExec]), "tag resolution must not plan a window")
     val tops = plan.collect { case t: TakeOrderedAndProjectExec => t }
-    val fetch = tops.filter(t => !t.children.flatMap(nodes).exists(_.isInstanceOf[TakeOrderedAndProjectExec]))
+    val fetch = tops.filter(t => !t.children.flatMap(planNodes).exists(_.isInstanceOf[TakeOrderedAndProjectExec]))
     assert(fetch.nonEmpty, "the fetch must plan as TakeOrderedAndProject")
-    for (t <- fetch; n <- t.children.flatMap(nodes))
+    for (t <- fetch; n <- t.children.flatMap(planNodes))
       assert(!n.expressions.exists(_.find(_.isInstanceOf[ArrayIntersect]).isDefined),
         s"keyword overlap must run after the fetch cut, found below it in ${n.nodeName}")
+  }
+
+  test("a question runs one Spark job: the dimension folds inside the answers' task") {
+    // over parquet, with a dimension stored as several files: the fold
+    // must neither shuffle (a partial aggregate's map stage is a job) nor
+    // broadcast (another job)
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+    import spark.implicits._
+    val dimPath = s"${System.getProperty("java.io.tmpdir")}/graft_plan_spec_ask_dim"
+    Seq(("en", "<table>en</table>"), ("de", "<table>de</table>"), ("fr", "<table>fr</table>"))
+      .toDF("cat", "html").repartition(2).write.mode("overwrite").parquet(dimPath)
+    val dim = spark.read.parquet(dimPath)
+    assert(dim.inputFiles.length >= 2, "the dimension must span several files")
+    val out = question(dim)
+    val jobs = jobCount(out)
+    assert(jobs == 1, s"a question must run one Spark job, ran $jobs")
+    val exchanges = planNodes(out.queryExecution.executedPlan)
+      .filter(p => p.isInstanceOf[ShuffleExchangeLike] || p.isInstanceOf[BroadcastExchangeLike])
+    assert(exchanges.isEmpty, s"a question must plan no exchange, found ${exchanges.map(_.nodeName)}")
   }
 
   test("container-source queries stay map-only up to the output sort") {
@@ -467,23 +493,6 @@ class PlanSpec extends SparkSpec {
   * ~1.5x headroom — generous to config drift, far below any of the
   * regression shapes above. */
 class Round15PlanSpec extends SparkSpec {
-  import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
-  private def jobCount(df: => org.apache.spark.sql.DataFrame): Int = {
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = counter.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      df.collect()
-      // the listener bus delivers asynchronously; wait for the count to
-      // settle (an undercount only ever makes the budget EASIER to meet)
-      var prev = -1
-      while (counter.get != prev) { prev = counter.get; Thread.sleep(200) }
-    } finally spark.sparkContext.removeSparkListener(l)
-    counter.get
-  }
 
   test("lifecycle gates stay inside their job-count budgets") {
     val budgets = Seq(

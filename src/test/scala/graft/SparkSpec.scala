@@ -22,4 +22,22 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   val sf: String = TestSpark.sf
+
+  /** Spark jobs started while `df` is built and collected. */
+  protected def jobCount(df: => org.apache.spark.sql.DataFrame): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = counter.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      df.collect()
+      // the listener bus delivers asynchronously; wait for the count to
+      // settle (an undercount only ever makes the budget EASIER to meet)
+      var prev = -1
+      while (counter.get != prev) { prev = counter.get; Thread.sleep(200) }
+    } finally spark.sparkContext.removeSparkListener(l)
+    counter.get
+  }
 }
