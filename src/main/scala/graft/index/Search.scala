@@ -254,14 +254,6 @@ object Search {
       array((1 to dim).map(i => min(element_at(col(vecCol), i).cast("double"))): _*).as("lo"),
       array((1 to dim).map(i => max(element_at(col(vecCol), i).cast("double"))): _*).as("hi"))
 
-  /** Byte codes for one vector against broadcast `lo`/`hi` range arrays. */
-  def sqCodes(vec: Column, lo: Column, hi: Column, dim: Int): Column =
-    transform(sequence(lit(1), lit(dim)), i =>
-      when(element_at(hi, i) > element_at(lo, i),
-        round((element_at(vec, i).cast("double") - element_at(lo, i))
-          / (element_at(hi, i) - element_at(lo, i)) * 255).cast("int"))
-        .otherwise(lit(0)))
-
   /** Quantize-and-dequantize in ONE transform: the value the byte code
     * reconstructs, straight from the raw vector. The fused form exists
     * because nesting two HOFs (codes transform inside a scoring fold)

@@ -3,6 +3,7 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Incremental maintenance for the stored (partitioned) vector indexes —
   * upsert / delete / compact over the v6 IVF(+PQ) layout (SURVEY.md §2.9;
@@ -80,34 +81,52 @@ object Upsert {
     // never the payload (codes/vectors)
     val current = resolveView(
       full.select(col(idCol), col(cellCol), col("seg"), col("deleted")), idCol)
-    val payloadCols = batch.columns.filterNot(c => c == idCol || c == cellCol)
-    val moveTombstones = batch.select(col(idCol), col(cellCol).as("_new_cell"))
-      .join(current.select(col(idCol), col(cellCol)), Seq(idCol))
-      .filter(col(cellCol) =!= col("_new_cell"))
-      .select(Seq(col(idCol), col(cellCol)) ++
-        payloadCols.map(c => lit(null).cast(batch.schema(c).dataType).as(c)): _*)
-      .withColumn("deleted", lit(true))
-    val liveRows = batch.withColumn("deleted", lit(false))
-    writeByCell(liveRows.unionByName(moveTombstones).withColumn("seg", lit(seg)),
+    writeByCell(upsertRows(batch, current, idCol, cellCol).withColumn("seg", lit(seg)),
       cellCol, out, "append")
   }
 
   /** Delete by id: tombstones appended into each victim's CURRENT cell
-    * (ids with no live row are ignored — idempotent). `template` supplies
-    * the payload schema for the null columns. */
+    * (ids with no live row are ignored — idempotent). */
   def delete(spark: SparkSession, out: String, ids: DataFrame,
              idCol: String = "vec_id", cellCol: String = "cell"): Unit = {
     val full = spark.read.parquet(out)
     val seg = nextSeg(full)
-    val payloadCols = full.columns.filterNot(c =>
-      Seq(idCol, cellCol, "seg", "deleted").contains(c))
     val current = resolveView(
       full.select(col(idCol), col(cellCol), col("seg"), col("deleted")), idCol)
-    writeByCell(current.join(ids.select(col(idCol)), Seq(idCol), "left_semi")
-      .select(Seq(col(idCol), col(cellCol)) ++
-        payloadCols.map(c => lit(null).cast(full.schema(c).dataType).as(c)): _*)
-      .withColumn("deleted", lit(true))
+    writeByCell(tombstones(current.join(ids.select(col(idCol)), Seq(idCol), "left_semi"),
+        full.schema, idCol, cellCol)
       .withColumn("seg", lit(seg)), cellCol, out, "append")
+  }
+
+  /** Tombstones for the (idCol, cellCol) `rows`: every other column of
+    * `schema` but seg and deleted as a typed null payload, deleted = true. */
+  private def tombstones(rows: DataFrame, schema: StructType, idCol: String,
+                         cellCol: String): DataFrame =
+    rows.select(Seq(col(idCol), col(cellCol)) ++
+        schema.fields.toSeq.filterNot(f => Seq(idCol, cellCol, "seg", "deleted").contains(f.name))
+          .map(f => lit(null).cast(f.dataType).as(f.name)): _*)
+      .withColumn("deleted", lit(true))
+
+  /** The segment rows of an upsert: the batch's rows live, plus a
+    * tombstone in the OLD cell of every vector whose cell differs from its
+    * cell in `current` (id, cell). */
+  private def upsertRows(batch: DataFrame, current: DataFrame, idCol: String,
+                         cellCol: String): DataFrame = {
+    val moved = batch.select(col(idCol), col(cellCol).as("_new_cell"))
+      .join(current.select(col(idCol), col(cellCol)), Seq(idCol))
+      .filter(col(cellCol) =!= col("_new_cell"))
+    batch.withColumn("deleted", lit(false))
+      .unionByName(tombstones(moved, batch.schema, idCol, cellCol))
+  }
+
+  /** Append a segment's `rows` and return its per-cell write inventory
+    * (cell, n_live, n_tombstones); the rows are computed once for both. */
+  private def writeSeg(rows: DataFrame, out: String, cellCol: String): DataFrame = {
+    val seg = rows.localCheckpoint()
+    writeByCell(seg, cellCol, out, "append")
+    seg.groupBy(col(cellCol)).agg(
+      sum(when(!col("deleted"), 1L).otherwise(0L)).as("n_live"),
+      sum(when(col("deleted"), 1L).otherwise(0L)).as("n_tombstones"))
   }
 
   /** [[upsert]] with the segment number and the current (id, cell) view
@@ -122,37 +141,17 @@ object Upsert {
     * (cell, n_live, n_tombstones) so the caller can commit manifest rows
     * WITHOUT re-listing files. */
   def upsertSeg(batch: DataFrame, current: DataFrame, seg: Long, out: String,
-                idCol: String = "vec_id", cellCol: String = "cell"): DataFrame = {
-    val payloadCols = batch.columns.filterNot(c => c == idCol || c == cellCol)
-    val moveTombstones = batch.select(col(idCol), col(cellCol).as("_new_cell"))
-      .join(current.select(col(idCol), col(cellCol)), Seq(idCol))
-      .filter(col(cellCol) =!= col("_new_cell"))
-      .select(Seq(col(idCol), col(cellCol)) ++
-        payloadCols.map(c => lit(null).cast(batch.schema(c).dataType).as(c)): _*)
-      .withColumn("deleted", lit(true))
-    val rows = batch.withColumn("deleted", lit(false)).unionByName(moveTombstones)
-      .withColumn("seg", lit(seg)).localCheckpoint() // one compute: write + inventory
-    writeByCell(rows, cellCol, out, "append")
-    rows.groupBy(col(cellCol)).agg(
-      sum(when(!col("deleted"), 1L).otherwise(0L)).as("n_live"),
-      sum(when(col("deleted"), 1L).otherwise(0L)).as("n_tombstones"))
-  }
+                idCol: String = "vec_id", cellCol: String = "cell"): DataFrame =
+    writeSeg(upsertRows(batch, current, idCol, cellCol).withColumn("seg", lit(seg)), out, cellCol)
 
   /** [[delete]]'s manifest-driven twin: the caller supplies the victims
     * WITH their current cells (from its ids-only view) and the segment
     * number; `template` supplies the payload schema for the null
     * columns. Returns the per-cell inventory like [[upsertSeg]]. */
   def deleteSeg(victims: DataFrame, template: DataFrame, seg: Long, out: String,
-                idCol: String = "vec_id", cellCol: String = "cell"): DataFrame = {
-    val payloadCols = template.columns.filterNot(c => c == idCol || c == cellCol)
-    val rows = victims.select(Seq(col(idCol), col(cellCol)) ++
-        payloadCols.map(c => lit(null).cast(template.schema(c).dataType).as(c)): _*)
-      .withColumn("deleted", lit(true)).withColumn("seg", lit(seg)).localCheckpoint()
-    writeByCell(rows, cellCol, out, "append")
-    rows.groupBy(col(cellCol)).agg(
-      sum(when(!col("deleted"), 1L).otherwise(0L)).as("n_live"),
-      sum(when(col("deleted"), 1L).otherwise(0L)).as("n_tombstones"))
-  }
+                idCol: String = "vec_id", cellCol: String = "cell"): DataFrame =
+    writeSeg(tombstones(victims, template.schema, idCol, cellCol).withColumn("seg", lit(seg)),
+      out, cellCol)
 
   /** Fold all segments into a fresh seg-0 index at `dst` (tombstones and
     * superseded rows dropped). Query-equivalence with the un-compacted

@@ -19,15 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object Chunking {
 
-  /** W6/P11: keep rows while the running sum of `cost` (inclusive) stays
-    * within `budget`, per partition in `orderCol` order. */
-  def withinBudget(df: DataFrame, partCols: Seq[Column], orderCol: Column, cost: Column,
-                   budget: Long, out: String = "in_budget"): DataFrame = {
-    val w = Window.partitionBy(partCols: _*).orderBy(orderCol)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    df.withColumn(out, sum(cost).over(w) <= budget)
-  }
-
   /** W4 (windowed approximation): chunk id = floor(cumulative-length /
     * maxChars) plus explicit break flags folded in via gaps-and-islands. */
   def chunkIdApprox(df: DataFrame, partCols: Seq[Column], orderCol: Column, contentLen: Column,

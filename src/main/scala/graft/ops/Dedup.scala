@@ -438,18 +438,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), round(jac, 6).as("jaccard"))
   }
 
-  /** n-gram Jaccard similarity between two texts. */
-  def ngramJaccard(a: Column, b: Column, n: Int = 3): Column = {
-    val ga = charNgrams(lower(a), n)
-    val gb = charNgrams(lower(b), n)
-    size(array_intersect(ga, gb)).cast("double") / size(array_union(ga, gb))
-  }
-
-  /** Embedding near-dup: cosine ≥ threshold pairs within a blocking key. */
-  def embeddingDuplicates(df: DataFrame, idCol: String, vecCol: String, blockCol: String,
-                          threshold: Double): DataFrame =
-    graft.index.Search.nearDuplicatePairs(df, vecCol, idCol, blockCol, threshold)
-
   /** Benchmark decontamination (GPT-3 appendix-C style): flag training
     * documents sharing any word n-gram with an evaluation set.
     *

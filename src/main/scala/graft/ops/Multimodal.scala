@@ -18,12 +18,6 @@ import org.apache.spark.sql.types._
   */
 object Multimodal {
 
-  val mediaMetaSchema: StructType = StructType(Seq(
-    StructField("media_type", StringType),
-    StructField("width", IntegerType),
-    StructField("height", IntegerType),
-    StructField("n_bytes", LongType)))
-
   /** Wrap a string payload column as (binary payload, typed metadata). */
   def asMediaColumn(df: DataFrame, payloadCol: String, mediaType: String): DataFrame =
     df.withColumn("payload", col(payloadCol).cast("binary"))

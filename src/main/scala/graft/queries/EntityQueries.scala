@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.tables.TestTables._
@@ -184,6 +185,46 @@ object EntityQueries extends QuerySet {
       })
   }
 
+  /** er5's and er5b's oracle CTEs: the record tokens' counts `occ(tok,
+    * n)`, each token's closure cluster `final(tok, cluster_id)` and each
+    * cluster's most frequent token `canon(cluster_id, canonical)`. The
+    * Spark twin is `canonicalMap`. */
+  private val canonicalCtes: String =
+    s"""WITH RECURSIVE ${EntityResolution.recordsSql},
+            toks AS (SELECT unnest(string_split(rec, ' ')) AS tok FROM recs),
+            occ AS (SELECT tok, CAST(count(*) AS BIGINT) AS n FROM toks
+                    WHERE tok <> '' GROUP BY tok),
+            v AS (SELECT tok FROM occ),
+            $lev1PairsSql,
+            ${OracleSql.closureCtes},
+            final AS (
+              SELECT v.tok, coalesce(l.cluster_id, v.tok) AS cluster_id
+              FROM v LEFT JOIN labels l ON l.id = v.tok),
+            canon AS (
+              SELECT cluster_id, tok AS canonical FROM (
+                SELECT f.cluster_id, f.tok,
+                  row_number() OVER (PARTITION BY f.cluster_id
+                    ORDER BY o.n DESC, f.tok) AS rk
+                FROM final f JOIN occ o ON o.tok = f.tok)
+              WHERE rk = 1)"""
+
+  /** Token counts (tok, n) of the entity records, and every token with its
+    * closure cluster, its cluster's most frequent token (ties to the
+    * lower token) and its count: (tok, cluster_id, canonical, n). */
+  private def canonicalMap(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val recs = EntityResolution.records(documents(s, d))
+    val occ = recs.select(explode(split(col("rec"), " ")).as("tok"))
+      .filter(col("tok") =!= "")
+      .groupBy("tok").agg(count(lit(1)).as("n"))
+      .localCheckpoint() // feeds vocab, election, member counts, canonical counts
+    val fin = tokenClusters(occ.select("tok"))
+    val w = Window.partitionBy(col("cluster_id")).orderBy(col("n").desc, col("tok"))
+    val canon = fin.join(occ, "tok")
+      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+      .select(col("cluster_id"), col("tok").as("canonical"))
+    (occ, fin.join(canon, "cluster_id").join(occ, "tok"))
+  }
+
   /** Correction dictionary: every er3 cluster elects its canonical
     * spelling (highest corpus occurrence count, lexicographic
     * tiebreak) and each non-canonical member becomes a correction
@@ -202,23 +243,7 @@ object EntityQueries extends QuerySet {
     * canonical, frequency ratios) exactly because of it. The gate pins
     * the raw closure semantics. */
   val er5Canon = Q("er5_canonical_map",
-    Some(s"""WITH RECURSIVE ${EntityResolution.recordsSql},
-            toks AS (SELECT unnest(string_split(rec, ' ')) AS tok FROM recs),
-            occ AS (SELECT tok, CAST(count(*) AS BIGINT) AS n FROM toks
-                    WHERE tok <> '' GROUP BY tok),
-            v AS (SELECT tok FROM occ),
-            $lev1PairsSql,
-            ${OracleSql.closureCtes},
-            final AS (
-              SELECT v.tok, coalesce(l.cluster_id, v.tok) AS cluster_id
-              FROM v LEFT JOIN labels l ON l.id = v.tok),
-            canon AS (
-              SELECT cluster_id, tok AS canonical FROM (
-                SELECT f.cluster_id, f.tok,
-                  row_number() OVER (PARTITION BY f.cluster_id
-                    ORDER BY o.n DESC, f.tok) AS rk
-                FROM final f JOIN occ o ON o.tok = f.tok)
-              WHERE rk = 1)
+    Some(s"""$canonicalCtes
             SELECT f.tok AS tok, c.canonical, o.n AS n_occurrences,
               CASE WHEN f.tok <> c.canonical THEN 1 ELSE 0 END AS is_correction
             FROM final f
@@ -226,17 +251,7 @@ object EntityQueries extends QuerySet {
             JOIN occ o ON o.tok = f.tok
             ORDER BY f.tok"""),
     (s, d) => {
-      val recs = EntityResolution.records(documents(s, d))
-      val occ = recs.select(explode(split(col("rec"), " ")).as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy("tok").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // feeds vocab, election, and output
-      val fin = tokenClusters(occ.select("tok"))
-      val w = Window.partitionBy(col("cluster_id")).orderBy(col("n").desc, col("tok"))
-      val canon = fin.join(occ, "tok")
-        .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-        .select(col("cluster_id"), col("tok").as("canonical"))
-      fin.join(canon, "cluster_id").join(occ, "tok")
+      canonicalMap(s, d)._2
         .select(col("tok"), col("canonical"), col("n").as("n_occurrences"),
           when(col("tok") =!= col("canonical"), 1).otherwise(0).as("is_correction"))
         .orderBy("tok")
@@ -256,23 +271,7 @@ object EntityQueries extends QuerySet {
     * column and OUT of the released map. er5 is kept unchanged as the
     * documented raw variant. */
   val er5bGuarded = Q("er5b_guarded_map",
-    Some(s"""WITH RECURSIVE ${EntityResolution.recordsSql},
-            toks AS (SELECT unnest(string_split(rec, ' ')) AS tok FROM recs),
-            occ AS (SELECT tok, CAST(count(*) AS BIGINT) AS n FROM toks
-                    WHERE tok <> '' GROUP BY tok),
-            v AS (SELECT tok FROM occ),
-            $lev1PairsSql,
-            ${OracleSql.closureCtes},
-            final AS (
-              SELECT v.tok, coalesce(l.cluster_id, v.tok) AS cluster_id
-              FROM v LEFT JOIN labels l ON l.id = v.tok),
-            canon AS (
-              SELECT cluster_id, tok AS canonical FROM (
-                SELECT f.cluster_id, f.tok,
-                  row_number() OVER (PARTITION BY f.cluster_id
-                    ORDER BY o.n DESC, f.tok) AS rk
-                FROM final f JOIN occ o ON o.tok = f.tok)
-              WHERE rk = 1)
+    Some(s"""$canonicalCtes
             SELECT f.tok AS tok, c.canonical, o.n AS n_occurrences,
               CAST(levenshtein(f.tok, c.canonical) AS BIGINT) AS dist_to_canonical,
               CASE WHEN f.tok <> c.canonical THEN 1 ELSE 0 END AS raw_correction,
@@ -287,21 +286,11 @@ object EntityQueries extends QuerySet {
             ORDER BY f.tok"""),
     (s, d) => {
       GraftFunctions.register(s)
-      val recs = EntityResolution.records(documents(s, d))
-      val occ = recs.select(explode(split(col("rec"), " ")).as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy("tok").agg(count(lit(1)).as("n"))
-        .localCheckpoint() // feeds vocab, election, member counts, canonical counts
-      val fin = tokenClusters(occ.select("tok"))
-      val w = Window.partitionBy(col("cluster_id")).orderBy(col("n").desc, col("tok"))
-      val canon = fin.join(occ, "tok")
-        .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-        .select(col("cluster_id"), col("tok").as("canonical"))
+      val (occ, mapped) = canonicalMap(s, d)
       val dist = EntityResolution.levBytes(col("tok"), col("canonical"))
       val guarded = col("tok") =!= col("canonical") && dist <= 1 &&
         col("can_n") >= lit(4L) * col("n")
-      fin.join(canon, "cluster_id").join(occ, "tok")
-        .join(occ.select(col("tok").as("canonical"), col("n").as("can_n")), "canonical")
+      mapped.join(occ.select(col("tok").as("canonical"), col("n").as("can_n")), "canonical")
         .select(col("tok"), col("canonical"), col("n").as("n_occurrences"),
           dist.as("dist_to_canonical"),
           when(col("tok") =!= col("canonical"), 1).otherwise(0).as("raw_correction"),

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.tables.TestTables._
@@ -24,6 +25,114 @@ object LakehouseQueries extends QuerySet {
       .select(col("path"), col("o_orderkey"), col("cents"),
         (row_number().over(w) - 1).cast("long").as("pos"))
   }
+
+  /** CTEs `live4` (the latest snapshot of `acts`) and `rws4(path,
+    * o_orderkey, cents, pos)`: its physical rows with their positions —
+    * the SQL twin of `positionedRows`. */
+  private val positionedRowsCtes: String =
+    s"""live4 AS (SELECT * FROM ${DeltaLog.liveSql("(SELECT max(version) FROM acts)")} t),
+            rws4 AS (
+              SELECT f.path, o.o_orderkey,
+                CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents,
+                row_number() OVER (PARTITION BY f.path ORDER BY o.o_orderkey) - 1 AS pos
+              FROM live4 f JOIN orders o
+                ON (o.o_orderkey // ${DeltaLog.W}) BETWEEN f.b_lo AND f.b_hi)"""
+
+  /** Version 0 of a row-tracked table over `obRows` (bucket, o_orderkey,
+    * cents): its add actions, one `part-<bucket>` file per bucket with ids
+    * assigned batch-wise from high-water mark 0, and the whole log with
+    * the protocol row tracking requires (reader 3 / writer 7). Log
+    * checkpoints ride ONE partition: every race over them is a window
+    * over ≤2k rows, and 32-way shuffles of that pay 32 task floors per
+    * stage for nothing. Returns (adds, log). */
+  private def rowTrackedV0(s: SparkSession, obRows: DataFrame): (DataFrame, DataFrame) = {
+    val bks = obRows.groupBy("bucket")
+      .agg(count(lit(1)).as("n_rows"), min("o_orderkey").as("min_key"),
+        max("o_orderkey").as("max_key"), sum("cents").as("cents"))
+    val v0adds = DeltaLog.addActions(bks.select(col("bucket").as("ordinal"),
+      concat(lit("part-"), col("bucket")).as("path"),
+      array(col("bucket")).as("buckets"),
+      col("n_rows"), col("min_key"), col("max_key"), col("cents")), 0)
+      .coalesce(1).localCheckpoint()
+    val acts0 = v0adds
+      .unionByName(DeltaLog.assignRidActions(v0adds, v0adds))
+      .unionByName(DeltaLog.protocolAction(s, 0, 10000, 3, 7))
+      .coalesce(1).localCheckpoint()
+    (v0adds, acts0)
+  }
+
+  /** Oracle CTEs `bks(bucket, n_rows)`, the orders per bucket, and
+    * `base(bucket, n_rows, base)`, each bucket's first row id. */
+  private val bucketBaseCtes: String =
+    s"""bks AS (
+              SELECT o_orderkey // ${DeltaLog.W} AS bucket,
+                CAST(count(*) AS BIGINT) AS n_rows
+              FROM orders GROUP BY 1),
+            base AS (
+              SELECT bucket, n_rows,
+                COALESCE(sum(n_rows) OVER (ORDER BY bucket
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS base
+              FROM bks)"""
+
+  /** The 'txn' and 'post' rows of optimizing part-4 and part-5 into
+    * opt-4-5 at version 4 and appending append-9 at version 5, over CTEs
+    * `live3`, `b45` and `b5` (n_rows, cents). */
+  private val optimizeAppendRowsSql: String =
+    """UNION ALL SELECT 'txn', 'remove:part-4', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
+                CAST(4 AS BIGINT)
+              UNION ALL SELECT 'txn', 'remove:part-5', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
+                CAST(4 AS BIGINT)
+              UNION ALL SELECT 'txn', 'add:opt-4-5', n_rows, cents, CAST(4 AS BIGINT) FROM b45
+              UNION ALL SELECT 'txn', 'add:append-9', n_rows, cents, CAST(5 AS BIGINT) FROM b5
+              UNION ALL
+              SELECT 'post', path, n_rows, cents, CAST(0 AS BIGINT)
+              FROM (
+                SELECT path, n_rows, cents FROM live3
+                WHERE path NOT IN ('part-4', 'part-5')
+                UNION ALL SELECT 'opt-4-5', n_rows, cents FROM b45
+                UNION ALL SELECT 'append-9', n_rows, cents FROM b5) t2"""
+
+  /** A rowset's ground-truth signature as one output row: (section, item,
+    * n_rows = row count, cents = Σ cents, flag = Σ o_orderkey). The sums
+    * of an empty rowset are null. The SQL twin is `sigCte`. */
+  private[graft] def sig(rows: DataFrame, section: String, item: String): DataFrame = rows
+    .agg(count(lit(1)).as("n"), sum("cents").as("c"), sum("o_orderkey").as("k"))
+    .select(lit(section).as("section"), lit(item).as("item"),
+      col("n").cast("long").as("n_rows"), col("c").cast("long").as("cents"),
+      col("k").cast("long").as("flag"))
+
+  /** The ('check', `item`) row that says whether two one-row signature
+    * frames agree on every column but section and item. Its last column
+    * is the flag: 1 when all are equal, else 0 — also when a side's sum is
+    * null (an empty rowset), as the oracle's `CASE … THEN 1 ELSE 0` gives,
+    * never null. Its other value columns are 0. The SQL twin is
+    * `checkRowsSql`. */
+  private[graft] def equalCheck(a: DataFrame, b: DataFrame, item: String): DataFrame = {
+    val vals = a.columns.toSeq.filterNot(Set("section", "item"))
+    val same = vals.map(c => col(s"a_$c") === col(s"b_$c")).reduce(_ && _)
+    a.select(vals.map(c => col(c).as(s"a_$c")): _*)
+      .crossJoin(broadcast(b.select(vals.map(c => col(c).as(s"b_$c")): _*)))
+      .select(Seq(lit("check").as("section"), lit(item).as("item")) ++
+        vals.init.map(c => lit(0L).as(c)) :+ when(same, 1L).otherwise(0L).as(vals.last): _*)
+  }
+
+  /** Signature CTE `name(n, c, k)` of the rowset `rows`: row count, Σ cents
+    * and Σ o_orderkey. The Spark twin is `sig`. */
+  private def sigCte(name: String, rows: String): String =
+    s"""$name AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
+              CAST(sum(o_orderkey) AS BIGINT) AS k FROM $rows)"""
+
+  /** The ground-truth rows over signature CTEs `a` and `b`: each as a
+    * 'check' row named `itemA`/`itemB`, then ('check', 'equal') with flag
+    * 1 when n, c and k all agree, else 0. Spark twins: `sig`, `equalCheck`. */
+  private def checkRowsSql(a: String, itemA: String, b: String, itemB: String): String =
+    s"""UNION ALL SELECT 'check', '$itemA', n, c, k FROM $a
+              UNION ALL SELECT 'check', '$itemB', n, c, k FROM $b
+              UNION ALL SELECT 'check', 'equal', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
+                CAST(CASE WHEN (SELECT n FROM $a) = (SELECT n FROM $b)
+                      AND (SELECT c FROM $a) = (SELECT c FROM $b)
+                      AND (SELECT k FROM $a) = (SELECT k FROM $b)
+                     THEN 1 ELSE 0 END AS BIGINT)"""
 
   /** Latest-snapshot file listing: build the JSON action log, replay it
     * (per-path last action wins), emit the live files with their stats.
@@ -617,25 +726,14 @@ object LakehouseQueries extends QuerySet {
       // strict parse, replay to the post snapshot
       val acts4 = DeltaLog.actions(log3.unionByName(DeltaLog.toLines(opt))).localCheckpoint()
       val live4 = DeltaLog.replay(acts4).localCheckpoint()
-      def sig(live: org.apache.spark.sql.DataFrame, tag: String) = {
-        val fb = live.select(explode(col("buckets")).as("bucket"))
-        val ob = ord.select(floor(col("o_orderkey") / DeltaLog.W).as("bucket"),
-          col("o_orderkey"), round(col("o_totalprice") * 100).cast("long").as("c"))
-        ob.join(broadcast(fb), Seq("bucket"))
-          .agg(count(lit(1)).as("n"), sum("c").as("cents"), sum("o_orderkey").as("keysum"))
-          .select(lit("check").as("section"), lit(tag).as("item"),
-            col("n").cast("long").as("n_rows"), col("cents").cast("long").as("cents"),
-            col("keysum").cast("long").as("flag"))
-          .localCheckpoint() // feeds its own output row AND the equality row
-      }
-      val sig3 = sig(live3, "rowset_pre")
-      val sig4 = sig(live4, "rowset_post")
-      val equal = sig3.select(col("n_rows").as("n3"), col("cents").as("c3"), col("flag").as("k3"))
-        .crossJoin(broadcast(sig4.select(col("n_rows").as("n4"), col("cents").as("c4"), col("flag").as("k4"))))
-        .select(lit("check").as("section"), lit("rowset_equal").as("item"),
-          lit(0L).as("n_rows"), lit(0L).as("cents"),
-          when(col("n3") === col("n4") && col("c3") === col("c4") && col("k3") === col("k4"), 1L)
-            .otherwise(0L).as("flag"))
+      val ob = ord.select(floor(col("o_orderkey") / DeltaLog.W).as("bucket"),
+        col("o_orderkey"), round(col("o_totalprice") * 100).cast("long").as("cents"))
+      def rowsOf(live: DataFrame) =
+        ob.join(broadcast(live.select(explode(col("buckets")).as("bucket"))), Seq("bucket"))
+      // each feeds its own output row AND the equality row
+      val sig3 = sig(rowsOf(live3), "check", "rowset_pre").localCheckpoint()
+      val sig4 = sig(rowsOf(live4), "check", "rowset_post").localCheckpoint()
+      val equal = equalCheck(sig3, sig4, "rowset_equal")
       val txnAdd = opt.filter(col("op") === "add")
         .select(lit("txn").as("section"), concat(lit("add:"), col("path")).as("item"),
           col("n_rows"), col("cents"), lit(0L).as("flag"))
@@ -910,13 +1008,7 @@ object LakehouseQueries extends QuerySet {
     * and both reads from arithmetic CTEs. */
   val dl14OptimizeDv = Q("dl14_optimize_dv",
     Some(s"""WITH ${DeltaLog.actionsSql},
-            live4 AS (SELECT * FROM ${DeltaLog.liveSql("(SELECT max(version) FROM acts)")} t),
-            rws4 AS (
-              SELECT f.path, o.o_orderkey,
-                CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents,
-                row_number() OVER (PARTITION BY f.path ORDER BY o.o_orderkey) - 1 AS pos
-              FROM live4 f JOIN orders o
-                ON (o.o_orderkey // ${DeltaLog.W}) BETWEEN f.b_lo AND f.b_hi),
+            $positionedRowsCtes,
             dv AS (
               SELECT path, pos FROM rws4 WHERE path = 'part-4' AND pos % 5 = 2
               UNION ALL SELECT path, pos FROM rws4 WHERE path = 'compact-0-1' AND pos % 11 = 0),
@@ -1038,19 +1130,9 @@ object LakehouseQueries extends QuerySet {
         .filter(col("hit").isNull)
       // both consumers (output row + equality flag) re-aggregate over
       // ALREADY-checkpointed row frames — cheap, no materialization job
-      def sig(rows: org.apache.spark.sql.DataFrame, section: String) = rows
-        .agg(count(lit(1)).as("n"), sum("cents").as("c"), sum("o_orderkey").as("k"))
-        .select(lit(section).as("section"), lit("rowset").as("item"),
-          col("n").cast("long").as("n_rows"), col("c").cast("long").as("cents"),
-          col("k").cast("long").as("flag"))
-      val sigPre = sig(prerows, "pre")
-      val sigPost = sig(postrows, "post")
-      val equal = sigPre.select(col("n_rows").as("n1"), col("cents").as("c1"), col("flag").as("k1"))
-        .crossJoin(broadcast(sigPost.select(col("n_rows").as("n2"), col("cents").as("c2"), col("flag").as("k2"))))
-        .select(lit("check").as("section"), lit("no_resurrection").as("item"),
-          lit(0L).as("n_rows"), lit(0L).as("cents"),
-          when(col("n1") === col("n2") && col("c1") === col("c2") && col("k1") === col("k2"), 1L)
-            .otherwise(0L).as("flag"))
+      val sigPre = sig(prerows, "pre", "rowset")
+      val sigPost = sig(postrows, "post", "rowset")
+      val equal = equalCheck(sigPre, sigPost, "no_resurrection")
       val postPerFile = postrows.groupBy("path")
         .agg(count(lit(1)).as("pn"), sum("cents").as("pc"))
       val optCheck = opt.filter(col("op") === "add")
@@ -1509,13 +1591,7 @@ object LakehouseQueries extends QuerySet {
     * commit and both reads from arithmetic CTEs. */
   val dl17DeleteWhere = Q("dl17_delete_where",
     Some(s"""WITH ${DeltaLog.actionsSql},
-            live4 AS (SELECT * FROM ${DeltaLog.liveSql("(SELECT max(version) FROM acts)")} t),
-            rws4 AS (
-              SELECT f.path, o.o_orderkey,
-                CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents,
-                row_number() OVER (PARTITION BY f.path ORDER BY o.o_orderkey) - 1 AS pos
-              FROM live4 f JOIN orders o
-                ON (o.o_orderkey // ${DeltaLog.W}) BETWEEN f.b_lo AND f.b_hi),
+            $positionedRowsCtes,
             predv AS (SELECT path, pos FROM rws4 WHERE path = 'part-5' AND pos % 7 = 3),
             newm AS (SELECT path, pos FROM rws4
               WHERE (o_orderkey % 5 = 2) OR (o_orderkey // ${DeltaLog.W} = 3)),
@@ -1549,23 +1625,15 @@ object LakehouseQueries extends QuerySet {
               LEFT JOIN predv p ON p.path = r.path AND p.pos = r.pos
               WHERE p.pos IS NULL
                 AND NOT ((r.o_orderkey % 5 = 2) OR (r.o_orderkey // ${DeltaLog.W} = 3))),
-            sigm AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM maskedrows),
-            sigp AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM predrows)
+            ${sigCte("sigm", "maskedrows")},
+            ${sigCte("sigp", "predrows")}
             SELECT section, item, n_rows, cents, flag FROM (
               SELECT 'txn' AS section, op || ':' || path AS item,
                 CASE WHEN op = 'dv' THEN n_masked ELSE CAST(0 AS BIGINT) END AS n_rows,
                 CAST(0 AS BIGINT) AS cents,
                 CAST(CASE WHEN op = 'remove' THEN 1 ELSE 0 END AS BIGINT) AS flag FROM txn
               UNION ALL SELECT 'post', path, n_live, cents_live, n_deleted FROM post
-              UNION ALL SELECT 'check', 'masked_read', n, c, k FROM sigm
-              UNION ALL SELECT 'check', 'predicate_read', n, c, k FROM sigp
-              UNION ALL SELECT 'check', 'equal', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-                CAST(CASE WHEN (SELECT n FROM sigm) = (SELECT n FROM sigp)
-                      AND (SELECT c FROM sigm) = (SELECT c FROM sigp)
-                      AND (SELECT k FROM sigm) = (SELECT k FROM sigp)
-                     THEN 1 ELSE 0 END AS BIGINT)
+              ${checkRowsSql("sigm", "masked_read", "sigp", "predicate_read")}
             ) t ORDER BY section, item"""),
     (s, d) => {
       val ord = orders(s, d)
@@ -1615,12 +1683,8 @@ object LakehouseQueries extends QuerySet {
         .select(lit("check").as("section"), lit("masked_read").as("item"),
           col("n").cast("long").as("n_rows"), col("c").cast("long").as("cents"),
           col("k").cast("long").as("flag"))
-      val sigP = rws4.join(broadcast(del4), Seq("path", "pos"), "left")
-        .filter(col("pre").isNull && !pred)
-        .agg(count(lit(1)).as("n"), sum("cents").as("c"), sum("o_orderkey").as("k"))
-        .select(lit("check").as("section"), lit("predicate_read").as("item"),
-          col("n").cast("long").as("n_rows"), col("c").cast("long").as("cents"),
-          col("k").cast("long").as("flag"))
+      val sigP = sig(rws4.join(broadcast(del4), Seq("path", "pos"), "left")
+        .filter(col("pre").isNull && !pred), "check", "predicate_read")
       // ONE materialized 2-row frame feeds both signature output rows AND
       // the equality flag (one job instead of two)
       val sigs = sigM.unionByName(sigP).localCheckpoint()
@@ -1655,13 +1719,7 @@ object LakehouseQueries extends QuerySet {
     * update twice — the multiset semantics a physical MERGE has. */
   val dl18Merge = Q("dl18_merge",
     Some(s"""WITH ${DeltaLog.actionsSql},
-            live4 AS (SELECT * FROM ${DeltaLog.liveSql("(SELECT max(version) FROM acts)")} t),
-            rws4 AS (
-              SELECT f.path, o.o_orderkey,
-                CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents,
-                row_number() OVER (PARTITION BY f.path ORDER BY o.o_orderkey) - 1 AS pos
-              FROM live4 f JOIN orders o
-                ON (o.o_orderkey // ${DeltaLog.W}) BETWEEN f.b_lo AND f.b_hi),
+            $positionedRowsCtes,
             masks AS (
               SELECT path, CAST(count(*) AS BIGINT) AS n_masked FROM rws4
               WHERE o_orderkey % 7 <= 1 GROUP BY path),
@@ -1688,10 +1746,8 @@ object LakehouseQueries extends QuerySet {
                 cents + CASE WHEN o_orderkey % 7 = 1 THEN 7 ELSE 0 END AS cents
               FROM rws4 WHERE o_orderkey % 7 <> 0
               UNION ALL SELECT o_orderkey, cents FROM insc),
-            sig1 AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM postall),
-            sig2 AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM mergecte),
+            ${sigCte("sig1", "postall")},
+            ${sigCte("sig2", "mergecte")},
             cdf AS (SELECT
                 (SELECT CAST(count(*) AS BIGINT) FROM rws4 WHERE o_orderkey % 7 = 0) AS n_del,
                 (SELECT CAST(count(*) AS BIGINT) FROM rws4 WHERE o_orderkey % 7 = 1) AS n_upd,
@@ -1703,13 +1759,7 @@ object LakehouseQueries extends QuerySet {
               UNION ALL SELECT 'txn', 'add:upd-4', n, c, CAST(1 AS BIGINT) FROM updstat
               UNION ALL SELECT 'txn', 'add:ins-4', n, c, CAST(1 AS BIGINT) FROM insstat
               UNION ALL SELECT 'post', path, n_live, cents_live, CAST(0 AS BIGINT) FROM post
-              UNION ALL SELECT 'check', 'post_rowset', n, c, k FROM sig1
-              UNION ALL SELECT 'check', 'merge_cte', n, c, k FROM sig2
-              UNION ALL SELECT 'check', 'equal', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-                CAST(CASE WHEN (SELECT n FROM sig1) = (SELECT n FROM sig2)
-                      AND (SELECT c FROM sig1) = (SELECT c FROM sig2)
-                      AND (SELECT k FROM sig1) = (SELECT k FROM sig2)
-                     THEN 1 ELSE 0 END AS BIGINT)
+              ${checkRowsSql("sig1", "post_rowset", "sig2", "merge_cte")}
               UNION ALL SELECT 'cdf', 'deleted', n_del, CAST(0 AS BIGINT), CAST(0 AS BIGINT) FROM cdf
               UNION ALL SELECT 'cdf', 'updated', n_upd, CAST(0 AS BIGINT), CAST(0 AS BIGINT) FROM cdf
               UNION ALL SELECT 'cdf', 'inserted', n_ins, CAST(0 AS BIGINT), CAST(0 AS BIGINT) FROM cdf
@@ -1781,18 +1831,9 @@ object LakehouseQueries extends QuerySet {
         .select(col("o_orderkey"),
           (col("cents") + when(col("o_orderkey") % 7 === 1, 7L).otherwise(0L)).as("cents"))
         .unionByName(insc.select("o_orderkey", "cents"))
-      val sig2 = mergeCte
-        .agg(count(lit(1)).as("n"), sum("cents").as("c"), sum("o_orderkey").as("k"))
-        .select(lit("check").as("section"), lit("merge_cte").as("item"),
-          col("n").cast("long").as("n_rows"), col("c").cast("long").as("cents"),
-          col("k").cast("long").as("flag"))
+      val sig2 = sig(mergeCte, "check", "merge_cte")
         .localCheckpoint() // feeds its own output row AND the equality row
-      val equal = sig1.select(col("n_rows").as("n1"), col("cents").as("c1"), col("flag").as("k1"))
-        .crossJoin(broadcast(sig2.select(col("n_rows").as("n2"), col("cents").as("c2"), col("flag").as("k2"))))
-        .select(lit("check").as("section"), lit("equal").as("item"),
-          lit(0L).as("n_rows"), lit(0L).as("cents"),
-          when(col("n1") === col("n2") && col("c1") === col("c2") && col("k1") === col("k2"), 1L)
-            .otherwise(0L).as("flag"))
+      val equal = equalCheck(sig1, sig2, "equal")
       // CDF counts + the masks-reconcile pin, one aggregate over rws4
       val counts = rws4.agg(
         sum(when(col("o_orderkey") % 7 === 0, 1L).otherwise(0L)).as("n_del"),
@@ -2214,19 +2255,7 @@ object LakehouseQueries extends QuerySet {
                 CAST(count(*) AS BIGINT), CAST(coalesce(min(version), -1) AS BIGINT),
                 CAST(CASE WHEN count(*) = 0 THEN 1 ELSE 0 END AS BIGINT)
               FROM confc
-              UNION ALL SELECT 'txn', 'remove:part-4', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-                CAST(4 AS BIGINT)
-              UNION ALL SELECT 'txn', 'remove:part-5', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-                CAST(4 AS BIGINT)
-              UNION ALL SELECT 'txn', 'add:opt-4-5', n_rows, cents, CAST(4 AS BIGINT) FROM b45
-              UNION ALL SELECT 'txn', 'add:append-9', n_rows, cents, CAST(5 AS BIGINT) FROM b5
-              UNION ALL
-              SELECT 'post', path, n_rows, cents, CAST(0 AS BIGINT)
-              FROM (
-                SELECT path, n_rows, cents FROM live3
-                WHERE path NOT IN ('part-4', 'part-5')
-                UNION ALL SELECT 'opt-4-5', n_rows, cents FROM b45
-                UNION ALL SELECT 'append-9', n_rows, cents FROM b5) t2
+              $optimizeAppendRowsSql
             ) t ORDER BY section, item"""),
     (s, d) => {
       val ord = orders(s, d)
@@ -2554,19 +2583,7 @@ object LakehouseQueries extends QuerySet {
                 CAST(n_conflicts AS BIGINT) AS n_rows, CAST(target AS BIGINT) AS val,
                 CAST(committed AS BIGINT) AS flag
               FROM dec
-              UNION ALL SELECT 'txn', 'remove:part-4', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-                CAST(4 AS BIGINT)
-              UNION ALL SELECT 'txn', 'remove:part-5', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-                CAST(4 AS BIGINT)
-              UNION ALL SELECT 'txn', 'add:opt-4-5', n_rows, cents, CAST(4 AS BIGINT) FROM b45
-              UNION ALL SELECT 'txn', 'add:append-9', n_rows, cents, CAST(5 AS BIGINT) FROM b5
-              UNION ALL
-              SELECT 'post', path, n_rows, cents, CAST(0 AS BIGINT)
-              FROM (
-                SELECT path, n_rows, cents FROM live3
-                WHERE path NOT IN ('part-4', 'part-5')
-                UNION ALL SELECT 'opt-4-5', n_rows, cents FROM b45
-                UNION ALL SELECT 'append-9', n_rows, cents FROM b5) t2
+              $optimizeAppendRowsSql
             ) t ORDER BY section, item"""),
     (s, d) => {
       import s.implicits._
@@ -2634,13 +2651,7 @@ object LakehouseQueries extends QuerySet {
     * post-update rowset ≡ the oracle's direct UPDATE CTE. */
   val dl25UpdateWhere = Q("dl25_update_where",
     Some(s"""WITH ${DeltaLog.actionsSql},
-            live4 AS (SELECT * FROM ${DeltaLog.liveSql("(SELECT max(version) FROM acts)")} t),
-            rws4 AS (
-              SELECT f.path, o.o_orderkey,
-                CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents,
-                row_number() OVER (PARTITION BY f.path ORDER BY o.o_orderkey) - 1 AS pos
-              FROM live4 f JOIN orders o
-                ON (o.o_orderkey // ${DeltaLog.W}) BETWEEN f.b_lo AND f.b_hi),
+            $positionedRowsCtes,
             predv AS (SELECT path, pos FROM rws4 WHERE path = 'part-5' AND pos % 7 = 3),
             upd AS (
               SELECT r.path, r.pos, r.o_orderkey, r.cents FROM rws4 r
@@ -2673,10 +2684,8 @@ object LakehouseQueries extends QuerySet {
                 r.cents + CASE WHEN r.o_orderkey % 9 = 4 THEN 50 ELSE 0 END AS cents
               FROM rws4 r LEFT JOIN predv p ON p.path = r.path AND p.pos = r.pos
               WHERE p.pos IS NULL),
-            sig1 AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM postall),
-            sig2 AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM updcte)
+            ${sigCte("sig1", "postall")},
+            ${sigCte("sig2", "updcte")}
             SELECT section, item, n_rows, cents, flag FROM (
               SELECT 'txn' AS section, 'dv:' || path AS item, n_masked AS n_rows,
                 CAST(0 AS BIGINT) AS cents, CAST(0 AS BIGINT) AS flag FROM masks
@@ -2684,13 +2693,7 @@ object LakehouseQueries extends QuerySet {
               UNION ALL SELECT 'post', path, n_live, cents_live, CAST(0 AS BIGINT) FROM post
               UNION ALL SELECT 'cdf', 'update_preimage', n, c - 50 * n, k FROM updstat
               UNION ALL SELECT 'cdf', 'update_postimage', n, c, k FROM updstat
-              UNION ALL SELECT 'check', 'post_rowset', n, c, k FROM sig1
-              UNION ALL SELECT 'check', 'update_cte', n, c, k FROM sig2
-              UNION ALL SELECT 'check', 'equal', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-                CAST(CASE WHEN (SELECT n FROM sig1) = (SELECT n FROM sig2)
-                      AND (SELECT c FROM sig1) = (SELECT c FROM sig2)
-                      AND (SELECT k FROM sig1) = (SELECT k FROM sig2)
-                     THEN 1 ELSE 0 END AS BIGINT)
+              ${checkRowsSql("sig1", "post_rowset", "sig2", "update_cte")}
             ) t ORDER BY section, item"""),
     (s, d) => {
       import org.apache.spark.sql.types.{ArrayType, LongType}
@@ -2769,18 +2772,9 @@ object LakehouseQueries extends QuerySet {
         .filter(col("pre").isNull)
         .select(col("o_orderkey"),
           (col("cents") + when(pred, 50L).otherwise(0L)).as("cents"))
-      val sig2 = updCte
-        .agg(count(lit(1)).as("n"), sum("cents").as("c"), sum("o_orderkey").as("k"))
-        .select(lit("check").as("section"), lit("update_cte").as("item"),
-          col("n").cast("long").as("n_rows"), col("c").cast("long").as("cents"),
-          col("k").cast("long").as("flag"))
+      val sig2 = sig(updCte, "check", "update_cte")
       // no ckpt on sig2 either: its two consumers re-scan checkpointed rws4
-      val equal = sig1.select(col("n_rows").as("n1"), col("cents").as("c1"), col("flag").as("k1"))
-        .crossJoin(broadcast(sig2.select(col("n_rows").as("n2"), col("cents").as("c2"), col("flag").as("k2"))))
-        .select(lit("check").as("section"), lit("equal").as("item"),
-          lit(0L).as("n_rows"), lit(0L).as("cents"),
-          when(col("n1") === col("n2") && col("c1") === col("c2") && col("k1") === col("k2"), 1L)
-            .otherwise(0L).as("flag"))
+      val equal = equalCheck(sig1, sig2, "equal")
       txn.unionByName(post).unionByName(cdf).unionByName(sig1).unionByName(sig2)
         .unionByName(equal)
         .orderBy("section", "item")
@@ -2939,15 +2933,7 @@ object LakehouseQueries extends QuerySet {
     * one materialized id frame; maps and races are log-sized and the
     * per-row segment pick is an array expression, not a join. */
   val dl27RowTracking = Q("dl27_row_tracking",
-    Some(s"""WITH bks AS (
-              SELECT o_orderkey // ${DeltaLog.W} AS bucket,
-                CAST(count(*) AS BIGINT) AS n_rows
-              FROM orders GROUP BY 1),
-            base AS (
-              SELECT bucket, n_rows,
-                COALESCE(sum(n_rows) OVER (ORDER BY bucket
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS base
-              FROM bks),
+    Some(s"""WITH $bucketBaseCtes,
             rws AS (
               SELECT o_orderkey // ${DeltaLog.W} AS bucket, o_orderkey,
                 row_number() OVER (PARTITION BY o_orderkey // ${DeltaLog.W}
@@ -3002,23 +2988,7 @@ object LakehouseQueries extends QuerySet {
       val obRows = ord.select(floor(col("o_orderkey") / DeltaLog.W).as("bucket"),
         col("o_orderkey"), round(col("o_totalprice") * 100).cast("long").as("cents"))
         .localCheckpoint()
-      val bks = obRows.groupBy("bucket")
-        .agg(count(lit(1)).as("n_rows"), min("o_orderkey").as("min_key"),
-          max("o_orderkey").as("max_key"), sum("cents").as("cents"))
-      // v0: every bucket file, ids assigned batch-wise from hwm=0, plus
-      // the protocol the feature requires (reader 3 / writer 7). Log
-      // checkpoints ride ONE partition: every race below is a window
-      // over ≤2k rows, and 32-way shuffles of that pay 32 task floors
-      // per stage for nothing.
-      val v0adds = DeltaLog.addActions(bks.select(col("bucket").as("ordinal"),
-        concat(lit("part-"), col("bucket")).as("path"),
-        array(col("bucket")).as("buckets"),
-        col("n_rows"), col("min_key"), col("max_key"), col("cents")), 0)
-        .coalesce(1).localCheckpoint()
-      val acts0 = v0adds
-        .unionByName(DeltaLog.assignRidActions(v0adds, v0adds))
-        .unionByName(DeltaLog.protocolAction(s, 0, 10000, 3, 7))
-        .coalesce(1).localCheckpoint()
+      val (v0adds, acts0) = rowTrackedV0(s, obRows)
       // v1: compact every adjacent pair; file reshape + id maps in ONE
       // fused transaction (optimizeActionsTracked)
       val acts1 = acts0.unionByName(DeltaLog.optimizeActionsTracked(
@@ -3032,7 +3002,7 @@ object LakehouseQueries extends QuerySet {
       val acts2 = acts1.unionByName(add2)
         .unionByName(DeltaLog.assignRidActions(acts1, add2))
         .coalesce(1).localCheckpoint()
-      def sig(ids: org.apache.spark.sql.DataFrame, section: String) =
+      def idSig(ids: DataFrame, section: String) =
         ids.groupBy("path")
           .agg(count(lit(1)).as("n1"), sum("row_id").as("n2"),
             sum(col("row_id") * (col("o_orderkey") % 97)).as("n3"))
@@ -3085,7 +3055,7 @@ object LakehouseQueries extends QuerySet {
       val writer = DeltaLog.requireWriter(acts2, 7)
         .select(lit("check").as("section"), lit("writer7").as("item"),
           col("min_writer").cast("long").as("n1"), lit(0L).as("n2"), lit(0L).as("n3"))
-      sig(ids0, "read0").unionByName(sig(ids2, "read2"))
+      idSig(ids0, "read0").unionByName(idSig(ids2, "read2"))
         .unionByName(appendMin).unionByName(uniq).unionByName(hwm).unionByName(writer)
         .orderBy("section", "item")
     })
@@ -3290,15 +3260,7 @@ object LakehouseQueries extends QuerySet {
     * recycle). Work: the survivor pass is the rewrite's own data pass;
     * races and maps are log-sized. */
   val dl30CowDelete = Q("dl30_cow_delete_tracked",
-    Some(s"""WITH bks AS (
-              SELECT o_orderkey // ${DeltaLog.W} AS bucket,
-                CAST(count(*) AS BIGINT) AS n_rows
-              FROM orders GROUP BY 1),
-            base AS (
-              SELECT bucket, n_rows,
-                COALESCE(sum(n_rows) OVER (ORDER BY bucket
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS base
-              FROM bks),
+    Some(s"""WITH $bucketBaseCtes,
             rws AS (
               SELECT o_orderkey // ${DeltaLog.W} AS bucket, o_orderkey,
                 CAST(round(o_totalprice * 100) AS BIGINT) AS cents,
@@ -3369,18 +3331,7 @@ object LakehouseQueries extends QuerySet {
       val obRows = ord.select(floor(col("o_orderkey") / DeltaLog.W).as("bucket"),
         col("o_orderkey"), round(col("o_totalprice") * 100).cast("long").as("cents"))
         .localCheckpoint()
-      val bks2 = obRows.groupBy("bucket")
-        .agg(count(lit(1)).as("n_rows"), min("o_orderkey").as("min_key"),
-          max("o_orderkey").as("max_key"), sum("cents").as("cents"))
-      val v0adds = DeltaLog.addActions(bks2.select(col("bucket").as("ordinal"),
-        concat(lit("part-"), col("bucket")).as("path"),
-        array(col("bucket")).as("buckets"),
-        col("n_rows"), col("min_key"), col("max_key"), col("cents")), 0)
-        .coalesce(1).localCheckpoint()
-      val acts0 = v0adds
-        .unionByName(DeltaLog.assignRidActions(v0adds, v0adds))
-        .unionByName(DeltaLog.protocolAction(s, 0, 10000, 3, 7))
-        .coalesce(1).localCheckpoint()
+      val (_, acts0) = rowTrackedV0(s, obRows)
       val live0 = DeltaLog.replay(acts0)
       val positioned0 = positionedRows(live0, obRows).localCheckpoint()
       val bkt = floor(col("o_orderkey") / DeltaLog.W)
@@ -3709,13 +3660,7 @@ object LakehouseQueries extends QuerySet {
     * (NMBS rows smuggled into the rewrite, an update lost) cannot pass. */
   val dl34MergeBySource = Q("dl34_merge_by_source",
     Some(s"""WITH ${DeltaLog.actionsSql},
-            live4 AS (SELECT * FROM ${DeltaLog.liveSql("(SELECT max(version) FROM acts)")} t),
-            rws4 AS (
-              SELECT f.path, o.o_orderkey,
-                CAST(round(o.o_totalprice * 100) AS BIGINT) AS cents,
-                row_number() OVER (PARTITION BY f.path ORDER BY o.o_orderkey) - 1 AS pos
-              FROM live4 f JOIN orders o
-                ON (o.o_orderkey // ${DeltaLog.W}) BETWEEN f.b_lo AND f.b_hi),
+            $positionedRowsCtes,
             predv AS (SELECT path, pos FROM rws4 WHERE path = 'part-5' AND pos % 7 = 3),
             liverows AS (
               SELECT r.* FROM rws4 r LEFT JOIN predv p
@@ -3747,12 +3692,9 @@ object LakehouseQueries extends QuerySet {
             oldrows AS (
               SELECT r.path, r.o_orderkey, r.cents FROM rws4 r
               LEFT JOIN dv5 d ON d.path = r.path AND d.pos = r.pos WHERE d.pos IS NULL),
-            updstat AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM upd),
-            nmbsstat AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM nmbs),
-            insstat AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM ins),
+            ${sigCte("updstat", "upd")},
+            ${sigCte("nmbsstat", "nmbs")},
+            ${sigCte("insstat", "ins")},
             postall AS (
               SELECT path, o_orderkey, cents FROM oldrows
               UNION ALL SELECT 'mrg-upd', o_orderkey, cents FROM upd
@@ -3767,10 +3709,8 @@ object LakehouseQueries extends QuerySet {
               FROM liverows
               WHERE o_orderkey % 3 = 0 OR NOT (o_orderkey % 5 = 1)
               UNION ALL SELECT o_orderkey, cents FROM ins),
-            sig1 AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM postall),
-            sig2 AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM mergecte)
+            ${sigCte("sig1", "postall")},
+            ${sigCte("sig2", "mergecte")}
             SELECT section, item, n_rows, cents, flag FROM (
               SELECT 'txn' AS section, 'dv:' || path AS item, n_masked AS n_rows,
                 CAST(0 AS BIGINT) AS cents, CAST(0 AS BIGINT) AS flag FROM masks
@@ -3781,13 +3721,7 @@ object LakehouseQueries extends QuerySet {
               UNION ALL SELECT 'cdf', 'update_postimage', n, c, k FROM updstat
               UNION ALL SELECT 'cdf', 'delete', n, c, k FROM nmbsstat
               UNION ALL SELECT 'cdf', 'insert', n, c, k FROM insstat
-              UNION ALL SELECT 'check', 'post_rowset', n, c, k FROM sig1
-              UNION ALL SELECT 'check', 'merge_cte', n, c, k FROM sig2
-              UNION ALL SELECT 'check', 'equal', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-                CAST(CASE WHEN (SELECT n FROM sig1) = (SELECT n FROM sig2)
-                      AND (SELECT c FROM sig1) = (SELECT c FROM sig2)
-                      AND (SELECT k FROM sig1) = (SELECT k FROM sig2)
-                     THEN 1 ELSE 0 END AS BIGINT)
+              ${checkRowsSql("sig1", "post_rowset", "sig2", "merge_cte")}
             ) t ORDER BY section, item"""),
     (s, d) => {
       import org.apache.spark.sql.types.{ArrayType, LongType}
@@ -3873,16 +3807,11 @@ object LakehouseQueries extends QuerySet {
           .otherwise(col("n_rows")).as("n_rows"),
         when(col("op") === "add", col("cents")).otherwise(lit(0L)).as("cents"),
         when(col("op") === "add", 1L).otherwise(0L).as("flag"))
-      def sig(df: org.apache.spark.sql.DataFrame, item: String, shift: Long = 0L) =
-        df.agg(count(lit(1)).as("n"), sum("cents").as("c"), sum("o_orderkey").as("k"))
-          .select(lit("cdf").as("section"), lit(item).as("item"),
-            col("n").cast("long").as("n_rows"),
-            (col("c") + lit(shift) * col("n")).cast("long").as("cents"),
-            col("k").cast("long").as("flag"))
-      val cdf = sig(updc, "update_preimage", -7L)
-        .unionByName(sig(updc, "update_postimage"))
-        .unionByName(sig(nmbsc, "delete"))
-        .unionByName(sig(insc, "insert"))
+      val cdf = sig(updc, "cdf", "update_preimage")
+        .withColumn("cents", col("cents") - col("n_rows") * 7)
+        .unionByName(sig(updc, "cdf", "update_postimage"))
+        .unionByName(sig(nmbsc, "cdf", "delete"))
+        .unionByName(sig(insc, "cdf", "insert"))
       // ground truth: the direct CASE merge over live rows — a different
       // derivation than the mask arithmetic postAll went through
       val mergeCte = rws4.join(broadcast(del4), Seq("path", "pos"), "left")
@@ -3891,19 +3820,9 @@ object LakehouseQueries extends QuerySet {
         .select(col("o_orderkey"),
           (col("cents") + when(matched, 7L).otherwise(0L)).as("cents"))
         .unionByName(insc)
-      def checkSig(df: org.apache.spark.sql.DataFrame, item: String) =
-        df.agg(count(lit(1)).as("n"), sum("cents").as("c"), sum("o_orderkey").as("k"))
-          .select(lit("check").as("section"), lit(item).as("item"),
-            col("n").cast("long").as("n_rows"), col("c").cast("long").as("cents"),
-            col("k").cast("long").as("flag"))
-      val s1 = checkSig(postAll.select("o_orderkey", "cents"), "post_rowset")
-      val s2 = checkSig(mergeCte, "merge_cte")
-      val eq = s1.select(col("n_rows").as("n1"), col("cents").as("c1"), col("flag").as("k1"))
-        .crossJoin(s2.select(col("n_rows").as("n2"), col("cents").as("c2"), col("flag").as("k2")))
-        .select(lit("check").as("section"), lit("equal").as("item"),
-          lit(0L).as("n_rows"), lit(0L).as("cents"),
-          (col("n1") === col("n2") && col("c1") === col("c2") && col("k1") === col("k2"))
-            .cast("long").as("flag"))
+      val s1 = sig(postAll.select("o_orderkey", "cents"), "check", "post_rowset")
+      val s2 = sig(mergeCte, "check", "merge_cte")
+      val eq = equalCheck(s1, s2, "equal")
       txn.unionByName(post).unionByName(cdf)
         .unionByName(s1).unionByName(s2).unionByName(eq)
         .orderBy("section", "item")
@@ -4039,23 +3958,19 @@ object LakehouseQueries extends QuerySet {
                           ELSE 'dv:' || path END AS item,
                 CASE WHEN n_masked = f_rows THEN CAST(0 AS BIGINT) ELSE n_masked END AS n_rows
               FROM masks),
-            rstat AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM repl),
-            dstat AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM dead),
+            ${sigCte("rstat", "repl")},
+            ${sigCte("dstat", "dead")},
             postall AS (
               SELECT path, o_orderkey, cents FROM rws
               WHERE o_orderkey NOT BETWEEN $lo AND $hi
               UNION ALL SELECT 'rw-4', o_orderkey, cents FROM repl),
             post AS (SELECT path, CAST(count(*) AS BIGINT) AS n_live,
                 CAST(sum(cents) AS BIGINT) AS cents_live FROM postall GROUP BY path),
-            sig1 AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM postall),
+            ${sigCte("sig1", "postall")},
             replcte AS (
               SELECT o_orderkey, cents FROM rws WHERE o_orderkey NOT BETWEEN $lo AND $hi
               UNION ALL SELECT o_orderkey, cents FROM repl),
-            sig2 AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM replcte)
+            ${sigCte("sig2", "replcte")}
             SELECT section, item, n_rows, cents, flag FROM (
               SELECT 'txn' AS section, item, n_rows, CAST(0 AS BIGINT) AS cents,
                 CAST(0 AS BIGINT) AS flag FROM txnrows
@@ -4063,13 +3978,7 @@ object LakehouseQueries extends QuerySet {
               UNION ALL SELECT 'post', path, n_live, cents_live, CAST(0 AS BIGINT) FROM post
               UNION ALL SELECT 'cdf', 'delete', n, c, k FROM dstat
               UNION ALL SELECT 'cdf', 'insert', n, c, k FROM rstat
-              UNION ALL SELECT 'check', 'post_rowset', n, c, k FROM sig1
-              UNION ALL SELECT 'check', 'replace_cte', n, c, k FROM sig2
-              UNION ALL SELECT 'check', 'equal', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-                CAST(CASE WHEN (SELECT n FROM sig1) = (SELECT n FROM sig2)
-                      AND (SELECT c FROM sig1) = (SELECT c FROM sig2)
-                      AND (SELECT k FROM sig1) = (SELECT k FROM sig2)
-                     THEN 1 ELSE 0 END AS BIGINT)
+              ${checkRowsSql("sig1", "post_rowset", "sig2", "replace_cte")}
             ) t ORDER BY section, item"""),
       (s, d) => {
         import org.apache.spark.sql.types.{ArrayType, LongType}
@@ -4117,22 +4026,12 @@ object LakehouseQueries extends QuerySet {
             .otherwise(when(col("op") === "add", col("n_rows")).otherwise(lit(0L))).as("n_rows"),
           when(col("op") === "add", col("cents")).otherwise(lit(0L)).as("cents"),
           when(col("op") === "add", 1L).otherwise(0L).as("flag"))
-        def sig(df: org.apache.spark.sql.DataFrame, section: String, item: String) =
-          df.agg(count(lit(1)).as("n"), sum("cents").as("c"), sum("o_orderkey").as("k"))
-            .select(lit(section).as("section"), lit(item).as("item"),
-              col("n").cast("long").as("n_rows"), col("c").cast("long").as("cents"),
-              col("k").cast("long").as("flag"))
         val cdf = sig(rws.filter(pred), "cdf", "delete")
           .unionByName(sig(repl, "cdf", "insert"))
         val replCte = rws.filter(!pred).select("o_orderkey", "cents").unionByName(repl)
         val s1 = sig(postAll.select("o_orderkey", "cents"), "check", "post_rowset")
         val s2 = sig(replCte, "check", "replace_cte")
-        val eq = s1.select(col("n_rows").as("n1"), col("cents").as("c1"), col("flag").as("k1"))
-          .crossJoin(s2.select(col("n_rows").as("n2"), col("cents").as("c2"), col("flag").as("k2")))
-          .select(lit("check").as("section"), lit("equal").as("item"),
-            lit(0L).as("n_rows"), lit(0L).as("cents"),
-            (col("n1") === col("n2") && col("c1") === col("c2") && col("k1") === col("k2"))
-              .cast("long").as("flag"))
+        val eq = equalCheck(s1, s2, "equal")
         txn.unionByName(post).unionByName(cdf).unionByName(s1).unionByName(s2)
           .unionByName(eq)
           .orderBy("section", "item")
@@ -4177,10 +4076,8 @@ object LakehouseQueries extends QuerySet {
               FROM prerows),
             post AS (SELECT path, CAST(count(*) AS BIGINT) AS n_live,
                 CAST(sum(cents) AS BIGINT) AS cents_live FROM postrows GROUP BY path),
-            sig1 AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM prerows),
-            sig2 AS (SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(cents) AS BIGINT) AS c,
-              CAST(sum(o_orderkey) AS BIGINT) AS k FROM postrows)
+            ${sigCte("sig1", "prerows")},
+            ${sigCte("sig2", "postrows")}
             SELECT section, item, n_rows, cents, flag FROM (
               SELECT 'txn' AS section, 'remove:' || path AS item, CAST(0 AS BIGINT) AS n_rows,
                 CAST(0 AS BIGINT) AS cents, CAST(0 AS BIGINT) AS flag FROM net
@@ -4188,13 +4085,7 @@ object LakehouseQueries extends QuerySet {
               UNION ALL SELECT 'post', path, n_live, cents_live, CAST(0 AS BIGINT) FROM post
               UNION ALL SELECT 'state', 'n_effective_dvs', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
                 CAST(0 AS BIGINT)
-              UNION ALL SELECT 'check', 'pre_masked_read', n, c, k FROM sig1
-              UNION ALL SELECT 'check', 'post_clean_read', n, c, k FROM sig2
-              UNION ALL SELECT 'check', 'equal', CAST(0 AS BIGINT), CAST(0 AS BIGINT),
-                CAST(CASE WHEN (SELECT n FROM sig1) = (SELECT n FROM sig2)
-                      AND (SELECT c FROM sig1) = (SELECT c FROM sig2)
-                      AND (SELECT k FROM sig1) = (SELECT k FROM sig2)
-                     THEN 1 ELSE 0 END AS BIGINT)
+              ${checkRowsSql("sig1", "pre_masked_read", "sig2", "post_clean_read")}
             ) t ORDER BY section, item"""),
     (s, d) => {
       val ord = orders(s, d)
@@ -4260,19 +4151,9 @@ object LakehouseQueries extends QuerySet {
       val ndv = del5.agg(count(lit(1)).as("n"))
         .select(lit("state").as("section"), lit("n_effective_dvs").as("item"),
           col("n").cast("long").as("n_rows"), lit(0L).as("cents"), lit(0L).as("flag"))
-      def sig(df: org.apache.spark.sql.DataFrame, item: String) =
-        df.agg(count(lit(1)).as("n"), sum("cents").as("c"), sum("o_orderkey").as("k"))
-          .select(lit("check").as("section"), lit(item).as("item"),
-            col("n").cast("long").as("n_rows"), col("c").cast("long").as("cents"),
-            col("k").cast("long").as("flag"))
-      val s1 = sig(netRows, "pre_masked_read")
-      val s2 = sig(postRows, "post_clean_read")
-      val eq = s1.select(col("n_rows").as("n1"), col("cents").as("c1"), col("flag").as("k1"))
-        .crossJoin(s2.select(col("n_rows").as("n2"), col("cents").as("c2"), col("flag").as("k2")))
-        .select(lit("check").as("section"), lit("equal").as("item"),
-          lit(0L).as("n_rows"), lit(0L).as("cents"),
-          (col("n1") === col("n2") && col("c1") === col("c2") && col("k1") === col("k2"))
-            .cast("long").as("flag"))
+      val s1 = sig(netRows, "check", "pre_masked_read")
+      val s2 = sig(postRows, "check", "post_clean_read")
+      val eq = equalCheck(s1, s2, "equal")
       txn.unionByName(post).unionByName(ndv).unionByName(s1).unionByName(s2)
         .unionByName(eq)
         .orderBy("section", "item")
@@ -4841,18 +4722,7 @@ object LakehouseQueries extends QuerySet {
         col("o_orderkey"), round(col("o_totalprice") * 100).cast("long").as("cents"))
         .coalesce(8).localCheckpoint() // a handful of partitions: every
         // downstream shuffle re-reads it, and 32-way task floors dominate
-      val bks = obRows.groupBy("bucket")
-        .agg(count(lit(1)).as("n_rows"), min("o_orderkey").as("min_key"),
-          max("o_orderkey").as("max_key"), sum("cents").as("cents"))
-      val v0adds = DeltaLog.addActions(bks.select(col("bucket").as("ordinal"),
-        concat(lit("part-"), col("bucket")).as("path"),
-        array(col("bucket")).as("buckets"),
-        col("n_rows"), col("min_key"), col("max_key"), col("cents")), 0)
-        .coalesce(1).localCheckpoint()
-      val acts0 = v0adds
-        .unionByName(DeltaLog.assignRidActions(v0adds, v0adds))
-        .unionByName(DeltaLog.protocolAction(s, 0, 10000, 3, 7))
-        .coalesce(1).localCheckpoint()
+      val (_, acts0) = rowTrackedV0(s, obRows)
       // the concurrent writer: a tracked OPTIMIZE of the (part-4, part-5)
       // pair lands FIRST (v1), retiring exactly the instances both
       // prepared masks are keyed to (the policy over the full live set is
@@ -5063,12 +4933,7 @@ object LakehouseQueries extends QuerySet {
             col("n").cast("long").as("n_rows"), col("k").cast("long").as("aux"),
             col("c").cast("long").as("flag"))
       val s2 = readSig(acts2, "read_v2"); val s3 = readSig(acts3, "read_v3")
-      val eq = s2.select(col("n_rows").as("n1"), col("aux").as("k1"), col("flag").as("c1"))
-        .crossJoin(s3.select(col("n_rows").as("n2"), col("aux").as("k2"), col("flag").as("c2")))
-        .select(lit("check").as("section"), lit("equal").as("item"),
-          lit(0L).as("n_rows"), lit(0L).as("aux"),
-          (col("n1") === col("n2") && col("k1") === col("k2") && col("c1") === col("c2"))
-            .cast("long").as("flag"))
+      val eq = equalCheck(s2, s3, "equal")
       txnRows(t1, 1).unionByName(txnRows(t3, 3)).unionByName(t4n)
         .unionByName(skipped).unionByName(rewritten).unionByName(post)
         .unionByName(s2).unionByName(s3).unionByName(eq)

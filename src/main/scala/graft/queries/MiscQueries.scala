@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tables.TestTables._
 import graft.ops.{Cleaning, Layout, Merge, Chunking, TextAnalysis}
@@ -770,6 +771,34 @@ object MiscQueries extends QuerySet {
           round(col("r2"), 6).as("r2"), col("n"))
     })
 
+  /** The WARC record synthesized from a `documents` row (CRLF header block
+    * + blank line + the text's first 60 chars as payload): every 11th
+    * doc's Content-Length overstates the payload by 1. Content-Length
+    * declares octets (strlen on the DuckDB side). */
+  private val warcRecord: Column = {
+    val crlf = lit("\r\n")
+    val payload = substring(col("text"), 1, 60)
+    val declared = (length(payload.cast("binary")) +
+      when(col("doc_id") % 11 === 0, 1).otherwise(0)).cast("string")
+    concat(lit("WARC/1.0"), crlf,
+      lit("WARC-Type: "),
+      when(col("doc_id") % 3 === 0, "response")
+        .when(col("doc_id") % 3 === 1, "request").otherwise("metadata"), crlf,
+      lit("WARC-Record-ID: <urn:uuid:"), col("doc_id").cast("string"), lit(">"), crlf,
+      lit("WARC-Target-URI: https://"), coalesce(col("source"), lit("")),
+      lit(".example.com/"), col("doc_id").cast("string"), crlf,
+      lit("Content-Length: "), declared, crlf, crlf, payload)
+  }
+
+  /** The parsed fields of `warcRecord` (warc_type, record_id, target_uri,
+    * declared_len, actual_len), computed from `documents` columns. */
+  private val warcFieldsSql: String =
+    """CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'response' WHEN 1 THEN 'request' ELSE 'metadata' END AS warc_type,
+                concat('<urn:uuid:', CAST(doc_id AS VARCHAR), '>') AS record_id,
+                concat('https://', coalesce(source, ''), '.example.com/', CAST(doc_id AS VARCHAR)) AS target_uri,
+                CAST(strlen(substr(text, 1, 60)) + CASE WHEN doc_id % 11 = 0 THEN 1 ELSE 0 END AS BIGINT) AS declared_len,
+                CAST(strlen(substr(text, 1, 60)) AS BIGINT) AS actual_len"""
+
   /** WARC (ISO 28500) record parse — the crawl wire format: records are
     * synthesized from doc fields identically in both engines (CRLF header
     * block + blank line + payload), every 11th with a Content-Length
@@ -799,20 +828,7 @@ object MiscQueries extends QuerySet {
               CAST(regexp_extract(headers, '(?m)^Content-Length: ([^\r\n]*)', 1) AS BIGINT) = CAST(strlen(payload) AS BIGINT) AS len_ok
             FROM hp ORDER BY doc_id"""),
     (s, d) => {
-      val crlf = lit("\r\n")
-      val payload = substring(col("text"), 1, 60)
-      // Content-Length declares octets (strlen on the DuckDB side).
-      val declared = (length(payload.cast("binary")) +
-        when(col("doc_id") % 11 === 0, 1).otherwise(0)).cast("string")
-      val rec = concat(lit("WARC/1.0"), crlf,
-        lit("WARC-Type: "),
-        when(col("doc_id") % 3 === 0, "response")
-          .when(col("doc_id") % 3 === 1, "request").otherwise("metadata"), crlf,
-        lit("WARC-Record-ID: <urn:uuid:"), col("doc_id").cast("string"), lit(">"), crlf,
-        lit("WARC-Target-URI: https://"), coalesce(col("source"), lit("")),
-        lit(".example.com/"), col("doc_id").cast("string"), crlf,
-        lit("Content-Length: "), declared, crlf, crlf, payload)
-      val p = graft.ops.Warc.parse(rec)
+      val p = graft.ops.Warc.parse(warcRecord)
       documents(s, d)
         .select(col("doc_id"), p.as("w"))
         .select(col("doc_id"), col("w.warc_type"), col("w.record_id"), col("w.target_uri"),
@@ -834,13 +850,8 @@ object MiscQueries extends QuerySet {
     * failing to null, or a fixture that doesn't really compress, both
     * hash-fail. */
   val warc2Gzip = Q("warc2_gzip_records",
-    Some("""WITH synth AS (
-              SELECT doc_id,
-                CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'response' WHEN 1 THEN 'request' ELSE 'metadata' END AS warc_type,
-                concat('<urn:uuid:', CAST(doc_id AS VARCHAR), '>') AS record_id,
-                concat('https://', coalesce(source, ''), '.example.com/', CAST(doc_id AS VARCHAR)) AS target_uri,
-                CAST(strlen(substr(text, 1, 60)) + CASE WHEN doc_id % 11 = 0 THEN 1 ELSE 0 END AS BIGINT) AS declared_len,
-                CAST(strlen(substr(text, 1, 60)) AS BIGINT) AS actual_len
+    Some(s"""WITH synth AS (
+              SELECT doc_id, $warcFieldsSql
               FROM documents)
             SELECT doc_id,
               doc_id % 13 <> 0 AS member_ok,
@@ -852,20 +863,8 @@ object MiscQueries extends QuerySet {
               CASE WHEN doc_id % 13 = 0 THEN NULL ELSE declared_len = actual_len END AS len_ok
             FROM synth ORDER BY doc_id"""),
     (s, d) => {
-      val crlf = lit("\r\n")
-      val payload = substring(col("text"), 1, 60)
-      val declared = (length(payload.cast("binary")) +
-        when(col("doc_id") % 11 === 0, 1).otherwise(0)).cast("string")
-      val rec = concat(lit("WARC/1.0"), crlf,
-        lit("WARC-Type: "),
-        when(col("doc_id") % 3 === 0, "response")
-          .when(col("doc_id") % 3 === 1, "request").otherwise("metadata"), crlf,
-        lit("WARC-Record-ID: <urn:uuid:"), col("doc_id").cast("string"), lit(">"), crlf,
-        lit("WARC-Target-URI: https://"), coalesce(col("source"), lit("")),
-        lit(".example.com/"), col("doc_id").cast("string"), crlf,
-        lit("Content-Length: "), declared, crlf, crlf, payload)
       val zipped = graft.ops.Warc.gzipStage(
-          documents(s, d).select(col("doc_id"), rec.as("rec")), "rec", "member")
+          documents(s, d).select(col("doc_id"), warcRecord.as("rec")), "rec", "member")
         // truncated fetch: the cut trailer must make decompression FAIL,
         // not yield a shorter string
         .withColumn("member", when(col("doc_id") % 13 === 0,
@@ -892,13 +891,8 @@ object MiscQueries extends QuerySet {
     * tail, or miscounts a header extension field hash-fails on seq
     * alignment. */
   val warc3Split = Q("warc3_member_split",
-    Some("""WITH synth AS (
-              SELECT doc_id, coalesce(source, '') AS src,
-                CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 'response' WHEN 1 THEN 'request' ELSE 'metadata' END AS warc_type,
-                concat('<urn:uuid:', CAST(doc_id AS VARCHAR), '>') AS record_id,
-                concat('https://', coalesce(source, ''), '.example.com/', CAST(doc_id AS VARCHAR)) AS target_uri,
-                CAST(strlen(substr(text, 1, 60)) + CASE WHEN doc_id % 11 = 0 THEN 1 ELSE 0 END AS BIGINT) AS declared_len,
-                CAST(strlen(substr(text, 1, 60)) AS BIGINT) AS actual_len
+    Some(s"""WITH synth AS (
+              SELECT doc_id, coalesce(source, '') AS src, $warcFieldsSql
               FROM documents),
             numbered AS (SELECT *,
                 CAST(row_number() OVER (PARTITION BY src ORDER BY doc_id) - 1 AS INT) AS seq
@@ -907,21 +901,9 @@ object MiscQueries extends QuerySet {
               declared_len, actual_len, declared_len = actual_len AS len_ok
             FROM numbered ORDER BY src, seq"""),
     (s, d) => {
-      val crlf = lit("\r\n")
-      val payload = substring(col("text"), 1, 60)
-      val declared = (length(payload.cast("binary")) +
-        when(col("doc_id") % 11 === 0, 1).otherwise(0)).cast("string")
-      val rec = concat(lit("WARC/1.0"), crlf,
-        lit("WARC-Type: "),
-        when(col("doc_id") % 3 === 0, "response")
-          .when(col("doc_id") % 3 === 1, "request").otherwise("metadata"), crlf,
-        lit("WARC-Record-ID: <urn:uuid:"), col("doc_id").cast("string"), lit(">"), crlf,
-        lit("WARC-Target-URI: https://"), coalesce(col("source"), lit("")),
-        lit(".example.com/"), col("doc_id").cast("string"), crlf,
-        lit("Content-Length: "), declared, crlf, crlf, payload)
       val members = graft.ops.Warc.gzipStage(
         documents(s, d).select(col("doc_id"),
-          coalesce(col("source"), lit("")).as("src"), rec.as("rec")), "rec", "member")
+          coalesce(col("source"), lit("")).as("src"), warcRecord.as("rec")), "rec", "member")
       // segment builder: one blob per source, members in doc_id order —
       // sort_array on (doc_id, member) structs orders by id, the binary
       // fold concatenates; blob size is bounded by the group, the 100 TB
@@ -940,23 +922,25 @@ object MiscQueries extends QuerySet {
         .orderBy("src", "seq")
     })
 
-  /** robots.txt (RFC 9309) longest-match crawl verdicts — the politeness
-    * gate before any fetch becomes a WARC record. A 7-rule set per host
-    * exercises longest-match override (Allow /private/4 inside Disallow
-    * /private), Allow-wins-ties (/public both ways), `*` wildcards
-    * (the tmp html rule) and the `$` anchor (/blog/14$ fires on /blog/14, not /blog/144). The pattern→regex
-    * translation runs as the same regexp_replace chain on the COLUMN in
-    * both engines; precedence is the integer key 2·len+allow under ONE
-    * max_by per (host, path) — no window, no per-URL rule loop. */
-  val rob1Robots = Q("rob1_robots_match",
-    Some("""WITH hosts AS (SELECT DISTINCT concat(coalesce(source, ''), '.example.com') AS host FROM documents),
-            ruleset AS (SELECT * FROM (VALUES
+  /** Oracle CTEs `ruleset(allow, pattern)`, the 7-rule robots.txt every
+    * host serves, and `rules(host, allow, pattern, rx)`: the rule set for
+    * each host of the FROM item `hosts`, with each pattern translated to
+    * an anchored regex. The Spark twin is `robotsRules`. */
+  private def robotsRulesCtes(hosts: String): String =
+    """ruleset AS (SELECT * FROM (VALUES
               (false, '/private'), (true, '/private/4'), (true, '/public'), (false, '/public'),
               (false, '/tmp/*.html'), (true, '/blog'), (false, '/blog/14$')) t(allow, pattern)),
             rules AS (SELECT host, allow, pattern,
                 concat('^', regexp_replace(regexp_replace(regexp_replace(pattern,
                   '([.^$+?()\[\]{}|\\])', '\\\1', 'g'), '\*', '.*', 'g'), '\\\$$', '$')) AS rx
-              FROM hosts CROSS JOIN ruleset),
+              FROM """ + hosts + " CROSS JOIN ruleset)"
+
+  /** rob1's and crawl1's oracle CTEs: the crawl `urls(doc_id, host,
+    * path)` and the verdict `m(host, path, verdict)` of every URL that
+    * some rule matches — the longest pattern wins, Allow on ties. */
+  private val robotsVerdictCtes: String =
+    """hosts AS (SELECT DISTINCT concat(coalesce(source, ''), '.example.com') AS host FROM documents),
+            """ + robotsRulesCtes("hosts") + """,
             urls AS (SELECT doc_id, concat(coalesce(source, ''), '.example.com') AS host,
                 CASE CAST(doc_id % 5 AS INT)
                   WHEN 0 THEN concat('/private/', CAST(doc_id AS VARCHAR))
@@ -969,24 +953,47 @@ object MiscQueries extends QuerySet {
                 max_by(allow, length(pattern) * 2 + CAST(allow AS INT)) AS verdict
               FROM (SELECT DISTINCT host, path FROM urls) u JOIN rules USING (host)
               WHERE regexp_matches(path, rx)
-              GROUP BY host, path)
+              GROUP BY host, path)"""
+
+  /** The crawl URLs (doc_id, host, path) of rob1 and crawl1: one per doc,
+    * its path cycling through the cases the rule set distinguishes. */
+  private def robotsUrls(s: SparkSession, d: String): DataFrame = {
+    val host = concat(coalesce(col("source"), lit("")), lit(".example.com"))
+    val idStr = col("doc_id").cast("string")
+    val path = when(col("doc_id") % 5 === 0, concat(lit("/private/"), idStr))
+      .when(col("doc_id") % 5 === 1, concat(lit("/public/"), idStr))
+      .when(col("doc_id") % 5 === 2, concat(lit("/tmp/file"), idStr, lit(".html")))
+      .when(col("doc_id") % 5 === 3, concat(lit("/public/img"), idStr))
+      .otherwise(concat(lit("/blog/"), idStr))
+    documents(s, d).select(col("doc_id"), host.as("host"), path.as("path"))
+  }
+
+  /** The 7-rule robots.txt for every host of `urls`, as (host, allow,
+    * pattern) rows. */
+  private def robotsRules(s: SparkSession, urls: DataFrame): DataFrame = {
+    val ruleSet = Seq(false -> "/private", true -> "/private/4", true -> "/public",
+      false -> "/public", false -> "/tmp/*.html", true -> "/blog", false -> "/blog/14$")
+    val ruleRows = s.range(1).select(explode(array(ruleSet.map { case (a, p) =>
+      struct(lit(a).as("allow"), lit(p).as("pattern")) }: _*)).as("r")).select("r.*")
+    urls.select("host").distinct().crossJoin(broadcast(ruleRows))
+  }
+
+  /** robots.txt (RFC 9309) longest-match crawl verdicts — the politeness
+    * gate before any fetch becomes a WARC record. A 7-rule set per host
+    * exercises longest-match override (Allow /private/4 inside Disallow
+    * /private), Allow-wins-ties (/public both ways), `*` wildcards
+    * (the tmp html rule) and the `$` anchor (/blog/14$ fires on /blog/14, not /blog/144). The pattern→regex
+    * translation runs as the same regexp_replace chain on the COLUMN in
+    * both engines; precedence is the integer key 2·len+allow under ONE
+    * max_by per (host, path) — no window, no per-URL rule loop. */
+  val rob1Robots = Q("rob1_robots_match",
+    Some("WITH " + robotsVerdictCtes + """
             SELECT doc_id, host, path, coalesce(verdict, true) AS allowed
             FROM urls LEFT JOIN m USING (host, path)
             ORDER BY doc_id"""),
     (s, d) => {
-      val host = concat(coalesce(col("source"), lit("")), lit(".example.com"))
-      val idStr = col("doc_id").cast("string")
-      val path = when(col("doc_id") % 5 === 0, concat(lit("/private/"), idStr))
-        .when(col("doc_id") % 5 === 1, concat(lit("/public/"), idStr))
-        .when(col("doc_id") % 5 === 2, concat(lit("/tmp/file"), idStr, lit(".html")))
-        .when(col("doc_id") % 5 === 3, concat(lit("/public/img"), idStr))
-        .otherwise(concat(lit("/blog/"), idStr))
-      val urls = documents(s, d).select(col("doc_id"), host.as("host"), path.as("path"))
-      val ruleSet = Seq(false -> "/private", true -> "/private/4", true -> "/public",
-        false -> "/public", false -> "/tmp/*.html", true -> "/blog", false -> "/blog/14$")
-      val ruleRows = s.range(1).select(explode(array(ruleSet.map { case (a, p) =>
-        struct(lit(a).as("allow"), lit(p).as("pattern")) }: _*)).as("r")).select("r.*")
-      val rules = urls.select("host").distinct().crossJoin(broadcast(ruleRows))
+      val urls = robotsUrls(s, d)
+      val rules = robotsRules(s, urls)
       graft.ops.Robots.decide(urls, rules)
         .select("doc_id", "host", "path", "allowed")
         .orderBy("doc_id")
@@ -1317,13 +1324,7 @@ object MiscQueries extends QuerySet {
                 TRY_CAST(lastmod AS DATE) AS lastmod,
                 coalesce(TRY_CAST(priority AS DOUBLE), 0.5) AS priority
               FROM f),
-            ruleset AS (SELECT * FROM (VALUES
-              (false, '/private'), (true, '/private/4'), (true, '/public'), (false, '/public'),
-              (false, '/tmp/*.html'), (true, '/blog'), (false, '/blog/14$')) t(allow, pattern)),
-            rules AS (SELECT host, allow, pattern,
-                concat('^', regexp_replace(regexp_replace(regexp_replace(pattern,
-                  '([.^$+?()\[\]{}|\\])', '\\\1', 'g'), '\*', '.*', 'g'), '\\\$$', '$')) AS rx
-              FROM (SELECT DISTINCT host FROM p) CROSS JOIN ruleset),
+            """ + robotsRulesCtes("(SELECT DISTINCT host FROM p)") + """,
             m AS (SELECT host, path,
                 max_by(allow, length(pattern) * 2 + CAST(allow AS INT)) AS verdict
               FROM (SELECT DISTINCT host, path FROM p) q JOIN rules USING (host)
@@ -1352,11 +1353,7 @@ object MiscQueries extends QuerySet {
           regexp_extract(col("u.loc"), "https?://[^/]+(/.*)$", 1).as("path"),
           col("u.lastmod").try_cast("date").as("lastmod"),
           coalesce(col("u.priority").try_cast("double"), lit(0.5)).as("priority"))
-      val ruleSet = Seq(false -> "/private", true -> "/private/4", true -> "/public",
-        false -> "/public", false -> "/tmp/*.html", true -> "/blog", false -> "/blog/14$")
-      val ruleRows = s.range(1).select(explode(array(ruleSet.map { case (a, p) =>
-        struct(lit(a).as("allow"), lit(p).as("pattern")) }: _*)).as("r")).select("r.*")
-      val rules = parsed.select("host").distinct().crossJoin(broadcast(ruleRows))
+      val rules = robotsRules(s, parsed)
       graft.ops.Robots.decide(parsed, rules)
         .select("doc_id", "url_idx", "host", "path", "lastmod", "priority", "allowed")
         .orderBy("doc_id", "url_idx")
@@ -1414,27 +1411,7 @@ object MiscQueries extends QuerySet {
     * friendly, no global ordering exists anywhere; a global fetch queue
     * would serialize the planet). Oracle replays verdicts + waves. */
   val crawl1Frontier = Q("crawl1_frontier_schedule",
-    Some("""WITH hosts AS (SELECT DISTINCT concat(coalesce(source, ''), '.example.com') AS host FROM documents),
-            ruleset AS (SELECT * FROM (VALUES
-              (false, '/private'), (true, '/private/4'), (true, '/public'), (false, '/public'),
-              (false, '/tmp/*.html'), (true, '/blog'), (false, '/blog/14$')) t(allow, pattern)),
-            rules AS (SELECT host, allow, pattern,
-                concat('^', regexp_replace(regexp_replace(regexp_replace(pattern,
-                  '([.^$+?()\[\]{}|\\])', '\\\1', 'g'), '\*', '.*', 'g'), '\\\$$', '$')) AS rx
-              FROM hosts CROSS JOIN ruleset),
-            urls AS (SELECT doc_id, concat(coalesce(source, ''), '.example.com') AS host,
-                CASE CAST(doc_id % 5 AS INT)
-                  WHEN 0 THEN concat('/private/', CAST(doc_id AS VARCHAR))
-                  WHEN 1 THEN concat('/public/', CAST(doc_id AS VARCHAR))
-                  WHEN 2 THEN concat('/tmp/file', CAST(doc_id AS VARCHAR), '.html')
-                  WHEN 3 THEN concat('/public/img', CAST(doc_id AS VARCHAR))
-                  ELSE concat('/blog/', CAST(doc_id AS VARCHAR)) END AS path
-              FROM documents),
-            m AS (SELECT host, path,
-                max_by(allow, length(pattern) * 2 + CAST(allow AS INT)) AS verdict
-              FROM (SELECT DISTINCT host, path FROM urls) u JOIN rules USING (host)
-              WHERE regexp_matches(path, rx)
-              GROUP BY host, path),
+    Some("WITH " + robotsVerdictCtes + """,
             a AS (SELECT doc_id, host, path
               FROM urls LEFT JOIN m USING (host, path)
               WHERE coalesce(verdict, true)),
@@ -1443,19 +1420,8 @@ object MiscQueries extends QuerySet {
               FROM a)
             SELECT wave, host, path, doc_id FROM w ORDER BY wave, host, doc_id"""),
     (s, d) => {
-      val host = concat(coalesce(col("source"), lit("")), lit(".example.com"))
-      val idStr = col("doc_id").cast("string")
-      val path = when(col("doc_id") % 5 === 0, concat(lit("/private/"), idStr))
-        .when(col("doc_id") % 5 === 1, concat(lit("/public/"), idStr))
-        .when(col("doc_id") % 5 === 2, concat(lit("/tmp/file"), idStr, lit(".html")))
-        .when(col("doc_id") % 5 === 3, concat(lit("/public/img"), idStr))
-        .otherwise(concat(lit("/blog/"), idStr))
-      val urls = documents(s, d).select(col("doc_id"), host.as("host"), path.as("path"))
-      val ruleSet = Seq(false -> "/private", true -> "/private/4", true -> "/public",
-        false -> "/public", false -> "/tmp/*.html", true -> "/blog", false -> "/blog/14$")
-      val ruleRows = s.range(1).select(explode(array(ruleSet.map { case (a, p) =>
-        struct(lit(a).as("allow"), lit(p).as("pattern")) }: _*)).as("r")).select("r.*")
-      val rules = urls.select("host").distinct().crossJoin(broadcast(ruleRows))
+      val urls = robotsUrls(s, d)
+      val rules = robotsRules(s, urls)
       val allowed = graft.ops.Robots.decide(urls, rules)
         .filter(col("allowed")).select("doc_id", "host", "path")
       val w = org.apache.spark.sql.expressions.Window.partitionBy("host").orderBy("doc_id")
@@ -2375,18 +2341,24 @@ object MiscQueries extends QuerySet {
         .orderBy("c_custkey")
     })
 
-  /** J6/A8: the eval pipeline — golden questions → answer stage → judge
-    * stage → per-level rollup with grade banding, via `eval.Eval`. Truths
-    * are synthesized so both contained (score 5), partially-overlapping
-    * (3), and missed (1) branches fire. */
-  val j6Eval = Q("j6_eval_pipeline",
-    Some("""WITH qs AS (
+  /** Oracle CTE `qs(doc_id, level, answer, truth)`: the golden question
+    * set of j6 and ev10, with truths that are contained in, overlap or
+    * miss the answer. */
+  private val goldenQsCte: String =
+    """qs AS (
               SELECT doc_id,
                 CASE WHEN doc_id % 3 = 0 THEN 'easy' WHEN doc_id % 3 = 1 THEN 'medium' ELSE 'hard' END AS level,
                 text AS answer,
                 CASE WHEN doc_id % 2 = 0 THEN substr(text, 1, 24)
                      ELSE concat(substr(text, 1, 12), ' zzzq wwwx') END AS truth
-              FROM documents),
+              FROM documents)"""
+
+  /** J6/A8: the eval pipeline — golden questions → answer stage → judge
+    * stage → per-level rollup with grade banding, via `eval.Eval`. Truths
+    * are synthesized so both contained (score 5), partially-overlapping
+    * (3), and missed (1) branches fire. */
+  val j6Eval = Q("j6_eval_pipeline",
+    Some("WITH " + goldenQsCte + """,
             judged AS (
               SELECT level,
                 CASE WHEN contains(na, nt) THEN 5
@@ -2427,13 +2399,7 @@ object MiscQueries extends QuerySet {
     * aggregate (conditional sums + per-question bounded collect, the cv1
     * shape) — window-free, scales as one pass over the golden set. */
   val ev10Report = Q("ev10_eval_report",
-    Some("""WITH qs AS (
-              SELECT doc_id,
-                CASE WHEN doc_id % 3 = 0 THEN 'easy' WHEN doc_id % 3 = 1 THEN 'medium' ELSE 'hard' END AS level,
-                text AS answer,
-                CASE WHEN doc_id % 2 = 0 THEN substr(text, 1, 24)
-                     ELSE concat(substr(text, 1, 12), ' zzzq wwwx') END AS truth
-              FROM documents),
+    Some("WITH " + goldenQsCte + """,
             judged AS (
               SELECT doc_id, level, truth,
                 CASE WHEN contains(na, nt) THEN 5

@@ -196,14 +196,11 @@ object PdfQueries extends QuerySet {
   // error changes the cell set and hash-fails.
 
   private def tableFixture(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.types.{BinaryType, StructField}
     // NOT spread: measured flat on pdf6 and +6% on pdf7 (r16 A/B) — this
     // fixture's parse is light enough that the exchange doesn't pay here,
     // unlike the image fixtures below
     val base = documents(s, d).select("doc_id")
-    val withPdf = graft.ops.Stages.appendFields(base,
-        Seq(StructField("payload", BinaryType))) { r =>
-      val id = r.getLong(0)
+    val withPdf = withPayload(base) { id =>
       val nr = (id % 3 + 2).toInt; val nc = (id % 2 + 2).toInt; val sh = (id % 5).toInt
       val blocks = scala.collection.mutable.ArrayBuffer[(String, Double, Double, Double)]()
       blocks += (("Title " + id, 72.0, 700.0, 16.0))
@@ -217,7 +214,7 @@ object PdfQueries extends QuerySet {
           blocks += (("D" + i + "x" + j + "v" + ((id * 3 + i * 5 + j * 11) % 100),
             110.0 + j * 140, 340.0 - i * 20, 10.0))
       blocks += (("Page 1", 72.0, 100.0, 10.0))
-      Seq(Pdf.buildBlocksPdf(blocks.toSeq, compress = id % 2 == 1))
+      Pdf.buildBlocksPdf(blocks.toSeq, compress = id % 2 == 1)
     }
     Pdf.blocksStage(withPdf, "payload", "blocks")
       .select(col("doc_id"), explode(col("blocks")).as("b"))
@@ -388,14 +385,11 @@ object PdfQueries extends QuerySet {
               CASE WHEN corrupt THEN NULL ELSE CAST(gray_mid AS INT) END AS gray_mid
             FROM g ORDER BY doc_id, img_idx"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = graft.ops.TextAnalysis.spreadSmallInput( // one-split scan would
       // serialize the per-doc PDF build+parse onto one core (the
       // latticeFixture rationale); no-op on an already-parallel input
       documents(s, d).select("doc_id"))
-      val withPdf = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withPdf = withPayload(base) { id =>
         val imgs = (0 until (id % 3).toInt).map { j =>
           val w = ((id + 5 * j) % 5 + 2).toInt
           val h = ((id * 2 + 3 * j) % 4 + 2).toInt
@@ -409,7 +403,7 @@ object PdfQueries extends QuerySet {
             x = 72.0 + j * 150, y = 500.0 - j * 160, dispW = w * 9.0, dispH = h * 9.0,
             predictor = (id + j) % 3 == 0, corrupt = id % 11 == 0 && j == 0)
         }
-        Seq(Pdf.buildImagesPdf("Fig doc " + id, imgs, compress = id % 2 == 1))
+        Pdf.buildImagesPdf("Fig doc " + id, imgs, compress = id % 2 == 1)
       }
       val imgs = Pdf.imagesStage(withPdf, "payload", "imgs")
         .select(col("doc_id"), posexplode(col("imgs")).as(Seq("img_idx", "im")))
@@ -436,51 +430,21 @@ object PdfQueries extends QuerySet {
     * of raw PNGs. Oracle = d18's signature/banding/Hamming arithmetic,
     * byte-blind. */
   val pdf9ImageDedup = Q("pdf9_image_dedup",
-    Some("""WITH d AS (SELECT doc_id, doc_id // 4 AS gb, CAST(doc_id % 4 AS INT) AS m FROM documents),
-            bits AS (SELECT doc_id, i,
-                (((((gb * 48271 + i * 16807) % 1000003) * ((gb * 48271 + i * 16807) % 1000003)) % 1000003) < 500002) <>
-                  list_contains(list_transform(range(CAST(m AS BIGINT)), j -> (gb * 7 + j * 19) % 64), i) AS b
-              FROM d, range(0, 64, 1) t(i)),
-            sig AS (SELECT doc_id, string_agg(CASE WHEN b THEN '1' ELSE '0' END, '' ORDER BY i) AS sig
-                    FROM bits GROUP BY doc_id),
-            blk AS (SELECT doc_id, sig,
-                concat(CAST(q AS VARCHAR), ':', substr(sig, CAST(q * 16 + 1 AS INT), 16)) AS blk
-              FROM sig, range(0, 4, 1) t(q)),
-            cand AS (SELECT DISTINCT a.doc_id AS id_a, a.sig AS sig_a, b.doc_id AS id_b, b.sig AS sig_b
-                     FROM blk a JOIN blk b ON a.blk = b.blk AND a.doc_id < b.doc_id),
-            ham AS (SELECT id_a, id_b,
-                CAST(len(list_filter(range(1, 65, 1), i -> sig_a[i] <> sig_b[i])) AS BIGINT) AS hamming
-              FROM cand)
-            SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b"""),
+    Some(OracleSql.plantedSigPairsSql),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = graft.ops.TextAnalysis.spreadSmallInput( // one-split scan would
       // serialize the per-doc PDF build+parse onto one core (the
       // latticeFixture rationale); no-op on an already-parallel input
       documents(s, d).select("doc_id"))
-      val withPdf = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
-        val gb = id / 4; val m = (id % 4).toInt
-        val bits = Array.tabulate(64) { i =>
-          val v = (gb * 48271L + i * 16807L) % 1000003
-          v * v % 1000003 < 500002
-        }.zipWithIndex.map { case (b0, i) =>
-          b0 != (0 until m).exists(j => (gb * 7 + j * 19) % 64 == i)
-        }
-        val gray = new Array[Int](72)
-        for (y <- 0 until 8) {
-          gray(y * 9) = 128
-          for (x <- 0 until 8)
-            gray(y * 9 + x + 1) = gray(y * 9 + x) + (if (bits(y * 8 + x)) 1 else -1)
-        }
+      val withPdf = withPayload(base) { id =>
+        val gray = OracleSql.plantedDhashWalk(id)
         val ct = if (id % 2 == 0) 0 else 2
         val ch = if (ct == 0) 1 else 3
         val raw = new Array[Byte](72 * ch)
         for (i <- 0 until 72; c <- 0 until ch) raw(i * ch + c) = gray(i).toByte
         val fix = Pdf.ImageFixture(9, 8, ct, raw, x = 100.0, y = 400.0,
           dispW = 90.0, dispH = 80.0, predictor = id % 3 == 0, corrupt = false)
-        Seq(Pdf.buildImagesPdf("Figure page " + id, Seq(fix), compress = id % 2 == 1))
+        Pdf.buildImagesPdf("Figure page " + id, Seq(fix), compress = id % 2 == 1)
       }
       val figs = Pdf.imagesStage(withPdf, "payload", "imgs")
         .select(col("doc_id"), col("imgs").getItem(0).getField("png").as("png"))
@@ -506,16 +470,13 @@ object PdfQueries extends QuerySet {
 
   private def latticeFixture(s: SparkSession, d: String,
                              streamOnlyMod5: Boolean): DataFrame = {
-    import org.apache.spark.sql.types.{BinaryType, StructField}
     // spread: the parquet scan is one split at test SF, which would
     // serialize 5000 PDF builds + two parses onto one core; the guarded
     // form replaces the previous unconditional repartition, so an
     // already-parallel corpus-scale input passes through untouched
     val base = graft.ops.TextAnalysis.spreadSmallInput(
       documents(s, d).select("doc_id"))
-    graft.ops.Stages.appendFields(base,
-        Seq(StructField("payload", BinaryType))) { r =>
-      val id = r.getLong(0)
+    withPayload(base) { id =>
       val nr = (id % 3 + 2).toInt; val nc = (id % 2 + 2).toInt; val sh = (id % 7).toInt
       val x0 = 80.0 + sh; val ytop = 640.0
       val blocks = scala.collection.mutable.ArrayBuffer[(String, Double, Double, Double)]()
@@ -538,9 +499,9 @@ object PdfQueries extends QuerySet {
       blocks += (("Page 1", 72.0, 80.0, 10.0))
       hr += ((710.0, 300.0, 306.0)) // decorative 6-unit stroke: under minLen
       val draw = !(streamOnlyMod5 && id % 5 == 0)
-      Seq(Pdf.buildLatticePdf(blocks.toSeq,
+      Pdf.buildLatticePdf(blocks.toSeq,
         if (draw) hr.toSeq else Seq.empty, if (draw) vr.toSeq else Seq.empty,
-        filledRules = id % 2 == 1, compress = id % 3 == 0))
+        filledRules = id % 2 == 1, compress = id % 3 == 0)
     }
   }
 
@@ -651,14 +612,11 @@ object PdfQueries extends QuerySet {
               CASE WHEN doc_id % 9 = 0 THEN NULL ELSE CAST(gray_mid AS INT) END AS gray_mid
             FROM s ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = graft.ops.TextAnalysis.spreadSmallInput( // one-split scan would
       // serialize the per-doc PDF build+parse onto one core (the
       // latticeFixture rationale); no-op on an already-parallel input
       documents(s, d).select("doc_id"))
-      val withPdf = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withPdf = withPayload(base) { id =>
         val w = (id % 21 + 4).toInt; val h = ((id * 3) % 17 + 4).toInt
         val px = Array.tabulate(w * h) { k =>
           val x = k % w; val y = k / w
@@ -667,7 +625,7 @@ object PdfQueries extends QuerySet {
         val fix = Pdf.ImageFixture(w, h, 0, px, x = 72.0, y = 480.0,
           dispW = w * 4.0, dispH = h * 4.0, predictor = false,
           corrupt = id % 9 == 0, dct = true, progressiveDct = id % 3 == 2)
-        Seq(Pdf.buildImagesPdf("Scan page " + id, Seq(fix), compress = id % 2 == 1))
+        Pdf.buildImagesPdf("Scan page " + id, Seq(fix), compress = id % 2 == 1)
       }
       val imgs = Pdf.imagesStage(withPdf, "payload", "imgs")
         .select(col("doc_id"), explode(col("imgs")).as("im"))

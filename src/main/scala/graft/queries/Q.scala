@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{BinaryType, StructField}
 
 /** One correctness-gate query: Spark implementation + DuckDB oracle SQL
   * (None → driver records a weaker rows-only check).
@@ -23,13 +24,26 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class Q(name: String, oracle: Option[String], fn: (SparkSession, String) => DataFrame)
 
-trait QuerySet { def all: Seq[Q] }
+trait QuerySet {
+  def all: Seq[Q]
 
-/** Shared DuckDB oracle fragments for the dedup family — ONE source of
-  * truth for the SQL that must mirror `graft.ops.Dedup` exactly. The
-  * rotation table is generated from the same `Dedup.rotationOffset` the
-  * Spark expression uses, so a parameter change cannot de-synchronize the
-  * copies (d2 / d7 / c1 / d6 / x4 all build on these).
+  /** `base` (a leading long id column, e.g. doc_id) with a binary
+    * `payload` column that `build` synthesizes from each row's id. */
+  protected def withPayload(base: DataFrame)(build: Long => Array[Byte]): DataFrame =
+    graft.ops.Stages.appendFields(base, Seq(StructField("payload", BinaryType)))(r =>
+      Seq(build(r.getLong(0))))
+}
+
+/** DuckDB oracle fragments that queries of more than one family share —
+  * ONE source of truth for SQL that must mirror a Spark implementation
+  * exactly: the dedup chain (tokens, shingles, MinHash, SimHash, LSH
+  * bands, Jaccard, closure) mirroring `graft.ops.Dedup`, the smoothed PSI
+  * tail mirroring `ops.Drift.psiTerms`, and the planted image-signature
+  * pairs with the payload generator that plants them. The MinHash rotation
+  * table is generated from the same `Dedup.rotationOffset` the Spark
+  * expression uses, so a parameter change cannot de-synchronize the
+  * copies. A fragment one family uses alone lives in that family's
+  * object, next to the Spark helper it mirrors.
   */
 object OracleSql {
 
@@ -120,11 +134,6 @@ object OracleSql {
           FROM bands a JOIN bands b ON a.band = b.band AND a.id < b.id
           WHERE $jaccSql >= $threshold)"""
 
-  /** Transitive closure over a `pairs(id_a, id_b)` CTE — the SQL mirror of
-    * `Dedup.connectedComponents` (min-label propagation): `labels(id,
-    * cluster_id)` assigns every pair member its component's minimum id.
-    * ONE copy shared by d7 and d7b so the histogram can never disagree
-    * with the cluster labels it summarizes. Requires WITH RECURSIVE. */
   /** Smoothed-PSI tail shared by x33 (temporal drift) and fs5 (split
     * drift) — expects a CTE `cnt(bucket, refN, curN)`; Spark twin is
     * `ops.Drift.psiTerms` (one copy of the smoothing/rounding rules). */
@@ -142,6 +151,12 @@ object OracleSql {
           round((p - q) * ln(p / q), 6) AS psi_term
         FROM p ORDER BY bucket"""
 
+  /** Transitive closure over a `pairs(id_a, id_b)` CTE — the SQL mirror of
+    * `Dedup.connectedComponents` (min-label propagation): `labels(id,
+    * cluster_id)` assigns every pair member its component's minimum id.
+    * ONE copy shared by d7, d7b, er3, er5 and er5b so the histogram can
+    * never disagree with the cluster labels it summarizes. Requires WITH
+    * RECURSIVE. */
   val closureCtes: String =
     """e AS (SELECT id_a AS u, id_b AS v FROM pairs
             UNION SELECT id_b AS u, id_a AS v FROM pairs),
@@ -150,4 +165,55 @@ object OracleSql {
          UNION
          SELECT e.u AS id, reach.r FROM e JOIN reach ON e.v = reach.id),
        labels AS (SELECT id, min(r) AS cluster_id FROM reach GROUP BY id)"""
+
+  /** Near-dup pairs over the planted 64-bit image signatures that
+    * `plantedDhashWalk` draws: each signature splits into 4 blocks of 16
+    * bits, docs sharing a block are candidates, and pairs within Hamming
+    * distance 3 are kept. Output (id_a, id_b, hamming). Oracle of d18,
+    * m13 and pdf9, which decode the same signature from PNG, JPEG and
+    * PDF payloads. */
+  val plantedSigPairsSql: String =
+    """WITH d AS (SELECT doc_id, doc_id // 4 AS gb, CAST(doc_id % 4 AS INT) AS m FROM documents),
+            bits AS (SELECT doc_id, i,
+                (((((gb * 48271 + i * 16807) % 1000003) * ((gb * 48271 + i * 16807) % 1000003)) % 1000003) < 500002) <>
+                  list_contains(list_transform(range(CAST(m AS BIGINT)), j -> (gb * 7 + j * 19) % 64), i) AS b
+              FROM d, range(0, 64, 1) t(i)),
+            sig AS (SELECT doc_id, string_agg(CASE WHEN b THEN '1' ELSE '0' END, '' ORDER BY i) AS sig
+                    FROM bits GROUP BY doc_id),
+            blk AS (SELECT doc_id, sig,
+                concat(CAST(q AS VARCHAR), ':', substr(sig, CAST(q * 16 + 1 AS INT), 16)) AS blk
+              FROM sig, range(0, 4, 1) t(q)),
+            cand AS (SELECT DISTINCT a.doc_id AS id_a, a.sig AS sig_a, b.doc_id AS id_b, b.sig AS sig_b
+                     FROM blk a JOIN blk b ON a.blk = b.blk AND a.doc_id < b.doc_id),
+            ham AS (SELECT id_a, id_b,
+                CAST(len(list_filter(range(1, 65, 1), i -> sig_a[i] <> sig_b[i])) AS BIGINT) AS hamming
+              FROM cand)
+            SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b"""
+
+  /** Doc `id`'s planted 9×8 gray image, row-major, whose dHash is the
+    * signature `plantedSigPairsSql` computes: groups of 4 docs share a
+    * base signature and member m flips m known bits. */
+  def plantedDhashWalk(id: Long): Array[Int] = {
+    val gb = id / 4; val m = (id % 4).toInt
+    // squared-residue bits mod a large prime: a LINEAR bit formula
+    // walks the modulus in small increments, producing run-structured
+    // signatures that nearly-collide across groups (measured 4× pair
+    // inflation); squaring decorrelates adjacent i, leaving exactly
+    // the 6-per-group planted pairs
+    val bits = Array.tabulate(64) { i =>
+      val v = (gb * 48271L + i * 16807L) % 1000003
+      v * v % 1000003 < 500002
+    }.zipWithIndex.map { case (b0, i) =>
+      b0 != (0 until m).exists(j => (gb * 7 + j * 19) % 64 == i)
+    }
+    // gradient walk: p(0,y)=128, each step ±1 by the planted bit, so
+    // dHash(p) == bits exactly and stays within byte range (128±8)
+    val walk = new Array[Int](72)
+    for (y <- 0 until 8) {
+      walk(y * 9) = 128
+      for (x <- 0 until 8)
+        walk(y * 9 + x + 1) = walk(y * 9 + x) + (if (bits(y * 8 + x)) 1 else -1)
+    }
+    walk
+  }
 }

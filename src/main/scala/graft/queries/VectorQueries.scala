@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import graft.tables.TestTables._
 import graft.ops.{Dedup, DeltaLog, TextAnalysis}
 import graft.index.{Embed, Search, Upsert}
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Vector / dedup / similarity inventory (SURVEY.md §2.9 V1–V2; prompt
   * families: deduplication, similarity search, multimodal, text analysis).
@@ -570,17 +570,11 @@ object VectorQueries extends QuerySet {
       })
   }
 
-  /** Hybrid retrieval via reciprocal-rank fusion (Cormack et al.,
-    * SIGIR'09): BM25 top-20 and dense top-20 (dot product vs the vec_id=0
-    * query vector) fused by `sum 1/(60+rank)` over a full outer join —
-    * a doc ranked by only one retriever still fuses. Both rank
-    * derivations are bounded broadcast self-joins (`broadcastTopRank`),
-    * so after each retriever's own scale-safe candidate cut the fusion
-    * touches only O(N) rows; ranks are integers so the fused score is
-    * bit-exact in any engine. */
-  val rrf1Hybrid: Q = {
-    val terms = Seq("spark", "join", "stream")
-    val k1 = 1.2; val b = 0.75; val n = 20; val k0 = 60
+  /** Oracle CTEs of hybrid retrieval's two rankings: `lexr(doc_id,
+    * rank_a)`, the BM25 top-n over `terms`, and `vecr(doc_id, rank_b)`,
+    * the dense top-n against vec_id 0's `q(qv)`. `tf` names the
+    * per-document term-frequency CTE. The Spark twin is `hybridRanks`. */
+  private def hybridRankCtes(terms: Seq[String], k1: Double, b: Double, n: Int, tf: String): String = {
     val dfsSql = terms.zipWithIndex.map { case (t, i) =>
       s"CAST(sum(CASE WHEN list_contains(toks, '$t') THEN 1 ELSE 0 END) AS BIGINT) AS df_$i"
     }.mkString(", ")
@@ -591,12 +585,11 @@ object VectorQueries extends QuerySet {
       s"""ln(1.0 + (CAST(n_docs AS DOUBLE) - CAST(df_$i AS DOUBLE) + 0.5) / (CAST(df_$i AS DOUBLE) + 0.5))
            * (tf_$i * ${k1 + 1.0}) / (tf_$i + $k1 * ((1.0 - $b) + $b * dl / avgdl))"""
     }.mkString(" + ")
-    Q("rrf1_hybrid_topk",
-      Some(s"""WITH t AS (SELECT doc_id, ${graft.queries.OracleSql.toksSql} AS toks FROM documents),
+    s"""t AS (SELECT doc_id, ${graft.queries.OracleSql.toksSql} AS toks FROM documents),
             stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
                 CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl, $dfsSql FROM t),
-            d AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl, $tfsSql FROM t),
-            lex AS (SELECT doc_id, round($termSql, 6) AS bm25 FROM d CROSS JOIN stats),
+            $tf AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl, $tfsSql FROM t),
+            lex AS (SELECT doc_id, round($termSql, 6) AS bm25 FROM $tf CROSS JOIN stats),
             lext AS (SELECT doc_id, bm25 FROM lex WHERE bm25 > 0.0
                      ORDER BY bm25 DESC, doc_id LIMIT $n),
             lexr AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rank_a FROM lext),
@@ -605,36 +598,30 @@ object VectorQueries extends QuerySet {
                 round(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(qv AS DOUBLE[])), 6) AS score
               FROM embeddings, q),
             vect AS (SELECT doc_id, score FROM vs ORDER BY score DESC, doc_id LIMIT $n),
-            vecr AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rank_b FROM vect)
-            SELECT coalesce(l.doc_id, v.doc_id) AS doc_id, l.rank_a, v.rank_b,
-              coalesce(CAST(1.0 AS DOUBLE) / (CAST($k0.0 AS DOUBLE) + CAST(rank_a AS DOUBLE)), CAST(0.0 AS DOUBLE))
-              + coalesce(CAST(1.0 AS DOUBLE) / (CAST($k0.0 AS DOUBLE) + CAST(rank_b AS DOUBLE)), CAST(0.0 AS DOUBLE)) AS rrf
-            FROM lexr l FULL OUTER JOIN vecr v ON l.doc_id = v.doc_id
-            ORDER BY rrf DESC, doc_id"""),
-      (s, d) => {
-        val lex = graft.index.Bm25.topK(documents(s, d), "doc_id", "text", terms, k = n, k1 = k1, b = b)
-        val lexRank = graft.ops.TableOps.broadcastTopRank(lex, "bm25", "doc_id", n)
-          .select(col("doc_id"), col("rank"))
-        val emb = embeddings(s, d)
-        val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-        val vec = emb.crossJoin(broadcast(q))
-          .select(col("vec_id").as("doc_id"), round(Embed.dot(col("embedding"), col("qv")), 6).as("score"))
-        val vecRank = graft.ops.TableOps.broadcastTopRank(vec, "score", "doc_id", n)
-          .select(col("doc_id"), col("rank"))
-        graft.index.Fusion.rrf(lexRank, vecRank, "doc_id", "rank", k0)
-          .orderBy(col("rrf").desc, col("doc_id"))
-      })
+            vecr AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rank_b FROM vect)"""
   }
 
-  /** MMR diversified top-5 (Carbonell/Goldstein, SIGIR'98) over the dense
-    * top-12 candidates: greedy argmax of `0.7*rel - 0.3*max-sim-to-
-    * selected`, every sim and step score 6-dp-rounded before comparison
-    * (ties → id asc) so both engines select identically. The oracle
-    * replays all 5 greedy steps as an unrolled CTE chain (the v8/tok2
-    * convention); candidate cut and the N×N sim matrix are bounded, so
-    * corpus scale never enters the loop. */
-  val mmr1Diverse: Q = {
-    val nCand = 12; val k = 5; val lambda = 0.7
+  /** Hybrid retrieval's two rankings, (doc_id, rank) each: BM25 top-n
+    * over `terms`, then the dense top-n against vec_id 0. */
+  private def hybridRanks(s: SparkSession, d: String, terms: Seq[String], k1: Double, b: Double,
+                          n: Int): (DataFrame, DataFrame) = {
+    val lex = graft.index.Bm25.topK(documents(s, d), "doc_id", "text", terms, k = n, k1 = k1, b = b)
+    val lexRank = graft.ops.TableOps.broadcastTopRank(lex, "bm25", "doc_id", n)
+      .select(col("doc_id"), col("rank"))
+    val emb = embeddings(s, d)
+    val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
+    val vec = emb.crossJoin(broadcast(q))
+      .select(col("vec_id").as("doc_id"), round(Embed.dot(col("embedding"), col("qv")), 6).as("score"))
+    val vecRank = graft.ops.TableOps.broadcastTopRank(vec, "score", "doc_id", n)
+      .select(col("doc_id"), col("rank"))
+    (lexRank, vecRank)
+  }
+
+  /** Oracle CTEs of greedy MMR over `cand(vec_id, rel, embedding)`: the
+    * pairwise cosine `sims`, then one `p<i>`/`sel<i>` step per pick up to
+    * `sel<k>(step, vec_id, mmr)`; every score is 6-dp rounded, ties to
+    * the lower id (the `Fusion.mmr` rules). */
+  private def mmrCtes(k: Int, lambda: Double): String = {
     val oneMinus = (1.0 - lambda).toString
     val simExpr =
       """round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
@@ -649,6 +636,48 @@ object VectorQueries extends QuerySet {
               ORDER BY mmr DESC, vec_id LIMIT 1),
             sel$i AS (SELECT * FROM sel${i - 1} UNION ALL SELECT $i AS step, vec_id, mmr FROM p$i)"""
     }.mkString(",\n            ")
+    s"""sims AS (SELECT a.vec_id AS i, b.vec_id AS j, $simExpr AS sim
+                     FROM cand a JOIN cand b ON a.vec_id <> b.vec_id),
+            p1 AS (SELECT vec_id, round($lambda * rel, 6) AS mmr FROM cand
+                   ORDER BY mmr DESC, vec_id LIMIT 1),
+            sel1 AS (SELECT 1 AS step, vec_id, mmr FROM p1),
+            $steps"""
+  }
+
+  /** Hybrid retrieval via reciprocal-rank fusion (Cormack et al.,
+    * SIGIR'09): BM25 top-20 and dense top-20 (dot product vs the vec_id=0
+    * query vector) fused by `sum 1/(60+rank)` over a full outer join —
+    * a doc ranked by only one retriever still fuses. Both rank
+    * derivations are bounded broadcast self-joins (`broadcastTopRank`),
+    * so after each retriever's own scale-safe candidate cut the fusion
+    * touches only O(N) rows; ranks are integers so the fused score is
+    * bit-exact in any engine. */
+  val rrf1Hybrid: Q = {
+    val terms = Seq("spark", "join", "stream")
+    val k1 = 1.2; val b = 0.75; val n = 20; val k0 = 60
+    Q("rrf1_hybrid_topk",
+      Some(s"""WITH ${hybridRankCtes(terms, k1, b, n, "d")}
+            SELECT coalesce(l.doc_id, v.doc_id) AS doc_id, l.rank_a, v.rank_b,
+              coalesce(CAST(1.0 AS DOUBLE) / (CAST($k0.0 AS DOUBLE) + CAST(rank_a AS DOUBLE)), CAST(0.0 AS DOUBLE))
+              + coalesce(CAST(1.0 AS DOUBLE) / (CAST($k0.0 AS DOUBLE) + CAST(rank_b AS DOUBLE)), CAST(0.0 AS DOUBLE)) AS rrf
+            FROM lexr l FULL OUTER JOIN vecr v ON l.doc_id = v.doc_id
+            ORDER BY rrf DESC, doc_id"""),
+      (s, d) => {
+        val (lexRank, vecRank) = hybridRanks(s, d, terms, k1, b, n)
+        graft.index.Fusion.rrf(lexRank, vecRank, "doc_id", "rank", k0)
+          .orderBy(col("rrf").desc, col("doc_id"))
+      })
+  }
+
+  /** MMR diversified top-5 (Carbonell/Goldstein, SIGIR'98) over the dense
+    * top-12 candidates: greedy argmax of `0.7*rel - 0.3*max-sim-to-
+    * selected`, every sim and step score 6-dp-rounded before comparison
+    * (ties → id asc) so both engines select identically. The oracle
+    * replays all 5 greedy steps as an unrolled CTE chain (the v8/tok2
+    * convention); candidate cut and the N×N sim matrix are bounded, so
+    * corpus scale never enters the loop. */
+  val mmr1Diverse: Q = {
+    val nCand = 12; val k = 5; val lambda = 0.7
     Q("mmr1_diverse_topk",
       Some(s"""WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
             vs AS (SELECT vec_id,
@@ -656,12 +685,7 @@ object VectorQueries extends QuerySet {
                 embedding
               FROM embeddings, q),
             cand AS (SELECT vec_id, rel, embedding FROM vs ORDER BY rel DESC, vec_id LIMIT $nCand),
-            sims AS (SELECT a.vec_id AS i, b.vec_id AS j, $simExpr AS sim
-                     FROM cand a JOIN cand b ON a.vec_id <> b.vec_id),
-            p1 AS (SELECT vec_id, round($lambda * rel, 6) AS mmr FROM cand
-                   ORDER BY mmr DESC, vec_id LIMIT 1),
-            sel1 AS (SELECT 1 AS step, vec_id, mmr FROM p1),
-            $steps
+            ${mmrCtes(k, lambda)}
             SELECT CAST(step AS INT) AS step, vec_id, mmr FROM sel$k ORDER BY step"""),
       (s, d) => {
         val emb = embeddings(s, d)
@@ -692,47 +716,10 @@ object VectorQueries extends QuerySet {
     val terms = Seq("spark", "join", "stream")
     val k1 = 1.2; val b = 0.75; val n = 20; val k0 = 60
     val nCand = 8; val k = 4; val lambda = 0.7
-    val oneMinus = (1.0 - lambda).toString
-    val dfsSql = terms.zipWithIndex.map { case (t, i) =>
-      s"CAST(sum(CASE WHEN list_contains(toks, '$t') THEN 1 ELSE 0 END) AS BIGINT) AS df_$i"
-    }.mkString(", ")
-    val tfsSql = terms.zipWithIndex.map { case (t, i) =>
-      s"CAST(len(list_filter(toks, x -> x = '$t')) AS DOUBLE) AS tf_$i"
-    }.mkString(", ")
-    val termSql = terms.indices.map { i =>
-      s"""ln(1.0 + (CAST(n_docs AS DOUBLE) - CAST(df_$i AS DOUBLE) + 0.5) / (CAST(df_$i AS DOUBLE) + 0.5))
-           * (tf_$i * ${k1 + 1.0}) / (tf_$i + $k1 * ((1.0 - $b) + $b * dl / avgdl))"""
-    }.mkString(" + ")
-    val simExpr =
-      """round(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[]))
-           / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]), CAST(a.embedding AS DOUBLE[])))
-            * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]), CAST(b.embedding AS DOUBLE[])))), 6)"""
-    val steps = (2 to k).map { i =>
-      s"""p$i AS (SELECT c.vec_id, round($lambda * c.rel - $oneMinus * coalesce(mx.pen, CAST(0.0 AS DOUBLE)), 6) AS mmr
-              FROM cand c
-              LEFT JOIN (SELECT i AS vec_id, max(sim) AS pen FROM sims
-                         JOIN sel${i - 1} s ON sims.j = s.vec_id GROUP BY i) mx USING (vec_id)
-              WHERE c.vec_id NOT IN (SELECT vec_id FROM sel${i - 1})
-              ORDER BY mmr DESC, vec_id LIMIT 1),
-            sel$i AS (SELECT * FROM sel${i - 1} UNION ALL SELECT $i AS step, vec_id, mmr FROM p$i)"""
-    }.mkString(",\n            ")
     val ovSql = s"len(list_intersect([${terms.map(t => s"'$t'").mkString(", ")}], " +
       "list_distinct(string_split_regex(lower(d.text), '\\s+'))))"
     Q("ask4_hybrid",
-      Some(s"""WITH t AS (SELECT doc_id, ${graft.queries.OracleSql.toksSql} AS toks FROM documents),
-            stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                CAST(sum(len(toks)) AS DOUBLE) / count(*) AS avgdl, $dfsSql FROM t),
-            dd AS (SELECT doc_id, CAST(len(toks) AS DOUBLE) AS dl, $tfsSql FROM t),
-            lex AS (SELECT doc_id, round($termSql, 6) AS bm25 FROM dd CROSS JOIN stats),
-            lext AS (SELECT doc_id, bm25 FROM lex WHERE bm25 > 0.0
-                     ORDER BY bm25 DESC, doc_id LIMIT $n),
-            lexr AS (SELECT doc_id, row_number() OVER (ORDER BY bm25 DESC, doc_id) AS rank_a FROM lext),
-            q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
-            vs AS (SELECT vec_id AS doc_id,
-                round(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(qv AS DOUBLE[])), 6) AS score
-              FROM embeddings, q),
-            vect AS (SELECT doc_id, score FROM vs ORDER BY score DESC, doc_id LIMIT $n),
-            vecr AS (SELECT doc_id, row_number() OVER (ORDER BY score DESC, doc_id) AS rank_b FROM vect),
+      Some(s"""WITH ${hybridRankCtes(terms, k1, b, n, "dd")},
             fused AS (SELECT coalesce(l.doc_id, v.doc_id) AS doc_id,
                 coalesce(CAST(1.0 AS DOUBLE) / (CAST($k0.0 AS DOUBLE) + CAST(rank_a AS DOUBLE)), CAST(0.0 AS DOUBLE))
                 + coalesce(CAST(1.0 AS DOUBLE) / (CAST($k0.0 AS DOUBLE) + CAST(rank_b AS DOUBLE)), CAST(0.0 AS DOUBLE)) AS rrf
@@ -742,12 +729,7 @@ object VectorQueries extends QuerySet {
                 round(list_dot_product(CAST(e.embedding AS DOUBLE[]), CAST(q.qv AS DOUBLE[])), 6) AS rel,
                 e.embedding
               FROM cand0 c JOIN embeddings e ON e.vec_id = c.doc_id CROSS JOIN q),
-            sims AS (SELECT a.vec_id AS i, b.vec_id AS j, $simExpr AS sim
-                     FROM cand a JOIN cand b ON a.vec_id <> b.vec_id),
-            p1 AS (SELECT vec_id, round($lambda * rel, 6) AS mmr FROM cand
-                   ORDER BY mmr DESC, vec_id LIMIT 1),
-            sel1 AS (SELECT 1 AS step, vec_id, mmr FROM p1),
-            $steps
+            ${mmrCtes(k, lambda)}
             SELECT CAST(s.step AS INT) AS step, s.vec_id AS doc_id, c.rrf, c.rel, s.mmr,
               CAST($ovSql AS BIGINT) AS overlap
             FROM sel$k s
@@ -756,15 +738,9 @@ object VectorQueries extends QuerySet {
             WHERE $ovSql >= 1 OR c.rel >= 0.75
             ORDER BY step"""),
       (s, d) => {
-        val lex = graft.index.Bm25.topK(documents(s, d), "doc_id", "text", terms, k = n, k1 = k1, b = b)
-        val lexRank = graft.ops.TableOps.broadcastTopRank(lex, "bm25", "doc_id", n)
-          .select(col("doc_id"), col("rank"))
+        val (lexRank, vecRank) = hybridRanks(s, d, terms, k1, b, n)
         val emb = embeddings(s, d)
         val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
-        val vec = emb.crossJoin(broadcast(q))
-          .select(col("vec_id").as("doc_id"), round(Embed.dot(col("embedding"), col("qv")), 6).as("score"))
-        val vecRank = graft.ops.TableOps.broadcastTopRank(vec, "score", "doc_id", n)
-          .select(col("doc_id"), col("rank"))
         val fused = graft.index.Fusion.rrf(lexRank, vecRank, "doc_id", "rank", k0)
         val cand0 = fused.orderBy(col("rrf").desc, col("doc_id")).limit(nCand)
         val cands = cand0.join(emb, cand0("doc_id") === emb("vec_id"))
@@ -894,19 +870,23 @@ object VectorQueries extends QuerySet {
     Seq.fill(6)(Seq.fill(64)(rng.nextGaussian()))
   }
 
-  val v3LshTopK: Q = {
-    val dim = 64; val bits = 6
-    val planes = srpPlanes
-    def planeSql(p: Seq[Double]) = p.map(v => f"$v%.17g").mkString("[", ",", "]")
-    val bucketSql = planes.zipWithIndex.map { case (p, i) =>
-      s"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), ${planeSql(p)}) >= 0 THEN ${1 << i} ELSE 0 END)"
+  /** Top-5 by dot product within vec_id 0's SRP bucket, the seed-42
+    * hyperplanes baked in as literals — the oracle of both the in-scan
+    * (v3) and the stored, pruned (v3b) LSH query. */
+  private val srpTopKOracle: String = {
+    val bucketSql = srpPlanes.zipWithIndex.map { case (p, i) =>
+      s"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), ${vecSql(p)}) >= 0 THEN ${1 << i} ELSE 0 END)"
     }.mkString(" + ")
-    Q("v3_lsh_topk",
-      Some(s"""WITH b AS (SELECT vec_id, embedding, $bucketSql AS bucket FROM embeddings),
+    s"""WITH b AS (SELECT vec_id, embedding, $bucketSql AS bucket FROM embeddings),
                q AS (SELECT embedding AS qv, bucket AS qb FROM b WHERE vec_id = 0)
                SELECT vec_id, round(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(qv AS DOUBLE[])), 6) AS score
                FROM b, q WHERE b.bucket = q.qb
-               ORDER BY score DESC, vec_id LIMIT 5"""),
+               ORDER BY score DESC, vec_id LIMIT 5"""
+  }
+
+  val v3LshTopK: Q = {
+    val dim = 64; val bits = 6
+    Q("v3_lsh_topk", Some(srpTopKOracle),
       (s, d) => {
         val emb = embeddings(s, d)
         val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -927,30 +907,50 @@ object VectorQueries extends QuerySet {
     * digits round-trips any double exactly. */
   private def vecSql(c: Seq[Double]) = c.map(v => f"$v%.17g").mkString("[", ",", "]")
 
-  /** THE seed-7 IVF centroids — single construction shared by v4, v4b and
-    * v6 so the three queries provably use one index layout. */
+  /** THE seed-7 IVF centroids — single construction shared by v4, v4b,
+    * v6, v9, v10 and hn1 so the six queries provably use one index layout. */
   private val ivfCentroids: Seq[Seq[Double]] = {
     val rng = new scala.util.Random(7)
     Seq.fill(4)(Seq.fill(64)(rng.nextGaussian() * 0.05))
   }
 
+  /** Squared L2 distance from a row's vector to each centroid, as columns
+    * `<p>0, <p>1, …`; `e` is the vector's i-th element with whatever cast
+    * its element type needs. */
+  private def ivfDistCols(centroids: Seq[Seq[Double]], p: String, e: String): String =
+    centroids.zipWithIndex.map { case (c, i) =>
+      s"list_sum(list_transform(range(1, ${c.size + 1}), i -> ($e - (${vecSql(c)})[i]) * ($e - (${vecSql(c)})[i]))) AS $p$i"
+    }.mkString(", ")
+
+  /** The cell of the argmin over distance columns `<p>0 … <p>{k-1}`, ties
+    * to the lower cell (the `Search.ivfCell` rule). */
+  private def ivfArgminSql(p: String, k: Int): String =
+    (0 until k - 1).map { i =>
+      val rest = (i + 1 until k).map(j => s"$p$j")
+      s"WHEN $p$i <= ${if (rest.size == 1) rest.head else rest.mkString("least(", ", ", ")")} THEN $i"
+    }.mkString("CASE ", " ", s" ELSE ${k - 1} END")
+
+  private val ivfDCols: String = ivfDistCols(ivfCentroids, "ivfd", "e[i]::DOUBLE")
+  private val ivfCellSql: String = ivfArgminSql("ivfd", ivfCentroids.size)
+
+  /** Oracle CTEs `d` → `c(vec_id, e, cell)`: every embedding assigned to
+    * its seed-7 cell (v4, v4b and v10). */
+  private val ivfCellCtes: String =
+    s"""d AS (SELECT vec_id, embedding AS e, ${ivfDistCols(ivfCentroids, "d", "e[i]::DOUBLE")} FROM embeddings),
+        c AS (SELECT vec_id, e, ${ivfArgminSql("d", ivfCentroids.size)} AS cell FROM d)"""
+
+  /** Top-5 by dot product within vec_id 0's cell — the oracle of both the
+    * in-scan (v4) and the stored, pruned (v4b) IVF query. */
+  private val ivfTopKOracle: String =
+    s"""WITH $ivfCellCtes,
+        q AS (SELECT e AS qv, cell AS qcell FROM c WHERE vec_id = 0)
+        SELECT vec_id, round(list_dot_product(CAST(e AS DOUBLE[]), CAST(qv AS DOUBLE[])), 6) AS score
+        FROM c, q WHERE c.cell = q.qcell
+        ORDER BY score DESC, vec_id LIMIT 5"""
+
   val v4IvfTopK: Q = {
-    val dim = 64
     val centroids = ivfCentroids
-    def cSql(c: Seq[Double]) = vecSql(c)
-    def d2Sql(c: Seq[Double]) =
-      s"list_sum(list_transform(range(1, ${dim + 1}), i -> (e[i]::DOUBLE - (${cSql(c)})[i]) * (e[i]::DOUBLE - (${cSql(c)})[i])))"
-    val dCols = centroids.zipWithIndex.map { case (c, i) => s"${d2Sql(c)} AS d$i" }.mkString(", ")
-    val cellSql = """CASE WHEN d0 <= least(d1, d2, d3) THEN 0
-                          WHEN d1 <= least(d2, d3) THEN 1
-                          WHEN d2 <= d3 THEN 2 ELSE 3 END"""
-    Q("v4_ivf_topk",
-      Some(s"""WITH d AS (SELECT vec_id, embedding AS e, $dCols FROM embeddings),
-               c AS (SELECT vec_id, e, $cellSql AS cell FROM d),
-               q AS (SELECT e AS qv, cell AS qcell FROM c WHERE vec_id = 0)
-               SELECT vec_id, round(list_dot_product(CAST(e AS DOUBLE[]), CAST(qv AS DOUBLE[])), 6) AS score
-               FROM c, q WHERE c.cell = q.qcell
-               ORDER BY score DESC, vec_id LIMIT 5"""),
+    Q("v4_ivf_topk", Some(ivfTopKOracle),
       (s, d) => {
         val emb = embeddings(s, d)
         val q = emb.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
@@ -975,18 +975,9 @@ object VectorQueries extends QuerySet {
     * window over the Q×N frame (the b3 batched shape), IVF ranking only
     * over each query's own cell. */
   val v10IvfRecall: Q = {
-    val dim = 64
     val centroids = ivfCentroids
-    def cSql(c: Seq[Double]) = vecSql(c)
-    def d2Sql(c: Seq[Double]) =
-      s"list_sum(list_transform(range(1, ${dim + 1}), i -> (e[i]::DOUBLE - (${cSql(c)})[i]) * (e[i]::DOUBLE - (${cSql(c)})[i])))"
-    val dCols = centroids.zipWithIndex.map { case (c, i) => s"${d2Sql(c)} AS d$i" }.mkString(", ")
-    val cellSql = """CASE WHEN d0 <= least(d1, d2, d3) THEN 0
-                          WHEN d1 <= least(d2, d3) THEN 1
-                          WHEN d2 <= d3 THEN 2 ELSE 3 END"""
     Q("v10_ivf_recall",
-      Some(s"""WITH d AS (SELECT vec_id, embedding AS e, $dCols FROM embeddings),
-            c AS (SELECT vec_id, e, $cellSql AS cell FROM d),
+      Some(s"""WITH $ivfCellCtes,
             q AS (SELECT vec_id AS qid, e AS qv, cell AS qcell FROM c WHERE vec_id < 20),
             ex AS (SELECT qid, c.vec_id,
                 round(list_dot_product(CAST(e AS DOUBLE[]), CAST(qv AS DOUBLE[])), 6) AS score
@@ -1062,6 +1053,125 @@ object VectorQueries extends QuerySet {
             assign AS (SELECT vec_id, e, cell FROM ranked WHERE crank = 1)"""
   }
 
+  /** The nprobe recall curve's oracle tail, from the exact scan on: needs
+    * CTEs `q(qid, qv)` (the 20-query sample) and `qrank(qid, cell, crank)`
+    * (each query's cells, nearest first). `exact` (aliased `x`) is the
+    * brute-force corpus, `cells` the cell-assigned corpus (aliased `a`),
+    * `corpus` the CTE counted for the scanned fraction; `cast` casts both
+    * dot-product sides to DOUBLE[]. The Spark twin is `nprobeCurve`. */
+  private def nprobeCurveSql(exact: String, x: String, cells: String, cast: Boolean,
+                             probes: Seq[Int], corpus: String): String = {
+    def dot(e: String, q: String) =
+      if (cast) s"list_dot_product(CAST($e AS DOUBLE[]), CAST($q AS DOUBLE[]))"
+      else s"list_dot_product($e, $q)"
+    s"""ex AS (SELECT qid, $x.vec_id,
+                round(${dot(s"$x.e", "qv")}, 6) AS score
+              FROM $exact $x CROSS JOIN q WHERE $x.vec_id <> q.qid),
+            exr AS (SELECT qid, vec_id FROM (
+                SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rn
+                FROM ex) WHERE rn <= 5),
+            cand AS (SELECT qr.qid, a.vec_id, qr.crank,
+                round(${dot("a.e", "q.qv")}, 6) AS score
+              FROM $cells a JOIN qrank qr ON a.cell = qr.cell JOIN q ON q.qid = qr.qid
+              WHERE a.vec_id <> qr.qid),
+            probes(nprobe) AS (VALUES ${probes.map(p => s"($p)").mkString(", ")}),
+            pc AS (SELECT nprobe, qid, vec_id, score FROM cand CROSS JOIN probes WHERE crank <= nprobe),
+            ivr AS (SELECT nprobe, qid, vec_id FROM (
+                SELECT nprobe, qid, vec_id, row_number() OVER (PARTITION BY nprobe, qid ORDER BY score DESC, vec_id) AS rn
+                FROM pc) WHERE rn <= 5),
+            hits AS (SELECT nprobe, count(*) AS total_hits
+              FROM ivr i JOIN exr e ON i.qid = e.qid AND i.vec_id = e.vec_id GROUP BY nprobe),
+            scans AS (SELECT nprobe, count(*) AS scanned FROM pc GROUP BY nprobe),
+            n AS (SELECT count(*) AS n_vec FROM $corpus)
+            SELECT p.nprobe AS nprobe,
+              CAST(coalesce(total_hits, 0) AS INT) AS total_hits,
+              CAST(coalesce(total_hits, 0) AS DOUBLE) / CAST(100 AS DOUBLE) AS mean_recall_at_5,
+              CAST(coalesce(scanned, 0) AS DOUBLE) / CAST(20 * n_vec AS DOUBLE) AS scanned_frac
+            FROM probes p LEFT JOIN hits USING (nprobe) LEFT JOIN scans USING (nprobe) CROSS JOIN n
+            ORDER BY nprobe"""
+  }
+
+  /** The nprobe recall curve: per nprobe, the 20 queries' summed top-5
+    * hits against the exact top-5 of `corpus` (self excluded), and the
+    * fraction of rows the probed cells scan. `cells` is the corpus with
+    * its `cell`, `q` is (qid, qv) and `qranked` (qid, qv, crank, cell). */
+  private def nprobeCurve(s: SparkSession, corpus: DataFrame, cells: DataFrame,
+                          q: DataFrame, qranked: DataFrame, probes: Seq[Int]): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val exr = exactTop5(corpus, q, "embedding")
+    val cand = cells.join(broadcast(qranked), Seq("cell"))
+      .filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"), col("crank"),
+        round(Embed.dot(col("embedding"), col("qv")), 6).as("score"))
+    val probesDf = s.range(1)
+      .select(explode(array(probes.map(lit(_)): _*)).as("nprobe"))
+    // feeds the ranking branch AND the scanned-count branch
+    val pc = cand.crossJoin(broadcast(probesDf))
+      .filter(col("crank") <= col("nprobe")).localCheckpoint()
+    val ivr = pc.withColumn("rn", row_number().over(
+        Window.partitionBy("nprobe", "qid").orderBy(col("score").desc, col("vec_id"))))
+      .filter(col("rn") <= 5).select("nprobe", "qid", "vec_id")
+    val hits = ivr.join(exr, Seq("qid", "vec_id"))
+      .groupBy("nprobe").agg(count(lit(1)).as("total_hits"))
+    val scans = pc.groupBy("nprobe").agg(count(lit(1)).as("scanned"))
+    val nVec = corpus.agg(count(lit(1)).as("n_vec"))
+    probesDf.join(hits, Seq("nprobe"), "left").join(scans, Seq("nprobe"), "left")
+      .crossJoin(broadcast(nVec))
+      .select(col("nprobe"),
+        coalesce(col("total_hits"), lit(0L)).cast("int").as("total_hits"),
+        (coalesce(col("total_hits"), lit(0L)).cast("double") / lit(100).cast("double"))
+          .as("mean_recall_at_5"),
+        (coalesce(col("scanned"), lit(0L)).cast("double")
+          / (lit(20L) * col("n_vec")).cast("double")).as("scanned_frac"))
+      .orderBy("nprobe")
+  }
+
+  /** Per query of `q` (qid, qv), the exact top-5 (qid, vec_id) of
+    * `corpus` by rounded dot product with its vector `vecCol`, self
+    * excluded, ties to the lower vec_id. */
+  private def exactTop5(corpus: DataFrame, q: DataFrame, vecCol: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    corpus.crossJoin(broadcast(q)).filter(col("vec_id") =!= col("qid"))
+      .select(col("qid"), col("vec_id"), round(Embed.dot(col(vecCol), col("qv")), 6).as("score"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))))
+      .filter(col("rn") <= 5).select("qid", "vec_id")
+  }
+
+  /** `nprobeCurve` for fixed centroids: `emb` (vec_id, embedding) is
+    * assigned to its nearest centroid, and queries vec_id < 20 probe the
+    * cells in distance order. */
+  private def plantedCellCurve(s: SparkSession, emb: DataFrame,
+                               centroids: Seq[Seq[Double]], probes: Seq[Int]): DataFrame = {
+    // feeds the exact branch AND the candidate branch - materialize once
+    val celled = emb.withColumn("cell", Search.ivfCell(col("embedding"), centroids))
+      .localCheckpoint()
+    val q = celled.filter(col("vec_id") < 20)
+      .select(col("vec_id").as("qid"), col("embedding").as("qv"))
+    val qranked = q
+      .select(col("qid"), col("qv"),
+        posexplode(Search.ivfProbeCells(col("qv"), centroids, centroids.size)))
+      .select(col("qid"), col("qv"), (col("pos") + 1).as("crank"), col("col").as("cell"))
+    nprobeCurve(s, celled, celled, q, qranked, probes)
+  }
+
+  /** v13's clustered fixture as oracle CTE `fix(vec_id, e)`. */
+  private val clusteredFixtureCte: String =
+    """fix AS (
+              SELECT vec_id, list_transform(range(0, 64), i ->
+                (CASE WHEN i // 8 = vec_id % 8 THEN CAST(2.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
+                + ((vec_id * 31 + i * 17) % 11 - 5) / 10.0) AS e
+              FROM embeddings)"""
+
+  /** v13's clustered fixture (vec_id, embedding): vector v is the planted
+    * center of cluster v % 8 plus deterministic per-coordinate noise. */
+  private def clusteredFixture(s: SparkSession, d: String): DataFrame =
+    embeddings(s, d).select(col("vec_id"),
+      transform(sequence(lit(0), lit(63)), i =>
+        when(floor(i / 8) === col("vec_id") % 8, lit(2.0)).otherwise(lit(0.0))
+          + ((col("vec_id") * 31 + i * 17) % 11 - 5).cast("double") / lit(10.0))
+        .as("embedding"))
+
   /** The multi-probe IVF tuning curve — the d19-style "grade your own
     * approximation" gate v10 called for: for the 20-query sample, recall@5
     * (vs exact brute force, self excluded) AND the scanned-row fraction at
@@ -1086,75 +1196,8 @@ object VectorQueries extends QuerySet {
       Some(s"""WITH ${ivfRankedCtes(centroids)},
             q AS (SELECT vec_id AS qid, e AS qv FROM assign WHERE vec_id < 20),
             qrank AS (SELECT vec_id AS qid, cell, crank FROM ranked WHERE vec_id < 20),
-            ex AS (SELECT qid, a.vec_id,
-                round(list_dot_product(CAST(a.e AS DOUBLE[]), CAST(qv AS DOUBLE[])), 6) AS score
-              FROM assign a CROSS JOIN q WHERE a.vec_id <> q.qid),
-            exr AS (SELECT qid, vec_id FROM (
-                SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rn
-                FROM ex) WHERE rn <= 5),
-            cand AS (SELECT qr.qid, a.vec_id, qr.crank,
-                round(list_dot_product(CAST(a.e AS DOUBLE[]), CAST(q.qv AS DOUBLE[])), 6) AS score
-              FROM assign a JOIN qrank qr ON a.cell = qr.cell JOIN q ON q.qid = qr.qid
-              WHERE a.vec_id <> qr.qid),
-            probes(nprobe) AS (VALUES (1), (2), (4), (6), (7), (8)),
-            pc AS (SELECT nprobe, qid, vec_id, score FROM cand CROSS JOIN probes WHERE crank <= nprobe),
-            ivr AS (SELECT nprobe, qid, vec_id FROM (
-                SELECT nprobe, qid, vec_id, row_number() OVER (PARTITION BY nprobe, qid ORDER BY score DESC, vec_id) AS rn
-                FROM pc) WHERE rn <= 5),
-            hits AS (SELECT nprobe, count(*) AS total_hits
-              FROM ivr i JOIN exr e ON i.qid = e.qid AND i.vec_id = e.vec_id GROUP BY nprobe),
-            scans AS (SELECT nprobe, count(*) AS scanned FROM pc GROUP BY nprobe),
-            n AS (SELECT count(*) AS n_vec FROM d)
-            SELECT p.nprobe AS nprobe,
-              CAST(coalesce(total_hits, 0) AS INT) AS total_hits,
-              CAST(coalesce(total_hits, 0) AS DOUBLE) / CAST(100 AS DOUBLE) AS mean_recall_at_5,
-              CAST(coalesce(scanned, 0) AS DOUBLE) / CAST(20 * n_vec AS DOUBLE) AS scanned_frac
-            FROM probes p LEFT JOIN hits USING (nprobe) LEFT JOIN scans USING (nprobe) CROSS JOIN n
-            ORDER BY nprobe"""),
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        // feeds the exact branch AND the candidate branch - materialize once
-        val celled = embeddings(s, d)
-          .withColumn("cell", Search.ivfCell(col("embedding"), centroids))
-          .localCheckpoint()
-        val q = celled.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        val qranked = q
-          .select(col("qid"), col("qv"),
-            posexplode(Search.ivfProbeCells(col("qv"), centroids, centroids.size)))
-          .select(col("qid"), col("qv"), (col("pos") + 1).as("crank"), col("col").as("cell"))
-        val exr = celled.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id"), round(Embed.dot(col("embedding"), col("qv")), 6).as("score"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        val cand = celled.join(broadcast(qranked), Seq("cell"))
-          .filter(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id"), col("crank"),
-            round(Embed.dot(col("embedding"), col("qv")), 6).as("score"))
-        val probesDf = s.range(1)
-          .select(explode(array(lit(1), lit(2), lit(4), lit(6), lit(7), lit(8))).as("nprobe"))
-        // feeds the ranking branch AND the scanned-count branch
-        val pc = cand.crossJoin(broadcast(probesDf))
-          .filter(col("crank") <= col("nprobe")).localCheckpoint()
-        val ivr = pc.withColumn("rn", row_number().over(
-            Window.partitionBy("nprobe", "qid").orderBy(col("score").desc, col("vec_id"))))
-          .filter(col("rn") <= 5).select("nprobe", "qid", "vec_id")
-        val hits = ivr.join(exr, Seq("qid", "vec_id"))
-          .groupBy("nprobe").agg(count(lit(1)).as("total_hits"))
-        val scans = pc.groupBy("nprobe").agg(count(lit(1)).as("scanned"))
-        val nVec = celled.agg(count(lit(1)).as("n_vec"))
-        probesDf.join(hits, Seq("nprobe"), "left").join(scans, Seq("nprobe"), "left")
-          .crossJoin(broadcast(nVec))
-          .select(col("nprobe"),
-            coalesce(col("total_hits"), lit(0L)).cast("int").as("total_hits"),
-            (coalesce(col("total_hits"), lit(0L)).cast("double") / lit(100).cast("double"))
-              .as("mean_recall_at_5"),
-            (coalesce(col("scanned"), lit(0L)).cast("double")
-              / (lit(20L) * col("n_vec")).cast("double")).as("scanned_frac"))
-          .orderBy("nprobe")
-      })
+            ${nprobeCurveSql("assign", "a", "assign", cast = true, Seq(1, 2, 4, 6, 7, 8), "d")}"""),
+      (s, d) => plantedCellCurve(s, embeddings(s, d), centroids, Seq(1, 2, 4, 6, 7, 8)))
   }
 
   /** The CLUSTERED-regime nprobe curve — the counterpart the round-10
@@ -1178,11 +1221,7 @@ object VectorQueries extends QuerySet {
     val centers: Seq[Seq[Double]] =
       Seq.tabulate(8)(k => Seq.tabulate(64)(i => if (i / 8 == k) 2.0 else 0.0))
     Q("v13_clustered_nprobe",
-      Some(s"""WITH fix AS (
-              SELECT vec_id, list_transform(range(0, 64), i ->
-                (CASE WHEN i // 8 = vec_id % 8 THEN CAST(2.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
-                + ((vec_id * 31 + i * 17) % 11 - 5) / 10.0) AS e
-              FROM embeddings),
+      Some(s"""WITH $clusteredFixtureCte,
             cents AS (
               SELECT cell, list_transform(range(0, 64), i ->
                 CASE WHEN i // 8 = cell THEN CAST(2.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END) AS cv
@@ -1195,79 +1234,8 @@ object VectorQueries extends QuerySet {
             assign AS (SELECT vec_id, e, cell FROM ranked WHERE crank = 1),
             q AS (SELECT vec_id AS qid, e AS qv FROM assign WHERE vec_id < 20),
             qrank AS (SELECT vec_id AS qid, cell, crank FROM ranked WHERE vec_id < 20),
-            ex AS (SELECT qid, a.vec_id,
-                round(list_dot_product(a.e, qv), 6) AS score
-              FROM assign a CROSS JOIN q WHERE a.vec_id <> q.qid),
-            exr AS (SELECT qid, vec_id FROM (
-                SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rn
-                FROM ex) WHERE rn <= 5),
-            cand AS (SELECT qr.qid, a.vec_id, qr.crank,
-                round(list_dot_product(a.e, q.qv), 6) AS score
-              FROM assign a JOIN qrank qr ON a.cell = qr.cell JOIN q ON q.qid = qr.qid
-              WHERE a.vec_id <> qr.qid),
-            probes(nprobe) AS (VALUES (1), (2), (4), (8)),
-            pc AS (SELECT nprobe, qid, vec_id, score FROM cand CROSS JOIN probes WHERE crank <= nprobe),
-            ivr AS (SELECT nprobe, qid, vec_id FROM (
-                SELECT nprobe, qid, vec_id, row_number() OVER (PARTITION BY nprobe, qid ORDER BY score DESC, vec_id) AS rn
-                FROM pc) WHERE rn <= 5),
-            hits AS (SELECT nprobe, count(*) AS total_hits
-              FROM ivr i JOIN exr e ON i.qid = e.qid AND i.vec_id = e.vec_id GROUP BY nprobe),
-            scans AS (SELECT nprobe, count(*) AS scanned FROM pc GROUP BY nprobe),
-            n AS (SELECT count(*) AS n_vec FROM fix)
-            SELECT p.nprobe AS nprobe,
-              CAST(coalesce(total_hits, 0) AS INT) AS total_hits,
-              CAST(coalesce(total_hits, 0) AS DOUBLE) / CAST(100 AS DOUBLE) AS mean_recall_at_5,
-              CAST(coalesce(scanned, 0) AS DOUBLE) / CAST(20 * n_vec AS DOUBLE) AS scanned_frac
-            FROM probes p LEFT JOIN hits USING (nprobe) LEFT JOIN scans USING (nprobe) CROSS JOIN n
-            ORDER BY nprobe"""),
-      (s, d) => {
-        import org.apache.spark.sql.expressions.Window
-        val fix = embeddings(s, d).select(col("vec_id"),
-          transform(sequence(lit(0), lit(63)), i =>
-            when(floor(i / 8) === col("vec_id") % 8, lit(2.0)).otherwise(lit(0.0))
-              + ((col("vec_id") * 31 + i * 17) % 11 - 5).cast("double") / lit(10.0))
-            .as("embedding"))
-        // feeds the exact branch AND the candidate branch - materialize once
-        val celled = fix.withColumn("cell", Search.ivfCell(col("embedding"), centers))
-          .localCheckpoint()
-        val q = celled.filter(col("vec_id") < 20)
-          .select(col("vec_id").as("qid"), col("embedding").as("qv"))
-        val qranked = q
-          .select(col("qid"), col("qv"),
-            posexplode(Search.ivfProbeCells(col("qv"), centers, centers.size)))
-          .select(col("qid"), col("qv"), (col("pos") + 1).as("crank"), col("col").as("cell"))
-        val exr = celled.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id"), round(Embed.dot(col("embedding"), col("qv")), 6).as("score"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        val cand = celled.join(broadcast(qranked), Seq("cell"))
-          .filter(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id"), col("crank"),
-            round(Embed.dot(col("embedding"), col("qv")), 6).as("score"))
-        val probesDf = s.range(1)
-          .select(explode(array(lit(1), lit(2), lit(4), lit(8))).as("nprobe"))
-        // feeds the ranking branch AND the scanned-count branch
-        val pc = cand.crossJoin(broadcast(probesDf))
-          .filter(col("crank") <= col("nprobe")).localCheckpoint()
-        val ivr = pc.withColumn("rn", row_number().over(
-            Window.partitionBy("nprobe", "qid").orderBy(col("score").desc, col("vec_id"))))
-          .filter(col("rn") <= 5).select("nprobe", "qid", "vec_id")
-        val hits = ivr.join(exr, Seq("qid", "vec_id"))
-          .groupBy("nprobe").agg(count(lit(1)).as("total_hits"))
-        val scans = pc.groupBy("nprobe").agg(count(lit(1)).as("scanned"))
-        val nVec = celled.agg(count(lit(1)).as("n_vec"))
-        probesDf.join(hits, Seq("nprobe"), "left").join(scans, Seq("nprobe"), "left")
-          .crossJoin(broadcast(nVec))
-          .select(col("nprobe"),
-            coalesce(col("total_hits"), lit(0L)).cast("int").as("total_hits"),
-            (coalesce(col("total_hits"), lit(0L)).cast("double") / lit(100).cast("double"))
-              .as("mean_recall_at_5"),
-            (coalesce(col("scanned"), lit(0L)).cast("double")
-              / (lit(20L) * col("n_vec")).cast("double")).as("scanned_frac"))
-          .orderBy("nprobe")
-      })
+            ${nprobeCurveSql("assign", "a", "assign", cast = false, Seq(1, 2, 4, 8), "fix")}"""),
+      (s, d) => plantedCellCurve(s, clusteredFixture(s, d), centers, Seq(1, 2, 4, 8)))
   }
 
   /** TRAINED centroids × the clustered fixture — the composition gate
@@ -1293,11 +1261,7 @@ object VectorQueries extends QuerySet {
     val distSql = s"""list_sum(list_transform(range(1, ${dim + 1}),
                     i -> (f.e[i] - c.centroid[i]) * (f.e[i] - c.centroid[i])))"""
     Q("v13b_trained_clustered_nprobe",
-      Some(s"""WITH fix AS (
-              SELECT vec_id, list_transform(range(0, 64), i ->
-                (CASE WHEN i // 8 = vec_id % 8 THEN CAST(2.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
-                + ((vec_id * 31 + i * 17) % 11 - 5) / 10.0) AS e
-              FROM embeddings),
+      Some(s"""WITH $clusteredFixtureCte,
             cents0 AS (SELECT vec_id AS cell, e AS centroid FROM fix WHERE vec_id < 8),
             dd0 AS (SELECT f.vec_id, f.e, c.cell, $distSql AS d2
               FROM fix f CROSS JOIN cents0 c),
@@ -1331,31 +1295,7 @@ object VectorQueries extends QuerySet {
               FROM cl2 c CROSS JOIN q),
             qrank AS (SELECT qid, cell,
                 row_number() OVER (PARTITION BY qid ORDER BY d2, cell) AS crank FROM qd),
-            ex AS (SELECT qid, f.vec_id,
-                round(list_dot_product(f.e, qv), 6) AS score
-              FROM fix f CROSS JOIN q WHERE f.vec_id <> q.qid),
-            exr AS (SELECT qid, vec_id FROM (
-                SELECT qid, vec_id, row_number() OVER (PARTITION BY qid ORDER BY score DESC, vec_id) AS rn
-                FROM ex) WHERE rn <= 5),
-            cand AS (SELECT qr.qid, a.vec_id, qr.crank,
-                round(list_dot_product(a.e, q.qv), 6) AS score
-              FROM a2 a JOIN qrank qr ON a.cell = qr.cell JOIN q ON q.qid = qr.qid
-              WHERE a.vec_id <> qr.qid),
-            probes(nprobe) AS (VALUES (1), (2), (4), (8)),
-            pc AS (SELECT nprobe, qid, vec_id, score FROM cand CROSS JOIN probes WHERE crank <= nprobe),
-            ivr AS (SELECT nprobe, qid, vec_id FROM (
-                SELECT nprobe, qid, vec_id, row_number() OVER (PARTITION BY nprobe, qid ORDER BY score DESC, vec_id) AS rn
-                FROM pc) WHERE rn <= 5),
-            hits AS (SELECT nprobe, count(*) AS total_hits
-              FROM ivr i JOIN exr e ON i.qid = e.qid AND i.vec_id = e.vec_id GROUP BY nprobe),
-            scans AS (SELECT nprobe, count(*) AS scanned FROM pc GROUP BY nprobe),
-            n AS (SELECT count(*) AS n_vec FROM fix)
-            SELECT p.nprobe AS nprobe,
-              CAST(coalesce(total_hits, 0) AS INT) AS total_hits,
-              CAST(coalesce(total_hits, 0) AS DOUBLE) / CAST(100 AS DOUBLE) AS mean_recall_at_5,
-              CAST(coalesce(scanned, 0) AS DOUBLE) / CAST(20 * n_vec AS DOUBLE) AS scanned_frac
-            FROM probes p LEFT JOIN hits USING (nprobe) LEFT JOIN scans USING (nprobe) CROSS JOIN n
-            ORDER BY nprobe"""),
+            ${nprobeCurveSql("fix", "f", "a2", cast = false, Seq(1, 2, 4, 8), "fix")}"""),
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
         // Forgy init: the first point of each planted cluster (vec_id < 8
@@ -1364,12 +1304,7 @@ object VectorQueries extends QuerySet {
           (if (i / 8 == v) 2.0 else 0.0) + ((v * 31 + i * 17) % 11 - 5) / 10.0))
         // feeds the Lloyd passes, the final assignment, the query set AND
         // the brute branch
-        val fix = embeddings(s, d).select(col("vec_id"),
-          transform(sequence(lit(0), lit(63)), i =>
-            when(floor(i / 8) === col("vec_id") % 8, lit(2.0)).otherwise(lit(0.0))
-              + ((col("vec_id") * 31 + i * 17) % 11 - 5).cast("double") / lit(10.0))
-            .as("embedding"))
-          .localCheckpoint()
+        val fix = clusteredFixture(s, d).localCheckpoint()
         // v12's production loop, on the CLUSTERED fixture
         val cents = graft.ops.Cluster.lloyd(fix, "embedding", "vec_id", trainInit, iterations = 2)
         // single consumer (cand) over checkpointed inputs — no
@@ -1385,37 +1320,7 @@ object VectorQueries extends QuerySet {
           .withColumn("crank", row_number().over(
             Window.partitionBy("qid").orderBy(col("d2"), col("cell"))))
           .select("qid", "qv", "crank", "cell")
-        val exr = fix.crossJoin(broadcast(q))
-          .filter(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id"), round(Embed.dot(col("embedding"), col("qv")), 6).as("score"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))))
-          .filter(col("rn") <= 5).select("qid", "vec_id")
-        val cand = assigned.join(broadcast(qranked), Seq("cell"))
-          .filter(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id"), col("crank"),
-            round(Embed.dot(col("embedding"), col("qv")), 6).as("score"))
-        val probesDf = s.range(1)
-          .select(explode(array(lit(1), lit(2), lit(4), lit(8))).as("nprobe"))
-        // feeds the ranking branch AND the scanned-count branch
-        val pc = cand.crossJoin(broadcast(probesDf))
-          .filter(col("crank") <= col("nprobe")).localCheckpoint()
-        val ivr = pc.withColumn("rn", row_number().over(
-            Window.partitionBy("nprobe", "qid").orderBy(col("score").desc, col("vec_id"))))
-          .filter(col("rn") <= 5).select("nprobe", "qid", "vec_id")
-        val hits = ivr.join(exr, Seq("qid", "vec_id"))
-          .groupBy("nprobe").agg(count(lit(1)).as("total_hits"))
-        val scans = pc.groupBy("nprobe").agg(count(lit(1)).as("scanned"))
-        val nVec = fix.agg(count(lit(1)).as("n_vec"))
-        probesDf.join(hits, Seq("nprobe"), "left").join(scans, Seq("nprobe"), "left")
-          .crossJoin(broadcast(nVec))
-          .select(col("nprobe"),
-            coalesce(col("total_hits"), lit(0L)).cast("int").as("total_hits"),
-            (coalesce(col("total_hits"), lit(0L)).cast("double") / lit(100).cast("double"))
-              .as("mean_recall_at_5"),
-            (coalesce(col("scanned"), lit(0L)).cast("double")
-              / (lit(20L) * col("n_vec")).cast("double")).as("scanned_frac"))
-          .orderBy("nprobe")
+        nprobeCurve(s, fix, assigned, q, qranked, Seq(1, 2, 4, 8))
       })
   }
 
@@ -1457,17 +1362,7 @@ object VectorQueries extends QuerySet {
     * hyperplanes baked as literals). */
   val v3bLshPruned: Q = {
     val dim = 64; val bits = 6
-    val planes = srpPlanes
-    def planeSql(p: Seq[Double]) = p.map(v => f"$v%.17g").mkString("[", ",", "]")
-    val bucketSql = planes.zipWithIndex.map { case (p, i) =>
-      s"(CASE WHEN list_dot_product(CAST(embedding AS DOUBLE[]), ${planeSql(p)}) >= 0 THEN ${1 << i} ELSE 0 END)"
-    }.mkString(" + ")
-    Q("v3b_lsh_pruned_topk",
-      Some(s"""WITH b AS (SELECT vec_id, embedding, $bucketSql AS bucket FROM embeddings),
-               q AS (SELECT embedding AS qv, bucket AS qb FROM b WHERE vec_id = 0)
-               SELECT vec_id, round(list_dot_product(CAST(embedding AS DOUBLE[]), CAST(qv AS DOUBLE[])), 6) AS score
-               FROM b, q WHERE b.bucket = q.qb
-               ORDER BY score DESC, vec_id LIMIT 5"""),
+    Q("v3b_lsh_pruned_topk", Some(srpTopKOracle),
       (s, d) => {
         val emb = embeddings(s, d)
         val out = s"${System.getProperty("java.io.tmpdir")}/graft_srp_index_${Integer.toHexString(d.hashCode)}"
@@ -1483,22 +1378,8 @@ object VectorQueries extends QuerySet {
 
   /** IVF variant of the pruned-read path: index written `partitionBy(cell)`. */
   val v4bIvfPruned: Q = {
-    val dim = 64
     val centroids = ivfCentroids
-    def cSql(c: Seq[Double]) = vecSql(c)
-    def d2Sql(c: Seq[Double]) =
-      s"list_sum(list_transform(range(1, ${dim + 1}), i -> (e[i]::DOUBLE - (${cSql(c)})[i]) * (e[i]::DOUBLE - (${cSql(c)})[i])))"
-    val dCols = centroids.zipWithIndex.map { case (c, i) => s"${d2Sql(c)} AS d$i" }.mkString(", ")
-    val cellSql = """CASE WHEN d0 <= least(d1, d2, d3) THEN 0
-                          WHEN d1 <= least(d2, d3) THEN 1
-                          WHEN d2 <= d3 THEN 2 ELSE 3 END"""
-    Q("v4b_ivf_pruned_topk",
-      Some(s"""WITH d AS (SELECT vec_id, embedding AS e, $dCols FROM embeddings),
-               c AS (SELECT vec_id, e, $cellSql AS cell FROM d),
-               q AS (SELECT e AS qv, cell AS qcell FROM c WHERE vec_id = 0)
-               SELECT vec_id, round(list_dot_product(CAST(e AS DOUBLE[]), CAST(qv AS DOUBLE[])), 6) AS score
-               FROM c, q WHERE c.cell = q.qcell
-               ORDER BY score DESC, vec_id LIMIT 5"""),
+    Q("v4b_ivf_pruned_topk", Some(ivfTopKOracle),
       (s, d) => {
         val emb = embeddings(s, d)
         val out = s"${System.getProperty("java.io.tmpdir")}/graft_ivf_index_${Integer.toHexString(d.hashCode)}"
@@ -1685,15 +1566,6 @@ object VectorQueries extends QuerySet {
         FROM c, lut
         ORDER BY score DESC, vec_id LIMIT 5"""
 
-  // ---- shared IVF fragments over the seed-7 centroids ----
-  private val ivfDCols: String = ivfCentroids.zipWithIndex.map { case (c, i) =>
-    s"list_sum(list_transform(range(1, 65), i -> (e[i]::DOUBLE - (${vecSql(c)})[i]) * (e[i]::DOUBLE - (${vecSql(c)})[i]))) AS ivfd$i"
-  }.mkString(", ")
-  private val ivfCellSql: String =
-    """CASE WHEN ivfd0 <= least(ivfd1, ivfd2, ivfd3) THEN 0
-            WHEN ivfd1 <= least(ivfd2, ivfd3) THEN 1
-            WHEN ivfd2 <= ivfd3 THEN 2 ELSE 3 END"""
-
   /** The production ANN layout, composed end-to-end: IVF cell partitioning
     * for the pruned read (only the query's cell directory is listed) plus
     * PQ codes inside each cell for compressed ADC scoring — the stored
@@ -1757,19 +1629,30 @@ object VectorQueries extends QuerySet {
         .orderBy(col("score").desc, col("vec_id")).limit(5)
     })
 
+  /** Oracle CTEs `sh(id, sh)`, each document's word 4-grams, `g(id, g)`,
+    * one row per gram, and `ev(g)`, the grams of the eval split (doc_id
+    * % 13 = 0). */
+  private val evalGramCtes: String =
+    s"""t AS (SELECT doc_id AS id, ${OracleSql.toksSql} AS toks FROM documents),
+            sh AS (SELECT id, ${OracleSql.shinglesSql(4)} AS sh FROM t),
+            g AS (SELECT id, unnest(sh) AS g FROM sh),
+            ev AS (SELECT DISTINCT g FROM g WHERE id % 13 = 0)"""
+
+  /** Per training doc, the count of its distinct 4-grams found in the
+    * eval split — the oracle of both d6 and its Bloom-prefiltered d6b. */
+  private val decontamOracle: String =
+    s"""WITH $evalGramCtes
+            SELECT id, CAST(count(*) AS BIGINT) AS n_shared
+            FROM g WHERE id % 13 <> 0 AND g IN (SELECT g FROM ev)
+            GROUP BY id ORDER BY id"""
+
   /** Benchmark decontamination (GPT-3 appendix-C style): the eval "suite"
     * is a deterministic slice of the corpus (doc_id % 13 = 0); flag every
     * other document sharing a word 4-gram with it, counting the distinct
     * shared grams. Scale shape: eval grams broadcast, train side never
     * shuffles (map-side semi-join at scan bandwidth). */
   val d6Decontaminate = Q("d6_decontaminate",
-    Some(s"""WITH t AS (SELECT doc_id AS id, ${OracleSql.toksSql} AS toks FROM documents),
-            sh AS (SELECT id, ${OracleSql.shinglesSql(4)} AS sh FROM t),
-            g AS (SELECT id, unnest(sh) AS g FROM sh),
-            ev AS (SELECT DISTINCT g FROM g WHERE id % 13 = 0)
-            SELECT id, CAST(count(*) AS BIGINT) AS n_shared
-            FROM g WHERE id % 13 <> 0 AND g IN (SELECT g FROM ev)
-            GROUP BY id ORDER BY id"""),
+    Some(decontamOracle),
     (s, d) => {
       val docs = documents(s, d)
       Dedup.decontaminate(
@@ -1787,10 +1670,7 @@ object VectorQueries extends QuerySet {
     * the left-join null path and the short-doc single-gram denominator
     * are both inside the hash. */
   val d15Contamination = Q("d15_contamination_fraction",
-    Some(s"""WITH t AS (SELECT doc_id AS id, ${OracleSql.toksSql} AS toks FROM documents),
-            sh AS (SELECT id, ${OracleSql.shinglesSql(4)} AS sh FROM t),
-            g AS (SELECT id, unnest(sh) AS g FROM sh),
-            ev AS (SELECT DISTINCT g FROM g WHERE id % 13 = 0),
+    Some(s"""WITH $evalGramCtes,
             shd AS (SELECT id, CAST(count(*) AS BIGINT) AS n_shared
               FROM g WHERE id % 13 <> 0 AND g IN (SELECT g FROM ev)
               GROUP BY id),
@@ -1816,13 +1696,7 @@ object VectorQueries extends QuerySet {
     * positives die in the exact join, false negatives are impossible, so
     * the bloom path must hash-match the exact path. */
   val d6bDecontaminateBloom = Q("d6b_decontaminate_bloom",
-    Some(s"""WITH t AS (SELECT doc_id AS id, ${OracleSql.toksSql} AS toks FROM documents),
-            sh AS (SELECT id, ${OracleSql.shinglesSql(4)} AS sh FROM t),
-            g AS (SELECT id, unnest(sh) AS g FROM sh),
-            ev AS (SELECT DISTINCT g FROM g WHERE id % 13 = 0)
-            SELECT id, CAST(count(*) AS BIGINT) AS n_shared
-            FROM g WHERE id % 13 <> 0 AND g IN (SELECT g FROM ev)
-            GROUP BY id ORDER BY id"""),
+    Some(decontamOracle),
     (s, d) => {
       val docs = documents(s, d)
       Dedup.decontaminateBloom(
@@ -2111,20 +1985,14 @@ object VectorQueries extends QuerySet {
   private object SemDedup {
     val k = 4; val dim = 64; val threshold = 0.4
     val init: Seq[Seq[Double]] = graft.ops.Cluster.seededCentroids(k, dim, seed = 11, scale = 0.05)
-    private def d2Sql(c: Seq[Double]) =
-      s"list_sum(list_transform(range(1, ${dim + 1}), i -> (e[i] - (${vecSql(c)})[i]) * (e[i] - (${vecSql(c)})[i])))"
-    private val dCols = init.zipWithIndex.map { case (c, i) => s"${d2Sql(c)} AS d$i" }.mkString(",\n                ")
-    private val cellSql = """CASE WHEN d0 <= least(d1, d2, d3) THEN 0
-                          WHEN d1 <= least(d2, d3) THEN 1
-                          WHEN d2 <= d3 THEN 2 ELSE 3 END"""
     /** Prefix shared with d9c: embeddings cast + literal-centroid argmin
       * assignment (a0) — iteration 0 of every Lloyd unroll. */
     val assignCtes: String =
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
               d AS (SELECT vec_id, e,
-                $dCols
+                ${ivfDistCols(init, "d", "e[i]")}
                 FROM e),
-              a0 AS (SELECT vec_id, e, $cellSql AS cell FROM d)"""
+              a0 AS (SELECT vec_id, e, ${ivfArgminSql("d", k)} AS cell FROM d)"""
     val ctes: String =
       s"""$assignCtes,
               el AS (SELECT cell, i, e[i] AS x FROM a0, range(1, ${dim + 1}) t(i)),
@@ -2311,11 +2179,8 @@ object VectorQueries extends QuerySet {
               CASE WHEN doc_id % 7 = 0 THEN NULL ELSE CAST(gray_mid AS INT) END AS gray_mid
             FROM g ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withPng = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withPng = withPayload(base) { id =>
         val w = (id % 12 + 1).toInt; val h = ((id * 3) % 10 + 1).toInt
         val sel = (id % 4).toInt
         val ct = Seq(0, 2, 3, 6)(sel); val ch = Seq(1, 3, 1, 4)(sel)
@@ -2333,7 +2198,7 @@ object VectorQueries extends QuerySet {
         // signature is 8 bytes, the midpoint of any complete PNG is past
         // it), so decode must fail closed
         if (id % 7 == 0) png(png.length / 2) = (png(png.length / 2) ^ 0xff).toByte
-        Seq(png)
+        png
       }
       graft.ops.Image.decodeStatsStage(withPng, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("ok"),
@@ -2373,18 +2238,15 @@ object VectorQueries extends QuerySet {
               CASE WHEN doc_id % 9 = 0 THEN NULL ELSE CAST(gray_mid AS INT) END AS gray_mid
             FROM s ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withJpg = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withJpg = withPayload(base) { id =>
         val w = (id % 21 + 4).toInt; val h = ((id * 3) % 17 + 4).toInt
         val px = Array.tabulate(w * h) { k =>
           val x = k % w; val y = k / w
           (((x / 8) * 7 + (y / 8) * 11 + id) % 256).toByte
         }
         val jpg = graft.ops.Jpeg.encodeGray(w, h, px, qStep = 8)
-        Seq(if (id % 9 == 0) java.util.Arrays.copyOf(jpg, jpg.length - 12) else jpg)
+        if (id % 9 == 0) java.util.Arrays.copyOf(jpg, jpg.length - 12) else jpg
       }
       graft.ops.Jpeg.decodeStatsStage(withJpg, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("ok"),
@@ -2403,48 +2265,18 @@ object VectorQueries extends QuerySet {
     * verify. Identical oracle arithmetic to d18: one wrong Huffman run,
     * IDCT slip, or dHash bit changes pair membership and hash-fails. */
   val m13JpegNearDup = Q("m13_jpeg_neardup_pairs",
-    Some("""WITH d AS (SELECT doc_id, doc_id // 4 AS gb, CAST(doc_id % 4 AS INT) AS m FROM documents),
-            bits AS (SELECT doc_id, i,
-                (((((gb * 48271 + i * 16807) % 1000003) * ((gb * 48271 + i * 16807) % 1000003)) % 1000003) < 500002) <>
-                  list_contains(list_transform(range(CAST(m AS BIGINT)), j -> (gb * 7 + j * 19) % 64), i) AS b
-              FROM d, range(0, 64, 1) t(i)),
-            sig AS (SELECT doc_id, string_agg(CASE WHEN b THEN '1' ELSE '0' END, '' ORDER BY i) AS sig
-                    FROM bits GROUP BY doc_id),
-            blk AS (SELECT doc_id, sig,
-                concat(CAST(q AS VARCHAR), ':', substr(sig, CAST(q * 16 + 1 AS INT), 16)) AS blk
-              FROM sig, range(0, 4, 1) t(q)),
-            cand AS (SELECT DISTINCT a.doc_id AS id_a, a.sig AS sig_a, b.doc_id AS id_b, b.sig AS sig_b
-                     FROM blk a JOIN blk b ON a.blk = b.blk AND a.doc_id < b.doc_id),
-            ham AS (SELECT id_a, id_b,
-                CAST(len(list_filter(range(1, 65, 1), i -> sig_a[i] <> sig_b[i])) AS BIGINT) AS hamming
-              FROM cand)
-            SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b"""),
+    Some(OracleSql.plantedSigPairsSql),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withJpg = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
-        val gb = id / 4; val m = (id % 4).toInt
-        val bits = Array.tabulate(64) { i =>
-          val v = (gb * 48271L + i * 16807L) % 1000003
-          v * v % 1000003 < 500002
-        }.zipWithIndex.map { case (b0, i) =>
-          b0 != (0 until m).exists(j => (gb * 7 + j * 19) % 64 == i)
-        }
-        val walk = new Array[Int](72)
-        for (y <- 0 until 8) {
-          walk(y * 9) = 128
-          for (x <- 0 until 8)
-            walk(y * 9 + x + 1) = walk(y * 9 + x) + (if (bits(y * 8 + x)) 1 else -1)
-        }
+      val withJpg = withPayload(base) { id =>
+        val walk = OracleSql.plantedDhashWalk(id)
         // 72×64: dHash target cell (cx, cy) box-averages exactly the 8×8
         // block holding walk(cy*9+cx) — resize is exact, bits are planted
         val px = Array.tabulate(72 * 64) { k =>
           val x = k % 72; val y = k / 72
           walk((y / 8) * 9 + (x / 8)).toByte
         }
-        Seq(graft.ops.Jpeg.encodeGray(72, 64, px, qStep = 8))
+        graft.ops.Jpeg.encodeGray(72, 64, px, qStep = 8)
       }
       val sigs = graft.ops.Jpeg.dhashStage(withJpg, "payload", "sig")
       graft.ops.Image.imageNearDupPairs(sigs, "doc_id", "sig", maxHamming = 3)
@@ -2481,18 +2313,15 @@ object VectorQueries extends QuerySet {
               CASE WHEN doc_id % 11 = 0 THEN NULL ELSE CAST(gray_mid AS INT) END AS gray_mid
             FROM s ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withJpg = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withJpg = withPayload(base) { id =>
         val w = (id % 19 + 4).toInt; val h = ((id * 5) % 15 + 4).toInt
         val px = Array.tabulate(w * h) { k =>
           val x = k % w; val y = k / w
           (((x / 8) * 13 + (y / 8) * 5 + id) % 256).toByte
         }
         val jpg = graft.ops.Jpeg.encodeGrayProgressive(w, h, px, qStep = 8)
-        Seq(if (id % 11 == 0) java.util.Arrays.copyOf(jpg, jpg.length - 10) else jpg)
+        if (id % 11 == 0) java.util.Arrays.copyOf(jpg, jpg.length - 10) else jpg
       }
       graft.ops.Jpeg.decodeStatsStage(withJpg, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("ok"),
@@ -2539,11 +2368,8 @@ object VectorQueries extends QuerySet {
             FROM documents WHERE doc_id % 13 = 0
             ORDER BY doc_id, frame_idx"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withAvi = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withAvi = withPayload(base) { id =>
         val w = (id % 13 + 4).toInt; val h = ((id * 7) % 11 + 4).toInt
         val nf = (id % 3 + 1).toInt; val upf = (33000 + id % 100).toInt
         val frames = (0 until nf).map { f =>
@@ -2557,7 +2383,7 @@ object VectorQueries extends QuerySet {
           else jpg
         }
         val avi = graft.ops.Avi.encodeMjpegAvi(w, h, upf, frames)
-        Seq(if (id % 13 == 0) java.util.Arrays.copyOf(avi, avi.length - 8) else avi)
+        if (id % 13 == 0) java.util.Arrays.copyOf(avi, avi.length - 8) else avi
       }
       graft.ops.Avi.frameStatsStage(withAvi, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("container_ok"),
@@ -2591,11 +2417,8 @@ object VectorQueries extends QuerySet {
               CASE WHEN doc_id % 13 = 0 OR doc_id % 7 = 0 THEN NULL ELSE text END AS text
             FROM t ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withZip = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withZip = withPayload(base) { id =>
         val np = (id % 4 + 1).toInt
         val paras = (0 until np).map(j =>
           s"<w:p><w:r><w:t>P$j &amp; ${"w" * ((id + j) % 12).toInt}</w:t></w:r></w:p>").mkString
@@ -2606,7 +2429,7 @@ object VectorQueries extends QuerySet {
         // member 2's deflate stream starts at a fixed offset for this layout
         if (id % 7 == 0 && id % 13 != 0) zip(104) = (zip(104) ^ 0x04).toByte
         if (id % 13 == 0) zip(zip.length - 20) = (zip(zip.length - 20) ^ 0x40).toByte // EOCD
-        Seq(zip)
+        zip
       }
       graft.ops.Zip.docxStage(withZip, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("zip_ok"),
@@ -2644,11 +2467,8 @@ object VectorQueries extends QuerySet {
             FROM documents WHERE doc_id % 13 = 0
             ORDER BY doc_id, row, col"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withXlsx = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withXlsx = withPayload(base) { id =>
         val nr = (id % 3 + 2).toInt
         val shared = (0 until 3).map(k => s"s-$id-$k" + (if (k == 2) " & co" else ""))
         val cells = (1 to nr).flatMap { rw =>
@@ -2657,7 +2477,7 @@ object VectorQueries extends QuerySet {
         }
         val xlsx = graft.ops.Xlsx.encodeXlsx(shared, cells)
         if (id % 13 == 0) xlsx(xlsx.length - 20) = (xlsx(xlsx.length - 20) ^ 0x40).toByte
-        Seq(xlsx)
+        xlsx
       }
       graft.ops.Xlsx.cellStage(withXlsx, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("xlsx_ok"),
@@ -2691,11 +2511,8 @@ object VectorQueries extends QuerySet {
               md5(lower(blob)) AS content_hash
             FROM blobs ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withXlsx = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withXlsx = withPayload(base) { id =>
         val nd = (id % 3 + 2).toInt
         val headers = (id % 3).toInt match {
           case 0 => Seq("Date", "Amount")
@@ -2707,7 +2524,7 @@ object VectorQueries extends QuerySet {
           (2 until nd + 2).flatMap(rw => Seq(
             s"A$rw" -> Left(rw),
             s"B$rw" -> Right(((id * 7 + rw) % 500).toString)))
-        Seq(graft.ops.Xlsx.encodeXlsx(shared, cells))
+        graft.ops.Xlsx.encodeXlsx(shared, cells)
       }
       val cells = graft.ops.Xlsx.cellStage(withXlsx, "payload", "st")
         .filter(col("st").isNotNull)
@@ -2762,11 +2579,8 @@ object VectorQueries extends QuerySet {
             FROM documents WHERE doc_id % 13 = 0
             ORDER BY doc_id, record_idx"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withShard = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withShard = withPayload(base) { id =>
         val nr = (id % 3 + 1).toInt
         val recs = (0 until nr).map { j =>
           val nt = ((id + j) % 5 + 1).toInt
@@ -2779,7 +2593,7 @@ object VectorQueries extends QuerySet {
         else recs
         val shard = graft.ops.TfRecord.encodeShard(all)
         if (id % 13 == 0) shard(14) = (shard(14) ^ 0x40).toByte // data CRC break
-        Seq(shard)
+        shard
       }
       graft.ops.TfRecord.exampleStage(withShard, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("shard_ok"),
@@ -2826,7 +2640,6 @@ object VectorQueries extends QuerySet {
             FROM documents WHERE doc_id % 11 = 0
             ORDER BY doc_id, block_idx, record_idx"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       import graft.ops.Avro
       val base = documents(s, d).select("doc_id")
       val fieldsDef = Seq(
@@ -2836,20 +2649,18 @@ object VectorQueries extends QuerySet {
         Avro.Field("score", "double", nullable = false),
         Avro.Field("flag", "boolean", nullable = false),
         Avro.Field("payload", "bytes", nullable = true))
-      val withShard = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withShard = withPayload(base) { id =>
         val nr = (id % 4 + 2).toInt
         val recs = (0 until nr).map { j =>
           Seq[Any](id * 10 + j, (id + j) % 7, "t" * (((id + j) % 13).toInt),
             ((id * 3 + j) % 40).toDouble / 8.0, (id + j) % 2 == 0,
             if (j % 3 == 1) null else Array.tabulate(j % 4 + 1)(k => (k * 7 + j).toByte))
         }
-        Seq(Avro.encode(fieldsDef, recs,
+        Avro.encode(fieldsDef, recs,
           codec = if (id % 2 == 0) "deflate" else "null",
           recordsPerBlock = 2, syncSeed = id,
           corruptBlock = if (id % 5 == 0 && nr >= 3) Some(1) else None,
-          corruptSync = id % 11 == 0))
+          corruptSync = id % 11 == 0)
       }
       Avro.recordStage(withShard, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("shard_ok"),
@@ -3012,9 +2823,7 @@ object VectorQueries extends QuerySet {
       import org.apache.spark.sql.types.{BinaryType, BooleanType, IntegerType, LongType, StringType, StructField, StructType}
       import graft.ops.{Ar, Codecs, Tar, Warc}
       val base = documents(s, d).select("doc_id")
-      val withDeb = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withDeb = withPayload(base) { id =>
         val n = (id % 3 + 1).toInt
         val ctrl = s"Package: pkg$id\nVersion: 1.${id % 50}\n"
         val controlTgz = Warc.gzipMember(Tar.encodeTar(Seq("./control" -> ctrl.getBytes("UTF-8"))))
@@ -3023,7 +2832,7 @@ object VectorQueries extends QuerySet {
         }), preset = 0, dictSize = 1 << 12)
         val good = Ar.encode(Seq("debian-binary" -> "2.0\n".getBytes,
           "control.tar.gz" -> controlTgz, "data.tar.xz" -> dataTxz))
-        Seq(if (id % 10 == 0) java.util.Arrays.copyOf(good, good.length - 5) else good)
+        if (id % 10 == 0) java.util.Arrays.copyOf(good, good.length - 5) else good
       }
       val decoded = graft.ops.Stages.appendFields(withDeb, Seq(
           StructField("st", StructType(Seq(
@@ -3073,17 +2882,15 @@ object VectorQueries extends QuerySet {
       import org.apache.spark.sql.types.{BinaryType, StructField}
       import graft.ops.{Codecs, Cpio}
       val base = documents(s, d).select("doc_id")
-      val withPayload = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val payloads = withPayload(base) { id =>
         val n = (id % 3 + 1).toInt
         val ms = (0 until n).map { k =>
           s"./usr/share/pkg$id/file$k" -> ("d" * (((id * 2 + k) % 11) + 1).toInt).getBytes("UTF-8")
         }
         val good = Codecs.zstd(Cpio.encode(ms))
-        Seq(if (id % 7 == 0) java.util.Arrays.copyOf(good, good.length - 5) else good)
+        if (id % 7 == 0) java.util.Arrays.copyOf(good, good.length - 5) else good
       }
-      val unwrapped = graft.ops.Stages.appendFields(withPayload,
+      val unwrapped = graft.ops.Stages.appendFields(payloads,
           Seq(StructField("cpio", BinaryType))) { r =>
         Seq(Codecs.unzstd(r.getAs[Array[Byte]](1)).orNull)
       }
@@ -3118,12 +2925,9 @@ object VectorQueries extends QuerySet {
             FROM documents WHERE doc_id % 9 = 0
             ORDER BY doc_id, batch_idx, record_idx"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       import graft.ops.ArrowIpc
       val base = documents(s, d).select("doc_id")
-      val withShard = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withShard = withPayload(base) { id =>
         val nr = (id % 4 + 2).toInt
         val recs = (0 until nr).map { j =>
           ArrowIpc.FixRec(id * 10 + j, (id + j) % 7, "t" * (((id + j) % 13).toInt),
@@ -3131,7 +2935,7 @@ object VectorQueries extends QuerySet {
             if (j % 3 == 1) None else Some(Array.tabulate(j % 4 + 1)(k => (k * 7 + j).toByte)))
         }
         val good = ArrowIpc.encode(recs, recordsPerBatch = 3)
-        Seq(if (id % 9 == 0) java.util.Arrays.copyOf(good, good.length - 3) else good)
+        if (id % 9 == 0) java.util.Arrays.copyOf(good, good.length - 3) else good
       }
       ArrowIpc.recordStage(withShard, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("shard_ok"),
@@ -3170,9 +2974,7 @@ object VectorQueries extends QuerySet {
       import org.apache.spark.sql.types.{BinaryType, StringType, StructField, StructType}
       import graft.ops.{Codecs, Sniff}
       val base = documents(s, d).select("doc_id")
-      val withPayload = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val payloads = withPayload(base) { id =>
         val n = (id % 5 + 2).toInt
         val text = (0 until n).map(k => f"line-$id%08d-$k").mkString("\n").getBytes("UTF-8")
         val good = (id % 4).toInt match {
@@ -3183,9 +2985,9 @@ object VectorQueries extends QuerySet {
           // the per-payload encoder init is ~10× cheaper at fixture scale
           case _ => Codecs.xz(text, preset = 0, dictSize = 1 << 12)
         }
-        Seq(if (id % 5 == 0) java.util.Arrays.copyOf(good, good.length - 6) else good)
+        if (id % 5 == 0) java.util.Arrays.copyOf(good, good.length - 6) else good
       }
-      val decoded = graft.ops.Stages.appendFields(withPayload, Seq(
+      val decoded = graft.ops.Stages.appendFields(payloads, Seq(
           StructField("st", StructType(Seq(
             StructField("format", StringType), StructField("text", StringType)))))) { r =>
         val b = r.getAs[Array[Byte]](1)
@@ -3250,12 +3052,9 @@ object VectorQueries extends QuerySet {
               CASE WHEN doc_id % 7 = 0 THEN NULL ELSE silent END AS silent
             FROM feat ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withWav = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
-        if (id % 7 == 0) Seq(Array[Byte](0x13, 0x37))
+      val withWav = withPayload(base) { id =>
+        if (id % 7 == 0) Array[Byte](0x13, 0x37)
         else {
           val f = (id % 40 + 20).toInt
           val tag = if (id % 2 == 0) 7 else 6
@@ -3267,7 +3066,7 @@ object VectorQueries extends QuerySet {
           s4("fmt "); le(16, 4); le(tag, 2); le(1, 2); le(8000, 4); le(8000, 4); le(1, 2); le(8, 2)
           s4("data"); le(f, 4)
           (0 until f).foreach(k => out.write(((id * 11 + k * 29) % 256).toInt))
-          Seq(out.toByteArray)
+          out.toByteArray
         }
       }
       graft.ops.Audio.pcmFeatureStage(withWav, "payload", "st")
@@ -3297,14 +3096,11 @@ object VectorQueries extends QuerySet {
               CASE WHEN doc_id % 9 = 0 THEN NULL ELSE h END AS height
             FROM p ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withWebp = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withWebp = withPayload(base) { id =>
         val v = Seq("vp8", "vp8l", "vp8x")((id % 3).toInt)
         val webp = graft.ops.Webp.encode(v, (id % 300 + 1).toInt, ((id * 7) % 200 + 1).toInt)
-        Seq(if (id % 9 == 0) java.util.Arrays.copyOf(webp, 24) else webp)
+        if (id % 9 == 0) java.util.Arrays.copyOf(webp, 24) else webp
       }
       graft.ops.Webp.dimsStage(withWebp, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("ok"),
@@ -3346,12 +3142,9 @@ object VectorQueries extends QuerySet {
               CASE WHEN doc_id % 9 = 0 THEN NULL ELSE total_samples END AS total_samples
             FROM m ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       import graft.ops.AudioMeta
       val base = documents(s, d).select("doc_id")
-      val withAudio = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withAudio = withPayload(base) { id =>
         val good: Array[Byte] = (id % 3).toInt match {
           case 0 => AudioMeta.encodeMp3((id % 6 + 2).toInt, brIdx = (id % 14 + 1).toInt,
             srIdx = ((id / 3) % 3).toInt,
@@ -3363,7 +3156,7 @@ object VectorQueries extends QuerySet {
             (0 until (id % 4 + 1).toInt).map(k => (id % 300 + 37 * k).toInt),
             (id * 31) % 1000000)
         }
-        Seq(if (id % 9 == 0) java.util.Arrays.copyOf(good, good.length - 3) else good)
+        if (id % 9 == 0) java.util.Arrays.copyOf(good, good.length - 3) else good
       }
       AudioMeta.metaStage(withAudio, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("ok"),
@@ -3398,11 +3191,8 @@ object VectorQueries extends QuerySet {
             FROM documents WHERE doc_id % 11 = 0
             ORDER BY doc_id, page_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withDump = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withDump = withPayload(base) { id =>
         val np = (id % 3 + 1).toInt
         val pages = (0 until np).map { j =>
           graft.ops.Wiki.PageFixture(
@@ -3415,7 +3205,7 @@ object VectorQueries extends QuerySet {
         val gz = graft.ops.Warc.gzipMember(
           graft.ops.Wiki.encodeDump(pages).getBytes(java.nio.charset.StandardCharsets.UTF_8))
         if (id % 11 == 0) gz(15) = (gz(15) ^ 0x24).toByte
-        Seq(gz)
+        gz
       }
       graft.ops.Wiki.pageStage(withDump, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("ok"),
@@ -3450,11 +3240,8 @@ object VectorQueries extends QuerySet {
             FROM documents WHERE doc_id % 11 = 0
             ORDER BY doc_id, page_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withDump = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withDump = withPayload(base) { id =>
         val np = (id % 4 + 1).toInt
         val pages = (0 until np).map { j =>
           graft.ops.Wiki.PageFixture(
@@ -3467,7 +3254,7 @@ object VectorQueries extends QuerySet {
         val bz = graft.ops.Bzip2.encode(
           graft.ops.Wiki.encodeDump(pages).getBytes(java.nio.charset.StandardCharsets.UTF_8))
         if (id % 11 == 0) bz(bz.length / 2) = (bz(bz.length / 2) ^ 0x08).toByte
-        Seq(bz)
+        bz
       }
       graft.ops.Wiki.pageStageBz2(withDump, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("ok"),
@@ -3508,18 +3295,15 @@ object VectorQueries extends QuerySet {
               CASE WHEN doc_id % 9 = 0 THEN NULL ELSE ch END AS audio_channels
             FROM p ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withWebm = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withWebm = withPayload(base) { id =>
         val webm = graft.ops.Ebml.encodeWebm(
           durationTicks = (id % 100000).toDouble,
           tsScale = if (id % 2 == 0) 1000000L else 2000000L,
           vw = (id % 1900 + 16).toInt, vh = (id % 1060 + 16).toInt,
           audioRate = Seq(8000.0, 16000.0, 22050.0, 44100.0, 48000.0)((id % 5).toInt),
           channels = (id % 8 + 1).toInt)
-        Seq(if (id % 9 == 0) java.util.Arrays.copyOf(webm, webm.length - 5) else webm)
+        if (id % 9 == 0) java.util.Arrays.copyOf(webm, webm.length - 5) else webm
       }
       graft.ops.Ebml.metaStage(withWebm, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("ok"),
@@ -3559,12 +3343,9 @@ object VectorQueries extends QuerySet {
               NOT corrupt AS ok
             FROM p ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       import graft.ops._
       val base = documents(s, d).select("doc_id")
-      val withPayload = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val payloads = withPayload(base) { id =>
         val v = (id % 251).toInt
         val good: Array[Byte] = (id % 24).toInt match {
           case 0 => Image.encodePng(4, 4, 0, Array.tabulate(16)(k => ((k * 7 + v) % 256).toByte))
@@ -3630,9 +3411,9 @@ object VectorQueries extends QuerySet {
                      b(b.length - 10) = 0x7f.toByte; b
           case _ => java.util.Arrays.copyOf(good, good.length - 3) // flac/ogg/webm/mp3: torn tail
         }
-        Seq(out)
+        out
       }
-      graft.ops.Sniff.routeStage(withPayload, "payload", "st")
+      graft.ops.Sniff.routeStage(payloads, "payload", "st")
         .select(col("doc_id"), col("st.format").as("format"), col("st.ok").as("ok"))
         .orderBy("doc_id")
     })
@@ -3670,11 +3451,8 @@ object VectorQueries extends QuerySet {
             FROM documents WHERE doc_id % 13 = 0
             ORDER BY doc_id, sample_key"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withTar = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withTar = withPayload(base) { id =>
         val w = (id % 10 + 4).toInt; val h = ((id * 3) % 9 + 4).toInt
         val ns = (id % 3 + 2).toInt
         val members = (0 until ns).flatMap { k =>
@@ -3689,7 +3467,7 @@ object VectorQueries extends QuerySet {
         }
         val tar = graft.ops.Tar.encodeTar(members)
         if (id % 13 == 0) tar(1) = (tar(1) ^ 0x01).toByte // checksum break
-        Seq(tar)
+        tar
       }
       val m = graft.ops.Tar.memberStage(withTar, "payload", "m")
       val bad = m.filter(col("m").isNull).select(col("doc_id"),
@@ -3727,55 +3505,18 @@ object VectorQueries extends QuerySet {
     * Hamming arithmetically; one wrong unfilter or one dHash bit off
     * changes pair membership and hash-fails. */
   val d18ImageNearDup = Q("d18_image_neardup_pairs",
-    Some("""WITH d AS (SELECT doc_id, doc_id // 4 AS gb, CAST(doc_id % 4 AS INT) AS m FROM documents),
-            bits AS (SELECT doc_id, i,
-                (((((gb * 48271 + i * 16807) % 1000003) * ((gb * 48271 + i * 16807) % 1000003)) % 1000003) < 500002) <>
-                  list_contains(list_transform(range(CAST(m AS BIGINT)), j -> (gb * 7 + j * 19) % 64), i) AS b
-              FROM d, range(0, 64, 1) t(i)),
-            sig AS (SELECT doc_id, string_agg(CASE WHEN b THEN '1' ELSE '0' END, '' ORDER BY i) AS sig
-                    FROM bits GROUP BY doc_id),
-            blk AS (SELECT doc_id, sig,
-                concat(CAST(q AS VARCHAR), ':', substr(sig, CAST(q * 16 + 1 AS INT), 16)) AS blk
-              FROM sig, range(0, 4, 1) t(q)),
-            cand AS (SELECT DISTINCT a.doc_id AS id_a, a.sig AS sig_a, b.doc_id AS id_b, b.sig AS sig_b
-                     FROM blk a JOIN blk b ON a.blk = b.blk AND a.doc_id < b.doc_id),
-            ham AS (SELECT id_a, id_b,
-                CAST(len(list_filter(range(1, 65, 1), i -> sig_a[i] <> sig_b[i])) AS BIGINT) AS hamming
-              FROM cand)
-            SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b"""),
+    Some(OracleSql.plantedSigPairsSql),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withPng = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
-        val gb = id / 4; val m = (id % 4).toInt
-        // squared-residue bits mod a large prime: a LINEAR bit formula
-        // walks the modulus in small increments, producing run-structured
-        // signatures that nearly-collide across groups (measured 4× pair
-        // inflation); squaring decorrelates adjacent i, leaving exactly
-        // the 6-per-group planted pairs
-        val bits = Array.tabulate(64) { i =>
-          val v = (gb * 48271L + i * 16807L) % 1000003
-          v * v % 1000003 < 500002
-        }.zipWithIndex.map { case (b0, i) =>
-          b0 != (0 until m).exists(j => (gb * 7 + j * 19) % 64 == i)
-        }
-        // gradient walk: p(0,y)=128, each step ±1 by the planted bit, so
-        // dHash(p) == bits exactly and stays within byte range (128±8)
-        val gray = new Array[Int](72)
-        for (y <- 0 until 8) {
-          gray(y * 9) = 128
-          for (x <- 0 until 8)
-            gray(y * 9 + x + 1) = gray(y * 9 + x) + (if (bits(y * 8 + x)) 1 else -1)
-        }
+      val withPng = withPayload(base) { id =>
+        val gray = OracleSql.plantedDhashWalk(id)
         val ct = if (id % 2 == 0) 0 else 2
         val ch = if (ct == 0) 1 else 3
         val raw = new Array[Byte](72 * ch)
         for (i <- 0 until 72; c <- 0 until ch) raw(i * ch + c) = gray(i).toByte
         // r=g=b ⇒ integer luma (299+587+114)p/1000 = p: the RGB path must
         // reproduce the gray path bit-for-bit
-        Seq(graft.ops.Image.encodePng(9, 8, ct, raw, y => ((y + id) % 5).toInt))
+        graft.ops.Image.encodePng(9, 8, ct, raw, y => ((y + id) % 5).toInt)
       }
       val sigs = graft.ops.Image.dhashStage(withPng, "payload", "sig")
       graft.ops.Image.imageNearDupPairs(sigs, "doc_id", "sig", maxHamming = 3)
@@ -3827,12 +3568,9 @@ object VectorQueries extends QuerySet {
                    ELSE sqrt(CAST(sum_sq AS DOUBLE) / (f * ch)) END AS rms
             FROM feat ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withWav = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
-        if (id % 9 == 0) Seq(Array[Byte](0xBA.toByte, 0xDC.toByte, 0x0F.toByte, 0xFE.toByte))
+      val withWav = withPayload(base) { id =>
+        if (id % 9 == 0) Array[Byte](0xBA.toByte, 0xDC.toByte, 0x0F.toByte, 0xFE.toByte)
         else {
           val f = (id % 50 + 10).toInt; val ch = (id % 2 + 1).toInt
           val is8 = id % 3 == 0; val rate = (id % 48000 + 8000).toInt
@@ -3862,7 +3600,7 @@ object VectorQueries extends QuerySet {
             }
           }
           if (id % 5 == 0) { writeData(); writeFmt() } else { writeFmt(); writeData() }
-          Seq(out.toByteArray)
+          out.toByteArray
         }
       }
       graft.ops.Audio.pcmFeatureStage(withWav, "payload", "a")
@@ -3913,11 +3651,8 @@ object VectorQueries extends QuerySet {
                             + 114 * ((jm * 83) % 256)) // 1000 AS INT) END AS gray_mid
             FROM s ORDER BY doc_id"""),
     (s, d) => {
-      import org.apache.spark.sql.types.{BinaryType, StructField}
       val base = documents(s, d).select("doc_id")
-      val withGif = graft.ops.Stages.appendFields(base,
-          Seq(StructField("payload", BinaryType))) { r =>
-        val id = r.getLong(0)
+      val withGif = withPayload(base) { id =>
         val w = (id % 11 + 1).toInt; val h = ((id * 5) % 9 + 1).toInt
         val pal = Array.tabulate(48) { k =>
           val j = k / 3
@@ -3927,7 +3662,7 @@ object VectorQueries extends QuerySet {
         val gif = graft.ops.Gif.encodeGif(w, h, pal, idx, interlace = id % 3 == 0)
         // header-truncation corruption: always inside signature+descriptor+
         // GCT (>= 61 bytes), so decode must fail closed
-        Seq(if (id % 7 == 0) java.util.Arrays.copyOf(gif, (8 + id % 5).toInt) else gif)
+        if (id % 7 == 0) java.util.Arrays.copyOf(gif, (8 + id % 5).toInt) else gif
       }
       graft.ops.Gif.decodeStatsStage(withGif, "payload", "st")
         .select(col("doc_id"), col("st").isNotNull.as("ok"),
@@ -4167,6 +3902,32 @@ object VectorQueries extends QuerySet {
         .orderBy("section", "vec_id")
     })
 
+  /** Oracle CTEs assigning each subvector of `sub(vec_id, m, sv)` to its
+    * nearest codeword of `cb(m, k, cv)` (joined as `alias`): squared
+    * distances `d`, then the argmin `a(vec_id, m, k)`, ties to the lower
+    * k (the `Cluster.assign` rule). */
+  private def pqAssignCtes(d: String, a: String, sub: String, cb: String, alias: String,
+                           sDim: Int): String =
+    s"""$d AS (SELECT s.vec_id, s.m, $alias.k,
+                list_sum(list_transform(range(1, ${sDim + 1}), j -> (sv[j] - cv[j]) * (sv[j] - cv[j]))) AS d2
+              FROM $sub s JOIN $cb $alias ON $alias.m = s.m),
+            $a AS (SELECT vec_id, m, k FROM (SELECT vec_id, m, k,
+                row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, k) AS rn FROM $d) z
+              WHERE rn = 1)"""
+
+  /** Oracle CTEs of one Lloyd update over assignment `a(vec_id, m, k)`:
+    * per (subspace, code, element) the decimal-exact mean of the assigned
+    * subvectors' elements `el`/`cel`, collected into codebook `cl(m, k,
+    * cv)` (the `Cluster.lloyd` update). */
+  private def pqUpdateCtes(el: String, a: String, sub: String, cel: String, cl: String,
+                           sDim: Int): String =
+    s"""$el AS (SELECT $a.m, $a.k, j, sv[j] AS x
+              FROM $a JOIN $sub USING (vec_id, m), range(1, ${sDim + 1}) t(j)),
+            $cel AS (SELECT m, k, j,
+                round(CAST(sum(CAST(x AS DECIMAL(25,10))) AS DOUBLE) / count(*), 8) AS c
+              FROM $el GROUP BY m, k, j),
+            $cl AS (SELECT m, k, list(c ORDER BY j) AS cv FROM $cel GROUP BY m, k)"""
+
   /** Trained PQ codebooks (v16 — the v12/v13b trained-vs-seeded lesson
     * applied to product quantization, faiss's `train()` for PQ): the
     * clustered fixture's subvectors are k-means-trained per 8-dim
@@ -4206,11 +3967,7 @@ object VectorQueries extends QuerySet {
     val adcSumSql = (0 until nSub)
       .map(m => s"max(CASE WHEN m = $m THEN l END)").mkString(" + ")
     Q("v16_trained_pq",
-      Some(s"""WITH fix AS (
-              SELECT vec_id, list_transform(range(0, 64), i ->
-                (CASE WHEN i // 8 = vec_id % 8 THEN CAST(2.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
-                + ((vec_id * 31 + i * 17) % 11 - 5) / 10.0) AS e
-              FROM embeddings),
+      Some(s"""WITH $clusteredFixtureCte,
             sub AS (SELECT vec_id, m, list_slice(e, m*$sDim + 1, m*$sDim + $sDim) AS sv
               FROM fix, range(0, $nSub) t(m)),
             q AS (SELECT vec_id AS qid, e AS qv FROM fix WHERE vec_id < 20),
@@ -4218,30 +3975,10 @@ object VectorQueries extends QuerySet {
               FROM q, range(0, $nSub) t(m)),
             ub(m, k, cv) AS (VALUES ${valuesSql(ubLits)}),
             ini(m, k, cv) AS (VALUES ${valuesSql(initLits)}),
-            d0 AS (SELECT s.vec_id, s.m, i.k,
-                list_sum(list_transform(range(1, ${sDim + 1}), j -> (sv[j] - cv[j]) * (sv[j] - cv[j]))) AS d2
-              FROM sub s JOIN ini i ON i.m = s.m),
-            a0 AS (SELECT vec_id, m, k FROM (SELECT vec_id, m, k,
-                row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, k) AS rn FROM d0) z
-              WHERE rn = 1),
-            el AS (SELECT a0.m, a0.k, j, sv[j] AS x
-              FROM a0 JOIN sub USING (vec_id, m), range(1, ${sDim + 1}) t(j)),
-            tcel AS (SELECT m, k, j,
-                round(CAST(sum(CAST(x AS DECIMAL(25,10))) AS DOUBLE) / count(*), 8) AS c
-              FROM el GROUP BY m, k, j),
-            tcl AS (SELECT m, k, list(c ORDER BY j) AS cv FROM tcel GROUP BY m, k),
-            dt AS (SELECT s.vec_id, s.m, t.k,
-                list_sum(list_transform(range(1, ${sDim + 1}), j -> (sv[j] - cv[j]) * (sv[j] - cv[j]))) AS d2
-              FROM sub s JOIN tcl t ON t.m = s.m),
-            ct AS (SELECT vec_id, m, k FROM (SELECT vec_id, m, k,
-                row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, k) AS rn FROM dt) z
-              WHERE rn = 1),
-            du AS (SELECT s.vec_id, s.m, u.k,
-                list_sum(list_transform(range(1, ${sDim + 1}), j -> (sv[j] - cv[j]) * (sv[j] - cv[j]))) AS d2
-              FROM sub s JOIN ub u ON u.m = s.m),
-            cu AS (SELECT vec_id, m, k FROM (SELECT vec_id, m, k,
-                row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, k) AS rn FROM du) z
-              WHERE rn = 1),
+            ${pqAssignCtes("d0", "a0", "sub", "ini", "i", sDim)},
+            ${pqUpdateCtes("el", "a0", "sub", "tcel", "tcl", sDim)},
+            ${pqAssignCtes("dt", "ct", "sub", "tcl", "t", sDim)},
+            ${pqAssignCtes("du", "cu", "sub", "ub", "u", sDim)},
             lt AS (SELECT qid, t.m, t.k,
                 round(list_sum(list_transform(range(1, ${sDim + 1}), j -> qsv[j] * cv[j])), 6) AS l
               FROM qsub qs JOIN tcl t ON t.m = qs.m),
@@ -4347,11 +4084,7 @@ object VectorQueries extends QuerySet {
           .withColumn("rn", row_number().over(
             Window.partitionBy("arm", "qid").orderBy(col("score").desc, col("vec_id"))))
           .filter(col("rn") <= 5).select("arm", "qid", "vec_id")
-        val exr = fix.crossJoin(broadcast(q)).filter(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id"), round(Embed.dot(col("e"), col("qv")), 6).as("score"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))))
-          .filter(col("rn") <= 5).select("qid", "vec_id").localCheckpoint()
+        val exr = exactTop5(fix, q, "e").localCheckpoint()
         // both arms' recall in ONE pass; the static arm frame keeps a
         // zero-hit arm as an explicit h=0 row (groupBy would drop it)
         val hitsAll = Seq(0, 1).toDF("arm")
@@ -4412,11 +4145,7 @@ object VectorQueries extends QuerySet {
     val spineCents: Seq[Seq[Double]] =
       Seq.tabulate(8)(c => Seq.tabulate(64)(i => if (i / 8 == c) 2.0 else 0.0))
     Q("v17_filtered_ann",
-      Some(s"""WITH fix AS (
-              SELECT vec_id, list_transform(range(0, 64), i ->
-                (CASE WHEN i // 8 = vec_id % 8 THEN CAST(2.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END)
-                + ((vec_id * 31 + i * 17) % 11 - 5) / 10.0) AS e
-              FROM embeddings),
+      Some(s"""WITH $clusteredFixtureCte,
             attrs AS (SELECT vec_id, e, vec_id % 3 AS attr FROM fix),
             cents AS (SELECT cell, list_transform(range(0, 64), i ->
                 CASE WHEN i // 8 = cell THEN CAST(2.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END) AS cv
@@ -4713,42 +4442,12 @@ object VectorQueries extends QuerySet {
               FROM fix, range(0, $nSub) t(m)),
             rini(m, k, cv) AS (VALUES ${valuesSql(rIniLits)}),
             ini(m, k, cv) AS (VALUES ${valuesSql(iniLits)}),
-            rd0 AS (SELECT s.vec_id, s.m, i.k,
-                list_sum(list_transform(range(1, ${sDim + 1}), j -> (sv[j] - cv[j]) * (sv[j] - cv[j]))) AS d2
-              FROM rsub s JOIN rini i ON i.m = s.m),
-            ra0 AS (SELECT vec_id, m, k FROM (SELECT vec_id, m, k,
-                row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, k) AS rn FROM rd0) z
-              WHERE rn = 1),
-            rel AS (SELECT ra0.m, ra0.k, j, sv[j] AS x
-              FROM ra0 JOIN rsub USING (vec_id, m), range(1, ${sDim + 1}) t(j)),
-            rcel AS (SELECT m, k, j,
-                round(CAST(sum(CAST(x AS DECIMAL(25,10))) AS DOUBLE) / count(*), 8) AS c
-              FROM rel GROUP BY m, k, j),
-            rcl AS (SELECT m, k, list(c ORDER BY j) AS cv FROM rcel GROUP BY m, k),
-            d0 AS (SELECT s.vec_id, s.m, i.k,
-                list_sum(list_transform(range(1, ${sDim + 1}), j -> (sv[j] - cv[j]) * (sv[j] - cv[j]))) AS d2
-              FROM sub s JOIN ini i ON i.m = s.m),
-            a0 AS (SELECT vec_id, m, k FROM (SELECT vec_id, m, k,
-                row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, k) AS rn FROM d0) z
-              WHERE rn = 1),
-            el AS (SELECT a0.m, a0.k, j, sv[j] AS x
-              FROM a0 JOIN sub USING (vec_id, m), range(1, ${sDim + 1}) t(j)),
-            tcel AS (SELECT m, k, j,
-                round(CAST(sum(CAST(x AS DECIMAL(25,10))) AS DOUBLE) / count(*), 8) AS c
-              FROM el GROUP BY m, k, j),
-            tcl AS (SELECT m, k, list(c ORDER BY j) AS cv FROM tcel GROUP BY m, k),
-            rdt AS (SELECT s.vec_id, s.m, t.k,
-                list_sum(list_transform(range(1, ${sDim + 1}), j -> (sv[j] - cv[j]) * (sv[j] - cv[j]))) AS d2
-              FROM rsub s JOIN rcl t ON t.m = s.m),
-            rct AS (SELECT vec_id, m, k FROM (SELECT vec_id, m, k,
-                row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, k) AS rn FROM rdt) z
-              WHERE rn = 1),
-            dt AS (SELECT s.vec_id, s.m, t.k,
-                list_sum(list_transform(range(1, ${sDim + 1}), j -> (sv[j] - cv[j]) * (sv[j] - cv[j]))) AS d2
-              FROM sub s JOIN tcl t ON t.m = s.m),
-            ct AS (SELECT vec_id, m, k FROM (SELECT vec_id, m, k,
-                row_number() OVER (PARTITION BY vec_id, m ORDER BY d2, k) AS rn FROM dt) z
-              WHERE rn = 1),
+            ${pqAssignCtes("rd0", "ra0", "rsub", "rini", "i", sDim)},
+            ${pqUpdateCtes("rel", "ra0", "rsub", "rcel", "rcl", sDim)},
+            ${pqAssignCtes("d0", "a0", "sub", "ini", "i", sDim)},
+            ${pqUpdateCtes("el", "a0", "sub", "tcel", "tcl", sDim)},
+            ${pqAssignCtes("rdt", "rct", "rsub", "rcl", "t", sDim)},
+            ${pqAssignCtes("dt", "ct", "sub", "tcl", "t", sDim)},
             q AS (SELECT vec_id AS qid, e AS qv FROM fix WHERE vec_id < 20),
             qsub AS (SELECT qid, m, list_slice(qv, m*$sDim + 1, m*$sDim + $sDim) AS qsv
               FROM q, range(0, $nSub) t(m)),
@@ -4891,11 +4590,7 @@ object VectorQueries extends QuerySet {
           .select(col("arm"), col("qid"), col("vec_id"),
             when(col("arm") === 0, round(col("qcs") + col("adc"), 6))
               .otherwise(col("adc")).as("score"))
-        val exr = fix.crossJoin(broadcast(q)).filter(col("vec_id") =!= col("qid"))
-          .select(col("qid"), col("vec_id"), round(Embed.dot(col("e"), col("qv")), 6).as("score"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy("qid").orderBy(col("score").desc, col("vec_id"))))
-          .filter(col("rn") <= 5).select("qid", "vec_id").localCheckpoint()
+        val exr = exactTop5(fix, q, "e").localCheckpoint()
         // both arms' recall in ONE pass; the static arm frame keeps a
         // zero-hit arm as an explicit h=0 row (groupBy would drop it)
         val hitsAll = Seq(0, 1).toDF("arm")

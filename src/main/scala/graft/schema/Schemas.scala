@@ -92,8 +92,6 @@ object Schemas {
     StructField("metadata", MapType(StringType, StringType))))
 
   val numericTrustValues: Seq[String] = Seq("high", "medium", "low", "unknown")
-  val docTypes: Seq[String] = Seq("bank_statement", "invoice", "receipt",
-    "purchase_order", "delivery_note", "tax_form", "qna", "generic")
 }
 
 /** Typed core for `Dataset[T]` use where compile-time field checks help. */
