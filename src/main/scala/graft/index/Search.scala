@@ -100,23 +100,28 @@ object Search {
                             bucketCol: String = "bucket"): Unit =
     index.withColumn(bucketCol, bucket).write.mode("overwrite").partitionBy(bucketCol).parquet(out)
 
-  /** Read a partitioned index pruned to the query's buckets: the query
-    * rows' bucket values (precomputed on the query side) are collected on
-    * the driver and filter the partition column statically, so the scan
-    * lists only the matching partition directories; the query rows then
-    * join the pruned rows as a broadcast. The static filter is what
-    * prunes: dynamic partition pruning only fires when the probe side
-    * holds a selective `Filter`, which a local probe (`Seq(q).toDF`) does
-    * not. Collecting a local probe runs no Spark job; a table-derived
-    * probe pays one small collect job. `queryRow` is evaluated twice, for
-    * the collect and for the join, so it must be deterministic. Scale
-    * shape over an [[Upsert]] index: every segment writes at most one file
-    * per cell it touches (files per segment ≤ touched cells), so a pruned
-    * read lists at most one file per segment in each probed cell. */
+  /** Read a partitioned index pruned to the query's buckets: [[prune]]
+    * over the `partitionBy(bucket)` directory, so the scan lists only the
+    * matching partition directories. */
   def readPruned(spark: org.apache.spark.sql.SparkSession, indexPath: String,
-                 queryRow: DataFrame, bucketCol: String = "bucket"): DataFrame = {
+                 queryRow: DataFrame, bucketCol: String = "bucket"): DataFrame =
+    prune(spark.read.parquet(indexPath), queryRow, bucketCol)
+
+  /** Restrict `index` to the query rows' buckets: the bucket values
+    * (precomputed on the query side) are collected on the driver and
+    * filter `bucketCol` statically — a partition filter when `index` is
+    * partitioned by it, a data filter (row-group skipping) otherwise — and
+    * the query rows then join the kept rows as a broadcast. The static
+    * filter is what prunes: dynamic partition pruning only fires when the
+    * probe side holds a selective `Filter`, which a local probe
+    * (`Seq(q).toDF`) does not. Collecting a local probe runs no Spark job;
+    * a table-derived probe pays one small collect job. `queryRow` is
+    * evaluated twice, for the collect and for the join, so it must be
+    * deterministic. Over an [[Upsert]] index ([[Upsert.readPrunedResolved]])
+    * the scan reads the probed base cells plus every delta file. */
+  def prune(index: DataFrame, queryRow: DataFrame, bucketCol: String): DataFrame = {
     val buckets = queryRow.select(bucketCol).collect().map(_.get(0)).distinct
-    spark.read.parquet(indexPath).filter(col(bucketCol).isin(buckets.toSeq: _*))
+    index.filter(col(bucketCol).isin(buckets.toSeq: _*))
       .join(broadcast(queryRow), Seq(bucketCol))
   }
 

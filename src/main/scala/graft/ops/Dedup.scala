@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.index.Embed
 
 /** Large-scale deduplication operators (prompt: training-data pipeline
   * family; generalizes the reference's content-hash dedup, SURVEY.md §2.3 J2).

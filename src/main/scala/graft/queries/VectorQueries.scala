@@ -4769,7 +4769,7 @@ object VectorQueries extends QuerySet {
         val dblv = emb.select(col("vec_id"),
           transform(col("embedding"), x => x * lit(2.0f)).as("embedding"))
         def currentIds() = Upsert.resolveView(
-          s.read.parquet(dir).select(col("vec_id"), col("cell"), col("seg"), col("deleted")),
+          Upsert.read(s, dir).select(col("vec_id"), col("cell"), col("seg"), col("deleted")),
           "vec_id")
         // ---- the epoch loop: manifest-fenced, seg id = epoch's manifest row
         var man = DeltaLog.metaAction(s, 0, 0, "v19-index").coalesce(1).localCheckpoint()
@@ -4803,15 +4803,14 @@ object VectorQueries extends QuerySet {
           .withColumn("cell", cellOf(col("embedding")))
         commitEpoch(1, () => Upsert.upsertSeg(batch1, currentIds(), 1L, dir))
         commitEpoch(2, () => Upsert.deleteSeg(
-          currentIds().filter(col("vec_id") % 11 === 0).select("vec_id", "cell"),
-          batch1, 2L, dir))
+          currentIds().filter(col("vec_id") % 11 === 0).select("vec_id", "cell"), 2L, dir))
         commitEpoch(2, () => sys.error("a skipped epoch must never write")) // the replay
         val batch3 = dblv.filter(col("vec_id") % 13 === 0)
           .withColumn("cell", cellOf(col("embedding")))
         commitEpoch(3, () => Upsert.upsertSeg(batch3, currentIds(), 3L, dir))
         // ---- one scan, every epoch: segment numbering is time travel
         val epochs = s.range(0, 4).select(col("id").cast("int").as("epoch"))
-        val segs = s.read.parquet(dir)
+        val segs = Upsert.read(s, dir)
           .select(col("vec_id"), col("cell"), col("seg"), col("deleted"), col("embedding"))
         val w = Window.partitionBy(col("epoch"), col("vec_id"))
           .orderBy(col("seg").desc, col("deleted").asc)

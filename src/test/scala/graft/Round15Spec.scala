@@ -303,30 +303,29 @@ class Round15Spec extends SparkSpec {
     Upsert.writeBase(batch((1L, 0, 1.0), (2L, 0, 2.0), (3L, 1, 3.0)), "cell", dir)
     // seg 1: vec 2 MOVES cell 0 -> 1 (payload update); vec 4 inserts
     val inv1 = Upsert.upsertSeg(batch((2L, 1, 2.5), (4L, 1, 4.0)),
-      Upsert.resolveView(spark.read.parquet(dir)
+      Upsert.resolveView(Upsert.read(spark, dir)
         .select(col("vec_id"), col("cell"), col("seg"), col("deleted")), "vec_id"),
       1L, dir).collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
     assert(inv1 == Set((1, 2L, 0L), (0, 0L, 1L)),
       s"inventory must show 2 live rows in cell 1 and the move tombstone in cell 0: $inv1")
     // the old-cell pruned read drops the moved vector WITHOUT seeing cell 1
     val cell0 = Upsert.resolveView(
-      spark.read.parquet(dir).filter(col("cell") === 0), "vec_id")
+      Upsert.read(spark, dir).filter(col("cell") === 0), "vec_id")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(cell0 == Set(1L), s"cell-0 pruned read must drop the moved vec 2: $cell0")
     val cell1 = Upsert.resolveView(
-      spark.read.parquet(dir).filter(col("cell") === 1), "vec_id")
+      Upsert.read(spark, dir).filter(col("cell") === 1), "vec_id")
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Double]("payload"))).toSet
     assert(cell1 == Set((2L, 2.5), (3L, 3.0), (4L, 4.0)),
       s"cell-1 pruned read must carry the moved vec at its NEW payload: $cell1")
     // seg 2: delete vec 3; seg 3: re-insert it (an upsert of a dead id is
     // a plain insert — no current row, no tombstone)
-    val cur2 = Upsert.resolveView(spark.read.parquet(dir)
+    val cur2 = Upsert.resolveView(Upsert.read(spark, dir)
       .select(col("vec_id"), col("cell"), col("seg"), col("deleted")), "vec_id")
-    Upsert.deleteSeg(cur2.filter(col("vec_id") === 3).select("vec_id", "cell"),
-      batch(), 2L, dir)
+    Upsert.deleteSeg(cur2.filter(col("vec_id") === 3).select("vec_id", "cell"), 2L, dir)
     assert(Upsert.resolve(spark, dir).select("vec_id").collect()
       .map(_.getLong(0)).toSet == Set(1L, 2L, 4L))
-    val cur3 = Upsert.resolveView(spark.read.parquet(dir)
+    val cur3 = Upsert.resolveView(Upsert.read(spark, dir)
       .select(col("vec_id"), col("cell"), col("seg"), col("deleted")), "vec_id")
     val inv3 = Upsert.upsertSeg(batch((3L, 0, 3.5)), cur3, 3L, dir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet
@@ -337,7 +336,7 @@ class Round15Spec extends SparkSpec {
     assert(fin == Set((1L, 0, 1.0), (2L, 1, 2.5), (3L, 0, 3.5), (4L, 1, 4.0)))
     // time travel off segment numbers: state at seg <= 1 still has vec 3
     val at1 = Upsert.resolveView(
-      spark.read.parquet(dir).filter(col("seg") <= 1), "vec_id")
+      Upsert.read(spark, dir).filter(col("seg") <= 1), "vec_id")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(at1 == Set(1L, 2L, 3L, 4L), "segment numbers are the index's time travel")
   }

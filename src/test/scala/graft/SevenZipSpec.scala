@@ -13,6 +13,29 @@ class SevenZipSpec extends AnyFunSuite {
     "Users.xml" -> ("<users><row Id=\"2\"/></users>" * 10).getBytes("UTF-8"),
     "dir/readme.txt" -> "nested member".getBytes("UTF-8"))
 
+  /** `archive` with its LZMA2 coder's one-byte dictionary property set to
+    * `prop` (a (2 | prop & 1) << (prop / 2 + 11)-byte dictionary) and both
+    * header CRCs recomputed. */
+  private def withDictProp(archive: Array[Byte], prop: Int): Array[Byte] = {
+    val a = archive.clone()
+    val le = java.nio.ByteBuffer.wrap(a).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val start = 32 + le.getLong(12).toInt
+    val end = start + le.getLong(20).toInt
+    // coder flags 0x21 (one-byte id, has properties), id 0x21 (LZMA2),
+    // one property byte
+    val at = (start until end - 3).find(i => a(i) == 0x21 && a(i + 1) == 0x21 && a(i + 2) == 1)
+      .get + 3
+    a(at) = prop.toByte
+    def crc(from: Int, until: Int): Int = {
+      val c = new java.util.zip.CRC32
+      c.update(a, from, until - from)
+      c.getValue.toInt
+    }
+    le.putInt(28, crc(start, end)) // next-header CRC
+    le.putInt(8, crc(12, 32))      // start-header CRC
+    a
+  }
+
   test("round trip: names, sizes, and content survive LZMA2") {
     val a = SevenZip.encode(members)
     val ms = SevenZip.members(a).get
@@ -44,9 +67,13 @@ class SevenZipSpec extends AnyFunSuite {
     assert(SevenZip.members("not a seven zip archive at all".getBytes).isEmpty)
     // a header declaring a huge LZMA2 dictionary must quarantine via the
     // decoder memory limit, never OutOfMemoryError the task (512 MiB
-    // declared dictionary, far past the 256 MiB decode cap)
-    val bigDict = SevenZip.encode(Seq("a.txt" -> "x".getBytes), preset = 9,
-      dictSize = 1 << 29)
+    // declared dictionary, far past the 256 MiB decode cap). The archive
+    // is encoded with a 4 KiB dictionary and then declares 512 MiB, so
+    // building it allocates no large encoder; an 8 MiB declaration of the
+    // same bytes still extracts, so only the cap quarantines it.
+    val small = SevenZip.encode(Seq("a.txt" -> "x".getBytes), preset = 0, dictSize = 4096)
+    assert(SevenZip.members(withDictProp(small, 22)).exists(_.map(_.name) == Seq("a.txt")))
+    val bigDict = withDictProp(small, 34)
     assert(SevenZip.members(bigDict).isEmpty, "past-cap dictionary must quarantine")
 
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Shared local session for all suites (one JVM, one session). */
 object TestSpark {
@@ -24,20 +25,23 @@ abstract class SparkSpec extends AnyFunSuite {
   val sf: String = TestSpark.sf
 
   /** Spark jobs started while `df` is built and collected. */
-  protected def jobCount(df: => org.apache.spark.sql.DataFrame): Int = {
+  protected def jobCount(df: => org.apache.spark.sql.DataFrame): Int = jobsOf(df.collect()).size
+
+  /** The start events of the Spark jobs `action` starts. */
+  protected def jobsOf(action: => Unit): Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val counter = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
     val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = counter.incrementAndGet()
+      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.add(js)
     }
     spark.sparkContext.addSparkListener(l)
     try {
-      df.collect()
+      action
       // the listener bus delivers asynchronously; wait for the count to
       // settle (an undercount only ever makes the budget EASIER to meet)
       var prev = -1
-      while (counter.get != prev) { prev = counter.get; Thread.sleep(200) }
+      while (jobs.size != prev) { prev = jobs.size; Thread.sleep(200) }
     } finally spark.sparkContext.removeSparkListener(l)
-    counter.get
+    jobs.asScala.toSeq
   }
 }
