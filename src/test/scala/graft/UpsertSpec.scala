@@ -59,7 +59,8 @@ class UpsertSpec extends SparkSpec {
     assert(resolved(out) == Map(1L -> ((11, 1))))
   }
 
-  test("writeBase writes one file per cell; each mutation writes exactly one delta file") {
+  // base: one file in each cell directory; a delta segment: one file for all its cells
+  test("each segment holds at most one parquet file per touched cell") {
     val out = "/tmp/graft_upsert_spec_files"
     def files: Set[String] = {
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(out))
