@@ -1,11 +1,12 @@
 package graft.index
 
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path}
+import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
+import graft.io.ParquetMeta
 
 /** Incremental maintenance for the stored (partitioned) vector indexes —
   * upsert / delete / compact over the v6 IVF(+PQ) layout (SURVEY.md §2.9;
@@ -35,7 +36,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * Segment numbers: a writer records its number in the manifest BEFORE
   * writing the segment's data, replacing `_index` by renaming a temp file
   * over it, so a write that fails part-way leaves a gap in the numbers
-  * and no number is ever reused. One writer per index at a time.
+  * and [[upsert]]/[[delete]] never reuse a number. A caller-numbered
+  * write ([[upsertSeg]]/[[deleteSeg]]) may repeat the highest number: the
+  * retry of an epoch whose write failed, or that the caller never
+  * committed. One writer per index at a time.
   *
   * Scale shape: a mutation costs O(batch + one ids-only column-pruned scan
   * of (vec_id, cell, seg, deleted)) — never O(corpus) row data (the d8
@@ -43,7 +47,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * query reads its probed base cells plus EVERY delta file until
   * [[compact]] folds the deltas back into a seg-0 base (deltas are scanned
   * whole, as Milvus scans its growing segments; the cell filter only skips
-  * their row groups). When to compact is left to the caller. */
+  * their row groups). The query cost grows with the deltas (PERF.md: p50
+  * ×2.3 at 50 deltas); when to compact is left to the caller. */
 object Upsert {
 
   /** Write the initial index: `index` must carry (idCol, payload columns,
@@ -69,10 +74,8 @@ object Upsert {
     * on every read of a root directory whose name starts with `_`. */
   def read(spark: SparkSession, out: String): DataFrame = {
     val schema = readManifest(out)._2
-    val deltas = fs(out).listStatus(new Path(out, "_delta")).map(_.getPath.toString)
-      .filter(_.endsWith(".parquet"))
     spark.read.schema(schema).parquet(out)
-      .unionByName(spark.read.schema(schema).parquet(deltas.toSeq: _*))
+      .unionByName(spark.read.schema(schema).parquet(ParquetMeta.partFiles(s"$out/_delta"): _*))
   }
 
   /** Latest-wins resolution over any (possibly cell-pruned) segment view:
@@ -130,17 +133,17 @@ object Upsert {
       .withColumn("deleted", lit(true))
 
   /** Append segment `seg` as one delta file and return its per-cell write
-    * inventory (cell, n_live, n_tombstones). `seg` must be above every
-    * number allocated before; it is recorded in the manifest before
-    * anything runs, and `rows` gets the index schema from there. The rows
+    * inventory (cell, n_live, n_tombstones). `seg` must not be below the
+    * highest number allocated; a higher one is recorded in the manifest
+    * before anything runs, and `rows` gets the index schema from there. The rows
     * are checkpointed lazily: the write materializes them, and the
     * inventory reads that copy instead of re-deriving the rows from an
     * index that now holds them. */
   private def writeSeg(out: String, seg: Long, cellCol: String)
                       (rows: StructType => DataFrame): DataFrame = {
     val (top, schema) = readManifest(out)
-    require(seg > top, s"segment $seg of $out is not above the highest allocated, $top")
-    writeManifest(out, seg, schema)
+    require(seg >= top, s"segment $seg of $out is below the highest allocated, $top")
+    if (seg > top) writeManifest(out, seg, schema)
     val segRows = rows(schema).withColumn("seg", lit(seg))
       .select(schema.fields.toSeq.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
       .localCheckpoint(eager = false)
@@ -154,8 +157,13 @@ object Upsert {
     * supplied by the CALLER (v19: segment ids derive from its epoch log,
     * and the ids-only current view is read once per epoch and shared
     * between the tombstone derivation and whatever else the epoch needs).
-    * `seg` must be above every number the manifest has allocated. Batch
-    * contract as [[upsert]] (at most one row per id; the caller's
+    * `seg` must not be below the highest number the manifest has
+    * allocated. It may equal it: an epoch retried after its write failed,
+    * or after a crash before the caller committed it, is redelivered with
+    * its number. The retry must carry the same batch; derived against the
+    * current view it writes the rows of the first attempt, or fewer (no
+    * move tombstone twice), and latest-wins resolves both copies alike.
+    * Batch contract as [[upsert]] (at most one row per id; the caller's
     * manifest commit is the enforcement point). Returns the per-cell write
     * inventory (cell, n_live, n_tombstones) so the caller can commit
     * manifest rows WITHOUT re-listing files. */
@@ -173,8 +181,9 @@ object Upsert {
 
   /** [[delete]]'s caller-driven twin: the caller supplies the victims
     * WITH their current cells (from its ids-only view) and the segment
-    * number; the payload schema of the tombstones comes from the
-    * manifest. Returns the per-cell inventory like [[upsertSeg]]. */
+    * number (a retry may repeat it, as for [[upsertSeg]]); the payload
+    * schema of the tombstones comes from the manifest. Returns the
+    * per-cell inventory like [[upsertSeg]]. */
   def deleteSeg(victims: DataFrame, seg: Long, out: String,
                 idCol: String = "vec_id", cellCol: String = "cell"): DataFrame =
     writeSeg(out, seg, cellCol)(tombstones(victims, _, idCol, cellCol))
@@ -196,13 +205,8 @@ object Upsert {
   // ---- the manifest: line 1 the highest allocated segment, line 2 the
   // schema as JSON
 
-  /** The index's file system; the local one without its checksum wrapper,
-    * whose rename refuses to replace an existing file. */
   private def fs(out: String): FileSystem =
-    new Path(out).getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration) match {
-      case local: ChecksumFileSystem => local.getRawFileSystem
-      case other => other
-    }
+    new Path(out).getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
 
   private def readManifest(out: String): (Long, StructType) = {
     val in = fs(out).open(new Path(out, "_index"))
@@ -212,13 +216,15 @@ object Upsert {
   }
 
   /** Replace the manifest: write a temp file, then rename it over
-    * `_index` — an atomic replace on POSIX file systems. A store whose
-    * rename does not replace an existing file (HDFS) fails here. */
+    * `_index` through [[FileContext]]'s overwriting rename, which every
+    * Hadoop file system implements (atomic on HDFS; the local one deletes
+    * the old file, then renames, moving the checksum file along). */
   private def writeManifest(out: String, seg: Long, schema: StructType): Unit = {
     val f = fs(out)
-    val tmp = new Path(out, s"_index.${java.util.UUID.randomUUID}")
+    val tmp = f.makeQualified(new Path(out, s"_index.${java.util.UUID.randomUUID}"))
     val o = f.create(tmp, false)
     try o.write(s"$seg\n${schema.json}".getBytes(UTF_8)) finally o.close()
-    require(f.rename(tmp, new Path(out, "_index")), s"could not replace the manifest of $out")
+    FileContext.getFileContext(tmp.toUri, f.getConf)
+      .rename(tmp, new Path(tmp.getParent, "_index"), Options.Rename.OVERWRITE)
   }
 }

@@ -219,6 +219,40 @@ class UpsertSpec extends SparkSpec {
     assert(resolved(out) == before - 0L)
   }
 
+  test("a caller-numbered write retried at its number resolves as a clean run") {
+    val clean = "/tmp/graft_upsert_spec_retry_clean"
+    val out = "/tmp/graft_upsert_spec_retry"
+    val base = mkIndex((0L until 6L).map(i => (i, i.toInt, (i % 2).toInt)))
+    // 1 moves to cell 0 (a tombstone in cell 1), 3 is updated in place, 7 is new
+    def batch(fail: Boolean) = {
+      val code = udf((id: Long) => { if (fail && id == 7L) sys.error("boom"); id.toInt + 100 })
+      mkIndex(Seq((1L, 0, 0), (3L, 0, 1), (7L, 0, 1))).withColumn("code", code(col("vec_id")))
+    }
+    def current(dir: String) = Upsert.resolveView(
+      Upsert.read(spark, dir).select("vec_id", "cell", "seg", "deleted"), "vec_id")
+    def views(dir: String) = (resolved(dir), Seq(0, 1).map { c =>
+      import spark.implicits._
+      Upsert.readPrunedResolved(spark, dir, Seq(c).toDF("cell"))
+        .select("vec_id").as[Long].collect().toSet
+    })
+    for (dir <- Seq(clean, out)) Upsert.writeBase(base, "cell", dir)
+    Upsert.upsertSeg(batch(fail = false), current(clean), 1L, clean)
+    Upsert.deleteSeg(current(clean).filter(col("vec_id") === 0L).select("vec_id", "cell"), 2L, clean)
+    // the epoch fails inside its job, is retried at its number and then
+    // redelivered once more, as after a crash before the caller's commit
+    intercept[org.apache.spark.SparkException] {
+      Upsert.upsertSeg(batch(fail = true), current(out), 1L, out)
+    }
+    Upsert.upsertSeg(batch(fail = false), current(out), 1L, out)
+    Upsert.upsertSeg(batch(fail = false), current(out), 1L, out)
+    Upsert.deleteSeg(current(out).filter(col("vec_id") === 0L).select("vec_id", "cell"), 2L, out)
+    assert(views(out) == views(clean))
+    assert(views(clean)._2 == Seq(Set(1L, 2L, 4L), Set(3L, 5L, 7L)))
+    intercept[IllegalArgumentException] {
+      Upsert.deleteSeg(current(out).select("vec_id", "cell"), 1L, out)
+    }
+  }
+
   test("upsert rejects a batch with duplicate ids") {
     val out = "/tmp/graft_upsert_spec3"
     Upsert.writeBase(mkIndex(Seq((1L, 10, 0))), "cell", out)

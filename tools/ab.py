@@ -12,8 +12,8 @@ holds: the change wins at least nine tenths of the pairs, and the medians
 differ in the better direction by more than the parent's quartile
 distance. Every other `metric` line a run prints is summarized by median
 only. A run that exits non-zero or prints no result object is reported;
-its pair is left out of the medians and counts as not won. `--out FILE` also writes every run's metrics
-as JSON. Standard library only.
+its pair is left out of the medians and counts as not won. Standard
+library only.
 """
 import argparse
 import json
@@ -63,7 +63,6 @@ def main():
     ap.add_argument("change_dir")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="A-B, inclusive")
-    ap.add_argument("--out", help="write every run's metrics here as JSON")
     args = ap.parse_args()
     sides = {"parent": pathlib.Path(args.parent_dir).resolve(),
              "change": pathlib.Path(args.change_dir).resolve()}
@@ -81,8 +80,6 @@ def main():
         pairs.append({"seed": seed, "first": order[0], **got})
 
     ok = [p for p in pairs if p["parent"] and p["change"]]
-    if args.out:
-        pathlib.Path(args.out).write_text(json.dumps(pairs, indent=1))
     print(f"\n{args.workload}: {len(ok)} of {len(pairs)} pairs complete")
     if not ok:
         sys.exit(1)
