@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Bench main: runs every catalog query on SPARK_GRAFT_SF_DIR, printing one
   * JSON line {"metric":…,"value":…,"queries":{…},"failed":[…]}. The
   * total sums the queries that succeeded; any failed query is named in
@@ -16,20 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Spark 4 defaults spark.sql.ui.explainMode=formatted and computes a
-      // FORMATTED explain string for EVERY execution event even with the
-      // UI off; on this catalog's biggest composed plans (dl38's two-log
-      // assembly) ExplainUtils.getSubqueries burned minutes of driver CPU
-      // per action (jstack-verified). The event text is unread here.
-      .config("spark.sql.ui.explainMode", "simple")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     def materialize(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
     // warmup: JVM/codegen/session startup out of the measured numbers

@@ -64,4 +64,25 @@ object SparkEntry {
     * rows-only check. */
   def oracleSql: Map[String, String] =
     catalog.flatMap(q => q.oracle.map(o => q.name -> o)).toMap
+
+  /** The local session [[Bench]] and [[Verify]] run the catalog in:
+    * `local[SPARK_GRAFT_CPUS]` (default 32) with as many shuffle
+    * partitions, UTC, no UI. */
+  def localSession(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      // Spark 4 defaults spark.sql.ui.explainMode=formatted and computes a
+      // FORMATTED explain string for EVERY execution event even with the
+      // UI off; on this catalog's biggest composed plans (dl38's two-log
+      // assembly) ExplainUtils.getSubqueries burned minutes of driver CPU
+      // per action (jstack-verified). The event text is unread here.
+      .config("spark.sql.ui.explainMode", "simple")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

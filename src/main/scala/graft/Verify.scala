@@ -1,25 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Spark 4 defaults spark.sql.ui.explainMode=formatted and computes a
-      // FORMATTED explain string for EVERY execution event even with the
-      // UI off; on this catalog's biggest composed plans (dl38's two-log
-      // assembly) ExplainUtils.getSubqueries burned minutes of driver CPU
-      // per action (jstack-verified). The event text is unread here.
-      .config("spark.sql.ui.explainMode", "simple")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession()
     new java.io.File(outDir).mkdirs()
     // run queries concurrently (4 at a time): each is small at sf0.01, so
     // scheduler-level parallelism hides per-query planning/write latency

@@ -1,98 +1,32 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types._
-
 /** Unix `ar` archive walk — the container Debian packages (`.deb`) and
   * static libraries ship in. A code-training pipeline that ingests
   * distro packages meets exactly this nesting: `.deb` = ar archive of
   * `debian-binary` + `control.tar.gz` + `data.tar.xz`, each inner
   * member decoding through codecs the engine already has
   * ([[Warc.gunzipMember]], [[Codecs.unxz]], [[Tar.listMembers]]). The
-  * walk rides commons-compress on the Spark classpath under the usual
-  * contract: member-count/member-size/total budgets (oversized members
-  * keep metadata with a null payload), every library exception → None,
-  * truncation fails closed. */
-object Ar {
+  * walk rides commons-compress on the Spark classpath under the
+  * [[Archive]] contract (member-count/member-size/total budgets,
+  * oversized members keep metadata with a null payload, every library
+  * exception → None, truncation fails closed); ar has no directory
+  * entries to skip. */
+object Ar extends Archive(minLength = 8, skipDirs = false, defaultMaxMembers = 1024) {
 
-  final case class Member(name: String, size: Long, data: Array[Byte])
-
-  def members(bytes: Array[Byte], maxMembers: Int = 1024,
-              maxMemberBytes: Int = 1 << 24, maxTotal: Long = 1L << 26): Option[Seq[Member]] = {
-    if (bytes == null || bytes.length < 8) return None
-    var in: org.apache.commons.compress.archivers.ar.ArArchiveInputStream = null
-    try {
-      in = new org.apache.commons.compress.archivers.ar.ArArchiveInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val out = scala.collection.mutable.ArrayBuffer.empty[Member]
-      var total = 0L
-      var e = in.getNextEntry
-      while (e != null) {
-        if (out.length >= maxMembers) return None
-        val size = e.getSize
-        if (size < 0) return None
-        val inBudget = size <= maxMemberBytes && total + size <= maxTotal
-        val data: Array[Byte] =
-          if (!inBudget) {
-            // drain the entry (skip() may return short): budget-excluded
-            // content must still advance the stream to the next header
-            val buf = new Array[Byte](8192)
-            var n = in.read(buf)
-            while (n >= 0) n = in.read(buf)
-            null
-          }
-          else {
-            total += size
-            val a = new Array[Byte](size.toInt)
-            var off = 0
-            var n = in.read(a, off, a.length - off)
-            while (n > 0 && off + n < a.length) { off += n; n = in.read(a, off, a.length - off) }
-            if (a.length > 0 && (n < 0 || off + n < a.length)) return None // short read: torn
-            a
-          }
-        out += Member(e.getName, size, data)
-        e = in.getNextEntry
-      }
-      Some(out.toSeq)
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally if (in != null) { try in.close() catch { case scala.util.control.NonFatal(_) => () } }
-  }
-
-  /** The Spark seam — one row per member, the three-way
-    * [[Stages.explodeFields]] contract. */
-  def memberStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
-    val sch = StructType(Seq(
-      StructField("name", StringType), StructField("size", LongType),
-      StructField("data", BinaryType)))
-    Stages.explodeFields(df, Seq(StructField(outCol, sch)))( r =>
-      members(r.getAs[Array[Byte]](idx)) match {
-        case None => Seq(Seq(null))
-        case Some(ms) if ms.isEmpty =>
-          Seq(Seq(org.apache.spark.sql.Row(null, null, null)))
-        case Some(ms) => ms.map(m => Seq(org.apache.spark.sql.Row(m.name, m.size, m.data)))
-      })
-  }
+  protected def open(bytes: Array[Byte]): Archive.Cursor = Archive.cursor(
+    new org.apache.commons.compress.archivers.ar.ArArchiveInputStream(
+      new java.io.ByteArrayInputStream(bytes)))
 
   // ------------------------------------------------------------------
   // Fixture encoder (the library's writer; short GNU-ar member names).
 
-  def encode(members: Seq[(String, Array[Byte])]): Array[Byte] = {
+  def encode(members: Seq[(String, Array[Byte])]): Array[Byte] =
     // the library writes the global magic lazily with the first entry —
     // a zero-member archive is still the bare "!<arch>\n"
-    if (members.isEmpty) return "!<arch>\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-    val bo = new java.io.ByteArrayOutputStream()
-    val out = new org.apache.commons.compress.archivers.ar.ArArchiveOutputStream(bo)
-    try {
-      members.foreach { case (name, data) =>
-        require(name.length <= 16, s"ar member name too long: $name")
-        out.putArchiveEntry(
-          new org.apache.commons.compress.archivers.ar.ArArchiveEntry(name, data.length))
-        out.write(data)
-        out.closeArchiveEntry()
-      }
-      out.finish()
-    } finally out.close()
-    bo.toByteArray
-  }
+    if (members.isEmpty) "!<arch>\n".getBytes(java.nio.charset.StandardCharsets.US_ASCII)
+    else Archive.write(members)(
+      new org.apache.commons.compress.archivers.ar.ArArchiveOutputStream(_)) { (name, data) =>
+      require(name.length <= 16, s"ar member name too long: $name")
+      new org.apache.commons.compress.archivers.ar.ArArchiveEntry(name, data.length)
+    }
 }

@@ -83,48 +83,21 @@ object ArrowIpc {
     }
   }
 
-  /** The Spark seam — conventional training columns surfaced by field
-    * name (the [[Avro.recordStage]] shape and three-way empty/malformed
-    * contract): one row per record, all-null row for a malformed
-    * payload, non-null marker row for a valid empty file. */
+  /** The Spark seam — the [[Avro.trainingCols]] surfaced per record
+    * (the [[Avro.recordStage]] shape) under the three-way
+    * [[Stages.explodePayload]] contract. */
   def recordStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("batch_idx", IntegerType), StructField("record_idx", IntegerType),
       StructField("id", LongType), StructField("label", LongType),
       StructField("text_len", IntegerType), StructField("score", DoubleType),
       StructField("flag", BooleanType)))
-    Stages.explodeFields(df, Seq(StructField(outCol, sch)))( r =>
-      decode(r.getAs[Array[Byte]](idx)) match {
-        case None => Seq(Seq(null))
-        case Some(f) =>
-          val at = f.names.zipWithIndex.toMap
-          def integral(rec: IndexedSeq[Any], name: String): Any =
-            at.get(name).map(rec(_)).map {
-              case l: Long => java.lang.Long.valueOf(l)
-              case i: Int => java.lang.Long.valueOf(i.toLong)
-              case _ => null
-            }.orNull
-          val rows = f.batches.flatMap { b =>
-            b.records.zipWithIndex.map { case (rec, i) =>
-              val textLen = at.get("text").map(rec(_)).map {
-                case s: String => java.lang.Integer.valueOf(s.length); case _ => null
-              }.orNull
-              val score = at.get("score").map(rec(_)).map {
-                case d: Double => java.lang.Double.valueOf(d)
-                case fl: Float => java.lang.Double.valueOf(fl.toDouble)
-                case _ => null
-              }.orNull
-              val flag = at.get("flag").map(rec(_)).map {
-                case bb: Boolean => java.lang.Boolean.valueOf(bb); case _ => null
-              }.orNull
-              org.apache.spark.sql.Row(b.idx, i,
-                integral(rec, "id"), integral(rec, "label"), textLen, score, flag)
-            }
-          }
-          if (rows.isEmpty)
-            Seq(Seq(org.apache.spark.sql.Row(null, null, null, null, null, null, null)))
-          else rows.map(Seq(_))
+    Stages.explodePayload(df, payloadCol, outCol, sch)(bytes =>
+      decode(bytes).map { f =>
+        val cols = Avro.trainingCols(f.names)
+        f.batches.flatMap(b => b.records.zipWithIndex.map { case (rec, i) =>
+          org.apache.spark.sql.Row.fromSeq(Seq(b.idx, i) ++ cols(rec))
+        })
       })
   }
 

@@ -41,14 +41,16 @@ object Audio {
                                nFrames: Int, peak: Int, sumSq: Long,
                                zeroCross: Long, silent: Long)
 
-  private def le(bytes: Array[Byte], pos: Int, len: Int): Long = {
+  // RIFF field readers, shared with [[Avi]]: a little-endian unsigned
+  // integer of `len` bytes, and a four-character code.
+  private[ops] def le(bytes: Array[Byte], pos: Int, len: Int): Long = {
     var v = 0L
     var i = len - 1
     while (i >= 0) { v = (v << 8) | (bytes(pos + i) & 0xffL); i -= 1 }
     v
   }
 
-  private def ascii(bytes: Array[Byte], pos: Int): String =
+  private[ops] def ascii(bytes: Array[Byte], pos: Int): String =
     new String(bytes, pos, 4, java.nio.charset.StandardCharsets.US_ASCII)
 
   /** G.711 µ-law expansion (ITU-T G.711, the s16 convention shared by
@@ -145,17 +147,13 @@ object Audio {
     * [[Image.decodeStatsStage]] shape for audio. */
   def pcmFeatureStage(df: DataFrame, payloadCol: String, outCol: String,
                       silenceThreshold: Int = 50): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("sample_rate", IntegerType), StructField("channels", IntegerType),
       StructField("bits", IntegerType), StructField("n_frames", IntegerType),
       StructField("peak", IntegerType), StructField("sum_sq", LongType),
       StructField("zero_cross", LongType), StructField("silent", LongType)))
-    Stages.appendFields(df, Seq(StructField(outCol, sch)))( r =>
-      Seq(decodeWavPcm(r.getAs[Array[Byte]](idx), silenceThreshold) match {
-        case None => null
-        case Some(f) => org.apache.spark.sql.Row(f.sampleRate, f.channels, f.bits,
-          f.nFrames, f.peak, f.sumSq, f.zeroCross, f.silent)
-      }))
+    Stages.payloadStage(df, payloadCol, outCol, sch)(b =>
+      decodeWavPcm(b, silenceThreshold).map(f => org.apache.spark.sql.Row(f.sampleRate,
+        f.channels, f.bits, f.nFrames, f.peak, f.sumSq, f.zeroCross, f.silent)))
   }
 }

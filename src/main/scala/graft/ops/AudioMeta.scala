@@ -147,17 +147,13 @@ object AudioMeta {
 
   /** The Spark seam (the [[Image.decodeStatsStage]] shape). */
   def metaStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("format", StringType), StructField("sample_rate", IntegerType),
       StructField("channels", IntegerType), StructField("frames", LongType),
       StructField("total_samples", LongType)))
-    Stages.appendFields(df, Seq(StructField(outCol, sch)))( r =>
-      Seq(decode(r.getAs[Array[Byte]](idx)) match {
-        case None => null
-        case Some(m) => org.apache.spark.sql.Row(m.format, m.sampleRate, m.channels,
-          m.frames, m.totalSamples)
-      }))
+    Stages.payloadStage(df, payloadCol, outCol, sch)(b =>
+      decode(b).map(m => org.apache.spark.sql.Row(m.format, m.sampleRate, m.channels,
+        m.frames, m.totalSamples)))
   }
 
   // ---------------------------------------------------------------------

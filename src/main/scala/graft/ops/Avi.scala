@@ -37,15 +37,7 @@ object Avi {
   final case class AviMeta(usPerFrame: Int, declaredFrames: Int,
                            width: Int, height: Int, frames: Seq[FrameStats])
 
-  private def le(bytes: Array[Byte], pos: Int, len: Int): Long = {
-    var v = 0L
-    var i = len - 1
-    while (i >= 0) { v = (v << 8) | (bytes(pos + i) & 0xffL); i -= 1 }
-    v
-  }
-
-  private def ascii(bytes: Array[Byte], pos: Int): String =
-    new String(bytes, pos, 4, java.nio.charset.StandardCharsets.US_ASCII)
+  import Audio.{ascii, le}
 
   /** Decode an MJPEG AVI payload: container metadata + per-frame JPEG
     * decode stats. None on any container-level malformation (bad RIFF
@@ -115,15 +107,7 @@ object Avi {
     val frames = frameSpans.zipWithIndex.map { case ((o, sz), i) =>
       Jpeg.decode(java.util.Arrays.copyOfRange(bytes, o, o + sz)) match {
         case Some(img) if img.width == width && img.height == height =>
-          var sum = 0L
-          var k = 0
-          while (k < img.pixels.length) { sum += img.pixels(k) & 0xff; k += 1 }
-          val mid = (img.height / 2) * img.width + img.width / 2
-          val gray =
-            if (img.components == 1) img.pixels(mid) & 0xff
-            else (299 * (img.pixels(mid * 3) & 0xff) + 587 * (img.pixels(mid * 3 + 1) & 0xff) +
-              114 * (img.pixels(mid * 3 + 2) & 0xff)) / 1000
-          FrameStats(i, ok = true, img.width, img.height, sum, gray)
+          FrameStats(i, ok = true, img.width, img.height, img.pixelSum, img.grayMid)
         case _ => FrameStats(i, ok = false, -1, -1, -1L, -1) // frame-level quarantine
       }
     }.toSeq
@@ -136,23 +120,21 @@ object Avi {
     * both quarantine granularities as ordinary scalar columns (never an
     * array-typed output). */
   def frameStatsStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("us_per_frame", IntegerType), StructField("declared_frames", IntegerType),
       StructField("width", IntegerType), StructField("height", IntegerType),
       StructField("frame_idx", IntegerType), StructField("frame_ok", BooleanType),
       StructField("pixel_sum", LongType), StructField("gray_mid", IntegerType)))
-    Stages.explodeFields(df, Seq(StructField(outCol, sch)))( r =>
-      decodeMjpeg(r.getAs[Array[Byte]](idx)) match {
-        case None => Seq(Seq(null))
-        case Some(m) if m.frames.isEmpty =>
+    Stages.explodePayload(df, payloadCol, outCol, sch)(b =>
+      decodeMjpeg(b).map { m =>
+        if (m.frames.isEmpty)
           // valid container, zero frame chunks: keep the container meta,
-          // null frame fields (vs the all-null row of a malformed payload)
-          Seq(Seq(org.apache.spark.sql.Row(m.usPerFrame, m.declaredFrames,
-            m.width, m.height, null, null, null, null)))
-        case Some(m) => m.frames.map { f =>
-          Seq(org.apache.spark.sql.Row(m.usPerFrame, m.declaredFrames, m.width, m.height,
-            f.idx, f.ok, if (f.ok) f.pixelSum else null, if (f.ok) f.grayMid else null))
+          // null frame fields (vs the null struct of a malformed payload)
+          Seq(org.apache.spark.sql.Row(m.usPerFrame, m.declaredFrames,
+            m.width, m.height, null, null, null, null))
+        else m.frames.map { f =>
+          org.apache.spark.sql.Row(m.usPerFrame, m.declaredFrames, m.width, m.height,
+            f.idx, f.ok, if (f.ok) f.pixelSum else null, if (f.ok) f.grayMid else null)
         }
       })
   }

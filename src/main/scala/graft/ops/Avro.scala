@@ -32,7 +32,7 @@ import org.apache.spark.sql.types._
   * for it); a sync-marker mismatch means framing itself is lost and
   * quarantines the whole shard to None; an unsupported codec or schema
   * fails the shard closed. Scale shape: map-only per shard row,
-  * per-record rows explode downstream (the [[Tar.memberStage]]
+  * per-record rows explode downstream (the [[Stages.explodePayload]]
   * contract). */
 object Avro {
 
@@ -315,52 +315,49 @@ object Avro {
   // ------------------------------------------------------------------
   // Spark seam.
 
-  /** One row per record with the conventional training columns surfaced
-    * by field NAME from the shard's own schema (`id`/`label` integral,
-    * `text` string → its length, `score` float/double, `flag` boolean;
-    * absent fields stay null). A malformed shard emits the single
-    * all-null row; a valid empty shard the non-null marker row; an
-    * `ok=false` block one row with `parsed=false` (the three-way
-    * contract of [[Stages.explodeFields]]). */
+  /** The conventional training columns of one decoded record, surfaced
+    * by field NAME from the file's own schema: `id`, `label` (integral →
+    * long), `text_len` (a `text` string's length), `score` (float/double
+    * → double), `flag` (boolean). Absent or differently typed fields stay
+    * null. Shared with [[ArrowIpc.recordStage]]. */
+  private[ops] def trainingCols(names: Seq[String]): IndexedSeq[Any] => Seq[Any] = {
+    val at = names.zipWithIndex.toMap
+    rec => {
+      def field(name: String)(pf: PartialFunction[Any, AnyRef]): AnyRef =
+        at.get(name).map(rec(_)).collect(pf).orNull
+      def integral(name: String): AnyRef = field(name) {
+        case l: Long => java.lang.Long.valueOf(l)
+        case i: Int => java.lang.Long.valueOf(i.toLong)
+      }
+      Seq(integral("id"), integral("label"),
+        field("text") { case s: String => java.lang.Integer.valueOf(s.length) },
+        field("score") {
+          case d: Double => java.lang.Double.valueOf(d)
+          case fl: Float => java.lang.Double.valueOf(fl.toDouble)
+        },
+        field("flag") { case bb: Boolean => java.lang.Boolean.valueOf(bb) })
+    }
+  }
+
+  /** One row per record with the [[trainingCols]] surfaced. An `ok=false`
+    * block gives one row with `parsed=false`; a malformed shard and a
+    * valid empty one follow the three-way [[Stages.explodePayload]]
+    * contract. */
   def recordStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("block_idx", IntegerType), StructField("record_idx", IntegerType),
       StructField("parsed", BooleanType), StructField("id", LongType),
       StructField("label", LongType), StructField("text_len", IntegerType),
       StructField("score", DoubleType), StructField("flag", BooleanType)))
-    Stages.explodeFields(df, Seq(StructField(outCol, sch)))( r =>
-      decode(r.getAs[Array[Byte]](idx)) match {
-        case None => Seq(Seq(null))
-        case Some(f) =>
-          val at = f.fields.map(_.name).zipWithIndex.toMap
-          def integral(rec: IndexedSeq[Any], name: String): Any =
-            at.get(name).map(rec(_)).map {
-              case l: Long => java.lang.Long.valueOf(l)
-              case i: Int => java.lang.Long.valueOf(i.toLong)
-              case _ => null
-            }.orNull
-          val rows = f.blocks.flatMap { b =>
-            if (!b.ok) Seq(org.apache.spark.sql.Row(b.idx, null, false, null, null, null, null, null))
-            else b.records.zipWithIndex.map { case (rec, i) =>
-              val textLen = at.get("text").map(rec(_)).map {
-                case s: String => java.lang.Integer.valueOf(s.length); case _ => null
-              }.orNull
-              val score = at.get("score").map(rec(_)).map {
-                case d: Double => java.lang.Double.valueOf(d)
-                case fl: Float => java.lang.Double.valueOf(fl.toDouble)
-                case _ => null
-              }.orNull
-              val flag = at.get("flag").map(rec(_)).map {
-                case bb: Boolean => java.lang.Boolean.valueOf(bb); case _ => null
-              }.orNull
-              org.apache.spark.sql.Row(b.idx, i, true,
-                integral(rec, "id"), integral(rec, "label"), textLen, score, flag)
-            }
+    Stages.explodePayload(df, payloadCol, outCol, sch)(bytes =>
+      decode(bytes).map { f =>
+        val cols = trainingCols(f.fields.map(_.name))
+        f.blocks.flatMap { b =>
+          if (!b.ok) Seq(org.apache.spark.sql.Row(b.idx, null, false, null, null, null, null, null))
+          else b.records.zipWithIndex.map { case (rec, i) =>
+            org.apache.spark.sql.Row.fromSeq(Seq(b.idx, i, true) ++ cols(rec))
           }
-          if (rows.isEmpty)
-            Seq(Seq(org.apache.spark.sql.Row(null, null, null, null, null, null, null, null)))
-          else rows.map(Seq(_))
+        }
       })
   }
 

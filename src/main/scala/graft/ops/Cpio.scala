@@ -1,90 +1,26 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types._
-
 /** cpio archive walk (portable ASCII "newc" format) — the payload
   * format inside RPM packages and initramfs images; the other half of
   * the distro-package world next to [[Ar]]'s .deb. Rides
-  * commons-compress on the Spark classpath under the standard budgets:
-  * member-count/member-size/total caps (oversized members keep
-  * metadata with a null payload), directories skipped, short reads and
-  * every library exception → None. */
-object Cpio {
+  * commons-compress on the Spark classpath under the [[Archive]]
+  * contract (member-count/member-size/total caps, oversized members keep
+  * metadata with a null payload, short reads and every library
+  * exception → None); directories are skipped. */
+object Cpio extends Archive(minLength = 6, skipDirs = true, defaultMaxMembers = 4096) {
 
-  final case class Member(name: String, size: Long, data: Array[Byte])
-
-  def members(bytes: Array[Byte], maxMembers: Int = 4096,
-              maxMemberBytes: Int = 1 << 24, maxTotal: Long = 1L << 26): Option[Seq[Member]] = {
-    if (bytes == null || bytes.length < 6) return None
-    var in: org.apache.commons.compress.archivers.cpio.CpioArchiveInputStream = null
-    try {
-      in = new org.apache.commons.compress.archivers.cpio.CpioArchiveInputStream(
-        new java.io.ByteArrayInputStream(bytes))
-      val out = scala.collection.mutable.ArrayBuffer.empty[Member]
-      var total = 0L
-      var e = in.getNextCPIOEntry
-      while (e != null) {
-        if (!e.isDirectory) {
-          if (out.length >= maxMembers) return None
-          val size = e.getSize
-          if (size < 0) return None
-          val inBudget = size <= maxMemberBytes && total + size <= maxTotal
-          val data: Array[Byte] =
-            if (!inBudget) { // drain, keep metadata (skip() may return short)
-              val buf = new Array[Byte](8192)
-              var n = in.read(buf)
-              while (n >= 0) n = in.read(buf)
-              null
-            } else {
-              total += size
-              val a = new Array[Byte](size.toInt)
-              var off = 0
-              var n = in.read(a, off, a.length - off)
-              while (n > 0 && off + n < a.length) { off += n; n = in.read(a, off, a.length - off) }
-              if (a.length > 0 && (n < 0 || off + n < a.length)) return None // torn
-              a
-            }
-          out += Member(e.getName, size, data)
-        }
-        e = in.getNextCPIOEntry
-      }
-      Some(out.toSeq)
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally if (in != null) { try in.close() catch { case scala.util.control.NonFatal(_) => () } }
-  }
-
-  /** The Spark seam — the three-way [[Stages.explodeFields]] contract. */
-  def memberStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
-    val sch = StructType(Seq(
-      StructField("name", StringType), StructField("size", LongType),
-      StructField("data", BinaryType)))
-    Stages.explodeFields(df, Seq(StructField(outCol, sch)))( r =>
-      members(r.getAs[Array[Byte]](idx)) match {
-        case None => Seq(Seq(null))
-        case Some(ms) if ms.isEmpty =>
-          Seq(Seq(org.apache.spark.sql.Row(null, null, null)))
-        case Some(ms) => ms.map(m => Seq(org.apache.spark.sql.Row(m.name, m.size, m.data)))
-      })
-  }
+  protected def open(bytes: Array[Byte]): Archive.Cursor = Archive.cursor(
+    new org.apache.commons.compress.archivers.cpio.CpioArchiveInputStream(
+      new java.io.ByteArrayInputStream(bytes)))
 
   // ------------------------------------------------------------------
   // Fixture encoder (the library's writer, newc format + TRAILER!!!).
 
-  def encode(members: Seq[(String, Array[Byte])]): Array[Byte] = {
-    val bo = new java.io.ByteArrayOutputStream()
-    val out = new org.apache.commons.compress.archivers.cpio.CpioArchiveOutputStream(bo)
-    try {
-      members.foreach { case (name, data) =>
-        val e = new org.apache.commons.compress.archivers.cpio.CpioArchiveEntry(name)
-        e.setSize(data.length.toLong)
-        out.putArchiveEntry(e)
-        out.write(data)
-        out.closeArchiveEntry()
-      }
-      out.finish()
-    } finally out.close()
-    bo.toByteArray
-  }
+  def encode(members: Seq[(String, Array[Byte])]): Array[Byte] =
+    Archive.write(members)(
+      new org.apache.commons.compress.archivers.cpio.CpioArchiveOutputStream(_)) { (name, data) =>
+      val e = new org.apache.commons.compress.archivers.cpio.CpioArchiveEntry(name)
+      e.setSize(data.length.toLong)
+      e
+    }
 }

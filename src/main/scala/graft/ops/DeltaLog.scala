@@ -355,25 +355,15 @@ object DeltaLog {
         max("max_key").as("max_key"), sum("cents").as("cents"))
       .filter(col("nf") === 2)
     val removes = parts.join(bins.select("bin"), "bin")
-      .select(lit(version).as("version"), col("b_lo").cast("int").as("ordinal"),
-        lit("remove").as("op"), col("path"),
-        lit(null).cast(ArrayType(LongType)).as("buckets"),
-        lit(null).cast(LongType).as("n_rows"), lit(null).cast(LongType).as("min_key"),
-        lit(null).cast(LongType).as("max_key"), lit(null).cast(LongType).as("cents"),
-        lit(null).cast(ArrayType(LongType)).as("dv"),
-        lit(null).cast(StringType).as("schema_str"),
-        lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-      lit(null).cast(IntegerType).as("min_writer"))
-    val adds = bins.select(lit(version).as("version"),
+      .select(Seq(lit(version).as("version"), col("b_lo").cast("int").as("ordinal"),
+        lit("remove").as("op"), col("path")) ++ nullStatCols ++ nullDvTailCols: _*)
+    val adds = bins.select(Seq(lit(version).as("version"),
       (lit(1000) + col("lo")).cast("int").as("ordinal"), lit("add").as("op"),
       concat(lit("opt-"), col("lo"), lit("-"), col("hi")).as("path"),
       sequence(col("lo"), col("hi")).as("buckets"),
       col("n_rows").cast("long").as("n_rows"), col("min_key").cast("long").as("min_key"),
-      col("max_key").cast("long").as("max_key"), col("cents").cast("long").as("cents"),
-      lit(null).cast(ArrayType(LongType)).as("dv"),
-      lit(null).cast(StringType).as("schema_str"),
-      lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-      lit(null).cast(IntegerType).as("min_writer"))
+      col("max_key").cast("long").as("max_key"), col("cents").cast("long").as("cents")) ++
+      nullDvTailCols: _*)
     removes.unionByName(adds)
   }
 
@@ -388,17 +378,12 @@ object DeltaLog {
                mask: org.apache.spark.sql.Column): DataFrame =
     live.sparkSession.range(1).select(lit(path).as("path"))
       .join(live.withColumn("_live_hit", lit(1)), Seq("path"), "left")
-      .select(lit(version).as("version"), lit(ordinal).as("ordinal"),
+      .select(Seq(lit(version).as("version"), lit(ordinal).as("ordinal"),
         lit("dv").as("op"),
         when(col("_live_hit").isNull,
           raise_error(concat(lit("dv action targets non-live path: "), col("path"))))
-          .otherwise(col("path")).as("path"),
-        lit(null).cast(ArrayType(LongType)).as("buckets"),
-        lit(null).cast(LongType).as("n_rows"), lit(null).cast(LongType).as("min_key"),
-        lit(null).cast(LongType).as("max_key"), lit(null).cast(LongType).as("cents"),
-        mask.as("dv"), lit(null).cast(StringType).as("schema_str"),
-        lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-      lit(null).cast(IntegerType).as("min_writer"))
+          .otherwise(col("path")).as("path")) ++ nullStatCols ++
+        (mask.as("dv") +: nullTailCols): _*)
 
   /** Serialize action rows back to JSON log lines (field order matches
     * [[logLines]]; EVERY [[actionSchema]] field rides, including `dv` —
@@ -419,13 +404,11 @@ object DeltaLog {
     * action builders in ONE place or [[toLines]] round-trips a torn row. */
   def addAction(stats: DataFrame, version: Int, ordinal: Int, path: String,
                 bks: org.apache.spark.sql.Column): DataFrame =
-    stats.select(lit(version).as("version"), lit(ordinal).as("ordinal"), lit("add").as("op"),
+    stats.select(Seq(lit(version).as("version"), lit(ordinal).as("ordinal"), lit("add").as("op"),
       lit(path).as("path"), bks.as("buckets"),
       col("n_rows").cast("long").as("n_rows"), col("min_key").cast("long").as("min_key"),
-      col("max_key").cast("long").as("max_key"), col("cents").cast("long").as("cents"),
-      lit(null).cast(ArrayType(LongType)).as("dv"), lit(null).cast(StringType).as("schema_str"),
-      lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-      lit(null).cast(IntegerType).as("min_writer"))
+      col("max_key").cast("long").as("max_key"), col("cents").cast("long").as("cents")) ++
+      nullDvTailCols: _*)
 
   /** [[addAction]]'s column-based twin: one `add` row per input row,
     * coordinates and coverage from COLUMNS (`ordinal`, `path`,
@@ -433,24 +416,16 @@ object DeltaLog {
     * whole wave of adds from one stats frame, where the per-path
     * [[addAction]] would cost a union branch (and a scan) per file. */
   def addActions(rows: DataFrame, version: Int): DataFrame =
-    rows.select(lit(version).as("version"), col("ordinal").cast(IntegerType).as("ordinal"),
+    rows.select(Seq(lit(version).as("version"), col("ordinal").cast(IntegerType).as("ordinal"),
       lit("add").as("op"), col("path"), col("buckets"),
       col("n_rows").cast("long").as("n_rows"), col("min_key").cast("long").as("min_key"),
-      col("max_key").cast("long").as("max_key"), col("cents").cast("long").as("cents"),
-      lit(null).cast(ArrayType(LongType)).as("dv"), lit(null).cast(StringType).as("schema_str"),
-      lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-      lit(null).cast(IntegerType).as("min_writer"))
+      col("max_key").cast("long").as("max_key"), col("cents").cast("long").as("cents")) ++
+      nullDvTailCols: _*)
 
   /** A schema-complete `remove` action row. */
   def removeAction(spark: SparkSession, version: Int, ordinal: Int, path: String): DataFrame =
-    spark.range(1).select(lit(version).as("version"), lit(ordinal).as("ordinal"),
-      lit("remove").as("op"), lit(path).as("path"),
-      lit(null).cast(ArrayType(LongType)).as("buckets"),
-      lit(null).cast(LongType).as("n_rows"), lit(null).cast(LongType).as("min_key"),
-      lit(null).cast(LongType).as("max_key"), lit(null).cast(LongType).as("cents"),
-      lit(null).cast(ArrayType(LongType)).as("dv"), lit(null).cast(StringType).as("schema_str"),
-      lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-      lit(null).cast(IntegerType).as("min_writer"))
+    spark.range(1).select(Seq(lit(version).as("version"), lit(ordinal).as("ordinal"),
+      lit("remove").as("op"), lit(path).as("path")) ++ nullStatCols ++ nullDvTailCols: _*)
 
   /** [[removeAction]]'s column-based twin: one `remove` row per input
     * row, path and ordinal from COLUMNS — for transaction builders
@@ -458,14 +433,8 @@ object DeltaLog {
     * mirror), where the per-path [[removeAction]] costs a union branch
     * and a range scan per file. */
   def removeActions(rows: DataFrame, version: Int): DataFrame =
-    rows.select(lit(version).as("version"), col("ordinal").cast(IntegerType).as("ordinal"),
-      lit("remove").as("op"), col("path"),
-      lit(null).cast(ArrayType(LongType)).as("buckets"),
-      lit(null).cast(LongType).as("n_rows"), lit(null).cast(LongType).as("min_key"),
-      lit(null).cast(LongType).as("max_key"), lit(null).cast(LongType).as("cents"),
-      lit(null).cast(ArrayType(LongType)).as("dv"), lit(null).cast(StringType).as("schema_str"),
-      lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-      lit(null).cast(IntegerType).as("min_writer"))
+    rows.select(Seq(lit(version).as("version"), col("ordinal").cast(IntegerType).as("ordinal"),
+      lit("remove").as("op"), col("path")) ++ nullStatCols ++ nullDvTailCols: _*)
 
   /** Per-file sidecar-metadata actions (columns `path`, `ordinal`,
     * `payload`): one op=`opName` row per file, payload in schema_str —
@@ -474,14 +443,9 @@ object DeltaLog {
     * every side action: [[effectiveSidePayloads]] races them against the
     * file's add, so a rewrite of the file retires its sidecar. */
   def sideActions(rows: DataFrame, opName: String, version: Int): DataFrame =
-    rows.select(lit(version).as("version"), col("ordinal").cast(IntegerType).as("ordinal"),
-      lit(opName).as("op"), col("path"),
-      lit(null).cast(ArrayType(LongType)).as("buckets"),
-      lit(null).cast(LongType).as("n_rows"), lit(null).cast(LongType).as("min_key"),
-      lit(null).cast(LongType).as("max_key"), lit(null).cast(LongType).as("cents"),
-      lit(null).cast(ArrayType(LongType)).as("dv"), col("payload").as("schema_str"),
-      lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-      lit(null).cast(IntegerType).as("min_writer"))
+    rows.select(Seq(lit(version).as("version"), col("ordinal").cast(IntegerType).as("ordinal"),
+      lit(opName).as("op"), col("path")) ++ nullStatCols ++
+      (Seq(nullDv, col("payload").as("schema_str")) ++ nullStampCols): _*)
 
   /** The effective sidecar payload per LIVE file instance for a side
     * family (latest op=`opName` row postdating the live add wins; rows on
@@ -502,9 +466,7 @@ object DeltaLog {
                             payload: org.apache.spark.sql.Column): DataFrame =
     df.select(Seq(lit(version).as("version"), lit(ordinal).as("ordinal"),
       lit(opName).as("op"), lit(pathName).as("path")) ++ nullStatCols ++
-      Seq(lit(null).cast(ArrayType(LongType)).as("dv"), payload.as("schema_str"),
-        lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-        lit(null).cast(IntegerType).as("min_writer")): _*)
+      Seq(nullDv, payload.as("schema_str")) ++ nullStampCols: _*)
 
   /** An op='meta' action row carrying the table schema as of `version`
     * (the Delta metaData action; path is the synthetic '_schema' so the
@@ -620,10 +582,8 @@ object DeltaLog {
     segHighWaterMark(bounded, opName).filter(col("hwm") > 0)
       .select(Seq(lit(-1).cast(IntegerType).as("version"), lit(0).as("ordinal"),
         lit(opName).as("op"), lit("_hwm").as("path")) ++ nullStatCols ++
-        Seq(lit(null).cast(ArrayType(LongType)).as("dv"),
-          concat(lit("0:"), col("hwm"), lit(":0")).as("schema_str"),
-          lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-          lit(null).cast(IntegerType).as("min_writer")): _*)
+        Seq(nullDv, concat(lit("0:"), col("hwm"), lit(":0")).as("schema_str")) ++
+        nullStampCols: _*)
 
   /** Latest action per path for a PER-PATH-singleton family (op='txn':
     * one live marker per appId) — the file race's rule without the
@@ -762,9 +722,21 @@ object DeltaLog {
     * (delete/merge/restore/rebase output included) must be stamped
     * before it is appended, or the commitTimestamps tear guard will
     * (correctly) raise on the unstamped version. */
-  private def nullTailCols = Seq(lit(null).cast(StringType).as("schema_str"),
+  private def nullTailCols = lit(null).cast(StringType).as("schema_str") +: nullStampCols
+
+  /** The fields after `schema_str` (ts, min_reader, min_writer), nulled —
+    * the tail of an action that carries a payload in schema_str. */
+  private def nullStampCols = Seq(
     lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
     lit(null).cast(IntegerType).as("min_writer"))
+
+  /** A null `dv`, the deletion-vector field every non-dv action leaves
+    * empty. */
+  private def nullDv = lit(null).cast(ArrayType(LongType)).as("dv")
+
+  /** `dv` plus [[nullTailCols]]: everything after an add's or remove's
+    * stats, nulled. */
+  private def nullDvTailCols = nullDv +: nullTailCols
 
   // ---- predicate-driven DML (dl17/dl18) ------------------------------------
 
@@ -823,14 +795,12 @@ object DeltaLog {
         when(size(filter(col("mask"), p => p < 0 || p >= col("n_rows"))) > 0,
           raise_error(concat(lit("delete mask position outside file range: "), col("path"))))
           .otherwise(col("n_masked")).as("n_masked"))
-    val nulls = nullStatCols
-    val tail = nullTailCols
     val dvRows = withLive.filter(col("n_masked") < col("n_rows"))
       .select(Seq(lit(version).as("version"), lit(0).as("ordinal"), lit("dv").as("op"),
-        col("path")) ++ nulls ++ (col("mask").as("dv") +: tail): _*)
+        col("path")) ++ nullStatCols ++ (col("mask").as("dv") +: nullTailCols): _*)
     val removeRows = withLive.filter(col("n_masked") === col("n_rows"))
       .select(Seq(lit(version).as("version"), lit(0).as("ordinal"), lit("remove").as("op"),
-        col("path")) ++ nulls ++ (lit(null).cast(ArrayType(LongType)).as("dv") +: tail): _*)
+        col("path")) ++ nullStatCols ++ nullDvTailCols: _*)
     // non-live guard as its OWN anti-join branch, not a left-join null
     // check: the n_masked < n_rows filters above are null-intolerant, so
     // Catalyst rightly infers isnotnull(n_rows), converts a left join to
@@ -849,8 +819,8 @@ object DeltaLog {
       .select(Seq(
         ghostBoom.cast(IntegerType).as("version"),
         lit(0).as("ordinal"), ghostBoom.cast(StringType).as("op"),
-        ghostBoom.cast(StringType).as("path")) ++ nulls ++
-        (lit(null).cast(ArrayType(LongType)).as("dv") +: tail): _*)
+        ghostBoom.cast(StringType).as("path")) ++ nullStatCols ++
+        nullDvTailCols: _*)
     dvRows.unionByName(removeRows).unionByName(ghostGuard)
   }
 
@@ -918,7 +888,7 @@ object DeltaLog {
       .select(Seq(
         cardBoom.cast(IntegerType).as("version"), lit(0).as("ordinal"),
         cardBoom.cast(StringType).as("op"), cardBoom.cast(StringType).as("path")) ++
-        nullStatCols ++ (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+        nullStatCols ++ nullDvTailCols: _*)
     deleteActions(live, dvs, positioned, matched || notMatchedBySource, version)
       .unionByName(guarded).unionByName(cardGuard)
   }
@@ -956,7 +926,7 @@ object DeltaLog {
       .filter(!coalesce(statsGuard, lit(false)))
       .select(Seq(boom.cast(IntegerType).as("version"), lit(0).as("ordinal"),
         boom.cast(StringType).as("op"), boom.cast(StringType).as("path")) ++ nullStatCols ++
-        (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+        nullDvTailCols: _*)
     deleteActions(live, dvs, positioned, pred, version)
       .unionByName(guarded).unionByName(rangeGuard)
   }
@@ -1002,16 +972,14 @@ object DeltaLog {
     val removes = paired
       .select(Seq(lit(version).as("version"), col("ord").as("ordinal"),
         lit("remove").as("op"), col("path")) ++ nullStatCols ++
-        (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+        nullDvTailCols: _*)
     val rewrites = paired
-      .select(lit(version).as("version"), (lit(1000) + col("ord")).cast(IntegerType).as("ordinal"),
+      .select(Seq(lit(version).as("version"), (lit(1000) + col("ord")).cast(IntegerType).as("ordinal"),
         lit("add").as("op"), concat(lit("purged-"), col("path")).as("path"),
         col("buckets"),
         col("net_rows").cast(LongType).as("n_rows"), col("net_min").cast(LongType).as("min_key"),
-        col("net_max").cast(LongType).as("max_key"), col("net_cents").cast(LongType).as("cents"),
-        lit(null).cast(ArrayType(LongType)).as("dv"), lit(null).cast(StringType).as("schema_str"),
-        lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-        lit(null).cast(IntegerType).as("min_writer"))
+        col("net_max").cast(LongType).as("max_key"), col("net_cents").cast(LongType).as("cents")) ++
+        nullDvTailCols: _*)
     // stray net-stats rows: anti-join branch (the deleteActions ghost
     // pattern — a when-chain check could be join-elided)
     val strayBoom = guardBoom(raise_error(concat(
@@ -1019,7 +987,7 @@ object DeltaLog {
     val stray = ns.join(maskedLive.select("path"), Seq("path"), "left_anti")
       .select(Seq(strayBoom.cast(IntegerType).as("version"), lit(0).as("ordinal"),
         strayBoom.cast(StringType).as("op"), strayBoom.cast(StringType).as("path")) ++
-        nullStatCols ++ (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+        nullStatCols ++ nullDvTailCols: _*)
     removes.unionByName(rewrites).unionByName(stray)
   }
 
@@ -1059,7 +1027,7 @@ object DeltaLog {
       .select(Seq(
         cardBoom.cast(IntegerType).as("version"), lit(0).as("ordinal"),
         cardBoom.cast(StringType).as("op"), cardBoom.cast(StringType).as("path")) ++
-        nullStatCols ++ (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+        nullStatCols ++ nullDvTailCols: _*)
     deleteActions(live, dvs, positioned, pred, version)
       .unionByName(guarded).unionByName(cardGuard)
   }
@@ -1108,17 +1076,14 @@ object DeltaLog {
       col("version").as("at_v"), col("ordinal").as("at_o"))
     val files = now.join(at, Seq("path"), "full")
     val differs = col("at_v") =!= col("now_v") || col("at_o") =!= col("now_o")
-    val nulls = nullStatCols
-    val tail = nullTailCols
     val removes = files.filter(col("now_v").isNotNull && (col("at_v").isNull || differs))
       .select(Seq(lit(version).as("version"), lit(0).as("ordinal"), lit("remove").as("op"),
-        col("path")) ++ nulls ++ (lit(null).cast(ArrayType(LongType)).as("dv") +: tail): _*)
+        col("path")) ++ nullStatCols ++ nullDvTailCols: _*)
     val adds0 = files.filter(col("at_v").isNotNull && (col("now_v").isNull || differs))
       .select(Seq(lit(version).as("version"), lit(1000).as("ordinal"), lit("add").as("op"),
         col("path"), col("at_buckets").as("buckets"), col("at_rows").as("n_rows"),
         col("at_min").as("min_key"), col("at_max").as("max_key"),
-        col("at_cents").as("cents"),
-        lit(null).cast(ArrayType(LongType)).as("dv")) ++ tail: _*)
+        col("at_cents").as("cents")) ++ nullDvTailCols: _*)
     // vacuum-horizon guard: a re-add of a physically-freed file is a
     // committed pointer to deleted data — its own anti-elidable branch,
     // raise riding op/path/version (the deleteActions guard pattern)
@@ -1129,7 +1094,7 @@ object DeltaLog {
         val bad = adds0.join(broadcast(f.select("path")), Seq("path"))
           .select(Seq(boom.cast(IntegerType).as("version"), lit(1000).as("ordinal"),
             boom.cast(StringType).as("op"), boom.cast(StringType).as("path")) ++
-            nullStatCols ++ (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+            nullStatCols ++ nullDvTailCols: _*)
         adds0.unionByName(bad)
       case None => adds0
     }
@@ -1149,8 +1114,8 @@ object DeltaLog {
           (col("_readd").isNull &&
             coalesce(col("dv_now"), emptyMask) =!= coalesce(col("dv_at"), emptyMask)))
       .select(Seq(lit(version).as("version"), lit(2000).as("ordinal"), lit("dv").as("op"),
-        col("path")) ++ nulls ++
-        (coalesce(col("dv_at"), emptyMask).as("dv") +: tail): _*)
+        col("path")) ++ nullStatCols ++
+        (coalesce(col("dv_at"), emptyMask).as("dv") +: nullTailCols): _*)
     // the target's ACTIVE meta is state too (real RESTORE re-commits the
     // target version's metadata): when the winning meta action drifted
     // after the target, re-commit the target's schema at ordinal 3000 —
@@ -1167,10 +1132,8 @@ object DeltaLog {
     val metaRows = mAt.join(mNow, Seq("k"), "left")
       .filter(col("mv").isNull || col("mv") =!= col("av") || col("mo") =!= col("ao"))
       .select(Seq(lit(version).as("version"), lit(3000).as("ordinal"), lit("meta").as("op"),
-        lit("_schema").as("path")) ++ nulls ++
-        Seq(lit(null).cast(ArrayType(LongType)).as("dv"), col("m_schema").as("schema_str"),
-          lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-          lit(null).cast(IntegerType).as("min_writer")): _*)
+        lit("_schema").as("path")) ++ nullStatCols ++
+        Seq(nullDv, col("m_schema").as("schema_str")) ++ nullStampCols: _*)
     removes.unionByName(adds).unionByName(dvRows).unionByName(metaRows)
   }
 
@@ -1324,7 +1287,7 @@ object DeltaLog {
       .crossJoin(broadcast(ao))
       .select(Seq(boom.cast(IntegerType).as("version"), lit(0).as("ordinal"),
         boom.cast(StringType).as("op"), boom.cast(StringType).as("path")) ++ nullStatCols ++
-        (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+        nullDvTailCols: _*)
     txn.unionByName(guard)
   }
 
@@ -1408,11 +1371,8 @@ object DeltaLog {
       .select(Seq(col("version").cast(IntegerType).as("version"),
         col("ordinal").cast(IntegerType).as("ordinal"),
         lit(opName).as("op"), col("path")) ++ nullStatCols ++
-        Seq(lit(null).cast(ArrayType(LongType)).as("dv"),
-          concat(lit("0:"), col("hwm") + col("offset"), lit(":"), col("n_rows"))
-            .as("schema_str"),
-          lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-          lit(null).cast(IntegerType).as("min_writer")): _*)
+        Seq(nullDv, concat(lit("0:"), col("hwm") + col("offset"), lit(":"), col("n_rows"))
+          .as("schema_str")) ++ nullStampCols: _*)
   }
 
   /** Rid preservation through OPTIMIZE: for every compaction the
@@ -1460,11 +1420,9 @@ object DeltaLog {
         (lit(1000) + col("lo")).cast(IntegerType).as("ordinal"),
         lit("rids").as("op"),
         concat(lit("opt-"), col("lo"), lit("-"), col("hi")).as("path")) ++ nullStatCols ++
-        Seq(lit(null).cast(ArrayType(LongType)).as("dv"),
-          array_join(transform(col("ss"),
-            s => concat_ws(":", s("pos"), s("rid"), s("len"))), ";").as("schema_str"),
-          lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-          lit(null).cast(IntegerType).as("min_writer")): _*)
+        Seq(nullDv, array_join(transform(col("ss"),
+          s => concat_ws(":", s("pos"), s("rid"), s("len"))), ";").as("schema_str")) ++
+        nullStampCols: _*)
   }
 
   /** OPTIMIZE on a row-tracked table as ONE atomic derivation: the
@@ -1509,26 +1467,22 @@ object DeltaLog {
     val removes = srcs.select(Seq(lit(version).as("version"),
       col("b_lo").cast(IntegerType).as("ordinal"), lit("remove").as("op"),
       col("path")) ++ nullStatCols ++
-      (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+      nullDvTailCols: _*)
     val optPath = concat(lit("opt-"), col("lo"), lit("-"), col("hi"))
-    val adds = bins.select(lit(version).as("version"),
+    val adds = bins.select(Seq(lit(version).as("version"),
       (lit(1000) + col("lo")).cast(IntegerType).as("ordinal"), lit("add").as("op"),
       optPath.as("path"), sequence(col("lo"), col("hi")).as("buckets"),
       col("n_rows").cast("long").as("n_rows"), col("min_key").cast("long").as("min_key"),
-      col("max_key").cast("long").as("max_key"), col("cents").cast("long").as("cents"),
-      lit(null).cast(ArrayType(LongType)).as("dv"), lit(null).cast(StringType).as("schema_str"),
-      lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-      lit(null).cast(IntegerType).as("min_writer"))
+      col("max_key").cast("long").as("max_key"), col("cents").cast("long").as("cents")) ++
+      nullDvTailCols: _*)
     val rids = shifted.groupBy("bin", "lo", "hi")
       .agg(sort_array(collect_list(col("seg"))).as("ss"))
       .select(Seq(lit(version).as("version"),
         (lit(1000) + col("lo")).cast(IntegerType).as("ordinal"),
         lit("rids").as("op"), optPath.as("path")) ++ nullStatCols ++
-        Seq(lit(null).cast(ArrayType(LongType)).as("dv"),
-          array_join(transform(col("ss"),
-            s => concat_ws(":", s("pos"), s("rid"), s("len"))), ";").as("schema_str"),
-          lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-          lit(null).cast(IntegerType).as("min_writer")): _*)
+        Seq(nullDv, array_join(transform(col("ss"),
+          s => concat_ws(":", s("pos"), s("rid"), s("len"))), ";").as("schema_str")) ++
+        nullStampCols: _*)
     removes.unionByName(adds).unionByName(rids)
   }
 
@@ -1579,25 +1533,20 @@ object DeltaLog {
       .agg(sort_array(collect_list(struct(col("pos"), col("rid"), col("len")))).as("ss"))
     val removes = stats.select(Seq(lit(version).as("version"), lit(0).as("ordinal"),
       lit("remove").as("op"), col("path")) ++ nullStatCols ++
-      (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+      nullDvTailCols: _*)
     val rewrites = stats.filter(col("n_del") < col("n_all"))
-    val adds = rewrites.select(lit(version).as("version"), lit(1000).as("ordinal"),
+    val adds = rewrites.select(Seq(lit(version).as("version"), lit(1000).as("ordinal"),
       lit("add").as("op"), concat(lit("cow-"), col("path")).as("path"),
       col("buckets"),
       (col("n_all") - col("n_del")).cast("long").as("n_rows"),
       col("s_min").cast("long").as("min_key"), col("s_max").cast("long").as("max_key"),
-      col("s_cents").cast("long").as("cents"),
-      lit(null).cast(ArrayType(LongType)).as("dv"), lit(null).cast(StringType).as("schema_str"),
-      lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-      lit(null).cast(IntegerType).as("min_writer"))
+      col("s_cents").cast("long").as("cents")) ++ nullDvTailCols: _*)
     val rids = islands.join(broadcast(rewrites.select("path")), Seq("path"))
       .select(Seq(lit(version).as("version"), lit(1000).as("ordinal"),
         lit("rids").as("op"), concat(lit("cow-"), col("path")).as("path")) ++ nullStatCols ++
-        Seq(lit(null).cast(ArrayType(LongType)).as("dv"),
-          array_join(transform(col("ss"),
-            s => concat_ws(":", s("pos"), s("rid"), s("len"))), ";").as("schema_str"),
-          lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-          lit(null).cast(IntegerType).as("min_writer")): _*)
+        Seq(nullDv, array_join(transform(col("ss"),
+          s => concat_ws(":", s("pos"), s("rid"), s("len"))), ";").as("schema_str")) ++
+        nullStampCols: _*)
     // ghost guard (the deleteActions contract): a predicate match on a
     // path absent from `live` must raise, never silently drop the delete
     val boom = guardBoom(raise_error(concat(
@@ -1607,7 +1556,7 @@ object DeltaLog {
       .filter(col("_live").isNull)
       .select(Seq(boom.cast(IntegerType).as("version"), lit(0).as("ordinal"),
         boom.cast(StringType).as("op"), boom.cast(StringType).as("path")) ++ nullStatCols ++
-        (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+        nullDvTailCols: _*)
     removes.unionByName(adds).unionByName(rids).unionByName(ghost)
   }
 
@@ -1735,9 +1684,7 @@ object DeltaLog {
       .groupBy("path").agg(sort_array(collect_set(col("new_pos"))).as("dvm"))
       .select(Seq(lit(newVersion).as("version"), lit(0).as("ordinal"),
         lit("dv").as("op"), col("path")) ++ nullStatCols ++
-        Seq(col("dvm").as("dv"), lit(null).cast(StringType).as("schema_str"),
-          lit(null).cast(LongType).as("ts"), lit(null).cast(IntegerType).as("min_reader"),
-          lit(null).cast(IntegerType).as("min_writer")): _*)
+        (col("dvm").as("dv") +: nullTailCols): _*)
   }
 
   // NOTE (r16): a fused one-collect OCC attempt — probe counters riding
@@ -1985,7 +1932,7 @@ object DeltaLog {
       .crossJoin(broadcast(gen))
       .select(Seq(boom.cast(IntegerType).as("version"), lit(0).as("ordinal"),
         boom.cast(StringType).as("op"), boom.cast(StringType).as("path")) ++ nullStatCols ++
-        (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+        nullDvTailCols: _*)
     txn.unionByName(guard)
   }
 
@@ -1998,14 +1945,11 @@ object DeltaLog {
     * that ignored masks would silently resurrect deleted rows). */
   def protocolAction(spark: SparkSession, version: Int, ordinal: Int, minReader: Int,
                      minWriter: Int = 1): DataFrame =
-    spark.range(1).select(lit(version).as("version"), lit(ordinal).as("ordinal"),
-      lit("protocol").as("op"), lit("_protocol").as("path"),
-      lit(null).cast(ArrayType(LongType)).as("buckets"),
-      lit(null).cast(LongType).as("n_rows"), lit(null).cast(LongType).as("min_key"),
-      lit(null).cast(LongType).as("max_key"), lit(null).cast(LongType).as("cents"),
-      lit(null).cast(ArrayType(LongType)).as("dv"), lit(null).cast(StringType).as("schema_str"),
-      lit(null).cast(LongType).as("ts"), lit(minReader).as("min_reader"),
-      lit(minWriter).as("min_writer"))
+    spark.range(1).select(Seq(lit(version).as("version"), lit(ordinal).as("ordinal"),
+      lit("protocol").as("op"), lit("_protocol").as("path")) ++ nullStatCols ++
+      Seq(nullDv, lit(null).cast(StringType).as("schema_str"),
+        lit(null).cast(LongType).as("ts"), lit(minReader).as("min_reader"),
+        lit(minWriter).as("min_writer")): _*)
 
   /** The ACTIVE protocol as of `asOf` (None = latest): one row
     * (min_reader, protocol_version), or zero rows on an unversioned
@@ -2136,7 +2080,7 @@ object DeltaLog {
         boom.cast(IntegerType).as("version"),
         lit(0).as("ordinal"), boom.cast(StringType).as("op"),
         boom.cast(StringType).as("path")) ++ nullStatCols ++
-        (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+        nullDvTailCols: _*)
     txn.withColumn("version", lit(newVersion)).unionByName(conflictGuard)
   }
 
@@ -2541,7 +2485,7 @@ object DeltaLog {
     val guard = violations.select(Seq(
       boom.cast(IntegerType).as("version"), lit(0).as("ordinal"),
       boom.cast(StringType).as("op"), boom.cast(StringType).as("path")) ++ nullStatCols ++
-      (lit(null).cast(ArrayType(LongType)).as("dv") +: nullTailCols): _*)
+      nullDvTailCols: _*)
     txn.unionByName(guard)
   }
 

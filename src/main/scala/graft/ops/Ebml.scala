@@ -118,18 +118,14 @@ object Ebml {
 
   /** The Spark seam (the [[Image.decodeStatsStage]] shape). */
   def metaStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("doc_type", StringType), StructField("timestamp_scale", LongType),
       StructField("duration_ms", LongType), StructField("video_w", IntegerType),
       StructField("video_h", IntegerType), StructField("audio_rate", IntegerType),
       StructField("audio_channels", IntegerType)))
-    Stages.appendFields(df, Seq(StructField(outCol, sch)))( r =>
-      Seq(decode(r.getAs[Array[Byte]](idx)) match {
-        case None => null
-        case Some(m) => org.apache.spark.sql.Row(m.docType, m.timestampScale, m.durationMs,
-          m.videoW, m.videoH, m.audioRate, m.audioChannels)
-      }))
+    Stages.payloadStage(df, payloadCol, outCol, sch)(b =>
+      decode(b).map(m => org.apache.spark.sql.Row(m.docType, m.timestampScale, m.durationMs,
+        m.videoW, m.videoH, m.audioRate, m.audioChannels)))
   }
 
   // ---------------------------------------------------------------------

@@ -267,22 +267,19 @@ object Gif {
     * the [[Image.decodeStatsStage]] shape, sharing its pixel_sum /
     * gray_mid probe contract so PNG and GIF corpora audit identically. */
   def decodeStatsStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("width", IntegerType), StructField("height", IntegerType),
       StructField("n_colors", IntegerType), StructField("interlaced", BooleanType),
       StructField("pixel_sum", LongType), StructField("gray_mid", IntegerType)))
-    Stages.appendFields(df, Seq(StructField(outCol, sch)))( r =>
-      Seq(decodeGif(r.getAs[Array[Byte]](idx)) match {
-        case None => null
-        case Some(g) =>
-          var sum = 0L
-          var i = 0
-          while (i < g.rgb.length) { sum += g.rgb(i) & 0xff; i += 1 }
-          val mid = 3 * ((g.height / 2) * g.width + g.width / 2)
-          val gray = (299 * (g.rgb(mid) & 0xff) + 587 * (g.rgb(mid + 1) & 0xff)
-            + 114 * (g.rgb(mid + 2) & 0xff)) / 1000
-          org.apache.spark.sql.Row(g.width, g.height, g.nColors, g.interlaced, sum, gray)
-      }))
+    Stages.payloadStage(df, payloadCol, outCol, sch)(b =>
+      decodeGif(b).map { g =>
+        var sum = 0L
+        var i = 0
+        while (i < g.rgb.length) { sum += g.rgb(i) & 0xff; i += 1 }
+        val mid = 3 * ((g.height / 2) * g.width + g.width / 2)
+        val gray = (299 * (g.rgb(mid) & 0xff) + 587 * (g.rgb(mid + 1) & 0xff)
+          + 114 * (g.rgb(mid + 2) & 0xff)) / 1000
+        org.apache.spark.sql.Row(g.width, g.height, g.nColors, g.interlaced, sum, gray)
+      })
   }
 }

@@ -422,40 +422,31 @@ object Image {
     * center pixel (w/2, h/2) so the gate pins actual pixel VALUES, not
     * just sizes. */
   def decodeStatsStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("width", IntegerType), StructField("height", IntegerType),
       StructField("color_type", IntegerType), StructField("channels", IntegerType),
       StructField("pixel_sum", LongType), StructField("gray_mid", IntegerType)))
-    Stages.appendFields(df, Seq(StructField(outCol, sch)))( r =>
-      Seq(decodePng(r.getAs[Array[Byte]](idx)) match {
-        case None => null
-        case Some(img) =>
-          var sum = 0L
-          var i = 0
-          while (i < img.raw.length) { sum += img.raw(i) & 0xff; i += 1 }
-          val g = toGray(img)
-          org.apache.spark.sql.Row(img.width, img.height, img.colorType, img.channels,
-            sum, g((img.height / 2) * img.width + img.width / 2))
-      }))
+    Stages.payloadStage(df, payloadCol, outCol, sch)(b =>
+      decodePng(b).map { img =>
+        var sum = 0L
+        var i = 0
+        while (i < img.raw.length) { sum += img.raw(i) & 0xff; i += 1 }
+        val g = toGray(img)
+        org.apache.spark.sql.Row(img.width, img.height, img.colorType, img.channels,
+          sum, g((img.height / 2) * img.width + img.width / 2))
+      })
   }
 
   /** Append the EXIF orientation (1..8, null on any malformation) — the
     * rotation-normalization input of the image pipeline. */
-  def exifStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
-    Stages.appendFields(df, Seq(StructField(outCol, IntegerType)))( r =>
-      Seq(exifOrientation(r.getAs[Array[Byte]](idx)).map(Integer.valueOf).orNull))
-  }
+  def exifStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame =
+    Stages.payloadStage(df, payloadCol, outCol, IntegerType)(b => exifOrientation(b))
 
   /** Append the 64-bit dHash bit string (null when the payload doesn't
     * decode) — the per-image map step of the near-dup pipeline. */
-  def dhashStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
-    Stages.appendFields(df, Seq(StructField(outCol, StringType)))( r =>
-      Seq(decodePng(r.getAs[Array[Byte]](idx))
-        .map(img => dHashBits(toGray(img), img.width, img.height)).orNull))
-  }
+  def dhashStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame =
+    Stages.payloadStage(df, payloadCol, outCol, StringType)(b =>
+      decodePng(b).map(img => dHashBits(toGray(img), img.width, img.height)))
 
   /** Perceptual-hash image near-dup pairs over a precomputed 64-bit
     * signature column: Manku pigeonhole blocking (maxHamming+1 equal

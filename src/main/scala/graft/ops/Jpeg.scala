@@ -47,7 +47,26 @@ object Jpeg {
 
   /** Decoded image: `pixels` is w·h gray bytes (components = 1) or
     * w·h·3 interleaved RGB (components = 3). */
-  final case class Decoded(width: Int, height: Int, components: Int, pixels: Array[Byte])
+  final case class Decoded(width: Int, height: Int, components: Int, pixels: Array[Byte]) {
+
+    /** Integer luma of pixel `i`: the gray byte, or RGB through the
+      * shared 299/587/114 conversion. */
+    def gray(i: Int): Int =
+      if (components == 1) pixels(i) & 0xff
+      else (299 * (pixels(3 * i) & 0xff) + 587 * (pixels(3 * i + 1) & 0xff) +
+        114 * (pixels(3 * i + 2) & 0xff)) / 1000
+
+    /** Sum of every channel byte. */
+    def pixelSum: Long = {
+      var sum = 0L
+      var k = 0
+      while (k < pixels.length) { sum += pixels(k) & 0xff; k += 1 }
+      sum
+    }
+
+    /** The center-pixel (w/2, h/2) gray probe. */
+    def grayMid: Int = gray((height / 2) * width + width / 2)
+  }
 
   // T.81 Figure A.6 zigzag: zigzag index -> natural (row-major) index
   private[graft] val Zigzag: Array[Int] = Array(
@@ -734,18 +753,7 @@ object Jpeg {
     val out = new java.io.ByteArrayOutputStream()
     def b(v: Int): Unit = out.write(v & 0xff)
     def b16(v: Int): Unit = { b(v >> 8); b(v) }
-    b(0xff); b(0xd8) // SOI
-    b(0xff); b(0xdb); b16(2 + 1 + 64); b(0x00) // DQT table 0, 8-bit
-    var i = 0
-    while (i < 64) { b(qStep); i += 1 }
-    b(0xff); b(0xc0); b16(8 + 3); b(8); b16(h); b16(w); b(1) // SOF0, 1 comp
-    b(1); b(0x11); b(0) // comp 1, 1x1, qtable 0
-    def dht(cls: Int, bits: Array[Int], vals: Array[Int]): Unit = {
-      b(0xff); b(0xc4); b16(2 + 1 + 16 + vals.length); b(cls << 4)
-      bits.foreach(b); vals.foreach(b)
-    }
-    dht(0, StdDcBits, StdDcVals)
-    dht(1, StdAcBits, StdAcVals)
+    writeGrayHeader(out, w, h, qStep, 0xc0) // SOF0
     if (restartInterval > 0) { b(0xff); b(0xdd); b16(4); b16(restartInterval) } // DRI
     b(0xff); b(0xda); b16(6 + 2); b(1); b(1); b(0x00); b(0); b(63); b(0) // SOS
     val dc = huffCodes(StdDcBits, StdDcVals)
@@ -767,34 +775,9 @@ object Jpeg {
           pred = 0
         }
         fdctQuantBlock(pixels, w, h, bx, by, qStep, blk, coefQ)
-        // DC
-        val diff = coefQ(0) - pred
+        putDc(bw, dc, coefQ(0) - pred)
         pred = coefQ(0)
-        val s = category(diff)
-        val (dcCode, dcLen) = dc(s)
-        bw.put(dcCode, dcLen)
-        if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
-        // AC run-length
-        var run = 0
-        var k = 1
-        while (k < 64) {
-          // Annex-K AC codes stop at category 10: clamp to ±1023 (only
-          // reachable at qStep < 4 on basis-matched blocks; real encoders
-          // clamp the same way rather than fail)
-          val cv0 = coefQ(Zigzag(k))
-          val cv = if (cv0 > 1023) 1023 else if (cv0 < -1023) -1023 else cv0
-          if (cv == 0) run += 1
-          else {
-            while (run >= 16) { val (c0, l0) = ac(0xf0); bw.put(c0, l0); run -= 16 }
-            val sz = category(cv)
-            val (c1, l1) = ac((run << 4) | sz)
-            bw.put(c1, l1)
-            bw.put(if (cv < 0) cv + (1 << sz) - 1 else cv, sz)
-            run = 0
-          }
-          k += 1
-        }
-        if (run > 0) { val (c2, l2) = ac(0x00); bw.put(c2, l2) } // EOB
+        putAcBand(bw, ac, coefQ)
         mcu += 1
         bx += 1
       }
@@ -803,6 +786,60 @@ object Jpeg {
     bw.flush()
     b(0xff); b(0xd9) // EOI
     out.toByteArray
+  }
+
+  /** SOI, the flat DQT, a one-component frame header (`sof` 0xc0
+    * baseline or 0xc2 progressive) and the two Annex-K Huffman tables:
+    * everything both gray encoders write before their first scan. */
+  private def writeGrayHeader(out: java.io.ByteArrayOutputStream, w: Int, h: Int,
+                              qStep: Int, sof: Int): Unit = {
+    def b(v: Int): Unit = out.write(v & 0xff)
+    def b16(v: Int): Unit = { b(v >> 8); b(v) }
+    b(0xff); b(0xd8) // SOI
+    b(0xff); b(0xdb); b16(2 + 1 + 64); b(0x00) // DQT table 0, 8-bit
+    var i = 0
+    while (i < 64) { b(qStep); i += 1 }
+    b(0xff); b(sof); b16(8 + 3); b(8); b16(h); b16(w); b(1) // SOFn, 1 comp
+    b(1); b(0x11); b(0) // comp 1, 1x1, qtable 0
+    def dht(cls: Int, bits: Array[Int], vals: Array[Int]): Unit = {
+      b(0xff); b(0xc4); b16(2 + 1 + 16 + vals.length); b(cls << 4)
+      bits.foreach(b); vals.foreach(b)
+    }
+    dht(0, StdDcBits, StdDcVals)
+    dht(1, StdAcBits, StdAcVals)
+  }
+
+  /** One DC difference: its category's code, then the magnitude bits. */
+  private def putDc(bw: BitWriter, dc: Map[Int, (Int, Int)], diff: Int): Unit = {
+    val s = category(diff)
+    val (code, len) = dc(s)
+    bw.put(code, len)
+    if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
+  }
+
+  /** Coefficients 1–63 of one block (natural-order `cq`, zigzag walk) as
+    * ZRL/run-length codes, then EOB when the block ends in zeros. */
+  private def putAcBand(bw: BitWriter, ac: Map[Int, (Int, Int)], cq: Array[Int]): Unit = {
+    var run = 0
+    var k = 1
+    while (k < 64) {
+      // Annex-K AC codes stop at category 10: clamp to ±1023 (only
+      // reachable at qStep < 4 on basis-matched blocks; real encoders
+      // clamp the same way rather than fail)
+      val cv0 = cq(Zigzag(k))
+      val cv = if (cv0 > 1023) 1023 else if (cv0 < -1023) -1023 else cv0
+      if (cv == 0) run += 1
+      else {
+        while (run >= 16) { val (c0, l0) = ac(0xf0); bw.put(c0, l0); run -= 16 }
+        val sz = category(cv)
+        val (c1, l1) = ac((run << 4) | sz)
+        bw.put(c1, l1)
+        bw.put(if (cv < 0) cv + (1 << sz) - 1 else cv, sz)
+        run = 0
+      }
+      k += 1
+    }
+    if (run > 0) { val (c2, l2) = ac(0x00); bw.put(c2, l2) } // EOB
   }
 
   /** Block (bx, by) of a gray image: edge-replicated load, level shift,
@@ -861,18 +898,7 @@ object Jpeg {
     val out = new java.io.ByteArrayOutputStream()
     def b(v: Int): Unit = out.write(v & 0xff)
     def b16(v: Int): Unit = { b(v >> 8); b(v) }
-    b(0xff); b(0xd8) // SOI
-    b(0xff); b(0xdb); b16(2 + 1 + 64); b(0x00)
-    var i = 0
-    while (i < 64) { b(qStep); i += 1 }
-    b(0xff); b(0xc2); b16(8 + 3); b(8); b16(h); b16(w); b(1) // SOF2, 1 comp
-    b(1); b(0x11); b(0)
-    def dht(cls: Int, bits: Array[Int], vals: Array[Int]): Unit = {
-      b(0xff); b(0xc4); b16(2 + 1 + 16 + vals.length); b(cls << 4)
-      bits.foreach(b); vals.foreach(b)
-    }
-    dht(0, StdDcBits, StdDcVals)
-    dht(1, StdAcBits, StdAcVals)
+    writeGrayHeader(out, w, h, qStep, 0xc2) // SOF2
     val dc = huffCodes(StdDcBits, StdDcVals)
     val ac = huffCodes(StdAcBits, StdAcVals)
     // all blocks up front (raster order, natural-order coefficients)
@@ -893,12 +919,8 @@ object Jpeg {
       var pred = 0
       blocks.foreach { cq =>
         val cur = cq(0) >> 1
-        val diff = cur - pred
+        putDc(bw, dc, cur - pred)
         pred = cur
-        val s = category(diff)
-        val (c0, l0) = dc(s)
-        bw.put(c0, l0)
-        if (s > 0) bw.put(if (diff < 0) diff + (1 << s) - 1 else diff, s)
       }
       bw.flush()
     }
@@ -907,26 +929,7 @@ object Jpeg {
     sos(1, 63, 0x00)
     locally {
       val bw = new BitWriter(out)
-      blocks.foreach { cq =>
-        var run = 0
-        var k = 1
-        while (k < 64) {
-          // same ±1023 Annex-K clamp as the baseline encoder
-          val cv0 = cq(Zigzag(k))
-          val cv = if (cv0 > 1023) 1023 else if (cv0 < -1023) -1023 else cv0
-          if (cv == 0) run += 1
-          else {
-            while (run >= 16) { val (c0, l0) = ac(0xf0); bw.put(c0, l0); run -= 16 }
-            val sz = category(cv)
-            val (c1, l1) = ac((run << 4) | sz)
-            bw.put(c1, l1)
-            bw.put(if (cv < 0) cv + (1 << sz) - 1 else cv, sz)
-            run = 0
-          }
-          k += 1
-        }
-        if (run > 0) { val (c2, l2) = ac(0x00); bw.put(c2, l2) }
-      }
+      blocks.foreach(putAcBand(bw, ac, _))
       bw.flush()
     }
     // scan 3: DC refinement — the bit dropped by scan 1's point transform
@@ -947,49 +950,22 @@ object Jpeg {
     * decode) — the JPEG twin of [[Image.dhashStage]], feeding the same
     * [[Image.imageNearDupPairs]] banding join. Gray planes hash
     * directly; RGB goes through the shared integer-luma conversion. */
-  def dhashStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
-    Stages.appendFields(df,
-      Seq(StructField(outCol, org.apache.spark.sql.types.StringType)))( r =>
-      Seq(decode(r.getAs[Array[Byte]](idx)).map { img =>
-        val n = img.width * img.height
-        val gray = new Array[Int](n)
-        var i = 0
-        if (img.components == 1)
-          while (i < n) { gray(i) = img.pixels(i) & 0xff; i += 1 }
-        else
-          while (i < n) {
-            gray(i) = (299 * (img.pixels(3 * i) & 0xff) + 587 * (img.pixels(3 * i + 1) & 0xff) +
-              114 * (img.pixels(3 * i + 2) & 0xff)) / 1000
-            i += 1
-          }
-        Image.dHashBits(gray, img.width, img.height)
-      }.orNull))
-  }
+  def dhashStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame =
+    Stages.payloadStage(df, payloadCol, outCol, org.apache.spark.sql.types.StringType)(b =>
+      decode(b).map(img => Image.dHashBits(Array.tabulate(img.width * img.height)(img.gray),
+        img.width, img.height)))
 
   /** Append decode stats (null struct on any malformation): width,
     * height, components, pixel_sum over all channel bytes, and the
     * center-pixel gray probe — the JPEG twin of
     * [[Image.decodeStatsStage]]. */
   def decodeStatsStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("width", IntegerType), StructField("height", IntegerType),
       StructField("components", IntegerType),
       StructField("pixel_sum", LongType), StructField("gray_mid", IntegerType)))
-    Stages.appendFields(df, Seq(StructField(outCol, sch)))( r =>
-      Seq(decode(r.getAs[Array[Byte]](idx)) match {
-        case None => null
-        case Some(img) =>
-          var sum = 0L
-          var i = 0
-          while (i < img.pixels.length) { sum += img.pixels(i) & 0xff; i += 1 }
-          val mid = (img.height / 2) * img.width + img.width / 2
-          val gray =
-            if (img.components == 1) img.pixels(mid) & 0xff
-            else (299 * (img.pixels(mid * 3) & 0xff) + 587 * (img.pixels(mid * 3 + 1) & 0xff) +
-              114 * (img.pixels(mid * 3 + 2) & 0xff)) / 1000
-          org.apache.spark.sql.Row(img.width, img.height, img.components, sum, gray)
-      }))
+    Stages.payloadStage(df, payloadCol, outCol, sch)(b =>
+      decode(b).map(img => org.apache.spark.sql.Row(img.width, img.height, img.components,
+        img.pixelSum, img.grayMid)))
   }
 }

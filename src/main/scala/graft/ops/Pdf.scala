@@ -38,33 +38,21 @@ object Pdf {
     * proves the parser inverts a structurally honest document, not a
     * shared implementation. */
   def buildMinimalPdf(text: String, compress: Boolean, splitShow: Boolean = false): Array[Byte] = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
     val show =
       if (splitShow) {
         val mid = text.length / 2
         s"[(${esc(text.take(mid))}) -250 (${esc(text.drop(mid))})] TJ"
       } else s"(${esc(text)}) Tj"
-    val content = s"BT /F1 12 Tf 72 700 Td $show ET".getBytes(Ascii)
-    val (body, filter) =
-      if (compress) {
-        val d = new java.util.zip.Deflater()
-        d.setInput(content); d.finish()
-        val buf = new Array[Byte](content.length * 2 + 64)
-        val n = d.deflate(buf); d.end()
-        (java.util.Arrays.copyOf(buf, n), " /Filter /FlateDecode")
-      } else (content, "")
-    val out = new java.io.ByteArrayOutputStream()
-    def w(s: String): Unit = out.write(s.getBytes(Ascii))
-    w("%PDF-1.4\n")
-    w("1 0 obj << /Type /Catalog /Pages 2 0 R >> endobj\n")
-    w("2 0 obj << /Type /Pages /Kids [3 0 R] /Count 1 >> endobj\n")
-    w("3 0 obj << /Type /Page /Parent 2 0 R /Contents 4 0 R >> endobj\n")
-    w(s"4 0 obj << /Length ${body.length}$filter >> stream\n")
-    out.write(body)
-    w("\nendstream endobj\n")
-    w("trailer << /Root 1 0 R >>\n%%EOF\n")
-    out.toByteArray
+    wrapContent(s"BT /F1 12 Tf 72 700 Td $show ET".getBytes(Ascii), compress)
   }
+
+  /** A string literal's escapes inside `( … )`. */
+  private def esc(s: String) = s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
+
+  /** A coordinate as the fixture builders write it: integral values
+    * without a decimal point. */
+  private def coord(v: Double) =
+    if (v == math.floor(v) && math.abs(v) < 1e15) v.toLong.toString else v.toString
 
   /** One `… stream … endstream` span of a PDF payload: nearest preceding
     * object number (None when headerless), the dict text between that
@@ -429,17 +417,15 @@ object Pdf {
                      b2: (String, Double, Double, Double),
                      footerText: String,
                      compress: Boolean): Array[Byte] = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
-    def n(v: Double) = if (v == math.floor(v) && math.abs(v) < 1e15) v.toLong.toString else v.toString
     val (t0, x0, y0, s0) = b0
     val (t1, x1, y1, s1) = b1
     val (t2, x2, y2, s2) = b2
     val split = math.max(1, t1.length / 2)
     val (t1a, t1b) = t1.splitAt(split)
     val (t2a, t2b) = t2.splitAt(math.max(1, t2.length / 2))
-    val content = (s"BT /F1 ${n(s0)} Tf ${n(x0)} ${n(y0)} Td (${esc(t0)}) Tj " +
-      s"/F1 ${n(s1)} Tf ${n(x1 - x0)} ${n(y1 - y0)} TD (${esc(t1a)}) Tj (${esc(t1b)}) Tj " +
-      s"/F1 ${n(s2)} Tf 1 0 0 1 ${n(x2)} ${n(y2)} Tm [(${esc(t2a)}) -250 (${esc(t2b)})] TJ " +
+    val content = (s"BT /F1 ${coord(s0)} Tf ${coord(x0)} ${coord(y0)} Td (${esc(t0)}) Tj " +
+      s"/F1 ${coord(s1)} Tf ${coord(x1 - x0)} ${coord(y1 - y0)} TD (${esc(t1a)}) Tj (${esc(t1b)}) Tj " +
+      s"/F1 ${coord(s2)} Tf 1 0 0 1 ${coord(x2)} ${coord(y2)} Tm [(${esc(t2a)}) -250 (${esc(t2b)})] TJ " +
       s"(${esc(footerText)}) ' ET").getBytes(Ascii)
     wrapContent(content, compress)
   }
@@ -451,26 +437,32 @@ object Pdf {
     * full parse so the table detector must rediscover it. */
   def buildBlocksPdf(blocks: Seq[(String, Double, Double, Double)],
                      compress: Boolean): Array[Byte] = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
-    def n(v: Double) = if (v == math.floor(v) && math.abs(v) < 1e15) v.toLong.toString else v.toString
-    val shows = blocks.map { case (t, x, y, s) =>
-      s"/F1 ${n(s)} Tf 1 0 0 1 ${n(x)} ${n(y)} Tm (${esc(t)}) Tj "
-    }.mkString
-    wrapContent(("BT " + shows + "ET").getBytes(Ascii), compress)
+    wrapContent(("BT " + blockShows(blocks) + "ET").getBytes(Ascii), compress)
   }
 
-  /** Wrap raw content-stream bytes into the minimal single-page shell
-    * `buildMinimalPdf` uses (shared so both fixture builders stay
-    * byte-layout-identical). */
+  /** One absolutely-positioned show per block via `Tm` + `Tf`. */
+  private def blockShows(blocks: Seq[(String, Double, Double, Double)]): String =
+    blocks.map { case (t, x, y, s) =>
+      s"/F1 ${coord(s)} Tf 1 0 0 1 ${coord(x)} ${coord(y)} Tm (${esc(t)}) Tj "
+    }.mkString
+
+  /** A content stream's bytes and its `/Filter` entry: one-shot Deflate
+    * when `compress`, else stored. */
+  private def contentBody(content: Array[Byte], compress: Boolean): (Array[Byte], String) =
+    if (compress) {
+      val d = new java.util.zip.Deflater()
+      d.setInput(content); d.finish()
+      val buf = new Array[Byte](content.length * 2 + 64)
+      val nn = d.deflate(buf); d.end()
+      (java.util.Arrays.copyOf(buf, nn), " /Filter /FlateDecode")
+    } else (content, "")
+
+  /** THE single-page writer: wrap raw content-stream bytes into the
+    * minimal one-page shell every text fixture builder shares
+    * ([[buildMinimalPdf]], [[buildLayoutPdf]], [[buildBlocksPdf]],
+    * [[buildLatticePdf]]), so they stay byte-layout-identical. */
   private def wrapContent(content: Array[Byte], compress: Boolean): Array[Byte] = {
-    val (body, filter) =
-      if (compress) {
-        val d = new java.util.zip.Deflater()
-        d.setInput(content); d.finish()
-        val buf = new Array[Byte](content.length * 2 + 64)
-        val nn = d.deflate(buf); d.end()
-        (java.util.Arrays.copyOf(buf, nn), " /Filter /FlateDecode")
-      } else (content, "")
+    val (body, filter) = contentBody(content, compress)
     val out = new java.io.ByteArrayOutputStream()
     def w(s: String): Unit = out.write(s.getBytes(Ascii))
     w("%PDF-1.4\n")
@@ -647,20 +639,11 @@ object Pdf {
     * filters; SEPARATE from the extractor like every builder here. */
   def buildImagesPdf(text: String, images: Seq[ImageFixture],
                      compress: Boolean): Array[Byte] = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
-    def n(v: Double) = if (v == math.floor(v) && math.abs(v) < 1e15) v.toLong.toString else v.toString
     val draws = images.zipWithIndex.map { case (im, j) =>
-      s"q ${n(im.dispW)} 0 0 ${n(im.dispH)} ${n(im.x)} ${n(im.y)} cm /Im$j Do Q "
+      s"q ${coord(im.dispW)} 0 0 ${coord(im.dispH)} ${coord(im.x)} ${coord(im.y)} cm /Im$j Do Q "
     }.mkString
     val content = (s"BT /F1 12 Tf 72 700 Td (${esc(text)}) Tj ET " + draws).getBytes(Ascii)
-    val (body, filter) =
-      if (compress) {
-        val d = new java.util.zip.Deflater()
-        d.setInput(content); d.finish()
-        val buf = new Array[Byte](content.length * 2 + 64)
-        val nn = d.deflate(buf); d.end()
-        (java.util.Arrays.copyOf(buf, nn), " /Filter /FlateDecode")
-      } else (content, "")
+    val (body, filter) = contentBody(content, compress)
     def deflateAll(b: Array[Byte]): Array[Byte] = {
       val d = new java.util.zip.Deflater()
       try {
@@ -735,7 +718,6 @@ object Pdf {
     * imageNearDupPairs) runs on PDF-extracted figures unchanged. Map-only;
     * one hostile PDF yields an empty array, one hostile image a null png. */
   def imagesStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val imgType = org.apache.spark.sql.types.StructType(Seq(
       StructField("name", StringType),
       StructField("width", org.apache.spark.sql.types.IntegerType),
@@ -746,9 +728,8 @@ object Pdf {
       StructField("disp_w", org.apache.spark.sql.types.DoubleType),
       StructField("disp_h", org.apache.spark.sql.types.DoubleType),
       StructField("png", BinaryType)))
-    Stages.appendFields(df,
-      Seq(StructField(outCol, org.apache.spark.sql.types.ArrayType(imgType))))(
-      r => Seq(extractImages(r.getAs[Array[Byte]](idx)).map { im =>
+    Stages.payloadStage(df, payloadCol, outCol, org.apache.spark.sql.types.ArrayType(imgType))(b =>
+      Some(extractImages(b).map { im =>
         val png = if (im.raw == null) null
           else Image.encodePng(im.width, im.height, im.colorType, im.raw)
         org.apache.spark.sql.Row(im.name, im.width, im.height, im.colorType,
@@ -862,15 +843,12 @@ object Pdf {
   /** Distributed path stage: binary `payloadCol` → `outCol` as
     * `array<struct<x0,y0,x1,y1>>` of painted segments. */
   def segmentsStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val D = org.apache.spark.sql.types.DoubleType
     val segType = org.apache.spark.sql.types.StructType(Seq(
       StructField("x0", D), StructField("y0", D),
       StructField("x1", D), StructField("y1", D)))
-    Stages.appendFields(df,
-      Seq(StructField(outCol, org.apache.spark.sql.types.ArrayType(segType))))(
-      r => Seq(extractSegments(r.getAs[Array[Byte]](idx))
-        .map(s => org.apache.spark.sql.Row(s.x0, s.y0, s.x1, s.y1))))
+    Stages.payloadStage(df, payloadCol, outCol, org.apache.spark.sql.types.ArrayType(segType))(b =>
+      Some(extractSegments(b).map(s => org.apache.spark.sql.Row(s.x0, s.y0, s.x1, s.y1))))
   }
 
   /** Lattice-fixture builder: positioned text blocks (the
@@ -884,35 +862,27 @@ object Pdf {
                       vRules: Seq[(Double, Double, Double)],
                       filledRules: Boolean,
                       compress: Boolean): Array[Byte] = {
-    def esc(s: String) = s.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
-    def n(v: Double) = if (v == math.floor(v) && math.abs(v) < 1e15) v.toLong.toString else v.toString
-    val shows = blocks.map { case (t, x, y, s) =>
-      s"/F1 ${n(s)} Tf 1 0 0 1 ${n(x)} ${n(y)} Tm (${esc(t)}) Tj "
-    }.mkString
     val rules =
       if (filledRules)
-        hRules.map { case (y, x0, x1) => s"${n(x0)} ${n(y - 0.25)} ${n(x1 - x0)} 0.5 re f " }.mkString +
-          vRules.map { case (x, y0, y1) => s"${n(x - 0.25)} ${n(y0)} 0.5 ${n(y1 - y0)} re f " }.mkString
+        hRules.map { case (y, x0, x1) => s"${coord(x0)} ${coord(y - 0.25)} ${coord(x1 - x0)} 0.5 re f " }.mkString +
+          vRules.map { case (x, y0, y1) => s"${coord(x - 0.25)} ${coord(y0)} 0.5 ${coord(y1 - y0)} re f " }.mkString
       else
-        hRules.map { case (y, x0, x1) => s"${n(x0)} ${n(y)} m ${n(x1)} ${n(y)} l S " }.mkString +
-          vRules.map { case (x, y0, y1) => s"${n(x)} ${n(y0)} m ${n(x)} ${n(y1)} l S " }.mkString
-    wrapContent(("BT " + shows + "ET " + rules).getBytes(Ascii), compress)
+        hRules.map { case (y, x0, x1) => s"${coord(x0)} ${coord(y)} m ${coord(x1)} ${coord(y)} l S " }.mkString +
+          vRules.map { case (x, y0, y1) => s"${coord(x)} ${coord(y0)} m ${coord(x)} ${coord(y1)} l S " }.mkString
+    wrapContent(("BT " + blockShows(blocks) + "ET " + rules).getBytes(Ascii), compress)
   }
 
   /** Distributed layout stage: binary `payloadCol` → `outCol` as
     * `array<struct<text,x,y,size>>`, one payload at a time. Explode
     * downstream with `posexplode` for per-block rows. */
   def blocksStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val blockType = org.apache.spark.sql.types.StructType(Seq(
       StructField("text", StringType),
       StructField("x", org.apache.spark.sql.types.DoubleType),
       StructField("y", org.apache.spark.sql.types.DoubleType),
       StructField("size", org.apache.spark.sql.types.DoubleType)))
-    Stages.appendFields(df,
-      Seq(StructField(outCol, org.apache.spark.sql.types.ArrayType(blockType))))(
-      r => Seq(extractBlocks(r.getAs[Array[Byte]](idx))
-        .map(b => org.apache.spark.sql.Row(b.text, b.x, b.y, b.size))))
+    Stages.payloadStage(df, payloadCol, outCol, org.apache.spark.sql.types.ArrayType(blockType))(b =>
+      Some(extractBlocks(b).map(bl => org.apache.spark.sql.Row(bl.text, bl.x, bl.y, bl.size))))
   }
 
   /** Fixture-builder stage for the layout gate queries: expects columns
@@ -926,12 +896,9 @@ object Pdf {
     }
 
   /** Distributed extraction stage: binary `payloadCol` → string `outCol`,
-    * one row streamed at a time ([[Stages.appendFields]]). */
-  def extractStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
-    Stages.appendFields(df, Seq(StructField(outCol, StringType)))(
-      r => Seq(extractText(r.getAs[Array[Byte]](idx))))
-  }
+    * one row streamed at a time ([[Stages.payloadStage]]). */
+  def extractStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame =
+    Stages.payloadStage(df, payloadCol, outCol, StringType)(b => Some(extractText(b)))
 
   /** Fixture-builder stage for the gate query: wrap a text column into a
     * real single-page PDF payload (compressed / uncompressed / TJ-split

@@ -1,97 +1,42 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.types._
-
 /** 7z archive walk — the format the StackExchange data dumps (a
   * canonical LLM-pretraining source) actually ship in, plus plenty of
   * scraped-upload corpora. Rides commons-compress on the Spark
   * classpath (the ORC/Arrow precedent for formats whose mature
   * reference implementation ships with the engine — a hand-rolled
   * LZMA2+BCJ decoder would be thousands of lines for no behavioral
-  * difference). The engine's contract wraps it:
+  * difference). The engine's [[Archive]] contract wraps it:
   *
   *  - per-member and whole-archive output bounds (a 7z bomb
   *    quarantines — oversized members keep their metadata row with a
-  *    null payload, the [[Tar.memberStage]] convention);
+  *    null payload);
+  *  - a bound on the decoder's own allocations (below);
   *  - encrypted members and every library exception → None (7z's
   *    header CRCs make torn/flipped archives structurally detectable);
   *  - directories are skipped; member count capped. */
-object SevenZip {
+object SevenZip extends Archive(minLength = 32, skipDirs = true, defaultMaxMembers = 4096) {
 
-  final case class Member(name: String, size: Long, data: Array[Byte])
-
-  /** List + extract all regular-file members. None on any container
-    * malformation; a member larger than `maxMemberBytes` (or past the
-    * running `maxTotal` budget) keeps metadata with `data = null`. */
-  def members(bytes: Array[Byte], maxMembers: Int = 4096,
-              maxMemberBytes: Int = 1 << 24, maxTotal: Long = 1L << 26): Option[Seq[Member]] = {
-    if (bytes == null || bytes.length < 32) return None
-    var zf: org.apache.commons.compress.archivers.sevenz.SevenZFile = null
-    try {
-      zf = org.apache.commons.compress.archivers.sevenz.SevenZFile.builder()
-        .setSeekableByteChannel(
-          new org.apache.commons.compress.utils.SeekableInMemoryByteChannel(bytes))
-        // bound the DECODER's allocations too (dictionary declared in the
-        // hostile header, not just extracted output) — without this a
-        // crafted huge-dictionary declaration throws OutOfMemoryError, an
-        // Error that escapes NonFatal and kills the task. 256 MiB admits
-        // every standard preset (9 ⇒ 64 MiB dict + estimate overhead) and
-        // refuses the hostile tail of the range. (NOT the deprecated
-        // setMaxMemoryLimitKb, which silently right-shifts the value by
-        // 10 — 256 MiB would become a 256 KiB limit that rejects every
-        // standard preset.)
-        .setMaxMemoryLimitKiB(256 * 1024)
-        .get()
-      val out = scala.collection.mutable.ArrayBuffer.empty[Member]
-      var total = 0L
-      var e = zf.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory) {
-          if (out.length >= maxMembers) return None
-          val size = e.getSize
-          if (size < 0) return None
-          val inBudget = size <= maxMemberBytes && total + size <= maxTotal
-          val data: Array[Byte] =
-            if (!inBudget) { // skip the content, keep the metadata
-              val buf = new Array[Byte](8192)
-              var n = zf.read(buf)
-              while (n >= 0) n = zf.read(buf)
-              null
-            } else {
-              total += size
-              val a = new Array[Byte](size.toInt)
-              var off = 0
-              var n = zf.read(a, off, a.length - off)
-              while (n > 0 && off + n < a.length) { off += n; n = zf.read(a, off, a.length - off) }
-              if (a.length > 0 && (n < 0 || off + n < a.length)) return None // short read: torn
-              a
-            }
-          out += Member(e.getName, size, data)
-        }
-        e = zf.getNextEntry
-      }
-      Some(out.toSeq)
-    } catch { case scala.util.control.NonFatal(_) => None }
-    finally if (zf != null) { try zf.close() catch { case scala.util.control.NonFatal(_) => () } }
-  }
-
-  /** The Spark seam — one row per member, the three-way
-    * [[Stages.explodeFields]] contract (all-null row = malformed
-    * archive, null-membered marker row = valid empty archive,
-    * null `data` = oversized member). */
-  def memberStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
-    val sch = StructType(Seq(
-      StructField("name", StringType), StructField("size", LongType),
-      StructField("data", BinaryType)))
-    Stages.explodeFields(df, Seq(StructField(outCol, sch)))( r =>
-      members(r.getAs[Array[Byte]](idx)) match {
-        case None => Seq(Seq(null))
-        case Some(ms) if ms.isEmpty =>
-          Seq(Seq(org.apache.spark.sql.Row(null, null, null)))
-        case Some(ms) => ms.map(m => Seq(org.apache.spark.sql.Row(m.name, m.size, m.data)))
-      })
+  protected def open(bytes: Array[Byte]): Archive.Cursor = {
+    val zf = org.apache.commons.compress.archivers.sevenz.SevenZFile.builder()
+      .setSeekableByteChannel(
+        new org.apache.commons.compress.utils.SeekableInMemoryByteChannel(bytes))
+      // bound the DECODER's allocations too (dictionary declared in the
+      // hostile header, not just extracted output) — without this a
+      // crafted huge-dictionary declaration throws OutOfMemoryError, an
+      // Error that escapes NonFatal and kills the task. 256 MiB admits
+      // every standard preset (9 ⇒ 64 MiB dict + estimate overhead) and
+      // refuses the hostile tail of the range. (NOT the deprecated
+      // setMaxMemoryLimitKb, which silently right-shifts the value by
+      // 10 — 256 MiB would become a 256 KiB limit that rejects every
+      // standard preset.)
+      .setMaxMemoryLimitKiB(256 * 1024)
+      .get()
+    new Archive.Cursor {
+      def next(): org.apache.commons.compress.archivers.ArchiveEntry = zf.getNextEntry
+      def read(b: Array[Byte], off: Int, len: Int): Int = zf.read(b, off, len)
+      def close(): Unit = zf.close()
+    }
   }
 
   // ------------------------------------------------------------------

@@ -92,9 +92,9 @@ object Sniff {
     case "lz4" => Codecs.unlz4(b).nonEmpty
     case "snappy" => Codecs.unsnappy(b).nonEmpty
     case "xz" => Codecs.unxz(b).nonEmpty
-    case "7z" => SevenZip.members(b).exists(ms => ms.forall(_.data != null))
-    case "ar" => Ar.members(b).exists(ms => ms.forall(_.data != null))
-    case "cpio" => Cpio.members(b).exists(ms => ms.forall(_.data != null))
+    case "7z" => SevenZip.healthy(b)
+    case "ar" => Ar.healthy(b)
+    case "cpio" => Cpio.healthy(b)
     case "parquet" =>
       // structural footer check (PAR1 head AND tail, bounded footer
       // length); deep reads go through spark.read.parquet on a PATH

@@ -93,38 +93,29 @@ object Tar {
   }
 
   /** The Spark seam: one row per regular-file member (name, size,
-    * payload bytes), a single all-null row for a malformed shard, and a
-    * single null-membered (but non-null) row for a valid empty shard. The
-    * WebDataset convention rides on top: `sample_key` = name up to the
-    * last dot OF THE BASENAME, `ext` after it (dots in directory names
-    * never split). */
+    * payload bytes) under the three-way [[Stages.explodePayload]]
+    * contract (null struct for a malformed shard, null-membered struct
+    * for a valid empty one). The WebDataset convention rides on top:
+    * `sample_key` = name up to the last dot OF THE BASENAME, `ext` after
+    * it (dots in directory names never split). */
   def memberStage(df: DataFrame, payloadCol: String, outCol: String,
                   maxMemberBytes: Int = 1 << 24): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("sample_key", StringType), StructField("ext", StringType),
       StructField("name", StringType), StructField("size", IntegerType),
       StructField("data", BinaryType)))
-    Stages.explodeFields(df, Seq(StructField(outCol, sch)))( r =>
-      listMembers(r.getAs[Array[Byte]](idx)) match {
-        case None => Seq(Seq(null))
-        case Some(ms) if ms.isEmpty =>
-          // valid-but-empty shard: non-null struct with null members, so
-          // accounting can tell "scanned and empty" from "malformed"
-          // (null struct) and from "never present" (no payload row)
-          Seq(Seq(org.apache.spark.sql.Row(null, null, null, null, null)))
-        case Some(ms) => ms.map { m =>
-          // the WebDataset key/ext split is over the BASENAME — a dotted
-          // directory ("shard.v1/000017") must not donate the dot
-          val slash = m.name.lastIndexOf('/')
-          val dot = m.name.lastIndexOf('.')
-          val (key, ext) = if (dot <= slash + 1) (m.name, "")
-                           else (m.name.take(dot), m.name.drop(dot + 1))
-          val data = if (m.size > maxMemberBytes) null // oversized member: quarantine its payload
-                     else java.util.Arrays.copyOfRange(r.getAs[Array[Byte]](idx), m.off, m.off + m.size)
-          Seq(org.apache.spark.sql.Row(key, ext, m.name, m.size, data))
-        }
-      })
+    Stages.explodePayload(df, payloadCol, outCol, sch)(b =>
+      listMembers(b).map(_.map { m =>
+        // the WebDataset key/ext split is over the BASENAME — a dotted
+        // directory ("shard.v1/000017") must not donate the dot
+        val slash = m.name.lastIndexOf('/')
+        val dot = m.name.lastIndexOf('.')
+        val (key, ext) = if (dot <= slash + 1) (m.name, "")
+                         else (m.name.take(dot), m.name.drop(dot + 1))
+        val data = if (m.size > maxMemberBytes) null // oversized member: quarantine its payload
+                   else java.util.Arrays.copyOfRange(b, m.off, m.off + m.size)
+        org.apache.spark.sql.Row(key, ext, m.name, m.size, data)
+      }))
   }
 
   // ---------------------------------------------------------------------

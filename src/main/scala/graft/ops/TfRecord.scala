@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   *    unpacked encodings.
   *
   * Scale shape: map-only per shard row, per-record rows explode
-  * downstream (the [[Tar.memberStage]] contract).
+  * downstream (the [[Stages.explodePayload]] contract).
   */
 object TfRecord {
 
@@ -218,42 +218,32 @@ object TfRecord {
   }
 
   /** The Spark seam: one row per record with the conventional training
-    * features surfaced as scalars (a null struct row for a malformed
-    * shard): `label` = first int64 of feature "label", `n_tokens` /
+    * features surfaced as scalars, under the three-way
+    * [[Stages.explodePayload]] contract: `label` = first int64 of feature "label", `n_tokens` /
     * `token_sum` over feature "tokens", `text_len` = first bytes value's
     * length of feature "text". Records that are not parseable
     * tf.Examples yield a row with null feature columns (frame-level
     * quarantine — the framing was CRC-sound). */
   def exampleStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("record_idx", IntegerType), StructField("parsed", BooleanType),
       StructField("label", LongType), StructField("n_tokens", IntegerType),
       StructField("token_sum", LongType), StructField("text_len", IntegerType)))
-    Stages.explodeFields(df, Seq(StructField(outCol, sch)))( r => {
-      val payload = r.getAs[Array[Byte]](idx)
-      readRecords(payload) match {
-        case None => Seq(Seq(null))
-        case Some(recs) if recs.isEmpty =>
-          // valid zero-record shard: non-null struct, null members (vs the
-          // null struct of a malformed shard)
-          Seq(Seq(org.apache.spark.sql.Row(null, null, null, null, null, null)))
-        case Some(recs) => recs.zipWithIndex.map { case ((o, l), i) =>
-          parseExample(payload, o, l) match {
-            case Some(fm) =>
-              val label = fm.get("label").flatMap(f => Option(f.int64s).flatMap(_.headOption))
-              val toks = fm.get("tokens").flatMap(f => Option(f.int64s))
-              val text = fm.get("text").flatMap(f => Option(f.bytess).flatMap(_.headOption))
-              Seq(org.apache.spark.sql.Row(i, true,
-                label.map(java.lang.Long.valueOf).orNull,
-                toks.map(t => java.lang.Integer.valueOf(t.length)).orNull,
-                toks.map(t => java.lang.Long.valueOf(t.sum)).orNull,
-                text.map(t => java.lang.Integer.valueOf(t.length)).orNull))
-            case None => Seq(org.apache.spark.sql.Row(i, false, null, null, null, null))
-          }
+    Stages.explodePayload(df, payloadCol, outCol, sch)(payload =>
+      readRecords(payload).map(_.zipWithIndex.map { case ((o, l), i) =>
+        parseExample(payload, o, l) match {
+          case Some(fm) =>
+            val label = fm.get("label").flatMap(f => Option(f.int64s).flatMap(_.headOption))
+            val toks = fm.get("tokens").flatMap(f => Option(f.int64s))
+            val text = fm.get("text").flatMap(f => Option(f.bytess).flatMap(_.headOption))
+            org.apache.spark.sql.Row(i, true,
+              label.map(java.lang.Long.valueOf).orNull,
+              toks.map(t => java.lang.Integer.valueOf(t.length)).orNull,
+              toks.map(t => java.lang.Long.valueOf(t.sum)).orNull,
+              text.map(t => java.lang.Integer.valueOf(t.length)).orNull)
+          case None => org.apache.spark.sql.Row(i, false, null, null, null, null)
         }
-      }
-    })
+      }))
   }
 
   // ---------------------------------------------------------------------

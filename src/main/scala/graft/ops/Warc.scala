@@ -182,22 +182,16 @@ object Warc {
     * corrupt/truncated members yield NULL (every downstream [[parse]]
     * column then nulls out — the quarantine row survives, the task
     * doesn't die). */
-  def gunzipStage(df: DataFrame, memberCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(memberCol)
-    Stages.appendFields(df, Seq(StructField(outCol, StringType)))(
-      r => Seq(gunzipMember(r.getAs[Array[Byte]](idx)).map(new String(_, Utf8)).orNull))
-  }
+  def gunzipStage(df: DataFrame, memberCol: String, outCol: String): DataFrame =
+    Stages.payloadStage(df, memberCol, outCol, StringType)(b =>
+      gunzipMember(b).map(new String(_, Utf8)))
 
   /** Split+decompress a concatenated-members blob column into an
     * `array<string>` of records (null = quarantined blob). One row = one
     * segment file: the 100 TB unit of work, processed without ever
     * materializing more than one member's decompressed bytes at a time
     * beyond the output array. */
-  def splitMembersStage(df: DataFrame, blobCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(blobCol)
-    Stages.appendFields(df,
-      Seq(StructField(outCol, org.apache.spark.sql.types.ArrayType(StringType))))(
-      r => Seq(splitMembers(r.getAs[Array[Byte]](idx))
-        .map(_.map(new String(_, Utf8))).orNull))
-  }
+  def splitMembersStage(df: DataFrame, blobCol: String, outCol: String): DataFrame =
+    Stages.payloadStage(df, blobCol, outCol, org.apache.spark.sql.types.ArrayType(StringType))(b =>
+      splitMembers(b).map(_.map(new String(_, Utf8))))
 }

@@ -61,15 +61,11 @@ object Webp {
 
   /** The Spark seam (the [[Image.decodeStatsStage]] shape). */
   def dimsStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("variant", StringType),
       StructField("width", IntegerType), StructField("height", IntegerType)))
-    Stages.appendFields(df, Seq(StructField(outCol, sch)))( r =>
-      Seq(dims(r.getAs[Array[Byte]](idx)) match {
-        case None => null
-        case Some((v, w, h)) => org.apache.spark.sql.Row(v, w, h)
-      }))
+    Stages.payloadStage(df, payloadCol, outCol, sch)(b =>
+      dims(b).map { case (v, w, h) => org.apache.spark.sql.Row(v, w, h) })
   }
 
   // ---------------------------------------------------------------------

@@ -75,8 +75,8 @@ object Wiki {
     out.toSeq
   }
 
-  /** The Spark seam: decompress the payload, one row per page (null
-    * struct row on a malformed container). Gzip by default; the
+  /** The Spark seam: decompress the payload, one row per page under the
+    * three-way [[Stages.explodePayload]] contract. Gzip by default; the
     * bz2 variant below is the format Wikipedia's own dump mirrors
     * actually serve. */
   def pageStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame =
@@ -90,23 +90,14 @@ object Wiki {
 
   private def pageStageWith(df: DataFrame, payloadCol: String, outCol: String,
                             decompress: Array[Byte] => Option[Array[Byte]]): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("title", StringType), StructField("ns", IntegerType),
       StructField("page_id", LongType), StructField("redirect", StringType),
       StructField("text_len", IntegerType)))
-    Stages.explodeFields(df, Seq(StructField(outCol, sch)))( r =>
-      decompress(r.getAs[Array[Byte]](idx)) match {
-        case None => Seq(Seq(null))
-        case Some(xml) =>
-          val pages = parsePages(new String(xml, java.nio.charset.StandardCharsets.UTF_8))
-          if (pages.isEmpty)
-            // well-formed dump, zero <page> elements: non-null struct with
-            // null members (vs the null struct of a corrupt payload)
-            Seq(Seq(org.apache.spark.sql.Row(null, null, null, null, null)))
-          else pages.map(p =>
-            Seq(org.apache.spark.sql.Row(p.title, p.ns, p.pageId, p.redirect, p.textLen)))
-      })
+    Stages.explodePayload(df, payloadCol, outCol, sch)(b =>
+      decompress(b).map(xml =>
+        parsePages(new String(xml, java.nio.charset.StandardCharsets.UTF_8)).map(p =>
+          org.apache.spark.sql.Row(p.title, p.ns, p.pageId, p.redirect, p.textLen))))
   }
 
   // ---------------------------------------------------------------------

@@ -138,16 +138,15 @@ object Xlsx {
   /** The Spark seam: one row per cell of `xl/worksheets/sheet1.xml`
     * (null struct row when the container or either required part is
     * malformed — a sheet without its string table can silently mis-type
-    * every text cell, so it quarantines whole). */
+    * every text cell, so it quarantines whole; the three-way
+    * [[Stages.explodePayload]] contract). */
   def cellStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("ref", StringType), StructField("row", IntegerType),
       StructField("col", IntegerType), StructField("str_val", StringType),
       StructField("num_val", StringType)))
-    Stages.explodeFields(df, Seq(StructField(outCol, sch)))( r => {
-      val payload = r.getAs[Array[Byte]](idx)
-      val cells = for {
+    Stages.explodePayload(df, payloadCol, outCol, sch)(payload =>
+      for {
         es <- Zip.listEntries(payload)
         sheetE <- es.find(_.name == "xl/worksheets/sheet1.xml")
         sheet <- Zip.extract(payload, sheetE)
@@ -158,16 +157,7 @@ object Xlsx {
         }
         sh <- shared
       } yield sheetCells(new String(sheet, java.nio.charset.StandardCharsets.UTF_8), sh)
-      cells match {
-        case None => Seq(Seq(null))
-        case Some(cs) if cs.isEmpty =>
-          // valid workbook, zero cells: non-null struct with null members
-          // (vs the null struct of a malformed container)
-          Seq(Seq(org.apache.spark.sql.Row(null, null, null, null, null)))
-        case Some(cs) => cs.map(c =>
-          Seq(org.apache.spark.sql.Row(c.ref, c.row, c.col, c.str, c.num)))
-      }
-    })
+        .map(c => org.apache.spark.sql.Row(c.ref, c.row, c.col, c.str, c.num)))
   }
 
   // ---------------------------------------------------------------------

@@ -25,7 +25,8 @@ import org.apache.spark.sql.types._
   * entities, joining runs within a paragraph, newline between
   * paragraphs.
   *
-  * Scale shape: map-only per payload row ([[Tar.memberStage]] contract).
+  * Scale shape: map-only per payload row ([[Stages.payloadStage]]
+  * contract: null on a malformed container).
   */
 object Zip {
 
@@ -184,20 +185,15 @@ object Zip {
     * container; null text with ok member listing when `word/document.xml`
     * is missing or fails extraction). */
   def docxStage(df: DataFrame, payloadCol: String, outCol: String): DataFrame = {
-    val idx = df.schema.fieldIndex(payloadCol)
     val sch = StructType(Seq(
       StructField("n_members", IntegerType), StructField("text", StringType)))
-    Stages.appendFields(df, Seq(StructField(outCol, sch)))( r => {
-      val payload = r.getAs[Array[Byte]](idx)
-      listEntries(payload) match {
-        case None => Seq(null)
-        case Some(es) =>
-          val text = es.find(_.name == "word/document.xml")
-            .flatMap(e => extract(payload, e))
-            .map(b => docxText(new String(b, java.nio.charset.StandardCharsets.UTF_8)))
-          Seq(org.apache.spark.sql.Row(es.length, text.orNull))
-      }
-    })
+    Stages.payloadStage(df, payloadCol, outCol, sch)(payload =>
+      listEntries(payload).map { es =>
+        val text = es.find(_.name == "word/document.xml")
+          .flatMap(e => extract(payload, e))
+          .map(b => docxText(new String(b, java.nio.charset.StandardCharsets.UTF_8)))
+        org.apache.spark.sql.Row(es.length, text.orNull)
+      })
   }
 
   // ---------------------------------------------------------------------

@@ -40,6 +40,20 @@ class CpioSpec extends AnyFunSuite {
     assert(Cpio.members(Cpio.encode(Seq.empty)).exists(_.isEmpty))
   }
 
+  test("memberStage: a row per member, marker row when empty, null struct when malformed") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    val df = Seq((1, Cpio.encode(members)), (2, Cpio.encode(Seq.empty)),
+      (3, "not a cpio archive".getBytes)).toDF("id", "payload")
+    val rows = Cpio.memberStage(df, "payload", "m")
+      .selectExpr("id", "m IS NULL", "m.name", "m.size").collect()
+      .map(r => (r.getInt(0), r.getBoolean(1), Option(r.getString(2)), Option(r.get(3))))
+      .sortBy(r => (r._1, r._3))
+    assert(rows.toSeq == Seq(
+      (1, false, Some("./etc/conf"), Some(40L)), (1, false, Some("./usr/bin/tool"), Some(19L)),
+      (2, false, None, None), (3, true, None, None)))
+  }
+
   test("the RPM-payload shape: cpio through a compressed member decodes composed") {
     // modern RPM payloads are cpio.zstd (or .xz) — both codecs exist
     for (codec <- Seq[(Array[Byte] => Array[Byte], Array[Byte] => Option[Array[Byte]])](

@@ -86,6 +86,16 @@ class SevenZipSpec extends AnyFunSuite {
     assert(ms(0).data == null && ms(0).size == 100000L)
     assert(new String(ms(1).data) == "ok")
     assert(SevenZip.members(big, maxMembers = 1).isEmpty)
+    // an oversized LAST member is still read through (no later entry's
+    // read would touch its bytes), so damage inside it quarantines
+    val last = SevenZip.encode(Seq("big.bin" -> Array.tabulate(4096)(i => (i * 31 + i / 7).toByte)),
+      preset = 0, dictSize = 4096)
+    assert(SevenZip.members(last, maxMemberBytes = 1024).exists(_.map(_.data) == Seq(null)))
+    val packed = java.nio.ByteBuffer.wrap(last).order(java.nio.ByteOrder.LITTLE_ENDIAN).getLong(12)
+    val damaged = last.clone()
+    damaged(32 + packed.toInt / 2) = (damaged(32 + packed.toInt / 2) ^ 0x20).toByte
+    assert(SevenZip.members(damaged, maxMemberBytes = 1024).isEmpty,
+      "damage inside an oversized last member must quarantine")
     // valid empty archive → Some(empty)
     assert(SevenZip.members(SevenZip.encode(Seq.empty)).exists(_.isEmpty))
   }
